@@ -18,6 +18,7 @@ object AbProbe {
     val Array(key, valA, valB) = args.take(3)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val passes = args.lift(4).map(_.toInt).getOrElse(3)
+    require(passes >= 1, s"passes must be >= 1, got $passes")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

@@ -25,7 +25,12 @@ import scala.collection.immutable.ListMap
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Parsed once, loudly: the value lands unquoted in the JSON line.
+    val cpus = {
+      val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+      raw.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
+    }
     // The whole-stage-codegen cache defaults to 100 STRONGLY-HELD
     // entries. With ~190 registered queries and INTERLEAVED timed
     // passes, every unit is evicted between a query's two samples, so
@@ -39,7 +44,7 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", codegenCache)
       .config("spark.ui.enabled", "false")

@@ -100,7 +100,7 @@ object Replicate {
     * window changes no content.
     *
     * Single-writer contract: the merged property set is snapshotted
-    * ONCE, before the commit loop — a retried commit (lost OCC race)
+    * ONCE, before the commit — a retried commit (lost OCC race)
     * republishes that snapshot, so a table property set on the replica
     * CONCURRENTLY with a sync window can be reverted. The mirror is
     * the replica's only writer by design (any other writer would also

@@ -37,28 +37,14 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * rides here so "rows landed" and "sync recorded" cannot tear.
     * Returns the committed version. */
   def commit(spark: SparkSession, df: DataFrame, root: String,
-             partitionCols: ColSpec, maxAttempts: Int = 5,
-             properties: Option[Seq[(String, String)]] = None): Long = {
-    enforceConstraints(spark, root, df)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      // Always target EXACTLY current+1 (re-read per attempt). Skipping
-      // ahead after a lost race would let another writer later publish
-      // the skipped number and have its newer commit shadowed, since
-      // "current" is the max committed version.
-      val v = currentVersion(spark, root).getOrElse(0L) + 1
-      val entries = writeDataFiles(spark, df, root, v, partitionCols.cols)
-      if (writeManifest(spark, root, v, entries, "commit", partitionCols.header,
-          properties = properties)) {
-        writeStats(spark, root, v, Nil, entries, Some(df.schema))
-        postCommit(spark, root, v)
-        return v
-      }
-      attempt += 1
+             partitionCols: ColSpec,
+             properties: Option[Seq[(String, String)]] = None): Long =
+    occ(spark, root, "commit", needsTable = false) { cur =>
+      enforceConstraints(spark, root, df, cur, propertiesAt(spark, root, cur))
+      val entries = writeDataFiles(spark, df, root, cur + 1, partitionCols.cols)
+      new Staged(Nil, entries, "commit", partitionCols.header, Some(df.schema),
+        properties = properties)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the commit race $maxAttempts times under $root")
-  }
 
   /** CREATE-ONLY commit: publish `df` as version 1, or report that the
     * table already exists — decided INSIDE the commit protocol, not by
@@ -180,28 +166,23 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * ledger rides here — a sidecar written after the rename could tear
     * away from its commit and break idempotence). */
   def appendCommit(spark: SparkSession, df: DataFrame, root: String,
-                   partitionCols: ColSpec, maxAttempts: Int = 10,
+                   partitionCols: ColSpec,
                    operation: String = "append",
-                   extraHeaders: Seq[String] = Nil): Long = {
-    enforceConstraints(spark, root, df)
-    enforceSchemaCompatible(spark, root, df)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val (kept, v) = currentVersion(spark, root) match {
-        case None => (Seq.empty[ManifestEntry], 1L)
-        case Some(cur) => (manifest(spark, root, cur), cur + 1)
-      }
-      val newEntries = writeDataFiles(spark, df, root, v, partitionCols.cols)
-      if (writeManifest(spark, root, v, kept ++ newEntries, operation,
-          partitionCols.header, extraHeaders)) {
-        writeStats(spark, root, v, kept, newEntries, Some(df.schema))
-        postCommit(spark, root, v)
-        return v
-      }
-      attempt += 1
+                   extraHeaders: Seq[String] = Nil): Long =
+    occ(spark, root, "append-commit", needsTable = false) { cur =>
+      appendAttempt(spark, df, root, partitionCols, cur, operation, extraHeaders)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the append-commit race $maxAttempts times under $root")
+
+  /** One [[appendCommit]] attempt against tip `cur` (0 = no table). */
+  private[sinks] def appendAttempt(spark: SparkSession, df: DataFrame, root: String,
+                                   partitionCols: ColSpec, cur: Long, operation: String,
+                                   extraHeaders: Seq[String]): Staged = {
+    enforceConstraints(spark, root, df, cur, propertiesAt(spark, root, cur))
+    enforceSchemaCompatible(spark, root, df, cur)
+    val kept = if (cur == 0) Nil else manifest(spark, root, cur)
+    val fresh = writeDataFiles(spark, df, root, cur + 1, partitionCols.cols)
+    new Staged(kept, fresh, operation, partitionCols.header, Some(df.schema),
+      extraHeaders = extraHeaders)
   }
 
   /** Source files already loaded into the table by [[copyInto]]: the
@@ -249,35 +230,33 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
         else Seq(s.getPath)
       }
     val listed = walk(src).map(f.makeQualified(_).toString).sorted
-    // Retry loop with the ledger RE-READ per attempt: a concurrent
-    // COPY of the same source must not double-load — the loser of the
-    // manifest race re-lists and skips whatever the winner recorded.
-    // (A blind appendCommit retry would replay the stale file list.)
-    var attempt = 0
-    while (attempt < 10) {
-      val cur = currentVersion(spark, root)
-      val already = if (cur.isDefined) copiedFiles(spark, root)
-        else Set.empty[String]
+    // The ledger is RE-READ per attempt: a concurrent COPY of the same
+    // source must not double-load — the loser of the manifest race
+    // re-lists and skips whatever the winner recorded.
+    var loaded = 0
+    val v = occ(spark, root, "copy-into", needsTable = false) { cur =>
+      val already = if (cur >= 1) copiedFiles(spark, root) else Set.empty[String]
       val fresh = listed.filterNot(already)
-      if (fresh.isEmpty) return (cur.getOrElse(
-        throw new IllegalStateException(
+      loaded = fresh.size
+      if (fresh.isEmpty) {
+        if (cur == 0) throw new IllegalStateException(
           s"COPY INTO found no data files under $source and no existing " +
-            s"table under $root")), 0)
-      val partCols = ColSpec.parse(
-        cur.flatMap(v => partitionColumn(spark, root, v))
-          .orElse(partitionCol).getOrElse(throw new IllegalStateException(
-            s"COPY INTO a new table needs an explicit partition column " +
-              s"(no existing manifest under $root records one)")))
-      val df = spark.read.format(format).load(fresh: _*)
-      partCols.cols.foreach(c => require(df.columns.contains(c),
-        s"COPY INTO source files lack the table's partition column '$c'"))
-      val headers = fresh.map(p => s"#copied\t${URLEncoder.encode(p, UTF_8)}")
-      try return (appendCommit(spark, df, root, partCols, maxAttempts = 1,
-        operation = "copy", extraHeaders = headers), fresh.size)
-      catch { case _: java.util.ConcurrentModificationException => attempt += 1 }
+            s"table under $root")
+        NoOp(cur)
+      } else {
+        val partCols = ColSpec.parse(
+          Some(cur).filter(_ >= 1).flatMap(partitionColumn(spark, root, _))
+            .orElse(partitionCol).getOrElse(throw new IllegalStateException(
+              s"COPY INTO a new table needs an explicit partition column " +
+                s"(no existing manifest under $root records one)")))
+        val df = spark.read.format(format).load(fresh: _*)
+        partCols.cols.foreach(c => require(df.columns.contains(c),
+          s"COPY INTO source files lack the table's partition column '$c'"))
+        val headers = fresh.map(p => s"#copied\t${URLEncoder.encode(p, UTF_8)}")
+        appendAttempt(spark, df, root, partCols, cur, "copy", headers)
+      }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the copy-into race 10 times under $root")
+    (v, loaded)
   }
 
   /** K1 keyed merge as an atomic snapshot commit: last writer wins per
@@ -301,10 +280,9 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * winner's rows). Lost attempts' data files become orphans that
     * [[vacuum]] collects. Returns the committed version. */
   def mergeCommit(spark: SparkSession, incoming: DataFrame, root: String,
-                  keys: ColSpec, versionCol: String, partitionCols: ColSpec,
-                  maxAttempts: Int = 10): Long =
+                  keys: ColSpec, versionCol: String, partitionCols: ColSpec): Long =
     mergeCommitOrdered(spark, incoming, root, keys,
-      Seq(col(versionCol).desc_nulls_last), partitionCols, maxAttempts)
+      Seq(col(versionCol).desc_nulls_last), partitionCols)
 
   /** [[mergeCommit]] with an explicit win order instead of a version
     * column. `orderBy` ranks rows per key (highest priority first);
@@ -317,8 +295,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * has unique keys (SQL MERGE's own precondition): with no ordering,
     * two incoming rows for one key would race nondeterministically. */
   def mergeCommitOrdered(spark: SparkSession, incoming0: DataFrame, root: String,
-                         keys: ColSpec, orderBy: Seq[Column], partitionCols: ColSpec,
-                         maxAttempts: Int = 10): Long = {
+                         keys: ColSpec, orderBy: Seq[Column], partitionCols: ColSpec): Long = {
     require(keys.nonEmpty, "mergeCommit needs at least one key column")
     require(partitionCols.nonEmpty, "mergeCommit needs a partition spec")
     // Generated columns materialize EARLY: the partition-touch probe
@@ -326,6 +303,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     // the merge union must not null-fill an absent generated column.
     // ONE tip read feeds both this and constraint enforcement.
     val tip = tipVersionAndProps(spark, root)
+    val tipProps = tip.map(_._2).getOrElse(Map.empty[String, String])
     val incoming = applyGenerated(spark, root, incoming0, tip)
     // Touched partitions: one small distinct-collect (bounded by the
     // partition cardinality of the incoming batch, e.g. suppliers),
@@ -338,13 +316,12 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     val touched = incoming
       .select(partValueColumn(partitionCols.cols))
       .distinct().collect().map(_.getString(0)).toSet
-    enforceConstraints(spark, root, incoming, Some(tip))
-    enforceSchemaCompatible(spark, root, incoming)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val (kept, merged, v) = currentVersion(spark, root) match {
-        case None => (Seq.empty[ManifestEntry], incoming, 1L)
-        case Some(cur) =>
+    occ(spark, root, "merge-commit", needsTable = false) { cur =>
+      enforceConstraints(spark, root, incoming, cur, tipProps)
+      enforceSchemaCompatible(spark, root, incoming, cur)
+      val (kept, merged) =
+        if (cur == 0) (Seq.empty[ManifestEntry], incoming)
+        else {
           val entries = manifest(spark, root, cur)
           val (replaced, keptEntries) = entries.partition(e => touched(e.partition))
           // No checkpoint needed: data files are append-only, so reading
@@ -364,8 +341,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
               // only genuinely new keys reach the write-path
               // allocator (as null slots). One equi-join on the keys
               // the merge already shuffles on, identity tables only.
-              val inheritCols = identityColumns(
-                tip.map(_._2).getOrElse(Map.empty)).map(_.col)
+              val inheritCols = identityColumns(tipProps).map(_.col)
                 .filterNot(incoming.columns.contains)
               val incomingW =
                 if (inheritCols.isEmpty) incoming
@@ -374,75 +350,70 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
                   keys.cols, "left")
               Upsert.merge(existing, incomingW, keys.cols, orderBy)
             }
-          (keptEntries, m, cur + 1)
-      }
-      val newEntries = writeDataFiles(spark, merged, root, v, partitionCols.cols)
-      // Publish loop: on a lost race, rebase while the interlopers are
-      // partition-disjoint (data files are version-stamped by path, so
-      // files written for attempt version v publish unchanged under any
-      // later manifest number). Bounded by maxAttempts like the outer
-      // recompute loop.
-      var carried = kept
-      var publishV = v
-      var rebasing = true
-      var rebases = 0
-      while (rebasing) {
-        if (writeManifest(spark, root, publishV, carried ++ newEntries, "merge",
-            partitionCols.header)) {
-          writeStats(spark, root, publishV, carried, newEntries, Some(merged.schema))
-          postCommit(spark, root, publishV)
-          return publishV
+          (keptEntries, m)
         }
-        val head = currentVersion(spark, root).getOrElse(0L)
-        // Which partitions did the interloping commits change since the
-        // snapshot this merge was computed against? (base = v-1; a
-        // first-commit loser has no base — every head partition counts.)
-        // A concurrent vacuum may have dropped the base manifest (v-1)
-        // or an intervening one out from under the diff; a missing
-        // manifest is then indistinguishable from a true conflict, so
-        // degrade to the outer full-recompute path instead of failing
-        // the writer with a raw FileNotFoundException.
-        val interloperParts: Option[Set[String]] =
-          try Some {
-            if (v - 1 >= 1 && head >= v)
-              changedPartitions(spark, root, v - 1, head).toSet
-            else if (head >= 1) manifest(spark, root, head).map(_.partition).toSet
-            else Set.empty[String]
-          } catch { case _: java.io.FileNotFoundException => None }
-        rebases += 1
-        // Identity safety: the rebase republishes data files whose ids
-        // were allocated against OUR base mark (v−1). If an interloper
-        // ALSO allocated (its commit advanced any identity mark), those
-        // files may carry the same ids — partition disjointness says
-        // nothing about id disjointness — so the fast path is only
-        // sound when every identity mark is unmoved between base and
-        // head. Anything else (moved marks, unreadable manifests)
-        // degrades to the full recompute, which re-allocates against
-        // the winner's mark.
-        val identitySafe =
-          identityColumns(tip.map(_._2).getOrElse(Map.empty)).isEmpty || {
-            try {
-              def marks(at: Long): Map[String, Long] =
-                if (at >= 1) identityColumns(
-                  tableProperties(spark, root, at).toMap)
-                  .map(s => s.col -> s.last).toMap
-                else Map.empty
-              marks(v - 1) == marks(head)
-            } catch { case scala.util.control.NonFatal(_) => false }
-          }
-        if (head >= publishV && rebases <= maxAttempts && identitySafe &&
-            interloperParts.exists(parts => !parts.exists(touched))) {
-          // Disjoint: our touched partitions are byte-identical between
-          // base and head, so head-minus-touched plus our files IS the
-          // sequential result. One manifest write, zero data movement.
-          carried = manifest(spark, root, head).filterNot(e => touched(e.partition))
-          publishV = head + 1
-        } else rebasing = false // true conflict → full recompute
-      }
-      attempt += 1
+      // Data files are version-stamped by path, so files written for
+      // attempt version cur + 1 publish unchanged under any later
+      // manifest number — what lets the rebase skip the recompute.
+      val fresh = writeDataFiles(spark, merged, root, cur + 1, partitionCols.cols)
+      new Staged(kept, fresh, "merge", partitionCols.header, Some(merged.schema),
+        rebase = Some(mergeRebase(spark, root, touched, tipProps)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the merge-commit race $maxAttempts times under $root")
+  }
+
+  /** [[mergeCommitOrdered]]'s rebase check: after a lost publish, which
+    * partitions did the interloping commits change since `base`, the
+    * snapshot the merge was computed against? (A first-commit loser
+    * has no base — every head partition counts.) Returns the carried
+    * entries for a publish at `head` + 1 when none of them is in
+    * `touched`, else None. A concurrent vacuum may have dropped the
+    * base manifest or an intervening one out from under the diff; a
+    * missing manifest is then indistinguishable from a true conflict,
+    * so it degrades to the full recompute instead of failing the
+    * writer with a raw FileNotFoundException. */
+  private[sinks] def mergeRebase(spark: SparkSession, root: String, touched: Set[String],
+                                 tipProps: Map[String, String])
+                                (base: Long, head: Long): Option[Seq[ManifestEntry]] = {
+    val interloperParts: Option[Set[String]] =
+      try Some {
+        if (base >= 1 && head > base)
+          changedPartitions(spark, root, base, head).toSet
+        else if (head >= 1) manifest(spark, root, head).map(_.partition).toSet
+        else Set.empty[String]
+      } catch { case _: java.io.FileNotFoundException => None }
+    // Identity safety: the rebase republishes data files whose ids
+    // were allocated against OUR base mark. If an interloper ALSO
+    // allocated (its commit advanced any identity mark), those files
+    // may carry the same ids — partition disjointness says nothing
+    // about id disjointness — so the fast path is only sound when
+    // every identity mark is unmoved between base and head. The
+    // same holds for CHECK constraints: our rows were checked
+    // against the base's set only. Anything else (moved marks, a
+    // changed constraint set, unreadable manifests) degrades to the
+    // full recompute, which re-allocates against the winner's mark
+    // and re-checks against the winner's constraints.
+    val identitySafe =
+      identityColumns(tipProps).isEmpty || {
+        try {
+          def marks(at: Long): Map[String, Long] =
+            if (at >= 1) identityColumns(
+              tableProperties(spark, root, at).toMap)
+              .map(s => s.col -> s.last).toMap
+            else Map.empty
+          marks(base) == marks(head)
+        } catch { case scala.util.control.NonFatal(_) => false }
+      }
+    val constraintsSafe =
+      try (if (base >= 1) tableConstraints(spark, root, base) else Nil) ==
+        tableConstraints(spark, root, head)
+      catch { case scala.util.control.NonFatal(_) => false }
+    // Disjoint: our touched partitions are byte-identical between
+    // base and head, so head-minus-touched plus our files IS the
+    // sequential result. One manifest write, zero data movement.
+    if (identitySafe && constraintsSafe &&
+        interloperParts.exists(parts => !parts.exists(touched)))
+      Some(manifest(spark, root, head).filterNot(e => touched(e.partition)))
+    else None
   }
 
   /** One ATOMIC commit applying keyed upserts AND keyed deletes — the
@@ -462,22 +433,19 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
   def upsertDeleteCommit(spark: SparkSession, root: String,
                          upserts0: DataFrame, deleteKeys: Option[DataFrame],
                          keys: ColSpec, partitionCols: ColSpec,
-                         maxAttempts: Int = 10,
                          properties: Option[Seq[(String, String)]] = None): Long = {
     require(keys.nonEmpty, "upsertDeleteCommit needs at least one key column")
     require(partitionCols.nonEmpty, "upsertDeleteCommit needs a partition spec")
     // Same early-materialization rationale as [[mergeCommitOrdered]].
     val tip = tipVersionAndProps(spark, root)
+    val tipProps = tip.map(_._2).getOrElse(Map.empty[String, String])
     val upserts = applyGenerated(spark, root, upserts0, tip)
-    enforceConstraints(spark, root, upserts, Some(tip))
-    enforceSchemaCompatible(spark, root, upserts)
     val upTouched = upserts.select(partValueColumn(partitionCols.cols))
       .distinct().collect().map(_.getString(0)).toSet
     val doomed = deleteKeys.map(_.select(keys.cols.map(col): _*).distinct())
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "merge") { cur =>
+      enforceConstraints(spark, root, upserts, cur, tipProps)
+      enforceSchemaCompatible(spark, root, upserts, cur)
       val entries = manifest(spark, root, cur)
       // Small delete-key sets prune the probe scan file-by-file via
       // the stats/bloom sidecars (see [[probeCandidateEntries]]).
@@ -495,45 +463,38 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
       }.getOrElse(Set.empty)
       val touched = upTouched ++ delTouched
       val (replaced, kept) = entries.partition(e => touched(e.partition))
-      if (replaced.isEmpty && upTouched.isEmpty) return cur
-      // `replaced` may be EMPTY with upserts into brand-new partitions
-      // — reading a zero-entry file set is an error, not an empty
-      // frame, so the existing side only materializes when needed.
-      val merged =
-        if (replaced.isEmpty) upserts
-        else {
-          val existing = applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
-            mappingAt(spark, root, cur))
-          val survivors = doomed match {
-            case Some(d) => existing.join(d, keys.cols, "left_anti")
-            case None => existing
+      if (replaced.isEmpty && upTouched.isEmpty) NoOp(cur)
+      else {
+        // `replaced` may be EMPTY with upserts into brand-new partitions
+        // — reading a zero-entry file set is an error, not an empty
+        // frame, so the existing side only materializes when needed.
+        val merged =
+          if (replaced.isEmpty) upserts
+          else {
+            val existing = applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
+              mappingAt(spark, root, cur))
+            val survivors = doomed match {
+              case Some(d) => existing.join(d, keys.cols, "left_anti")
+              case None => existing
+            }
+            // Identity inheritance — the same UPDATE-keeps-identity
+            // contract [[mergeCommitOrdered]] applies: an id-omitting
+            // upsert batch inherits the surviving row's id for matched
+            // keys; only genuinely new keys reach the allocator.
+            val inheritCols = identityColumns(tipProps).map(_.col)
+              .filterNot(upserts.columns.contains)
+            val upsertsW =
+              if (inheritCols.isEmpty) upserts
+              else upserts.join(
+                inheritanceIds(survivors, keys.cols, inheritCols),
+                keys.cols, "left")
+            Upsert.merge(survivors, upsertsW, keys.cols, Nil)
           }
-          // Identity inheritance — the same UPDATE-keeps-identity
-          // contract [[mergeCommitOrdered]] applies: an id-omitting
-          // upsert batch inherits the surviving row's id for matched
-          // keys; only genuinely new keys reach the allocator.
-          val inheritCols = identityColumns(
-            tip.map(_._2).getOrElse(Map.empty)).map(_.col)
-            .filterNot(upserts.columns.contains)
-          val upsertsW =
-            if (inheritCols.isEmpty) upserts
-            else upserts.join(
-              inheritanceIds(survivors, keys.cols, inheritCols),
-              keys.cols, "left")
-          Upsert.merge(survivors, upsertsW, keys.cols, Nil)
-        }
-      val v = cur + 1
-      val newEntries = writeDataFiles(spark, merged, root, v, partitionCols.cols)
-      if (writeManifest(spark, root, v, kept ++ newEntries, "merge",
-          partitionCols.header, properties = properties)) {
-        writeStats(spark, root, v, kept, newEntries, Some(merged.schema))
-        postCommit(spark, root, v)
-        return v
+        val fresh = writeDataFiles(spark, merged, root, cur + 1, partitionCols.cols)
+        new Staged(kept, fresh, "merge", partitionCols.header, Some(merged.schema),
+          properties = properties)
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the merge race $maxAttempts times under $root")
   }
 
   /** Loud type-compatibility gate for batches entering a table whose
@@ -548,8 +509,8 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * Reference anchor: the Pydantic coercion boundary,
     * unified_product_schema.py:145-207. */
   private[sinks] def enforceSchemaCompatible(spark: SparkSession, root: String,
-                                      df: DataFrame): Unit =
-    currentVersion(spark, root).foreach { cur =>
+                                      df: DataFrame, cur: Long): Unit =
+    if (cur >= 1)
       schemaFor(spark, root, cur).foreach { prior =>
         val renames = mappingAt(spark, root, cur)._1
         val priorTypes = prior.fields.map(f => f.name -> f.dataType).toMap
@@ -563,7 +524,6 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
           }
         }
       }
-    }
 
   /** Keys below this count are collected to the driver and used to
     * prune the partition-probe scan file-by-file
@@ -660,8 +620,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * partition holds any doomed key (an empty delete is a no-op, not
     * an empty commit). */
   def deleteCommit(spark: SparkSession, keys: DataFrame, root: String,
-                   keyCols: ColSpec, partitionCols: ColSpec,
-                   maxAttempts: Int = 10): Long = {
+                   keyCols: ColSpec, partitionCols: ColSpec): Long = {
     require(keyCols.nonEmpty, "deleteCommit needs at least one key column")
     require(partitionCols.nonEmpty, "deleteCommit needs a partition spec")
     val doomed = keys.select(keyCols.cols.map(col): _*).distinct()
@@ -671,10 +630,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
       if (!partitionCols.cols.forall(keys.columns.contains)) None
       else Some(keys.select(partValueColumn(partitionCols.cols)).distinct()
         .collect().map(_.getString(0)).toSet)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "delete-commit") { cur =>
       val entries = manifest(spark, root, cur)
       // Probe (always): which in-scope partitions actually contain a
       // doomed key. The hint only prunes the probe's scan; a SMALL
@@ -697,22 +653,15 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
           .select(partValueColumn(partitionCols.cols)).distinct()
           .collect().map(_.getString(0)).toSet
       val (replaced, kept) = entries.partition(e => touched(e.partition))
-      if (replaced.isEmpty) return cur
-      val remaining = applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
-          mappingAt(spark, root, cur))
-        .join(doomed, keyCols.cols, "left_anti")
-      val v = cur + 1
-      val newEntries = writeDataFiles(spark, remaining, root, v, partitionCols.cols)
-      if (writeManifest(spark, root, v, kept ++ newEntries, "delete",
-          partitionCols.header)) {
-        writeStats(spark, root, v, kept, newEntries, Some(remaining.schema))
-        postCommit(spark, root, v)
-        return v
+      if (replaced.isEmpty) NoOp(cur)
+      else {
+        val remaining = applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
+            mappingAt(spark, root, cur))
+          .join(doomed, keyCols.cols, "left_anti")
+        val fresh = writeDataFiles(spark, remaining, root, cur + 1, partitionCols.cols)
+        new Staged(kept, fresh, "delete", partitionCols.header, Some(remaining.schema))
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the delete-commit race $maxAttempts times under $root")
   }
 
   /** `DELETE FROM t WHERE p` as an atomic snapshot commit (Delta's
@@ -835,58 +784,37 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     else Some(doomed)
   }
 
-  def deleteWhere(spark: SparkSession, root: String, predicate: String,
-                  maxAttempts: Int = 10): Long = {
+  def deleteWhere(spark: SparkSession, root: String, predicate: String): Long = {
     val hit = coalesce(expr(predicate), lit(false))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "delete-where") { cur =>
       val partCols = requirePartitionCols(spark, root, cur)
       val entries = manifest(spark, root, cur)
       // Partition-predicate fast path: `DELETE FROM t WHERE
       // supplier = 'x'` drops whole partitions with ONE manifest
       // write — zero data files read or written, at any table size. A
-      // lost manifest race falls through to the next loop iteration
-      // (which re-reads the manifest and re-decides).
+      // lost manifest race re-runs this body, which re-reads the
+      // manifest and re-decides.
       partitionOnlyDoomed(spark, root, cur, partCols, entries,
           predicate) match {
         case Some(doomed) =>
-          if (doomed.isEmpty) return cur
-          val kept = entries.filterNot(e => doomed(e.partition))
-          if (writeManifest(spark, root, cur + 1, kept, "delete",
-              partCols.mkString(","))) {
-            writeStats(spark, root, cur + 1, kept, Nil, None)
-            postCommit(spark, root, cur + 1)
-            return cur + 1
-          }
-          attempt += 1
+          if (doomed.isEmpty) NoOp(cur)
+          else new Staged(entries.filterNot(e => doomed(e.partition)), Nil,
+            "delete", partCols.mkString(","))
         case None =>
           val touched: Set[String] = table(spark, root, Some(cur))
             .filter(hit).select(partValueColumn(partCols)).distinct()
             .collect().map(_.getString(0)).toSet
           val (replaced, kept) = entries.partition(e => touched(e.partition))
-          if (replaced.isEmpty) return cur
-          val remaining = applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
-            mappingAt(spark, root, cur)).filter(!hit)
-          val v = cur + 1
-          val newEntries = writeDataFiles(spark, remaining, root, v, partCols)
-          if (writeManifest(spark, root, v, kept ++ newEntries, "delete",
-              partCols.mkString(","))) {
-            writeStats(spark, root, v, kept, newEntries, Some(remaining.schema))
-            // Every data-commit exit runs the hooks — this rewrite
-            // branch was the ONE that didn't, leaving registered
-            // rollups cursor-stale (reads stayed correct via the
-            // rewrite's freshness check, but paid the scan) and
-            // auto-analyze blind to predicate-delete shrink.
-            postCommit(spark, root, v)
-            return v
+          if (replaced.isEmpty) NoOp(cur)
+          else {
+            val remaining = applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
+              mappingAt(spark, root, cur)).filter(!hit)
+            val fresh = writeDataFiles(spark, remaining, root, cur + 1, partCols)
+            new Staged(kept, fresh, "delete", partCols.mkString(","),
+              Some(remaining.schema))
           }
-          attempt += 1
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the delete-where race $maxAttempts times under $root")
   }
 
   /** Delta's `replaceWhere` (E143): ONE atomic commit that deletes
@@ -904,9 +832,10 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * data read — manifest arithmetic plus the new batch's write, at
     * any table size. Returns the committed version. */
   def replaceWhere(spark: SparkSession, root: String, df0: DataFrame,
-                   predicate: String, maxAttempts: Int = 10): Long = {
+                   predicate: String): Long = {
     val hit = coalesce(expr(predicate), lit(false))
     val tip = tipVersionAndProps(spark, root)
+    val tipProps = tip.map(_._2).getOrElse(Map.empty[String, String])
     // ONE materialization serves the scope check, the partition probe,
     // and the write — the writeDataFiles discipline: a nondeterministic
     // source must not pass the scope check with one row set and write
@@ -916,64 +845,46 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     val incoming = applyGenerated(spark, root, df0, tip)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      enforceConstraints(spark, root, incoming, Some(tip))
-      enforceSchemaCompatible(spark, root, incoming)
       val stray = incoming.filter(!hit).limit(1).collect()
       if (stray.nonEmpty) throw new IllegalArgumentException(
         s"replaceWhere: an incoming row does not satisfy '$predicate' " +
           s"(${stray.head}) — the write must be scoped to what it replaces")
-      replaceWhereLoop(spark, root, incoming, hit, predicate, maxAttempts)
+      occ(spark, root, "replace-where") { cur =>
+        enforceConstraints(spark, root, incoming, cur, tipProps)
+        enforceSchemaCompatible(spark, root, incoming, cur)
+        val partCols = requirePartitionCols(spark, root, cur)
+        val entries = manifest(spark, root, cur)
+        val newParts: Set[String] = incoming
+          .select(partValueColumn(partCols)).distinct()
+          .collect().map(_.getString(0)).toSet
+        // Partition-only predicates: the doomed set is decided from
+        // partition VALUES (zero data reads), every row in those
+        // partitions matches, and the incoming batch (all rows
+        // predicate-true) can only land inside them — whole-partition
+        // replacement, the INSERT OVERWRITE … PARTITION fast path.
+        val partitionOnly = partitionOnlyDoomed(spark, root, cur, partCols,
+          entries, predicate).filter(newParts.subsetOf)
+        val (merged, touched) = partitionOnly match {
+          case Some(doomed) => (incoming, doomed ++ newParts)
+          case None =>
+            val matchParts: Set[String] = table(spark, root, Some(cur))
+              .filter(hit).select(partValueColumn(partCols)).distinct()
+              .collect().map(_.getString(0)).toSet
+            val touched = matchParts ++ newParts
+            val replaced = entries.filter(e => touched(e.partition))
+            val m =
+              if (replaced.isEmpty) incoming
+              else applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
+                mappingAt(spark, root, cur)).filter(!hit)
+                .unionByName(incoming, allowMissingColumns = true)
+            (m, touched)
+        }
+        val kept = entries.filterNot(e => touched(e.partition))
+        val fresh = writeDataFiles(spark, merged, root, cur + 1, partCols)
+        new Staged(kept, fresh, "replace-where", partCols.mkString(","),
+          Some(merged.schema))
+      }
     } finally incoming.unpersist(false)
-  }
-
-  private def replaceWhereLoop(spark: SparkSession, root: String,
-                               incoming: DataFrame,
-                               hit: org.apache.spark.sql.Column,
-                               predicate: String, maxAttempts: Int): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
-      val partCols = requirePartitionCols(spark, root, cur)
-      val entries = manifest(spark, root, cur)
-      val newParts: Set[String] = incoming
-        .select(partValueColumn(partCols)).distinct()
-        .collect().map(_.getString(0)).toSet
-      // Partition-only predicates: the doomed set is decided from
-      // partition VALUES (zero data reads), every row in those
-      // partitions matches, and the incoming batch (all rows
-      // predicate-true) can only land inside them — whole-partition
-      // replacement, the INSERT OVERWRITE … PARTITION fast path.
-      val partitionOnly = partitionOnlyDoomed(spark, root, cur, partCols,
-        entries, predicate).filter(newParts.subsetOf)
-      val (merged, touched) = partitionOnly match {
-        case Some(doomed) => (incoming, doomed ++ newParts)
-        case None =>
-          val matchParts: Set[String] = table(spark, root, Some(cur))
-            .filter(hit).select(partValueColumn(partCols)).distinct()
-            .collect().map(_.getString(0)).toSet
-          val touched = matchParts ++ newParts
-          val replaced = entries.filter(e => touched(e.partition))
-          val m =
-            if (replaced.isEmpty) incoming
-            else applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
-              mappingAt(spark, root, cur)).filter(!hit)
-              .unionByName(incoming, allowMissingColumns = true)
-          (m, touched)
-      }
-      val kept = entries.filterNot(e => touched(e.partition))
-      val v = cur + 1
-      val newEntries = writeDataFiles(spark, merged, root, v, partCols)
-      if (writeManifest(spark, root, v, kept ++ newEntries, "replace-where",
-          partCols.mkString(","))) {
-        writeStats(spark, root, v, kept, newEntries, Some(merged.schema))
-        postCommit(spark, root, v)
-        return v
-      }
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the replace-where race $maxAttempts times under $root")
   }
 
   /** DYNAMIC partition overwrite (Spark's
@@ -984,39 +895,27 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * predicate text is synthesized (value quoting can never misfire);
     * whole partitions are replaced, everything else carries by
     * reference. The empty batch is a version no-op. */
-  def overwritePartitions(spark: SparkSession, root: String, df0: DataFrame,
-                          maxAttempts: Int = 10): Long = {
+  def overwritePartitions(spark: SparkSession, root: String, df0: DataFrame): Long = {
     val tip = tipVersionAndProps(spark, root)
+    val tipProps = tip.map(_._2).getOrElse(Map.empty[String, String])
     // Same one-materialization discipline as [[replaceWhere]]: the
     // partition probe and the write must see identical rows.
     val incoming = applyGenerated(spark, root, df0, tip)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      enforceConstraints(spark, root, incoming, Some(tip))
-      enforceSchemaCompatible(spark, root, incoming)
-      var attempt = 0
-      while (attempt < maxAttempts) {
-        val cur = currentVersion(spark, root).getOrElse(
-          throw new IllegalStateException(s"no committed snapshot under $root"))
-        val partCols = requirePartitionCols(spark, root, cur)
-        val touched: Set[String] = incoming
-          .select(partValueColumn(partCols)).distinct()
-          .collect().map(_.getString(0)).toSet
-        if (touched.isEmpty) return cur
-        val entries = manifest(spark, root, cur)
-        val kept = entries.filterNot(e => touched(e.partition))
-        val v = cur + 1
-        val newEntries = writeDataFiles(spark, incoming, root, v, partCols)
-        if (writeManifest(spark, root, v, kept ++ newEntries, "replace-where",
-            partCols.mkString(","))) {
-          writeStats(spark, root, v, kept, newEntries, Some(incoming.schema))
-          postCommit(spark, root, v)
-          return v
-        }
-        attempt += 1
+    try occ(spark, root, "overwrite-partitions") { cur =>
+      enforceConstraints(spark, root, incoming, cur, tipProps)
+      enforceSchemaCompatible(spark, root, incoming, cur)
+      val partCols = requirePartitionCols(spark, root, cur)
+      val touched: Set[String] = incoming
+        .select(partValueColumn(partCols)).distinct()
+        .collect().map(_.getString(0)).toSet
+      if (touched.isEmpty) NoOp(cur)
+      else {
+        val kept = manifest(spark, root, cur).filterNot(e => touched(e.partition))
+        val fresh = writeDataFiles(spark, incoming, root, cur + 1, partCols)
+        new Staged(kept, fresh, "replace-where", partCols.mkString(","),
+          Some(incoming.schema))
       }
-      throw new java.util.ConcurrentModificationException(
-        s"lost the overwrite-partitions race $maxAttempts times under $root")
     } finally incoming.unpersist(false)
   }
 
@@ -1027,22 +926,10 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * The partition-only delete's cost model applied to the whole
     * table. Returns the new version (the current one when already
     * empty). */
-  def truncate(spark: SparkSession, root: String, maxAttempts: Int = 5): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+  def truncate(spark: SparkSession, root: String): Long =
+    occ(spark, root, "truncate") { cur =>
       val partCols = requirePartitionCols(spark, root, cur)
-      if (manifest(spark, root, cur).isEmpty) return cur
-      if (writeManifest(spark, root, cur + 1, Nil, "delete",
-          partCols.mkString(","))) {
-        writeStats(spark, root, cur + 1, Nil, Nil, None)
-        postCommit(spark, root, cur + 1)
-        return cur + 1
-      }
-      attempt += 1
+      if (manifest(spark, root, cur).isEmpty) NoOp(cur)
+      else new Staged(Nil, Nil, "delete", partCols.mkString(","))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the truncate race $maxAttempts times under $root")
-  }
 }

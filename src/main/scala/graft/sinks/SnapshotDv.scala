@@ -144,105 +144,76 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
     * no-op returning the current version. Read amplification is
     * bounded by [[purgeDeletionVectors]], which rewrites vectored
     * files and drops their DVs (Delta's `REORG … APPLY (PURGE)`). */
-  def deleteWhereDv(spark: SparkSession, root: String, predicate: String,
-                    maxAttempts: Int = 10): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+  def deleteWhereDv(spark: SparkSession, root: String, predicate: String): Long = {
+    val hit = coalesce(expr(predicate), lit(false))
+    occ(spark, root, "delete-dv") { cur =>
       val partCols = requirePartitionCols(spark, root, cur)
       val entries = manifest(spark, root, cur)
-      if (entries.isEmpty) return cur
+      if (entries.isEmpty) NoOp(cur)
       // A partition-only predicate drops whole partitions as METADATA
       // even in DV mode (Delta's behavior: deletion vectors are for
       // sparse deletes; a full-partition match removes the files) —
       // writing position lists covering every row of a partition
       // would maximize read amplification for no write saving.
-      partitionOnlyDoomed(spark, root, cur, partCols, entries,
+      else partitionOnlyDoomed(spark, root, cur, partCols, entries,
           predicate) match {
         case Some(doomed) =>
-          if (doomed.isEmpty) return cur
-          val kept = entries.filterNot(e => doomed(e.partition))
-          if (writeManifest(spark, root, cur + 1, kept, "delete",
-              partCols.mkString(","))) {
-            writeStats(spark, root, cur + 1, kept, Nil, None)
-            postCommit(spark, root, cur + 1)
-            return cur + 1
-          }
-          attempt += 1
-        case None =>
-          return deleteWhereDvRows(spark, root, predicate,
-            maxAttempts - attempt)
+          if (doomed.isEmpty) NoOp(cur)
+          else new Staged(entries.filterNot(e => doomed(e.partition)), Nil,
+            "delete", partCols.mkString(","))
+        case None => deleteDvRows(spark, root, cur, partCols, entries, hit)
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the delete-dv race $maxAttempts times under $root")
   }
 
   /** [[deleteWhereDv]]'s row-level leg (position-list commit). */
-  private[sinks] def deleteWhereDvRows(spark: SparkSession, root: String,
-                                predicate: String,
-                                maxAttempts: Int): Long = {
-    val hit = coalesce(expr(predicate), lit(false))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
-      val partCols = requirePartitionCols(spark, root, cur)
-      val entries = manifest(spark, root, cur)
-      if (entries.isEmpty) return cur
-      // Doomed positions over the RAW skipping-indexed scan (not
-      // DV-applied): union semantics below make re-marking an
-      // already-deleted position harmless, and the raw scan keeps the
-      // probe one pass with no join under it.
-      val (raw, _) = {
-        val (rel, idx, _) = relationWithIndex(spark, root, Some(cur), None)
-        (spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          .baseRelationToDataFrame(rel), idx)
-      }
-      // Row identity (_metadata) materializes FIRST — hidden columns
-      // only resolve against the scan frame — then the column mapping
-      // presents logical names so the user's predicate resolves.
-      val doomed = applyColumnMapping(raw
-          .withColumn("__graft_fk", dvKeyExpr(col("_metadata.file_path")))
-          .withColumn("__graft_pos", col("_metadata.row_index")),
-          mappingAt(spark, root, cur))
-        .select(col("__graft_fk").as("file_key"),
-          col("__graft_pos").as("pos"), hit.as("__hit"))
-        .filter(col("__hit")).drop("__hit")
-      val existing = dvRowsFor(spark, root, entries)
-      // Fresh = positions not already deleted; an all-stale match set
-      // (or no match at all) is a no-op, not an empty commit.
-      val fresh = existing.map(e =>
-        doomed.join(e, Seq("file_key", "pos"), "left_anti")).getOrElse(doomed)
-      val newDv = existing.map(e => {
-        val affected = fresh.select("file_key").distinct()
-        // The new DV dir must hold each affected file's COMPLETE set:
-        // carried prior positions ∪ fresh ones.
-        fresh.unionByName(e.join(affected, Seq("file_key"), "left_semi"))
-      }).getOrElse(fresh).persist()
-      try {
-        val counts: Map[String, Long] = newDv.groupBy("file_key").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (counts.isEmpty) return cur
+  private def deleteDvRows(spark: SparkSession, root: String, cur: Long,
+                           partCols: Seq[String], entries: Seq[ManifestEntry],
+                           hit: Column): Attempt = {
+    // Doomed positions over the RAW skipping-indexed scan (not
+    // DV-applied): union semantics below make re-marking an
+    // already-deleted position harmless, and the raw scan keeps the
+    // probe one pass with no join under it.
+    val (rel, _, _) = relationWithIndex(spark, root, Some(cur), None)
+    val raw = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(rel)
+    // Row identity (_metadata) materializes FIRST — hidden columns
+    // only resolve against the scan frame — then the column mapping
+    // presents logical names so the user's predicate resolves.
+    val doomed = applyColumnMapping(raw
+        .withColumn("__graft_fk", dvKeyExpr(col("_metadata.file_path")))
+        .withColumn("__graft_pos", col("_metadata.row_index")),
+        mappingAt(spark, root, cur))
+      .select(col("__graft_fk").as("file_key"),
+        col("__graft_pos").as("pos"), hit.as("__hit"))
+      .filter(col("__hit")).drop("__hit")
+    val existing = dvRowsFor(spark, root, entries)
+    // Fresh = positions not already deleted; an all-stale match set
+    // (or no match at all) is a no-op, not an empty commit.
+    val fresh = existing.map(e =>
+      doomed.join(e, Seq("file_key", "pos"), "left_anti")).getOrElse(doomed)
+    val newDv = existing.map(e => {
+      val affected = fresh.select("file_key").distinct()
+      // The new DV dir must hold each affected file's COMPLETE set:
+      // carried prior positions ∪ fresh ones.
+      fresh.unionByName(e.join(affected, Seq("file_key"), "left_semi"))
+    }).getOrElse(fresh).persist()
+    // Unpersisted on every attempt, won or lost: the publish reads
+    // nothing from it once the DV dir is written.
+    try {
+      val counts: Map[String, Long] = newDv.groupBy("file_key").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      if (counts.isEmpty) NoOp(cur)
+      else {
         val dvDir = s"dv/v_${cur + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
         writeDvDir(spark, root, dvDir, newDv, counts.values.sum)
-        val newEntries = entries.map { e =>
+        val vectored = entries.map { e =>
           val fn = dvKeyOf(e.path)
           if (counts.contains(fn)) e.copy(dv = dvDir, dvRows = counts(fn)) else e
         }
-        val v = cur + 1
-        if (writeManifest(spark, root, v, newEntries, "delete-dv",
-            partCols.mkString(","))) {
-          writeStats(spark, root, v, newEntries, Nil, None)
-          postCommit(spark, root, v)
-          return v
-        }
-      } finally newDv.unpersist()
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the delete-dv race $maxAttempts times under $root")
+        new Staged(vectored, Nil, "delete-dv", partCols.mkString(","))
+      }
+    } finally newDv.unpersist()
   }
 
   /** [[updateWhere]] in MERGE-ON-READ form (Delta's DV-backed UPDATE):
@@ -259,58 +230,65 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
     * a no-op. */
   def updateWhereDv(spark: SparkSession, root: String,
                     assignments: Seq[(String, String)],
-                    predicate: Option[String],
-                    maxAttempts: Int = 10): Long = {
+                    predicate: Option[String]): Long = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     require(assignments.map(_._1).distinct.size == assignments.size,
       s"UPDATE assigns a column twice: ${assignments.map(_._1).mkString(", ")}")
     val hit = coalesce(predicate.map(expr).getOrElse(lit(true)), lit(false))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "update-dv") { cur =>
       val partCols = requirePartitionCols(spark, root, cur)
       val entries = manifest(spark, root, cur)
-      if (entries.isEmpty) return cur
-      val rawRel = {
-        val (rel, _, _) = relationWithIndex(spark, root, Some(cur), None)
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          .baseRelationToDataFrame(rel)
-      }
-      // _metadata first, then the mapping — same order as deleteWhereDv
-      // — so assignments and predicate see LOGICAL columns.
-      val raw = applyColumnMapping(rawRel
-          .withColumn("__fk", dvKeyExpr(col("_metadata.file_path")))
-          .withColumn("__pos", col("_metadata.row_index")),
-        mappingAt(spark, root, cur))
-      val dataCols = raw.columns.toSeq.filterNot(Set("__fk", "__pos"))
-      val types = raw.schema.map(f => f.name -> f.dataType).toMap
-      assignments.foreach { case (c, _) => require(types.contains(c) &&
-        c != "__fk" && c != "__pos",
-        s"UPDATE SET targets unknown column '$c' " +
-          s"(columns: ${dataCols.mkString(", ")})") }
-      // Allocator-owned on every surface, same as [[updateWhere]].
-      val identCols = identityColumnsAt(spark, root, cur).toSet
-      assignments.map(_._1).filter(identCols).foreach(c =>
-        throw new IllegalArgumentException(
-          s"UPDATE cannot SET identity column '$c' — GENERATED ALWAYS " +
-            "AS IDENTITY is allocator-owned"))
-      val matched = raw.filter(hit)
-      val existing = dvRowsFor(spark, root, entries)
-      val live = existing.map(e => matched.join(
-          e.select(col("file_key").as("__fk"), col("pos").as("__pos")),
-          Seq("__fk", "__pos"), "left_anti")).getOrElse(matched)
-        .persist()
-      try {
-        val fresh = live.select(col("__fk").as("file_key"),
-          col("__pos").as("pos"))
-        val newDv = existing.map(e => {
-          val affected = fresh.select("file_key").distinct()
-          fresh.unionByName(e.join(affected, Seq("file_key"), "left_semi"))
-        }).getOrElse(fresh)
-        val counts: Map[String, Long] = newDv.groupBy("file_key").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (counts.isEmpty) return cur
+      if (entries.isEmpty) NoOp(cur)
+      else updateDvAttempt(spark, root, cur, partCols, entries, assignments, hit)
+    }
+  }
+
+  /** One [[updateWhereDv]] attempt against tip `cur`. */
+  private def updateDvAttempt(spark: SparkSession, root: String, cur: Long,
+                              partCols: Seq[String], entries: Seq[ManifestEntry],
+                              assignments: Seq[(String, String)],
+                              hit: Column): Attempt = {
+    val rawRel = {
+      val (rel, _, _) = relationWithIndex(spark, root, Some(cur), None)
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .baseRelationToDataFrame(rel)
+    }
+    // _metadata first, then the mapping — same order as deleteWhereDv
+    // — so assignments and predicate see LOGICAL columns.
+    val raw = applyColumnMapping(rawRel
+        .withColumn("__fk", dvKeyExpr(col("_metadata.file_path")))
+        .withColumn("__pos", col("_metadata.row_index")),
+      mappingAt(spark, root, cur))
+    val dataCols = raw.columns.toSeq.filterNot(Set("__fk", "__pos"))
+    val types = raw.schema.map(f => f.name -> f.dataType).toMap
+    assignments.foreach { case (c, _) => require(types.contains(c) &&
+      c != "__fk" && c != "__pos",
+      s"UPDATE SET targets unknown column '$c' " +
+        s"(columns: ${dataCols.mkString(", ")})") }
+    // Allocator-owned on every surface, same as [[updateWhere]].
+    val identCols = identityColumnsAt(spark, root, cur).toSet
+    assignments.map(_._1).filter(identCols).foreach(c =>
+      throw new IllegalArgumentException(
+        s"UPDATE cannot SET identity column '$c' — GENERATED ALWAYS " +
+          "AS IDENTITY is allocator-owned"))
+    val matched = raw.filter(hit)
+    val existing = dvRowsFor(spark, root, entries)
+    val live = existing.map(e => matched.join(
+        e.select(col("file_key").as("__fk"), col("pos").as("__pos")),
+        Seq("__fk", "__pos"), "left_anti")).getOrElse(matched)
+      .persist()
+    // Unpersisted on every attempt, won or lost (see deleteDvRows).
+    try {
+      val fresh = live.select(col("__fk").as("file_key"),
+        col("__pos").as("pos"))
+      val newDv = existing.map(e => {
+        val affected = fresh.select("file_key").distinct()
+        fresh.unionByName(e.join(affected, Seq("file_key"), "left_semi"))
+      }).getOrElse(fresh)
+      val counts: Map[String, Long] = newDv.groupBy("file_key").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      if (counts.isEmpty) NoOp(cur)
+      else {
         // Updated copies: assignments against the OLD row (all rows
         // here match by construction), cast back to existing types.
         val assign = assignments.toMap
@@ -325,7 +303,7 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
         // against its gen_ CHECK ([[SnapshotStore.recomputeGenerated]]).
         val updated = recomputeGenerated(spark, root, cur, assignedOnly,
           assign.keySet)
-        enforceConstraints(spark, root, updated)
+        enforceConstraints(spark, root, updated, cur, propertiesAt(spark, root, cur))
         val v = cur + 1
         val dvDir = s"dv/v_$v-${java.util.UUID.randomUUID().toString.take(8)}"
         writeDvDir(spark, root, dvDir, newDv, counts.values.sum)
@@ -333,18 +311,11 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
           val fn = dvKeyOf(e.path)
           if (counts.contains(fn)) e.copy(dv = dvDir, dvRows = counts(fn)) else e
         }
-        val newEntries = writeDataFiles(spark, updated, root, v, partCols)
-        if (writeManifest(spark, root, v, carried ++ newEntries, "update-dv",
-            partCols.mkString(","))) {
-          writeStats(spark, root, v, carried, newEntries, Some(updated.schema))
-          postCommit(spark, root, v)
-          return v
-        }
-      } finally live.unpersist()
-      attempt += 1
-    }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the update-dv race $maxAttempts times under $root")
+        val copies = writeDataFiles(spark, updated, root, v, partCols)
+        new Staged(carried, copies, "update-dv", partCols.mkString(","),
+          Some(updated.schema))
+      }
+    } finally live.unpersist()
   }
 
   /** Rewrite every file carrying a deletion vector (materializing its
@@ -354,31 +325,19 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
     * is unchanged by construction (the rewrite reads through the DVs),
     * so like compaction this skips constraint re-proof. Returns the
     * new version, or the current one when no file carries a DV. */
-  def purgeDeletionVectors(spark: SparkSession, root: String,
-                           maxAttempts: Int = 5): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+  def purgeDeletionVectors(spark: SparkSession, root: String): Long =
+    occ(spark, root, "purge") { cur =>
       val partCols = requirePartitionCols(spark, root, cur)
-      val entries = manifest(spark, root, cur)
-      val (replaced, kept) = entries.partition(_.dv.nonEmpty)
-      if (replaced.isEmpty) return cur
-      val materialized = readEntriesAt(spark, root, replaced, cur) // DV-aware
-      val v = cur + 1
-      // Physical rewrite (see compact): no translation, physical names.
-      val newEntries = writeDataFiles(spark, materialized, root, v,
-        partCols.map(physicalNameOf(mappingAt(spark, root, cur)._1, _)),
-        translate = false)
-      if (writeManifest(spark, root, v, kept ++ newEntries, "purge",
-          partCols.mkString(","))) {
-        writeStats(spark, root, v, kept, newEntries, None)
-        postCommit(spark, root, v, compactEligible = false)
-        return v
+      val (replaced, kept) = manifest(spark, root, cur).partition(_.dv.nonEmpty)
+      if (replaced.isEmpty) NoOp(cur)
+      else {
+        val materialized = readEntriesAt(spark, root, replaced, cur) // DV-aware
+        // Physical rewrite (see compact): no translation, physical names.
+        val fresh = writeDataFiles(spark, materialized, root, cur + 1,
+          partCols.map(physicalNameOf(mappingAt(spark, root, cur)._1, _)),
+          translate = false)
+        new Staged(kept, fresh, "purge", partCols.mkString(","),
+          compactEligible = false)
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the purge race $maxAttempts times under $root")
-  }
 }

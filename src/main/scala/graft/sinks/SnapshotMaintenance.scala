@@ -34,77 +34,66 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * the caller's contract to keep unique, exactly as in Delta. */
   def updateWhere(spark: SparkSession, root: String,
                   assignments: Seq[(String, String)],
-                  predicate: Option[String],
-                  maxAttempts: Int = 10): Long = {
+                  predicate: Option[String]): Long = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     require(assignments.map(_._1).distinct.size == assignments.size,
       s"UPDATE assigns a column twice: ${assignments.map(_._1).mkString(", ")}")
     val hit = coalesce(predicate.map(expr).getOrElse(lit(true)), lit(false))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "update-where") { cur =>
       val partCols = requirePartitionCols(spark, root, cur)
       val entries = manifest(spark, root, cur)
       val touched: Set[String] = table(spark, root, Some(cur))
         .filter(hit).select(partValueColumn(partCols)).distinct()
         .collect().map(_.getString(0)).toSet
       val (replaced, kept) = entries.partition(e => touched(e.partition))
-      if (replaced.isEmpty) return cur
-      // Align the replaced files to the RECORDED table schema: after a
-      // schema evolution, a matched partition's files may predate an
-      // evolved column — UPDATE must still be able to SET it (it reads
-      // as typed nulls, exactly like any scan). Both the frame and the
-      // recorded schema pass through the column mapping first, so the
-      // alignment (and the user's assignments) see LOGICAL names.
-      val mapping = mappingAt(spark, root, cur)
-      val raw = applyColumnMapping(readEntriesAt(spark, root, replaced, cur), mapping)
-      val current = schemaFor(spark, root, cur).map(logicalSchema(_, mapping)) match {
-        case Some(sc) =>
-          val have = raw.columns.toSet
-          val widened = sc.fields.filterNot(f => have(f.name))
-            .foldLeft(raw)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-          widened.select(widened.columns.toSeq.map(col): _*)
-        case None => raw
-      }
-      val types = current.schema.map(f => f.name -> f.dataType).toMap
-      assignments.foreach { case (c, _) => require(types.contains(c),
-        s"UPDATE SET targets unknown column '$c' " +
-          s"(columns: ${current.columns.mkString(", ")})") }
-      // GENERATED ALWAYS AS IDENTITY: the allocator owns the column on
-      // every surface — SET id = … would reassign (possibly duplicate)
-      // ids the table already vended.
-      val idents = identityColumnsAt(spark, root, cur).toSet
-      assignments.map(_._1).filter(idents).foreach(c =>
-        throw new IllegalArgumentException(
-          s"UPDATE cannot SET identity column '$c' — GENERATED ALWAYS " +
-            "AS IDENTITY is allocator-owned"))
-      val assign = assignments.toMap
-      val assignedOnly = current.select(current.columns.toSeq.map { c =>
-        assign.get(c) match {
-          case Some(e) =>
-            when(hit, expr(e).cast(types(c))).otherwise(col(c)).as(c)
-          case None => col(c)
+      if (replaced.isEmpty) NoOp(cur)
+      else {
+        // Align the replaced files to the RECORDED table schema: after a
+        // schema evolution, a matched partition's files may predate an
+        // evolved column — UPDATE must still be able to SET it (it reads
+        // as typed nulls, exactly like any scan). Both the frame and the
+        // recorded schema pass through the column mapping first, so the
+        // alignment (and the user's assignments) see LOGICAL names.
+        val mapping = mappingAt(spark, root, cur)
+        val raw = applyColumnMapping(readEntriesAt(spark, root, replaced, cur), mapping)
+        val current = schemaFor(spark, root, cur).map(logicalSchema(_, mapping)) match {
+          case Some(sc) =>
+            val have = raw.columns.toSet
+            val widened = sc.fields.filterNot(f => have(f.name))
+              .foldLeft(raw)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+            widened.select(widened.columns.toSeq.map(col): _*)
+          case None => raw
         }
-      }: _*)
-      // A SET touching a generation input must refresh the generated
-      // column too (Delta parity) — identity wherever inputs didn't
-      // change, see [[SnapshotStore.recomputeGenerated]].
-      val updated = recomputeGenerated(spark, root, cur, assignedOnly,
-        assign.keySet)
-      enforceConstraints(spark, root, updated)
-      val v = cur + 1
-      val newEntries = writeDataFiles(spark, updated, root, v, partCols)
-      if (writeManifest(spark, root, v, kept ++ newEntries, "update",
-          partCols.mkString(","))) {
-        writeStats(spark, root, v, kept, newEntries, Some(updated.schema))
-        postCommit(spark, root, v)
-        return v
+        val types = current.schema.map(f => f.name -> f.dataType).toMap
+        assignments.foreach { case (c, _) => require(types.contains(c),
+          s"UPDATE SET targets unknown column '$c' " +
+            s"(columns: ${current.columns.mkString(", ")})") }
+        // GENERATED ALWAYS AS IDENTITY: the allocator owns the column on
+        // every surface — SET id = … would reassign (possibly duplicate)
+        // ids the table already vended.
+        val idents = identityColumnsAt(spark, root, cur).toSet
+        assignments.map(_._1).filter(idents).foreach(c =>
+          throw new IllegalArgumentException(
+            s"UPDATE cannot SET identity column '$c' — GENERATED ALWAYS " +
+              "AS IDENTITY is allocator-owned"))
+        val assign = assignments.toMap
+        val assignedOnly = current.select(current.columns.toSeq.map { c =>
+          assign.get(c) match {
+            case Some(e) =>
+              when(hit, expr(e).cast(types(c))).otherwise(col(c)).as(c)
+            case None => col(c)
+          }
+        }: _*)
+        // A SET touching a generation input must refresh the generated
+        // column too (Delta parity) — identity wherever inputs didn't
+        // change, see [[SnapshotStore.recomputeGenerated]].
+        val updated = recomputeGenerated(spark, root, cur, assignedOnly,
+          assign.keySet)
+        enforceConstraints(spark, root, updated, cur, propertiesAt(spark, root, cur))
+        val fresh = writeDataFiles(spark, updated, root, cur + 1, partCols)
+        new Staged(kept, fresh, "update", partCols.mkString(","), Some(updated.schema))
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the update-where race $maxAttempts times under $root")
   }
 
   /** `ALTER TABLE t ADD CONSTRAINT name CHECK (expr)` (Delta's CHECK
@@ -117,13 +106,10 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * writing a violating row; layout-only rewrites skip the re-proof.
     * Returns the committed version. */
   def addConstraint(spark: SparkSession, root: String, name: String,
-                    checkExpr: String, maxAttempts: Int = 5): Long = {
+                    checkExpr: String): Long = {
     require(name.matches("[A-Za-z_][\\w$]*"),
       s"constraint name must be an identifier, got '$name'")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "add-constraint") { cur =>
       val existing = tableConstraints(spark, root, cur)
       require(!existing.exists(_._1 == name),
         s"constraint '$name' already exists on $root")
@@ -132,46 +118,25 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       if (bad.nonEmpty) throw new IllegalStateException(
         s"cannot add CHECK constraint $name ($checkExpr): existing row " +
           s"violates it: ${bad.head}")
-      val entries = manifest(spark, root, cur)
-      if (writeManifest(spark, root, cur + 1, entries, "constraint",
-          partitionColumn(spark, root, cur).getOrElse(""),
-          constraints = Some(existing :+ (name -> checkExpr)))) {
-        writeStats(spark, root, cur + 1, entries, Nil, schemaFor(spark, root, cur))
-        postCommit(spark, root, cur + 1, compactEligible = false)
-        return cur + 1
-      }
-      attempt += 1
+      metadataCommit(spark, root, cur, "constraint",
+        constraints = Some(existing :+ (name -> checkExpr)),
+        schema = schemaFor(spark, root, cur))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the add-constraint race $maxAttempts times under $root")
   }
 
   /** `ALTER TABLE t DROP CONSTRAINT name`: metadata-only commit
     * removing the named CHECK constraint. Unknown names fail loudly
     * (silently "dropping" nothing would mask a typo forever). */
-  def dropConstraint(spark: SparkSession, root: String, name: String,
-                     maxAttempts: Int = 5): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+  def dropConstraint(spark: SparkSession, root: String, name: String): Long =
+    occ(spark, root, "drop-constraint") { cur =>
       val existing = tableConstraints(spark, root, cur)
       require(existing.exists(_._1 == name),
         s"no constraint named '$name' on $root " +
           s"(existing: ${existing.map(_._1).mkString(", ")})")
-      val entries = manifest(spark, root, cur)
-      if (writeManifest(spark, root, cur + 1, entries, "constraint",
-          partitionColumn(spark, root, cur).getOrElse(""),
-          constraints = Some(existing.filterNot(_._1 == name)))) {
-        writeStats(spark, root, cur + 1, entries, Nil, schemaFor(spark, root, cur))
-        postCommit(spark, root, cur + 1, compactEligible = false)
-        return cur + 1
-      }
-      attempt += 1
+      metadataCommit(spark, root, cur, "constraint",
+        constraints = Some(existing.filterNot(_._1 == name)),
+        schema = schemaFor(spark, root, cur))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the drop-constraint race $maxAttempts times under $root")
-  }
 
   /** The table's current LOGICAL column names: recorded physical
     * schema (or a footer read as fallback) through the version's
@@ -284,14 +249,12 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * table sweeps in one task wave, never a driver loop). Returns
     * (dropped (path, reason) pairs, resulting version — the current
     * one for DRY RUN or a clean table). */
-  def fsckRepair(spark: SparkSession, root: String, dryRun: Boolean,
-                 maxAttempts: Int = 5): (Seq[(String, String)], Long) = {
+  def fsckRepair(spark: SparkSession, root: String,
+                 dryRun: Boolean): (Seq[(String, String)], Long) = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    var dropped = Seq.empty[(String, String)]
+    val v = occ(spark, root, "fsck") { cur =>
       val entries = manifest(spark, root, cur)
       val paths = (entries.map(_.path) ++
         entries.filter(_.dv.nonEmpty).map(_.dv)).distinct
@@ -306,25 +269,20 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
               it.filterNot(p => f.exists(new Path(rootStr, p)))
             }.collect().toSet
         }
-      val dropped = entries.flatMap { e =>
+      dropped = entries.flatMap { e =>
         if (missing(e.path)) Some(e.path -> "missing data file")
         else if (e.dv.nonEmpty && missing(e.dv))
           Some(e.path -> s"missing deletion vector ${e.dv}")
         else None
       }
-      if (dropped.isEmpty || dryRun) return (dropped, cur)
-      val doomed = dropped.map(_._1).toSet
-      val kept = entries.filterNot(e => doomed(e.path))
-      if (writeManifest(spark, root, cur + 1, kept, "fsck",
-          partitionColumn(spark, root, cur).getOrElse(""))) {
-        writeStats(spark, root, cur + 1, kept, Nil, None)
-        postCommit(spark, root, cur + 1)
-        return (dropped, cur + 1)
+      if (dropped.isEmpty || dryRun) NoOp(cur)
+      else {
+        val doomed = dropped.map(_._1).toSet
+        new Staged(entries.filterNot(e => doomed(e.path)), Nil, "fsck",
+          partitionColumn(spark, root, cur).getOrElse(""))
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the fsck race $maxAttempts times under $root")
+    (dropped, v)
   }
 
   /** `ALTER TABLE t SYNC IDENTITY` (Delta parity): re-base every
@@ -347,8 +305,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * synced mark its own attempt re-reads) — marks can never
     * interleave into reallocation. Returns the committed version
     * (the current one when every mark already matches). */
-  def syncIdentity(spark: SparkSession, root: String,
-                   maxAttempts: Int = 5): Long = {
+  def syncIdentity(spark: SparkSession, root: String): Long = {
     // An exception-abandoned allocation attempt on THIS thread may
     // have left a forward mark in the pending hand-off; the manifest
     // injection's monotone guard would silently re-apply it OVER the
@@ -357,10 +314,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     // dropping it costs at most a gap, and SYNC is about to re-derive
     // the mark from the data anyway.
     clearPendingIdentityAlloc(root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "sync-identity") { cur =>
       val existing = tableProperties(spark, root, cur)
       val specs = identityColumns(existing.toMap)
       require(specs.nonEmpty,
@@ -379,19 +333,9 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       }
       val keys = updated.map(_._1).toSet
       val merged = existing.filterNot(p => keys(p._1)) ++ updated
-      if (merged.toMap == existing.toMap) return cur
-      val entries = manifest(spark, root, cur)
-      if (writeManifest(spark, root, cur + 1, entries, "set-properties",
-          partitionColumn(spark, root, cur).getOrElse(""),
-          properties = Some(merged))) {
-        writeStats(spark, root, cur + 1, entries, Nil, None)
-        postCommit(spark, root, cur + 1, compactEligible = false)
-        return cur + 1
-      }
-      attempt += 1
+      if (merged.toMap == existing.toMap) NoOp(cur)
+      else metadataCommit(spark, root, cur, "set-properties", properties = Some(merged))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the sync-identity race $maxAttempts times under $root")
   }
 
   /** `ALTER TABLE t ALTER COLUMN c SET DEFAULT expr` / `DROP DEFAULT`
@@ -405,12 +349,8 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * refuse loudly instead). `None` drops; dropping an absent
     * default is a version no-op. Returns the committed version. */
   def setColumnDefault(spark: SparkSession, root: String, colName: String,
-                       exprSql: Option[String],
-                       maxAttempts: Int = 5): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+                       exprSql: Option[String]): Long =
+    occ(spark, root, "set-default") { cur =>
       val schema = logicalSchemaAt(spark, root, cur).getOrElse(
         readVersion(spark, root, cur).schema)
       val field = schema.find(_.name == colName).getOrElse(
@@ -429,28 +369,14 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       val key = s"$DefaultPropPrefix$colName"
       val merged = existing.filterNot(_._1 == key) ++
         exprSql.map(key -> _).toSeq
-      if (merged.toMap == existing.toMap) return cur
-      val entries = manifest(spark, root, cur)
-      if (writeManifest(spark, root, cur + 1, entries, "set-properties",
-          partitionColumn(spark, root, cur).getOrElse(""),
-          properties = Some(merged))) {
-        writeStats(spark, root, cur + 1, entries, Nil, None)
-        postCommit(spark, root, cur + 1, compactEligible = false)
-        return cur + 1
-      }
-      attempt += 1
+      if (merged.toMap == existing.toMap) NoOp(cur)
+      else metadataCommit(spark, root, cur, "set-properties", properties = Some(merged))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the set-default race $maxAttempts times under $root")
-  }
 
   def renameColumn(spark: SparkSession, root: String, from: String,
-                   to: String, maxAttempts: Int = 5): Long = {
+                   to: String): Long = {
     require(from != to, s"RENAME COLUMN $from TO $from is a no-op")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "rename-column") { cur =>
       val cols = logicalColumns(spark, root, cur)
       require(cols.contains(from),
         s"cannot rename missing column '$from' (columns: ${cols.mkString(", ")})")
@@ -492,17 +418,11 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
           .map(v => existing.filterNot(_._1 == defaultKey) :+
             (s"$DefaultPropPrefix$to" -> v))
       }
-      if (writeManifest(spark, root, cur + 1, entries, "rename-column",
-          newPartCol, properties = renamedProps,
-          columnMapping = Some((newRenames.toSeq, dropped.toSeq)))) {
-        writeStats(spark, root, cur + 1, entries, Nil, None)
-        postCommit(spark, root, cur + 1, compactEligible = false)
-        return cur + 1
-      }
-      attempt += 1
+      new Staged(entries, Nil, "rename-column", newPartCol,
+        properties = renamedProps,
+        columnMapping = Some((newRenames.toSeq, dropped.toSeq)),
+        compactEligible = false)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the rename-column race $maxAttempts times under $root")
   }
 
   /** `ALTER TABLE t DROP COLUMN c` — Delta's column-mapping drop: a
@@ -511,12 +431,8 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * rewrite. Time travel before the drop still shows the column.
     * Refused for the partition column (the layout keys on it), for
     * constraint-referenced columns, and for the last data column. */
-  def dropColumn(spark: SparkSession, root: String, name: String,
-                 maxAttempts: Int = 5): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+  def dropColumn(spark: SparkSession, root: String, name: String): Long =
+    occ(spark, root, "drop-column") { cur =>
       val cols = logicalColumns(spark, root, cur)
       require(cols.contains(name),
         s"cannot drop missing column '$name' (columns: ${cols.mkString(", ")})")
@@ -544,19 +460,12 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
           Some(existing.filterNot(_._1 == key))
         else None
       }
-      if (writeManifest(spark, root, cur + 1, entries, "drop-column",
-          partitionColumn(spark, root, cur).getOrElse(""),
-          properties = droppedProps,
-          columnMapping = Some(((renames - name).toSeq, (dropped + physical).toSeq)))) {
-        writeStats(spark, root, cur + 1, entries, Nil, None)
-        postCommit(spark, root, cur + 1, compactEligible = false)
-        return cur + 1
-      }
-      attempt += 1
+      new Staged(entries, Nil, "drop-column",
+        partitionColumn(spark, root, cur).getOrElse(""),
+        properties = droppedProps,
+        columnMapping = Some(((renames - name).toSeq, (dropped + physical).toSeq)),
+        compactEligible = false)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the drop-column race $maxAttempts times under $root")
-  }
 
   /** `ALTER TABLE t ADD COLUMN c TYPE` — metadata-only schema widening:
     * the recorded schema gains the (nullable) column, existing files
@@ -564,24 +473,21 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * next write that carries values materializes them. The same
     * reserved-name collisions as [[toPhysical]] are refused. */
   def addColumn(spark: SparkSession, root: String, name: String,
-                dataTypeDdl: String, maxAttempts: Int = 5): Long =
-    addColumns(spark, root, Seq(name -> dataTypeDdl), maxAttempts)
+                dataTypeDdl: String): Long =
+    addColumns(spark, root, Seq(name -> dataTypeDdl))
 
   /** [[addColumn]] for a column LIST — `ALTER TABLE … ADD COLUMNS
     * (a INT, b STRING)` — as ONE metadata commit: all columns join the
     * recorded schema atomically (per-column commits would let a reader
     * observe half the widening). */
   def addColumns(spark: SparkSession, root: String,
-                 columns: Seq[(String, String)], maxAttempts: Int = 5): Long = {
+                 columns: Seq[(String, String)]): Long = {
     require(columns.nonEmpty, "ADD COLUMNS needs at least one column")
     require(columns.map(_._1).distinct.size == columns.size,
       s"ADD COLUMNS lists a column twice: ${columns.map(_._1).mkString(", ")}")
     val typed = columns.map { case (n, ddl) =>
       n -> org.apache.spark.sql.types.DataType.fromDDL(ddl) }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "add-column") { cur =>
       val cols = logicalColumns(spark, root, cur)
       val (renames, dropped) = mappingAt(spark, root, cur)
       typed.foreach { case (name, _) =>
@@ -593,19 +499,10 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         require(!renames.exists { case (lg, ph) => ph == name && lg != name },
           s"cannot add column '$name': that is another column's physical name")
       }
-      val entries = manifest(spark, root, cur)
-      if (writeManifest(spark, root, cur + 1, entries, "add-column",
-          partitionColumn(spark, root, cur).getOrElse(""))) {
-        writeStats(spark, root, cur + 1, entries, Nil,
-          Some(org.apache.spark.sql.types.StructType(typed.map { case (n, dt) =>
-            org.apache.spark.sql.types.StructField(n, dt, nullable = true) })))
-        postCommit(spark, root, cur + 1, compactEligible = false)
-        return cur + 1
-      }
-      attempt += 1
+      metadataCommit(spark, root, cur, "add-column",
+        schema = Some(org.apache.spark.sql.types.StructType(typed.map { case (n, dt) =>
+          org.apache.spark.sql.types.StructField(n, dt, nullable = true) })))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the add-column race $maxAttempts times under $root")
   }
 
   /** Partitions whose manifest file sets differ between two versions.
@@ -783,13 +680,10 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * carried by reference. Returns the new version, or the current one
     * if nothing needed compacting. */
   def compact(spark: SparkSession, root: String, partitionCols: ColSpec,
-              maxFilesPerPartition: Int = 1, maxAttempts: Int = 5,
+              maxFilesPerPartition: Int = 1,
               partitions: Option[Seq[String]] = None): Long = {
     require(partitionCols.nonEmpty, "compact needs a partition spec")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "compaction") { cur =>
       val entries = manifest(spark, root, cur)
       val inScope: String => Boolean =
         partitions.map(_.toSet).map(s => s.contains _).getOrElse(_ => true)
@@ -819,9 +713,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       // Unknown sizes (legacy sidecar) degrade to the count-only
       // rule.
       val target = if (engaged.isDefined) None
-        else SnapshotStore.targetFileSize(
-          scala.util.Try(tableProperties(spark, root, cur).toMap)
-            .getOrElse(Map.empty))
+        else SnapshotStore.targetFileSize(propertiesAt(spark, root, cur))
       val sizes: Map[String, FileStats.FileStatsEntry] =
         if (target.isDefined) statsFor(spark, root, cur) else Map.empty
       def conformant(es: Seq[ManifestEntry]): Boolean = target match {
@@ -835,35 +727,29 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       val oversizedEff = entries.groupBy(_.partition)
         .filter { case (p, es) => inScope(p) && !conformant(es) }
         .keySet
-      if (oversizedEff.isEmpty) return cur
-      val (replaced, kept) = entries.partition(e => oversizedEff(e.partition))
-      // One shuffle keyed by the partition column: every partition
-      // value lands in exactly one task, so partitionBy emits one file
-      // per compacted partition. Layout paths read and re-write files
-      // RAW (physical column names — column mapping never applies), so
-      // the partition column resolves by its PHYSICAL name.
-      val physParts = partitionCols.cols
-        .map(physicalNameOf(mappingAt(spark, root, cur)._1, _))
-      // On an ENGAGED bucketed table writeDataFiles owns the shuffle
-      // (by bucket hash); repartitioning here too would shuffle twice.
-      val raw = readEntriesAt(spark, root, replaced, cur)
-      val compacted =
-        if (engaged.isDefined) raw
-        else raw.repartition(physParts.map(col): _*)
-      val v = cur + 1
-      val newEntries = writeDataFiles(spark, compacted, root, v, physParts,
-        translate = false)
-      if (writeManifest(spark, root, v, kept ++ newEntries, "compact",
-          partitionCols.header)) {
+      if (oversizedEff.isEmpty) NoOp(cur)
+      else {
+        val (replaced, kept) = entries.partition(e => oversizedEff(e.partition))
+        // One shuffle keyed by the partition column: every partition
+        // value lands in exactly one task, so partitionBy emits one file
+        // per compacted partition. Layout paths read and re-write files
+        // RAW (physical column names — column mapping never applies), so
+        // the partition column resolves by its PHYSICAL name.
+        val physParts = partitionCols.cols
+          .map(physicalNameOf(mappingAt(spark, root, cur)._1, _))
+        // On an ENGAGED bucketed table writeDataFiles owns the shuffle
+        // (by bucket hash); repartitioning here too would shuffle twice.
+        val raw = readEntriesAt(spark, root, replaced, cur)
+        val compacted =
+          if (engaged.isDefined) raw
+          else raw.repartition(physParts.map(col): _*)
+        val fresh = writeDataFiles(spark, compacted, root, cur + 1, physParts,
+          translate = false)
         // Content unchanged — the recorded schema carries forward.
-        writeStats(spark, root, v, kept, newEntries, None)
-        postCommit(spark, root, v, compactEligible = false)
-        return v
+        new Staged(kept, fresh, "compact", partitionCols.header,
+          compactEligible = false)
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the compaction race $maxAttempts times under $root")
   }
 
   /** Opt-in post-commit auto-compaction (Delta's autoCompact /
@@ -1368,35 +1254,24 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * of every reader handling mixed layouts; this store keeps
     * manifests single-spec and pays the rewrite once, explicitly. A
     * no-op spec change returns the current version. */
-  def repartitionTable(spark: SparkSession, root: String, newSpec: ColSpec,
-                       maxAttempts: Int = 5): Long = {
+  def repartitionTable(spark: SparkSession, root: String, newSpec: ColSpec): Long = {
     require(newSpec.nonEmpty, "repartitionTable needs a partition spec")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
-      if (requirePartitionCols(spark, root, cur) == newSpec.cols) return cur
-      val entries = manifest(spark, root, cur)
-      val mapping = mappingAt(spark, root, cur)
-      val physParts = newSpec.cols.map(physicalNameOf(mapping._1, _))
-      val v = cur + 1
-      // An EMPTY table re-specs as pure metadata: same (zero) entries,
-      // new header.
-      val newEntries =
-        if (entries.isEmpty) Nil
-        else writeDataFiles(spark,
-          readEntriesAt(spark, root, entries, cur).repartition(physParts.map(col): _*),
-          root, v, physParts, translate = false)
-      if (writeManifest(spark, root, v, newEntries, "repartition",
-          newSpec.header)) {
-        writeStats(spark, root, v, Nil, newEntries, None)
-        postCommit(spark, root, v, compactEligible = false)
-        return v
+    occ(spark, root, "repartition") { cur =>
+      if (requirePartitionCols(spark, root, cur) == newSpec.cols) NoOp(cur)
+      else {
+        val entries = manifest(spark, root, cur)
+        val mapping = mappingAt(spark, root, cur)
+        val physParts = newSpec.cols.map(physicalNameOf(mapping._1, _))
+        // An EMPTY table re-specs as pure metadata: same (zero) entries,
+        // new header.
+        val fresh =
+          if (entries.isEmpty) Nil
+          else writeDataFiles(spark,
+            readEntriesAt(spark, root, entries, cur).repartition(physParts.map(col): _*),
+            root, cur + 1, physParts, translate = false)
+        new Staged(Nil, fresh, "repartition", newSpec.header, compactEligible = false)
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the repartition race $maxAttempts times under $root")
   }
 
   /** HASH-BUCKET the table (Delta liquid-clustering / Hive-bucketing
@@ -1431,14 +1306,10 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * every bucket has at most one file (compaction restores that
     * after appends). */
   def bucketTable(spark: SparkSession, root: String, bucketCols: Seq[String],
-                  numBuckets: Int, sortCols: Seq[String] = Nil,
-                  maxAttempts: Int = 5): Long = {
+                  numBuckets: Int, sortCols: Seq[String] = Nil): Long = {
     require(numBuckets >= 2, s"numBuckets must be >= 2, got $numBuckets")
     require(bucketCols.nonEmpty, "bucketTable needs at least one column")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "cluster-by") { cur =>
       val logical = readVersion(spark, root, cur).schema
       val fields = logical.fields.map(f => f.name -> f.dataType).toMap
       val missing = (bucketCols ++ sortCols).filterNot(fields.contains)
@@ -1456,24 +1327,16 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       val physSort = sortCols.map(c => col(physicalNameOf(mapping._1, c)))
       val props = tableProperties(spark, root, cur)
         .filterNot(_._1 == BucketSpecProp) :+ (BucketSpecProp -> spec)
-      val v = cur + 1
-      val newEntries =
+      val fresh =
         if (entries.isEmpty) Nil
         else writeDataFiles(spark,
           readEntriesAt(spark, root, entries, cur),
-          root, v, physParts, translate = false,
+          root, cur + 1, physParts, translate = false,
           bucketOverride = Some((numBuckets, physBuckets)),
           sortWithin = physSort)
-      if (writeManifest(spark, root, v, newEntries, "cluster-by",
-          ColSpec(partCols).header, properties = Some(props))) {
-        writeStats(spark, root, v, Nil, newEntries, None)
-        postCommit(spark, root, v, compactEligible = false)
-        return v
-      }
-      attempt += 1
+      new Staged(Nil, fresh, "cluster-by", ColSpec(partCols).header,
+        properties = Some(props), compactEligible = false)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the cluster-by race $maxAttempts times under $root")
   }
 
   /** Layout maintenance: rewrite partitions (default: all) Z-ORDERED
@@ -1487,7 +1350,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * opening a handful of files. Cost: one range shuffle of the
     * selected partitions (same as a global sort) + a min/max rank
     * pass; untouched partitions are carried by reference, and the
-    * usual optimistic-commit loop makes it crash-safe/non-blocking. */
+    * usual optimistic commit ([[occ]]) makes it crash-safe/non-blocking. */
   /** Layout-rewrite output file count: ⌈selected bytes /
     * graft.targetFileSize⌉ when the table sizes by bytes (the bytes
     * are sidecar-exact — the selected files are on disk); the
@@ -1507,68 +1370,58 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
 
   def compactZOrder(spark: SparkSession, root: String, partitionCols: ColSpec,
                     zKeys: Seq[String], filesPerPartition: Int = 4,
-                    bits: Int = 8, partitions: Option[Seq[String]] = None,
-                    maxAttempts: Int = 5): Long = {
+                    bits: Int = 8, partitions: Option[Seq[String]] = None): Long = {
     require(partitionCols.nonEmpty, "compactZOrder needs a partition spec")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
-      val props = scala.util.Try(tableProperties(spark, root, cur).toMap)
-        .getOrElse(Map.empty[String, String])
+    occ(spark, root, "z-order compaction") { cur =>
+      val props = propertiesAt(spark, root, cur)
       val entries = manifest(spark, root, cur)
       val sel = partitions.map(_.toSet).getOrElse(entries.map(_.partition).toSet)
       val (replaced, kept) = entries.partition(e => sel(e.partition))
-      if (replaced.isEmpty) return cur
-      val nParts = replaced.map(_.partition).distinct.size
-      // Physical names throughout: layout rewrites never translate
-      // (see compact); the caller's LOGICAL z-keys and partition
-      // column resolve through the mapping.
-      val renames = mappingAt(spark, root, cur)._1
-      val raw = readEntriesAt(spark, root, replaced, cur)
-      val zCols = zKeys.map(k => col(physicalNameOf(renames, k)))
-      // On a bucketed table the hash layout owns the shuffle — z-sort
-      // WITHIN each bucket instead (writeDataFiles applies sortWithin
-      // after its bucket repartition), keeping both bucket co-location
-      // and narrow per-file stats ranges. Unbucketed: the classic
-      // range-partition + sort layout. ENGAGED, not merely recorded:
-      // a drifted spec (e.g. a type-widened bucket column) makes
-      // writeDataFiles skip the bucket shuffle, so deferring to it
-      // would rewrite partitions with no repartition and no ordering
-      // at all — a silent layout no-op. Drifted specs take the
-      // classic path.
-      val bucketed = bucketSpecEngaged(spark, root, cur).isDefined
-      val laid =
-        if (bucketed) raw
-        else graft.operators.Layout.zorderBy(raw, zCols,
-          numFiles = sizedFileCount(spark, root, cur, replaced,
-            filesPerPartition * nParts, props), bits = bits)
-      val v = cur + 1
-      val newEntries = writeDataFiles(spark, laid, root, v,
-        partitionCols.cols.map(physicalNameOf(renames, _)), translate = false,
-        sortWithin =
-          if (bucketed) Seq(graft.operators.Layout.zorderKey(raw, zCols, bits))
-          else Nil)
-      // A FULL-scope z-order IS a clustering baseline: stamp it (keys
-      // included) so a following [[clusterIncremental]] diffs against
-      // this state instead of re-clustering everything the rewrite
-      // just laid out. A partition-scoped pass is NOT a full baseline
-      // — properties carry forward untouched.
-      val stamped: Option[Seq[(String, String)]] =
-        if (partitions.isDefined) None
-        else Some((props - ClusteredAtProp - ClusterKeysProp).toSeq ++
-          Seq(ClusteredAtProp -> v.toString,
-            ClusterKeysProp -> zKeys.mkString(",")))
-      if (writeManifest(spark, root, v, kept ++ newEntries, "zorder",
-          partitionCols.header, properties = stamped)) {
-        writeStats(spark, root, v, kept, newEntries, None)
-        postCommit(spark, root, v, compactEligible = false)
-        return v
+      if (replaced.isEmpty) NoOp(cur)
+      else {
+        val nParts = replaced.map(_.partition).distinct.size
+        // Physical names throughout: layout rewrites never translate
+        // (see compact); the caller's LOGICAL z-keys and partition
+        // column resolve through the mapping.
+        val renames = mappingAt(spark, root, cur)._1
+        val raw = readEntriesAt(spark, root, replaced, cur)
+        val zCols = zKeys.map(k => col(physicalNameOf(renames, k)))
+        // On a bucketed table the hash layout owns the shuffle — z-sort
+        // WITHIN each bucket instead (writeDataFiles applies sortWithin
+        // after its bucket repartition), keeping both bucket co-location
+        // and narrow per-file stats ranges. Unbucketed: the classic
+        // range-partition + sort layout. ENGAGED, not merely recorded:
+        // a drifted spec (e.g. a type-widened bucket column) makes
+        // writeDataFiles skip the bucket shuffle, so deferring to it
+        // would rewrite partitions with no repartition and no ordering
+        // at all — a silent layout no-op. Drifted specs take the
+        // classic path.
+        val bucketed = bucketSpecEngaged(spark, root, cur).isDefined
+        val laid =
+          if (bucketed) raw
+          else graft.operators.Layout.zorderBy(raw, zCols,
+            numFiles = sizedFileCount(spark, root, cur, replaced,
+              filesPerPartition * nParts, props), bits = bits)
+        val v = cur + 1
+        val newEntries = writeDataFiles(spark, laid, root, v,
+          partitionCols.cols.map(physicalNameOf(renames, _)), translate = false,
+          sortWithin =
+            if (bucketed) Seq(graft.operators.Layout.zorderKey(raw, zCols, bits))
+            else Nil)
+        // A FULL-scope z-order IS a clustering baseline: stamp it (keys
+        // included) so a following [[clusterIncremental]] diffs against
+        // this state instead of re-clustering everything the rewrite
+        // just laid out. A partition-scoped pass is NOT a full baseline
+        // — properties carry forward untouched.
+        val stamped: Option[Seq[(String, String)]] =
+          if (partitions.isDefined) None
+          else Some((props - ClusteredAtProp - ClusterKeysProp).toSeq ++
+            Seq(ClusteredAtProp -> v.toString,
+              ClusterKeysProp -> zKeys.mkString(",")))
+        new Staged(kept, newEntries, "zorder", partitionCols.header,
+          properties = stamped, compactEligible = false)
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the z-order compaction race $maxAttempts times under $root")
   }
 
   /** Version whose manifest reflects the last [[clusterIncremental]]
@@ -1606,13 +1459,9 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * arrived since the baseline (a pure metadata check — no scan). */
   def clusterIncremental(spark: SparkSession, root: String,
                          partitionCols: ColSpec, zKeys: Seq[String],
-                         filesPerPartition: Int = 4, bits: Int = 8,
-                         maxAttempts: Int = 5): Long = {
+                         filesPerPartition: Int = 4, bits: Int = 8): Long = {
     require(partitionCols.nonEmpty, "clusterIncremental needs a partition spec")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "incremental-clustering") { cur =>
       val props = tableProperties(spark, root, cur).toMap
       // A baseline clustered on OTHER keys is not a baseline for these.
       val baseline = props.get(ClusteredAtProp).flatMap(s =>
@@ -1629,48 +1478,42 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
           if (clustered.isEmpty) entries // vacuumed baseline → full pass
           else entries.filterNot(e => clustered(e.path))
       }
-      if (unclustered.isEmpty) return cur
-      // Delta at least half the table: a full pass costs the same
-      // class and resets the generation count.
-      val (replaced, kept) =
-        if (unclustered.size * 2 >= entries.size) (entries, Seq.empty[ManifestEntry])
-        else {
-          val delta = unclustered.map(_.path).toSet
-          (unclustered, entries.filterNot(e => delta(e.path)))
-        }
-      val nParts = replaced.map(_.partition).distinct.size
-      val renames = mappingAt(spark, root, cur)._1
-      val raw = readEntriesAt(spark, root, replaced, cur)
-      val zCols = zKeys.map(k => col(physicalNameOf(renames, k)))
-      // Bucket-engaged tables keep the hash layout and z-sort WITHIN
-      // buckets; drifted specs take the classic path (see
-      // [[compactZOrder]] — same rationale).
-      val bucketed = bucketSpecEngaged(spark, root, cur).isDefined
-      val laid =
-        if (bucketed) raw
-        else graft.operators.Layout.zorderBy(raw, zCols,
-          numFiles = sizedFileCount(spark, root, cur, replaced,
-            filesPerPartition * nParts, props), bits = bits)
-      val v = cur + 1
-      val newEntries = writeDataFiles(spark, laid, root, v,
-        partitionCols.cols.map(physicalNameOf(renames, _)), translate = false,
-        sortWithin =
-          if (bucketed) Seq(graft.operators.Layout.zorderKey(raw, zCols, bits))
-          else Nil)
-      val stamped = (props - ClusteredAtProp - ClusterKeysProp).toSeq ++
-        Seq(ClusteredAtProp -> v.toString,
-          ClusterKeysProp -> zKeys.mkString(","))
-      if (writeManifest(spark, root, v, kept ++ newEntries,
-          "zorder-incremental", partitionCols.header,
-          properties = Some(stamped))) {
-        writeStats(spark, root, v, kept, newEntries, None)
-        postCommit(spark, root, v, compactEligible = false)
-        return v
+      if (unclustered.isEmpty) NoOp(cur)
+      else {
+        // Delta at least half the table: a full pass costs the same
+        // class and resets the generation count.
+        val (replaced, kept) =
+          if (unclustered.size * 2 >= entries.size) (entries, Seq.empty[ManifestEntry])
+          else {
+            val delta = unclustered.map(_.path).toSet
+            (unclustered, entries.filterNot(e => delta(e.path)))
+          }
+        val nParts = replaced.map(_.partition).distinct.size
+        val renames = mappingAt(spark, root, cur)._1
+        val raw = readEntriesAt(spark, root, replaced, cur)
+        val zCols = zKeys.map(k => col(physicalNameOf(renames, k)))
+        // Bucket-engaged tables keep the hash layout and z-sort WITHIN
+        // buckets; drifted specs take the classic path (see
+        // [[compactZOrder]] — same rationale).
+        val bucketed = bucketSpecEngaged(spark, root, cur).isDefined
+        val laid =
+          if (bucketed) raw
+          else graft.operators.Layout.zorderBy(raw, zCols,
+            numFiles = sizedFileCount(spark, root, cur, replaced,
+              filesPerPartition * nParts, props), bits = bits)
+        val v = cur + 1
+        val newEntries = writeDataFiles(spark, laid, root, v,
+          partitionCols.cols.map(physicalNameOf(renames, _)), translate = false,
+          sortWithin =
+            if (bucketed) Seq(graft.operators.Layout.zorderKey(raw, zCols, bits))
+            else Nil)
+        val stamped = (props - ClusteredAtProp - ClusterKeysProp).toSeq ++
+          Seq(ClusteredAtProp -> v.toString,
+            ClusterKeysProp -> zKeys.mkString(","))
+        new Staged(kept, newEntries, "zorder-incremental", partitionCols.header,
+          properties = Some(stamped), compactEligible = false)
       }
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the incremental-clustering race $maxAttempts times under $root")
   }
 
   /** Delta `RESTORE TABLE … TO VERSION AS OF` analog: roll the table
@@ -1691,8 +1534,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * versions stay on disk until [[vacuum]]; vacuuming history then
     * limits how far back a future restore can reach, exactly like
     * Delta. */
-  def restore(spark: SparkSession, root: String, toVersion: Long,
-              maxAttempts: Int = 5): Long = {
+  def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
     // Note: restoring a DELETION-VECTORED version re-publishes its DV
     // attachments; vacuum keeps any DV dir referenced by a KEPT
     // manifest, so a restore within the retention window is always
@@ -1707,10 +1549,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       .orElse(currentVersion(spark, root)
         .flatMap(partitionColumn(spark, root, _)))
       .getOrElse("")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    occ(spark, root, "restore") { cur =>
       // No-op only when FILES **and** METADATA already match: a
       // metadata-only commit (rename/drop column) carries the same
       // file set as its parent, so the file comparison alone would
@@ -1719,8 +1558,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
           mappingAt(spark, root, cur) == mappingAt(spark, root, toVersion) &&
           tableProperties(spark, root, cur).toSet ==
             tableProperties(spark, root, toVersion).toSet)
-        return cur
-      val v = cur + 1
+        NoOp(cur)
       // The column mapping snaps back to the TARGET's, exactly like the
       // recorded schema (basis): restoring across a rename must show
       // the names the table had then, or the restored files' logical
@@ -1728,24 +1566,18 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       // snap back the same way (Delta's RESTORE restores the target
       // metadata including configuration) — the default carry would
       // otherwise keep the abandoned tip's property set across a
-      // restore over a SET TBLPROPERTIES.
-      if (writeManifest(spark, root, v, target, "restore", partCol,
-          columnMapping = Some(
-            try columnMapping(spark, root, toVersion)
-            catch { case _: java.io.IOException => (Nil, Nil) }),
-          properties = Some(
-            try tableProperties(spark, root, toVersion)
-            catch { case _: java.io.IOException => Nil }))) {
-        writeStats(spark, root, v, target, Nil, None, basis = Some(toVersion))
-        // Restore CHANGES CONTENT (the snap-back) — auto-synced
-        // rollups must follow it; layout-wise nothing new to compact.
-        postCommit(spark, root, v, compactEligible = false)
-        return v
-      }
-      attempt += 1
+      // restore over a SET TBLPROPERTIES. Restore CHANGES CONTENT (the
+      // snap-back) — auto-synced rollups must follow it; layout-wise
+      // nothing new to compact.
+      else new Staged(target, Nil, "restore", partCol,
+        columnMapping = Some(
+          try columnMapping(spark, root, toVersion)
+          catch { case _: java.io.IOException => (Nil, Nil) }),
+        properties = Some(
+          try tableProperties(spark, root, toVersion)
+          catch { case _: java.io.IOException => Nil }),
+        basis = Some(toVersion), compactEligible = false)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the restore race $maxAttempts times under $root")
   }
 
   /** Delta SHALLOW CLONE analog: publish version 1 of a NEW table at

@@ -28,7 +28,8 @@ import graft.operators.Upsert
   * exists, so a crash at ANY point leaves the previous snapshot intact
   * (orphaned data files are garbage-collected by [[vacuum]]) and two
   * racing committers cannot both win a version — the loser retries on
-  * the next number.
+  * the next number. Every mutation runs that protocol through the one
+  * primitive [[occ]].
   *
   * Scale notes (100 TB): a merge rewrites only the partitions present
   * in the incoming batch; untouched partitions' files are carried into
@@ -299,9 +300,10 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     val f = fs(spark, root)
     val p = manifestPath(root, version)
     val key = MetaKey(root, version)
-    val cache = metaCacheEnabled(spark)
-    val fp = metaFp(f, p)
-    if (cache) manifestCache.get(key, fp) match {
+    // Fingerprinted only when the cache is on: the uncached path fails
+    // at `f.open` exactly as it did before the cache existed.
+    val fp = if (metaCacheEnabled(spark)) Some(metaFp(f, p)) else None
+    fp.flatMap(manifestCache.get(key, _)) match {
       case Some((_, entries)) => return entries
       case None => ()
     }
@@ -336,11 +338,11 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
           s"malformed manifest line under $root v$version: ${other.mkString("\\t")}")
       }
     }.toSeq
-    if (cache) {
-      // A full parse subsumes the header block — seed BOTH caches so
-      // the first header probe after an entry read is already a hit.
-      manifestCache.put(key, fp, (headers, entries))
-      headerCache.put(key, fp, headers)
+    // A full parse subsumes the header block — seed BOTH caches so the
+    // first header probe after an entry read is already a hit.
+    fp.foreach { x =>
+      manifestCache.put(key, x, (headers, entries))
+      headerCache.put(key, x, headers)
     }
     entries
   }
@@ -358,9 +360,8 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     val f = fs(spark, root)
     val p = manifestPath(root, version)
     val key = MetaKey(root, version)
-    val cache = metaCacheEnabled(spark)
-    val fp = metaFp(f, p)
-    if (cache) headerCache.get(key, fp) match {
+    val fp = if (metaCacheEnabled(spark)) Some(metaFp(f, p)) else None
+    fp.flatMap(headerCache.get(key, _)) match {
       case Some(headers) => return headers
       case None => ()
     }
@@ -370,7 +371,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     finally in.close()
     // Headers alone (the prefix read) — entry parses stay lazy: a
     // header probe over a million-entry manifest must not read it all.
-    if (cache) headerCache.put(key, fp, headers)
+    fp.foreach(headerCache.put(key, _, headers))
     headers
   }
 
@@ -677,7 +678,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     * (set/overwrite the given keys, keep the rest). Returns the new
     * version. */
   def setProperties(spark: SparkSession, root: String,
-                    props: Seq[(String, String)], maxAttempts: Int = 5): Long = {
+                    props: Seq[(String, String)]): Long = {
     require(props.nonEmpty, "SET TBLPROPERTIES needs at least one key")
     // Generated-column expressions are CREATE TABLE metadata: the
     // recording rides v1 together with the gen_ CHECK whose induction
@@ -703,29 +704,15 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
         s"'$k' is managed metadata — use ALTER TABLE … ALTER COLUMN " +
           "… SET DEFAULT / DROP DEFAULT, which validates the expression")
     }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    val keys = props.map(_._1).toSet
+    occ(spark, root, "set-properties") { cur =>
       val existing = tableProperties(spark, root, cur)
-      val keys = props.map(_._1).toSet
-      val merged = existing.filterNot(p => keys(p._1)) ++ props
-      val entries = manifest(spark, root, cur)
-      val v = cur + 1
-      if (writeManifest(spark, root, v, entries, "set-properties",
-          partitionColumn(spark, root, cur).getOrElse(""),
-          properties = Some(merged))) {
-        writeStats(spark, root, v, entries, Nil, None)
-        postCommit(spark, root, v, compactEligible = false)
-        return v
-      }
-      attempt += 1
+      metadataCommit(spark, root, cur, "set-properties",
+        properties = Some(existing.filterNot(p => keys(p._1)) ++ props))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the set-properties race $maxAttempts times under $root")
   }
 
-  /** Read-modify-write of ONE property under the OCC loop: `f` sees
+  /** Read-modify-write of ONE property under [[occ]]: `f` sees
     * the value at each ATTEMPT's current version, so a lost race
     * recomputes against the winner's value instead of silently
     * overwriting it ([[setProperties]] re-reads the rest of the set
@@ -734,37 +721,22 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     * list property would erase each other). A no-op update (f returns
     * the current value) commits nothing. Returns the version holding
     * the value. */
-  def updateProperty(spark: SparkSession, root: String, key: String,
-                     maxAttempts: Int = 5)(f: Option[String] => String): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+  def updateProperty(spark: SparkSession, root: String, key: String)
+                    (f: Option[String] => String): Long =
+    occ(spark, root, "update-property") { cur =>
       val existing = tableProperties(spark, root, cur)
       val old = existing.collectFirst { case (k, v) if k == key => v }
       val next = f(old)
-      if (old.contains(next)) return cur
-      val merged = existing.filterNot(_._1 == key) :+ (key -> next)
-      val entries = manifest(spark, root, cur)
-      val v = cur + 1
-      if (writeManifest(spark, root, v, entries, "set-properties",
-          partitionColumn(spark, root, cur).getOrElse(""),
-          properties = Some(merged))) {
-        writeStats(spark, root, v, entries, Nil, None)
-        postCommit(spark, root, v, compactEligible = false)
-        return v
-      }
-      attempt += 1
+      if (old.contains(next)) NoOp(cur)
+      else metadataCommit(spark, root, cur, "set-properties",
+        properties = Some(existing.filterNot(_._1 == key) :+ (key -> next)))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the update-property race $maxAttempts times under $root")
-  }
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES` — metadata-only removal.
     * Unknown keys fail loudly (matching UNSET without IF EXISTS).
     * Returns the new version. */
   def unsetProperties(spark: SparkSession, root: String,
-                      keys: Seq[String], maxAttempts: Int = 5): Long = {
+                      keys: Seq[String]): Long = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
     // Symmetric with the SET-side guard: removing a generation
     // expression or an identity record silently changes write
@@ -784,30 +756,17 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
         s"'$k' is managed metadata — use ALTER TABLE … ALTER COLUMN " +
           "… DROP DEFAULT")
     }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val cur = currentVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed snapshot under $root"))
+    val doomed = keys.toSet
+    occ(spark, root, "unset-properties") { cur =>
       val existing = tableProperties(spark, root, cur)
       val have = existing.map(_._1).toSet
       val missing = keys.filterNot(have)
       require(missing.isEmpty,
         s"table $root has no propert${if (missing.size == 1) "y" else "ies"} " +
           s"${missing.mkString(", ")} (have: ${have.mkString(", ")})")
-      val doomed = keys.toSet
-      val entries = manifest(spark, root, cur)
-      val v = cur + 1
-      if (writeManifest(spark, root, v, entries, "unset-properties",
-          partitionColumn(spark, root, cur).getOrElse(""),
-          properties = Some(existing.filterNot(p => doomed(p._1))))) {
-        writeStats(spark, root, v, entries, Nil, None)
-        postCommit(spark, root, v, compactEligible = false)
-        return v
-      }
-      attempt += 1
+      metadataCommit(spark, root, cur, "unset-properties",
+        properties = Some(existing.filterNot(p => doomed(p._1))))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the unset-properties race $maxAttempts times under $root")
   }
 
   /** Enforce the table's CHECK constraints against a batch about to be
@@ -817,21 +776,19 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     * rewrites (compact/zorder) skip this — content is unchanged by
     * invariant, and re-proving it would double their read. */
   private[sinks] def enforceConstraints(spark: SparkSession, root: String,
-                                 df: DataFrame,
-                                 tip: Option[Option[(Long, Map[String, String])]] = None): Unit = {
-    // `tip`: outer None = resolve here (direct callers); Some(resolved)
-    // = the entry point already read the tip once — don't read again.
-    val resolved = tip.getOrElse(tipVersionAndProps(spark, root))
-    val cs = resolved.map { case (v, _) =>
-      tableConstraints(spark, root, v) }.getOrElse(Nil)
+                                 df: DataFrame, tip: Long,
+                                 props: => Map[String, String]): Unit = {
+    // `tip` is the commit attempt's own tip (0 = no table yet): a body
+    // that checked against an older version could publish a violating
+    // row on top of a concurrently added constraint. `props` is read
+    // only when a constraint exists.
+    val cs = if (tip >= 1) tableConstraints(spark, root, tip) else Nil
     if (cs.isEmpty) return
     // Generated columns absent from the batch are computed downstream
     // by writeDataFiles — check the POST-computation batch (what
     // actually lands), or the auto-registered gen_ CHECK would throw
     // an unresolved-column error on every column-omitting insert.
-    val gens = resolved.map { case (_, props) =>
-      generatedColumns(props) }.getOrElse(Nil)
-    val checked = withGeneratedColumns(df, gens)
+    val checked = withGeneratedColumns(df, generatedColumns(props))
     cs.foreach { case (name, e) =>
       val bad = checked.filter(!coalesce(expr(e), lit(true))).limit(1).collect()
       if (bad.nonEmpty) throw new IllegalStateException(
@@ -1290,9 +1247,13 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     * applied to the commit entry too). None for a fresh table. */
   private[sinks] def tipVersionAndProps(spark: SparkSession,
                                         root: String): Option[(Long, Map[String, String])] =
-    currentVersion(spark, root).map(v =>
-      (v, scala.util.Try(tableProperties(spark, root, v).toMap)
-        .getOrElse(Map.empty[String, String])))
+    currentVersion(spark, root).map(v => (v, propertiesAt(spark, root, v)))
+
+  /** Version `v`'s property map, empty when unreadable. */
+  private[sinks] def propertiesAt(spark: SparkSession, root: String,
+                                  v: Long): Map[String, String] =
+    scala.util.Try(tableProperties(spark, root, v).toMap)
+      .getOrElse(Map.empty[String, String])
 
   /** [[withGeneratedColumns]] against the table's tip — the content
     * entry points apply this EARLY so partition-touch probes and the
@@ -1358,6 +1319,105 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     if (currentProps.get(MaintenanceErrorProp)
           .exists(_.startsWith(s"component=$component;")))
       pendingMaintenanceErrors.putIfAbsent(root, "")
+
+  /** Lost-race retry budget of every [[occ]] commit. */
+  private[sinks] val MaxCommitAttempts = 10
+
+  /** What one [[occ]] attempt body decided: [[NoOp]] ends the operation
+    * without a commit, [[Staged]] asks the primitive to publish. */
+  private[sinks] sealed trait Attempt
+
+  /** No commit is needed; the operation returns `version`. */
+  private[sinks] final case class NoOp(version: Long) extends Attempt
+
+  /** A commit computed against the attempt's tip: the manifest lists
+    * `carried ++ fresh`; `constraints` / `properties` / `columnMapping`
+    * REPLACE the carried-forward metadata when given (see
+    * [[writeManifest]]); `schema` (by-name, read only after the publish
+    * wins) and `basis` feed [[writeStats]]; `compactEligible` feeds
+    * [[postCommit]]. `rebase`, given (base, head) after a lost publish,
+    * returns the carried entries that let the SAME fresh files publish
+    * at head + 1 — or None for a true conflict, which recomputes. */
+  private[sinks] final class Staged(
+      val carried: Seq[ManifestEntry],
+      val fresh: Seq[ManifestEntry],
+      val operation: String,
+      val partitionHeader: String,
+      schema0: => Option[org.apache.spark.sql.types.StructType] = None,
+      val constraints: Option[Seq[(String, String)]] = None,
+      val properties: Option[Seq[(String, String)]] = None,
+      val columnMapping: Option[(Seq[(String, String)], Seq[String])] = None,
+      val extraHeaders: Seq[String] = Nil,
+      val basis: Option[Long] = None,
+      val compactEligible: Boolean = true,
+      val rebase: Option[(Long, Long) => Option[Seq[ManifestEntry]]] = None)
+      extends Attempt {
+    def schema: Option[org.apache.spark.sql.types.StructType] = schema0
+  }
+
+  /** The one optimistic-concurrency commit protocol every table
+    * mutation publishes through (Delta's OptimisticTransaction shape):
+    * resolve the tip, run `body` against it, publish its staged commit
+    * at EXACTLY tip + 1 (`writeManifest` → `writeStats` → `postCommit`),
+    * and on a lost race re-run the body against the winner's tip.
+    * Skipping ahead after a lost race would let another writer later
+    * publish the skipped number and shadow the newer commit, since
+    * "current" is the max committed version. A missing table is refused
+    * unless `needsTable = false`, which hands the body tip 0. Returns
+    * the committed (or the no-op) version; [[MaxCommitAttempts]] lost
+    * races raise `ConcurrentModificationException`. */
+  private[sinks] def occ(spark: SparkSession, root: String, race: String,
+                         needsTable: Boolean = true)(body: Long => Attempt): Long = {
+    var lost = 0
+    while (lost < MaxCommitAttempts) {
+      val cur = currentVersion(spark, root) match {
+        case Some(v) => v
+        case None if !needsTable => 0L
+        case None => throw new IllegalStateException(s"no committed snapshot under $root")
+      }
+      body(cur) match {
+        case NoOp(v) => return v
+        case s: Staged =>
+          var carried = s.carried
+          var v = cur + 1
+          var rebases = 0
+          var publishing = true
+          while (publishing) {
+            if (writeManifest(spark, root, v, carried ++ s.fresh, s.operation,
+                s.partitionHeader, s.extraHeaders, s.constraints, s.properties,
+                s.columnMapping)) {
+              writeStats(spark, root, v, carried, s.fresh, s.schema, s.basis)
+              postCommit(spark, root, v, s.compactEligible)
+              return v
+            }
+            publishing = s.rebase.exists { check =>
+              val head = currentVersion(spark, root).getOrElse(0L)
+              rebases += 1
+              val rebased =
+                if (head >= v && rebases <= MaxCommitAttempts) check(cur, head) else None
+              rebased.foreach { c => carried = c; v = head + 1 }
+              rebased.isDefined
+            }
+          }
+      }
+      lost += 1
+    }
+    throw new java.util.ConcurrentModificationException(
+      s"lost the $race race $MaxCommitAttempts times under $root")
+  }
+
+  /** A metadata-only [[Staged]] commit: every data file of `cur`
+    * carries by reference under the tip's partition header. */
+  private[sinks] def metadataCommit(spark: SparkSession, root: String, cur: Long,
+                                    operation: String,
+                                    properties: Option[Seq[(String, String)]] = None,
+                                    constraints: Option[Seq[(String, String)]] = None,
+                                    schema: => Option[org.apache.spark.sql.types.StructType] = None): Staged = {
+    val entries = manifest(spark, root, cur)
+    new Staged(entries, Nil, operation, partitionColumn(spark, root, cur).getOrElse(""),
+      schema, constraints = constraints, properties = properties,
+      compactEligible = false)
+  }
 
   private[sinks] def writeManifest(spark: SparkSession, root: String, version: Long,
                             entries: Seq[ManifestEntry],
@@ -2335,7 +2395,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // Recorded SORT columns resolve under the same discipline; a
     // caller-supplied sortWithin (a z-order key) takes precedence.
     // Spec lookup against v-1 — the predecessor this write builds on,
-    // which the OCC loops already resolved (no extra currentVersion
+    // which the commit primitive already resolved (no extra currentVersion
     // probe on the hot write path; v == 1 is a fresh table with no
     // properties to consult).
     def resolveTyped(cs: Seq[(String, String)]): Option[Seq[String]] = {

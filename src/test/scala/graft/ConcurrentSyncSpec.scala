@@ -152,4 +152,46 @@ class ConcurrentSyncSpec extends SparkSpec {
       .select("product_id").as[String].collect().toSet ==
       Set("p1", "p2", "p3"))
   }
+
+  test("concurrent updateProperty list appends: both items survive") {
+    import spark.implicits._
+    import graft.sinks.SnapshotStore
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-prop-race").resolve("t").toString
+    SnapshotStore.commit(spark,
+      Seq(("p1", "a", 1)).toDF("product_id", "supplier", "version"),
+      root, "supplier")
+    // The read-modify-write a rollup registry relies on: each writer
+    // appends its own item to the same comma-joined list property.
+    def append(item: String): Long =
+      SnapshotStore.updateProperty(spark, root, "test.items") { old =>
+        (old.toSeq.flatMap(_.split(",")).filter(_.nonEmpty) :+ item).mkString(",")
+      }
+    val (ra, rb) = raceTwo(root, append("x"), append("y"))
+    assert(Set(ra, rb) == Set(2L, 3L), s"expected versions 2 and 3, got $ra/$rb")
+    assert(SnapshotStore.tablePropertiesMap(spark, root).get("test.items")
+      .map(_.split(",").toSet).contains(Set("x", "y")),
+      "a lost race overwrote the winner's item")
+  }
+
+  test("concurrent appendCommits: both land on versions 2 and 3 with every row") {
+    import spark.implicits._
+    import graft.sinks.SnapshotStore
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-append-race").resolve("t").toString
+    SnapshotStore.commit(spark,
+      Seq(("p1", "a", 1)).toDF("product_id", "supplier", "version"),
+      root, "supplier")
+    val (ra, rb) = raceTwo(root,
+      SnapshotStore.appendCommit(spark,
+        Seq(("p2", "a", 2), ("p3", "b", 2)).toDF("product_id", "supplier", "version"),
+        root, "supplier"),
+      SnapshotStore.appendCommit(spark,
+        Seq(("p4", "a", 3), ("p5", "c", 3)).toDF("product_id", "supplier", "version"),
+        root, "supplier"))
+    assert(Set(ra, rb) == Set(2L, 3L), s"expected versions 2 and 3, got $ra/$rb")
+    assert(SnapshotStore.read(spark, root)
+      .select("product_id").as[String].collect().sorted.toSeq ==
+      Seq("p1", "p2", "p3", "p4", "p5"))
+  }
 }
