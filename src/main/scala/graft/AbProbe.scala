@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only SAME-SESSION A/B: run a query list with a runtime conf
   * flipped between two values, interleaved per pass, and report
   * per-query min wall for each arm. Cross-JVM A/B on this host is
@@ -20,16 +18,7 @@ object AbProbe {
     val passes = args.lift(4).map(_.toInt).getOrElse(3)
     require(passes >= 1, s"passes must be >= 1, got $passes")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevRun.session()
     val qs = names.map(n => n -> SparkEntry.queries(n))
     // Untimed warmup under each arm so JIT/codegen is hot for both.
     Seq(valA, valB).foreach { v =>

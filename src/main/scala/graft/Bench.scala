@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.immutable.ListMap
 
 /** Benchmark main: runs every registered query against
@@ -25,36 +24,8 @@ import scala.collection.immutable.ListMap
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Parsed once, loudly: the value lands unquoted in the JSON line.
-    val cpus = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      raw.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
-    }
-    // The whole-stage-codegen cache defaults to 100 STRONGLY-HELD
-    // entries. With ~190 registered queries and INTERLEAVED timed
-    // passes, every unit is evicted between a query's two samples, so
-    // min-of-2 measures cold-compile cost that a warmed executor fleet
-    // never pays — measured as a uniform ~1.25x floor over untouched
-    // queries when the suite grew past the cache size (round 10; the
-    // A/B is recorded in SCALE.md "codegen-cache geometry"). Size the
-    // cache to the suite so the minima are steady-state plan cost
-    // again. Static conf: must be set before the session exists.
-    val codegenCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+    val spark = DevRun.session()
+    import DevRun.jstr
     // Warmup: touch every table once (parquet footers, FS metadata, JIT
     // of the scan path) so the first timed query isn't charged session
     // cold-start costs that belong to no query.
@@ -146,7 +117,7 @@ object Bench {
     // errors, plus the run's cpus/sf so the scaling runs are
     // self-describing); the per-sample detail and pass timestamps live
     // only in the file artifact below, which has no size limit.
-    val common = s""""metric":"total","value":$total,"unit":"sec","cpus":$cpus,"sf_dir":${jstr(sfDir)},"scan_s":$scanS,"lifecycle_s":$lifeS,"streaming_s":$streamS,"queries":$qs,"errors":$es,"error_count":${errors.size},"sf":${jstr(sfDir)}"""
+    val common = s""""metric":"total","value":$total,"unit":"sec","cpus":${DevRun.cpus},"sf_dir":${jstr(sfDir)},"scan_s":$scanS,"lifecycle_s":$lifeS,"streaming_s":$streamS,"queries":$qs,"errors":$es,"error_count":${errors.size},"sf":${jstr(sfDir)}"""
     println(s"{$common}")
     // The FULL artifact (every query, every sample, pass start times)
     // persists to a file so a stall diagnosis never needs a re-run.

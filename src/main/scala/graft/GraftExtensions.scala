@@ -11,8 +11,8 @@ import graft.functions.{TextAnalysis, Urls, Vectors}
   * SQL — a user can `SELECT graft_cosine(a.embedding, b.embedding)`
   * without touching the Scala API.
   *
-  * Enable at build time with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` (or
+  * Enable at build time with `.withExtensions(new GraftExtensions)` on
+  * the session builder, as [[DevRun.session]] does (or
   * `spark.sql.extensions=graft.GraftExtensions`), or on a live session
   * with [[GraftExtensions.register]].
   */

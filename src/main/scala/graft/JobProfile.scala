@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only wall-time breakdown for one registered query (guide §1):
   * `runMain graft.JobProfile <query> [runs]` runs the query with a
@@ -15,24 +14,7 @@ object JobProfile {
     val name = args.headOption.getOrElse("q212_autosync_freq_hist")
     val runs = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Defaults MUST match Bench's session config (which uses Spark's
-      // AQE defaults): round 16 measured parallelismFirst=false +64 MB
-      // advisory as 33% WORSE on q212, so profiling under it mis-ranks
-      // bottlenecks vs what the bench actually pays. Env overrides stay
-      // available for explicit A/B experiments.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "64") + "m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevRun.session()
 
     case class J(id: Int, desc: String, site: String, start: Long,
                  var end: Long = 0, var stages: Int = 0, var tasks: Int = 0)

@@ -1,10 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, RangeJoin, Similarity, Upsert}
-import graft.functions.{Parsers, TextAnalysis, Vectors}
 
 /** The registered query inventory: every implemented operator from
   * SURVEY.md §2 (and the LLM-pipeline extensions) exercised as a
@@ -101,8 +98,7 @@ object Queries {
       i += 1
     }
     require(close > open, s"unbalanced array under '$key'")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sparse_q")
-    val out = dir.resolve("capture.jsonc")
+    val out = java.nio.file.Paths.get(DevRun.fixtureRoot("sparse_q"), "capture.jsonc")
     java.nio.file.Files.writeString(out,
       text.substring(0, open + 1) + text.substring(close))
     out.toString

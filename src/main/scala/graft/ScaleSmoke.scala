@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness: amplifies the test corpus N× (distinct-but-
@@ -16,14 +16,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val amp = args.headOption.map(_.toInt).getOrElse(20)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevRun.session()
 
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -51,10 +44,8 @@ object ScaleSmoke {
 
     // Snapshot-store base table (written OUTSIDE the timed merge so the
     // measurement isolates the incremental commit cost).
-    val snapRoot = java.nio.file.Files
-      .createTempDirectory("graft_scale_snap").toString + "/t"
-    val incIdxRoot = java.nio.file.Files
-      .createTempDirectory("graft_scale_incidx").toString + "/t"
+    val snapRoot = DevRun.fixtureRoot("scale_snap") + "/t"
+    val incIdxRoot = DevRun.fixtureRoot("scale_incidx") + "/t"
     val docs0Count = docs0.count()
     val snapBase = docs
       .withColumn("part", pmod(col("doc_id"), lit(16)))
@@ -64,8 +55,7 @@ object ScaleSmoke {
     // Range-laid snapshot for the data-skipping measurement: files
     // carry narrow disjoint doc_id ranges (the post-Z-order layout),
     // so a selective read should PLAN a small fraction of them.
-    val skipRoot = java.nio.file.Files
-      .createTempDirectory("graft_scale_skip").toString + "/t"
+    val skipRoot = DevRun.fixtureRoot("scale_skip") + "/t"
     graft.sinks.SnapshotStore.commit(spark,
       docs.withColumn("part", lit("x"))
         .repartitionByRange(64, col("doc_id"))
@@ -414,8 +404,7 @@ object ScaleSmoke {
       // only candidate files + index rows — compare bm25_retrieval
       // (the full-scan path on the same corpus/query).
       time("bm25_index_build") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_scale_bm25ix").toString
+        val dir = DevRun.fixtureRoot("scale_bm25ix")
         bm25IndexDir = s"$dir/index"
         val tableDir = s"$dir/table"
         docs.repartitionByRange(64, col("doc_id"))
@@ -457,7 +446,7 @@ object ScaleSmoke {
           "/root/reference/sample data/MidOcean Sample Data.jsonc")
         if (!sample.exists()) 0L
         else {
-          val dir = java.nio.file.Files.createTempDirectory("graft_scale_feed")
+          val dir = java.nio.file.Paths.get(DevRun.fixtureRoot("scale_feed"))
           val text = java.nio.file.Files.readString(sample.toPath)
           (0 until math.min(amp, 20)).foreach { i =>
             java.nio.file.Files.writeString(dir.resolve(s"capture_$i.jsonc"),
@@ -474,8 +463,7 @@ object ScaleSmoke {
       // matched partition rewrites. Setup (a fresh table commit) is
       // timed separately so the delete row measures the DML alone.
       time("delete_where_setup") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_scale_delw").toString
+        val dir = DevRun.fixtureRoot("scale_delw")
         deleteWhereRoot = s"$dir/t"
         graft.sinks.SnapshotStore.commit(spark, snapBase,
           deleteWhereRoot, "part")
@@ -499,10 +487,8 @@ object ScaleSmoke {
       // same predicate, then the post-delete read overhead of the
       // broadcast anti-join, and the purge that retires it.
       time("dv_setup") {
-        val d1 = java.nio.file.Files
-          .createTempDirectory("graft_scale_dvr").toString
-        val d2 = java.nio.file.Files
-          .createTempDirectory("graft_scale_dvm").toString
+        val d1 = DevRun.fixtureRoot("scale_dvr")
+        val d2 = DevRun.fixtureRoot("scale_dvm")
         dvRootRewrite = s"$d1/t"; dvRootMor = s"$d2/t"
         graft.sinks.SnapshotStore.commit(spark, snapBase, dvRootRewrite, "part")
         graft.sinks.SnapshotStore.commit(spark, snapBase, dvRootMor, "part")
@@ -583,8 +569,7 @@ object ScaleSmoke {
       // other 63 cells' files carried by reference (the probe value is
       // the number of NEW data files in the committed manifest).
       time("multipart_setup") {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_scale_mp").toString
+        val dir = DevRun.fixtureRoot("scale_mp")
         mpRoot = s"$dir/t"
         // bucket from a hash INDEPENDENT of part (doc_id mod 16 pins
         // doc_id mod 4, so a correlated bucket would leave most cells
@@ -613,10 +598,8 @@ object ScaleSmoke {
       // absorbed the corpus' first materialization and inverted the
       // comparison).
       time("cdc_setup") {
-        val da = java.nio.file.Files
-          .createTempDirectory("graft_scale_cdc1").toString
-        val db = java.nio.file.Files
-          .createTempDirectory("graft_scale_cdc2").toString
+        val da = DevRun.fixtureRoot("scale_cdc1")
+        val db = DevRun.fixtureRoot("scale_cdc2")
         cdcRootOne = s"$da/t"; cdcRootTwo = s"$db/t"
         graft.sinks.SnapshotStore.commit(spark, snapBase, cdcRootOne, "part")
         graft.sinks.SnapshotStore.commit(spark, snapBase, cdcRootTwo, "part")
@@ -716,10 +699,8 @@ object ScaleSmoke {
       // (1/16 of the corpus, bounded by the group semi-join). At
       // 100 TB the dashboards refresh at delta price, never corpus.
       time("hll_setup") {
-        hllSrcRoot = java.nio.file.Files
-          .createTempDirectory("graft_scale_hll").toString + "/t"
-        hllSkRoot = java.nio.file.Files
-          .createTempDirectory("graft_scale_hllsk").toString + "/t"
+        hllSrcRoot = DevRun.fixtureRoot("scale_hll") + "/t"
+        hllSkRoot = DevRun.fixtureRoot("scale_hllsk") + "/t"
         // The held-out window lives in ONE partition (part 4; doc_id ≡
         // 100 mod 400 ⊂ part 4), so the later append prices as a
         // single-partition delta — the shape the change feed bounds.
@@ -760,8 +741,7 @@ object ScaleSmoke {
       // rebuild scan exists in the plan at all. The delta sync prices
       // by the one touched partition's diff, never the corpus.
       time("rollup_build") {
-        ruRollRoot = java.nio.file.Files
-          .createTempDirectory("graft_scale_roll").toString + "/t"
+        ruRollRoot = DevRun.fixtureRoot("scale_roll") + "/t"
         graft.operators.Rollup.sync(spark, hllSrcRoot, ruRollRoot,
           Seq("doc_id"), Seq("part"), Seq("author"))
       },
@@ -794,7 +774,7 @@ object ScaleSmoke {
           val agg = graft.sinks.SnapshotStore.table(spark, hllSrcRoot)
             .groupBy("part")
             .agg(count(lit(1)).as("n"), sum(col("author")).as("sa"))
-          require(agg.queryExecution.executedPlan.toString.contains(ruRollRoot),
+          require(DevRun.readsOnly(agg, ruRollRoot),
             "MV rewrite did not fire — the probe would time a scan")
           agg.collect().length.toLong
         } finally spark.conf.unset(graft.sinks.RollupRewrite.RegistryConf)
@@ -806,14 +786,10 @@ object ScaleSmoke {
       // shuffle; at 100 TB it is the difference between moving the
       // table over the network per join and never moving it.
       time("bucket_join_setup") {
-        bkPlainL = java.nio.file.Files
-          .createTempDirectory("graft_scale_bkpl").toString + "/t"
-        bkPlainR = java.nio.file.Files
-          .createTempDirectory("graft_scale_bkpr").toString + "/t"
-        bkClusL = java.nio.file.Files
-          .createTempDirectory("graft_scale_bkcl").toString + "/t"
-        bkClusR = java.nio.file.Files
-          .createTempDirectory("graft_scale_bkcr").toString + "/t"
+        bkPlainL = DevRun.fixtureRoot("scale_bkpl") + "/t"
+        bkPlainR = DevRun.fixtureRoot("scale_bkpr") + "/t"
+        bkClusL = DevRun.fixtureRoot("scale_bkcl") + "/t"
+        bkClusR = DevRun.fixtureRoot("scale_bkcr") + "/t"
         val left = docs.withColumn("part", lit("x"))
         val right = docs.select(col("doc_id"),
             length(col("text")).as("doc_len"))
@@ -854,8 +830,7 @@ object ScaleSmoke {
       // 0, 1, and 3 registered auto-sync rollups, then with
       // auto-compact below and at its threshold.
       time("hook_setup") {
-        hkRoot = java.nio.file.Files
-          .createTempDirectory("graft_scale_hook").toString + "/t"
+        hkRoot = DevRun.fixtureRoot("scale_hook") + "/t"
         def enrich(df: DataFrame) = df
           .withColumn("part", pmod(col("doc_id"), lit(16)))
           .withColumn("author", pmod(col("doc_id"), lit(997)))
@@ -864,8 +839,7 @@ object ScaleSmoke {
         graft.sinks.SnapshotStore.commit(spark,
           enrich(docs.filter(pmod(col("doc_id"), lit(10)) > 4)),
           hkRoot, "part")
-        val base = java.nio.file.Files
-          .createTempDirectory("graft_scale_hookr").toString
+        val base = DevRun.fixtureRoot("scale_hookr")
         hkR1 = s"$base/r1"; hkR2 = s"$base/r2"; hkR3 = s"$base/r3"
         graft.operators.Rollup.sync(spark, hkRoot, hkR1,
           Seq("doc_id"), Seq("part"), Seq("author"))
@@ -1051,8 +1025,7 @@ object ScaleSmoke {
       // doc_id serves all three (the monotonic-ingest-id layout),
       // amplified a further 5× so shuffle/scan work dominates the
       // fixed per-commit cost the probes are NOT about.
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_scale_r13").toString
+      val base = DevRun.fixtureRoot("scale_r13")
       val clRoot = s"$base/cl"
       val reps5 = spark.range(5).select(col("id").as("r5"))
       val docs5 = docs.crossJoin(reps5)

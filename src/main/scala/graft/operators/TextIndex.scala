@@ -57,19 +57,32 @@ object TextIndex {
     * build sweeps) — it can never leave a PARTIAL live index, which
     * committer v2 writing straight into the live dir could: a reader
     * would silently search a half-built index (the round-16 audit's
-    * failure-visibility hole). */
+    * failure-visibility hole).
+    *
+    * The swap itself is two renames (live → `.old-*`, tmp → live). A
+    * crash between them leaves NO live index: readers in that window
+    * see a missing path, not the previous index. The next build
+    * restores the set-aside `.old-*` copy before it sweeps, so the
+    * only copy is never deleted and a build that then fails still
+    * leaves the previous index live. */
   private[graft] def overwriteViaSwap(spark: SparkSession, dest: String)
       (write: String => Unit): Unit = {
     val destPath = new org.apache.hadoop.fs.Path(dest)
     val f = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Sweep orphans of previously crashed builds for this dest.
-    if (f.exists(destPath.getParent))
-      f.listStatus(destPath.getParent).foreach { s =>
-        val n = s.getPath.getName
-        if (n.startsWith(s".${destPath.getName}.tmp-") ||
-            n.startsWith(s".${destPath.getName}.old-"))
-          f.delete(s.getPath, true)
+    def orphans(kind: String) =
+      if (!f.exists(destPath.getParent)) Seq.empty
+      else f.listStatus(destPath.getParent).toSeq
+        .filter(_.getPath.getName.startsWith(s".${destPath.getName}.$kind-"))
+    // A crash inside a previous swap window set the live index aside
+    // and never published its replacement: put that copy back. (Every
+    // build sweeps before it swaps, so there is at most one.)
+    if (!f.exists(destPath))
+      orphans("old").headOption.foreach { s =>
+        if (!f.rename(s.getPath, destPath))
+          throw new IllegalStateException(s"swap restore rename failed for $dest")
       }
+    // Sweep orphans of previously crashed builds for this dest.
+    (orphans("tmp") ++ orphans("old")).foreach(s => f.delete(s.getPath, true))
     val suffix = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(destPath.getParent,
       s".${destPath.getName}.tmp-$suffix")

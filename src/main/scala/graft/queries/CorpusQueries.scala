@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, RangeJoin, Similarity, Upsert}
-import graft.functions.{Parsers, TextAnalysis, Vectors}
+import graft.operators.{Dedup, Similarity}
+import graft.functions.TextAnalysis
 
 /** LLM-corpus operators: dedup (exact/MinHash/SimHash/semantic/
   * ExactSubstr), similarity search, text analysis, sampling/packing,
@@ -14,7 +13,7 @@ import graft.functions.{Parsers, TextAnalysis, Vectors}
   * and determinism rules live there; this file only contributes
   * entries. */
 private[graft] object CorpusQueries {
-  import Queries.{t, dsum, sparseFixture}
+  import Queries.t
 
   val all: Seq[(String, Queries.Q, Option[String])] = Seq(
 
@@ -1313,8 +1312,7 @@ private[graft] object CorpusQueries {
     // MinHash banded probes (corpus + within-batch keep-first over
     // the FILTERED batch), and the md5 split thresholds.
     ("q131_ingest_capstone", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q131_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q131_store") + "/t"
       val docs = t(s, d, "documents")
       val corpus = docs.filter(col("doc_id") < 100)
         .select(col("doc_id"), col("text"))
@@ -1653,8 +1651,7 @@ private[graft] object CorpusQueries {
     // q140's verbatim. The pruned-scan property itself is spec-pinned
     // (TextIndexSpec counts input files).
     ("q152_bm25_via_index", (s: SparkSession, d: String) => {
-      val idx = java.nio.file.Files.createTempDirectory("graft_q152_idx")
-        .resolve("bm25idx").toString
+      val idx = DevRun.fixtureRoot("q152_idx") + "/bm25idx"
       graft.operators.TextIndex.buildBm25Index(
         s, s"$d/documents.parquet", "text", idx)
       graft.operators.TextIndex.bm25ViaIndex(

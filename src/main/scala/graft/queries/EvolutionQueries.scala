@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Snapshot-store ENGINE-EVOLUTION queries: multi-column partition
@@ -26,8 +25,7 @@ private[graft] object EvolutionQueries {
     // (require-pinned). Oracle derives the merged state from key
     // arithmetic.
     ("q182_multi_partition", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q182_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q182_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .withColumn("bucket", pmod(col("o_orderkey"), lit(3)).cast("int"))
@@ -70,8 +68,7 @@ private[graft] object EvolutionQueries {
     // (require-pinned: exactly one version advance), and the
     // source-only `deleted` flag must not leak into the table.
     ("q183_sql_merge_cdc", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q183_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q183_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -120,8 +117,7 @@ private[graft] object EvolutionQueries {
     // (joining on lo alone would cross-match hundreds of rows)
     // cannot hash-match the oracle.
     ("q184_composite_key", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q184_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q184_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .withColumn("hi", expr("o_orderkey div 100"))
@@ -158,8 +154,7 @@ private[graft] object EvolutionQueries {
     // born from DDL — schema recorded in the stats sidecar, partition
     // spec in #partcol — then filled by INSERT INTO, all pure SQL.
     ("q185_sql_create_table", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q185_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q185_store") + "/t"
       s.conf.set("spark.sql.catalog.graft_q185",
         classOf[graft.sinks.GraftCatalog].getName)
       val created = s.sql(s"CREATE TABLE graft_q185.`$root` " +
@@ -193,7 +188,7 @@ private[graft] object EvolutionQueries {
     // disabled), so the oracle row proves the checkpoint is a pure
     // optimization hint, never a semantic input.
     ("q187_checkpoint_equivalence", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q187_store")
+      val dir = DevRun.fixtureRoot("q187_store")
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       def build(root: String, interval: String): Unit = {
@@ -261,7 +256,7 @@ private[graft] object EvolutionQueries {
     // clone reads v2's content afterwards — its referenced files
     // survive because retained source manifests still list them.
     ("q188_sql_clone_vacuum", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q188_store")
+      val dir = DevRun.fixtureRoot("q188_store")
       val src = s"$dir/src"; val dst = s"$dir/dst"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -312,8 +307,7 @@ private[graft] object EvolutionQueries {
     // rows_removed their pre-merge count; a keyed delete removes its
     // touched partitions' old files and re-adds the survivors.
     ("q189_history_metrics", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q189_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q189_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -361,8 +355,7 @@ private[graft] object EvolutionQueries {
     // source either delete (guarded) or archive via a t.-scoped
     // column SET — all in one atomic commit (require-pinned).
     ("q190_sql_merge_full_sync", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q190_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q190_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -405,8 +398,7 @@ private[graft] object EvolutionQueries {
     // writability survive. Oracle derives the surviving rows (then the
     // re-inserted wave) from key arithmetic.
     ("q191_partition_delete", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q191_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q191_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       graft.sinks.SnapshotStore.commit(s, orders, root, "o_orderstatus")
@@ -454,8 +446,7 @@ private[graft] object EvolutionQueries {
     // widened schema is writable. Oracle derives both waves from key
     // arithmetic.
     ("q192_add_columns_multi", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q192_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q192_store") + "/t"
       val cust = t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_name"))
       graft.sinks.SnapshotStore.commit(s, cust, root, "c_mktsegment")
@@ -500,8 +491,7 @@ private[graft] object EvolutionQueries {
     // breaks the hash. Ref: mongodb_loader.py:271-299 count_documents
     // is metadata-priced; Delta answers COUNT(*) from the log.
     ("q193_metadata_counts", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q193_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q193_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       graft.sinks.SnapshotStore.commit(s, orders, root, "o_orderstatus")
@@ -549,8 +539,7 @@ private[graft] object EvolutionQueries {
     // (status, priority) cell (every other cell carried by
     // reference); time travel still reads v1 under the old spec.
     ("q194_partition_evolution", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q194_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q194_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_orderpriority"), col("o_totalprice"))
@@ -592,8 +581,7 @@ private[graft] object EvolutionQueries {
     // mis-widened value breaks the hash. Ref: Pydantic coercion,
     // unified_product_schema.py:145-207.
     ("q195_type_widening", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q195_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q195_store") + "/t"
       val cust = t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"),
           pmod(col("c_custkey"), lit(100)).cast("int").as("score"))
@@ -696,8 +684,7 @@ private[graft] object EvolutionQueries {
     // behind a correct scan. Ref: mongodb_loader.py:271-299 stats are
     // metadata-priced; Delta answers MIN/MAX from the log.
     ("q197_metadata_minmax", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q197_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q197_store") + "/t"
       // INT96 (Spark's default parquet timestamp encoding) carries no
       // replayable footer order — write standard MICROS so the date
       // column's bounds land in the sidecar like every other engine's
@@ -758,9 +745,9 @@ private[graft] object EvolutionQueries {
     // priced stats; the 100 TB shape is COUNT(DISTINCT) dashboards
     // priced by the commit delta, never the corpus.
     ("q198_hll_sketch_sync", (s: SparkSession, d: String) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_q198_store")
-      val srcRoot = base.resolve("src").toString
-      val skRoot = base.resolve("sk").toString
+      val base = DevRun.fixtureRoot("q198_store")
+      val srcRoot = s"$base/src"
+      val skRoot = s"$base/sk"
       val cust = t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"))
       val sync = () => graft.operators.Sketches.hllSync(s, srcRoot, skRoot,
@@ -838,8 +825,7 @@ private[graft] object EvolutionQueries {
     // surrogate that broke string ORDER would both mis-prune loudly
     // and mis-hash.
     ("q199_string_zorder_skipping", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q199_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q199_store") + "/t"
       val cust = t(s, d, "customer").select(
         concat(lit("SKU#"),
           lpad(pmod(col("c_custkey") * 7919, lit(100000)).cast("string"),
@@ -878,8 +864,7 @@ private[graft] object EvolutionQueries {
     // feed over a window of updates + inserts + deletes, so a missing
     // or value-swapped pre-image cannot hash-match.
     ("q200_cdf_preimages", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q200_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q200_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -924,9 +909,9 @@ private[graft] object EvolutionQueries {
     // state directly — any drift (a stale sum, a max that survived
     // its row's deletion, a NULL sum collapsed to 0) breaks the hash.
     ("q201_incremental_rollup", (s: SparkSession, d: String) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_q201_store")
-      val srcRoot = base.resolve("src").toString
-      val rollRoot = base.resolve("roll").toString
+      val base = DevRun.fixtureRoot("q201_store")
+      val srcRoot = s"$base/src"
+      val rollRoot = s"$base/roll"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice").as("price"),
@@ -983,9 +968,9 @@ private[graft] object EvolutionQueries {
     // the output is topK(2) per status replayed by DuckDB's
     // count + row_number over the derived final state.
     ("q202_frequency_topk", (s: SparkSession, d: String) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_q202_store")
-      val srcRoot = base.resolve("src").toString
-      val fqRoot = base.resolve("fq").toString
+      val base = DevRun.fixtureRoot("q202_store")
+      val srcRoot = s"$base/src"
+      val fqRoot = s"$base/fq"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
       val sync = () => graft.operators.Frequencies.sync(s, srcRoot, fqRoot,
@@ -1041,9 +1026,9 @@ private[graft] object EvolutionQueries {
     // interpolated median sits within ONE bin width of the exact
     // percentile (the explicit approximation contract).
     ("q203_histogram_quantiles", (s: SparkSession, d: String) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_q203_store")
-      val srcRoot = base.resolve("src").toString
-      val hgRoot = base.resolve("hg").toString
+      val base = DevRun.fixtureRoot("q203_store")
+      val srcRoot = s"$base/src"
+      val hgRoot = s"$base/hg"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"),
         when(pmod(col("o_orderkey"), lit(11)) === 0, lit(null))
@@ -1117,10 +1102,10 @@ private[graft] object EvolutionQueries {
     // the global top-k replays as count + row_number. One long-format
     // output covers both readers.
     ("q204_global_rollup_readers", (s: SparkSession, d: String) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_q204_store")
-      val srcRoot = base.resolve("src").toString
-      val hgRoot = base.resolve("hg").toString
-      val fqRoot = base.resolve("fq").toString
+      val base = DevRun.fixtureRoot("q204_store")
+      val srcRoot = s"$base/src"
+      val hgRoot = s"$base/hg"
+      val fqRoot = s"$base/fq"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
         col("o_totalprice").as("price"))
@@ -1189,8 +1174,7 @@ private[graft] object EvolutionQueries {
     // read, a mis-rescaled value, or a wrong union type breaks the
     // hash.
     ("q205_decimal_widening", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q205_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q205_store") + "/t"
       val base = t(s, d, "orders").select(col("o_orderkey"),
         col("o_orderstatus"),
         col("o_totalprice").cast("decimal(12,2)").as("price"))
@@ -1268,7 +1252,7 @@ private[graft] object EvolutionQueries {
     ("q206_ivfpq_incremental", (s: SparkSession, d: String) => {
       import graft.operators.Similarity
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q206").toString
+      val dir = DevRun.fixtureRoot("q206")
       val root = s"$dir/t"
       val idxPath = s"$dir/pq_index"
       val e = s.read.parquet(s"$d/embeddings.parquet")
@@ -1374,8 +1358,7 @@ private[graft] object EvolutionQueries {
     // that stopped pruning would abort the query, not drift the hash.
     ("q207_key_probe_delete", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val root = java.nio.file.Files.createTempDirectory("graft_q207_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q207_store") + "/t"
       val orders = t(s, d, "orders").select(col("o_orderkey"),
         pmod(col("o_orderkey"), lit(4)).cast("string").as("part"))
       SnapshotStore.commit(s,
@@ -1415,8 +1398,8 @@ private[graft] object EvolutionQueries {
     // row to the client, mongodb_loader.py). The aggregate itself
     // rides the same co-location (group key ⊇ bucket key).
     ("q208_bucketed_join", (s: SparkSession, d: String) => {
-      import graft.sinks.{ColSpec, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q208").toString
+      import graft.sinks.SnapshotStore
+      val dir = DevRun.fixtureRoot("q208")
       val oRoot = s"$dir/orders"; val cRoot = s"$dir/customer"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -1474,7 +1457,7 @@ private[graft] object EvolutionQueries {
     ("q209_rollup_rewrite", (s: SparkSession, d: String) => {
       import graft.operators.Rollup
       import graft.sinks.{RollupRewrite, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q209").toString
+      val dir = DevRun.fixtureRoot("q209")
       val src = s"$dir/src"; val roll = s"$dir/rollup"
       val orders = t(s, d, "orders").select(col("o_orderkey"),
         col("o_custkey"), col("o_orderstatus"),
@@ -1498,9 +1481,9 @@ private[graft] object EvolutionQueries {
             sum(col("price")).as("sp"),
             min(col("o_orderkey")).as("mn"), max(col("o_orderkey")).as("mx"),
             avg(col("o_custkey")).as("ac"))
-        val p = agg.queryExecution.executedPlan.toString
-        require(p.contains(roll) && !p.contains(src),
-          s"dashboard query must answer from the rollup, not the corpus:\n$p")
+        require(DevRun.readsOnly(agg, roll),
+          s"dashboard query must answer from the rollup, not the corpus:\n" +
+            agg.queryExecution.executedPlan)
         // sp rounds through DECIMAL(22,2) then presents as DOUBLE
         // (pre-emptive: its green was trailing-zero luck — round-12
         // verdict: "q209's green is a lottery ticket").
@@ -1532,8 +1515,8 @@ private[graft] object EvolutionQueries {
     // (hash mismatch) both break the row.
     ("q210_autosync_mv", (s: SparkSession, d: String) => {
       import graft.operators.Rollup
-      import graft.sinks.{ColSpec, RollupRewrite, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q210").toString
+      import graft.sinks.{RollupRewrite, SnapshotStore}
+      val dir = DevRun.fixtureRoot("q210")
       val src = s"$dir/src"; val roll = s"$dir/rollup"
       val orders = t(s, d, "orders").select(col("o_orderkey"),
         col("o_custkey"), col("o_orderstatus"),
@@ -1561,9 +1544,9 @@ private[graft] object EvolutionQueries {
         val agg = SnapshotStore.table(s, src).groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n"), sum(col("price")).as("sp"),
             sum(col("o_custkey")).as("sc"))
-        val p = agg.queryExecution.executedPlan.toString
-        require(p.contains(roll) && !p.contains(src),
-          s"auto-synced rollup must answer without any manual sync:\n$p")
+        require(DevRun.readsOnly(agg, roll),
+          s"auto-synced rollup must answer without any manual sync:\n" +
+            agg.queryExecution.executedPlan)
         // DECIMAL maintained state stays internal; DOUBLE hash surface
         // (round-12 adjudication — q210's red was "1106127608.20" vs
         // 1106127608.2, a rendering artifact, not a wrong value).
@@ -1593,7 +1576,7 @@ private[graft] object EvolutionQueries {
     // file was written in key order.
     ("q211_sorted_bucket_join", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q211").toString
+      val dir = DevRun.fixtureRoot("q211")
       val lRoot = s"$dir/lineitem_agg"; val oRoot = s"$dir/orders"
       val lagg = t(s, d, "lineitem").groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("qty"),
@@ -1657,7 +1640,7 @@ private[graft] object EvolutionQueries {
     ("q212_autosync_freq_hist", (s: SparkSession, d: String) => {
       import graft.operators.{Frequencies, Histograms, Rollup}
       import graft.sinks.{RollupRewrite, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q212").toString
+      val dir = DevRun.fixtureRoot("q212")
       val src = s"$dir/src"; val fq = s"$dir/fq"; val hg = s"$dir/hg"
       // Deterministic third of orders: the fixture is ~8 atomic
       // commits whose wall time amplifies host noise in the bench
@@ -1707,10 +1690,9 @@ private[graft] object EvolutionQueries {
         val dash = SnapshotStore.table(s, src)
           .groupBy("o_orderstatus", "o_orderpriority")
           .agg(count(lit(1)).as("cnt"))
-        val p = dash.queryExecution.executedPlan.toString
-        require(p.contains(fq) && !p.contains(src),
+        require(DevRun.readsOnly(dash, fq),
           s"the guard-derived frequency table must stay MV-rewrite-" +
-            s"eligible:\n$p")
+            s"eligible:\n${dash.queryExecution.executedPlan}")
       } finally s.conf.unset(RollupRewrite.RegistryConf)
       val qRows = Histograms.globalQuantiles(
           SnapshotStore.read(s, hg), Seq(0.25, 0.5, 0.75), lo, hi, nb)
@@ -1780,7 +1762,7 @@ private[graft] object EvolutionQueries {
     // aggregates the equivalent join directly.
     ("q213_analyze_cbo", (s: SparkSession, d: String) => {
       import graft.sinks.{SnapshotStats, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q213").toString
+      val dir = DevRun.fixtureRoot("q213")
       val src = s"$dir/orders"
       val orders = t(s, d, "orders").select(col("o_orderkey"),
         col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
@@ -1863,7 +1845,7 @@ private[graft] object EvolutionQueries {
     ("q214_dynamic_file_pruning", (s: SparkSession, d: String) => {
       import graft.operators.DynamicPruning
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q214").toString
+      val dir = DevRun.fixtureRoot("q214")
       val fact = s"$dir/lineitem"
       val li = t(s, d, "lineitem").select(col("l_orderkey"),
         col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
@@ -1920,7 +1902,7 @@ private[graft] object EvolutionQueries {
     // layout-invariant — the DuckDB oracle aggregates the final state.
     ("q215_incremental_clustering", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q215").toString
+      val dir = DevRun.fixtureRoot("q215")
       val root = s"$dir/orders"
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sinks.GraftCatalog].getName)
@@ -1985,7 +1967,7 @@ private[graft] object EvolutionQueries {
     // aggregates the final state.
     ("q217_auto_cluster", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q217").toString
+      val dir = DevRun.fixtureRoot("q217")
       val root = s"$dir/orders"
       // Deterministic quarter at write-width 3 — same rationale as
       // q212/q215 (round-15 trim: the pins are structural — baseline
@@ -2047,7 +2029,7 @@ private[graft] object EvolutionQueries {
     // invariant (the oracle aggregates the merged state directly).
     ("q216_optimize_write", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q216").toString
+      val dir = DevRun.fixtureRoot("q216")
       val root = s"$dir/orders"
       val orders = t(s, d, "orders").select(col("o_orderkey"),
         col("o_orderstatus"), col("o_totalprice"),
@@ -2094,7 +2076,7 @@ private[graft] object EvolutionQueries {
     // own key range so the pin holds at any SF.
     ("q218_dfp_rule_sql", (s: SparkSession, d: String) => {
       import graft.sinks.{DynamicPruningRule, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q218").toString
+      val dir = DevRun.fixtureRoot("q218")
       val fact = s"$dir/lineitem"
       // Deterministic half of lineitem keeps the fixture light; the
       // oracle filters identically.
@@ -2194,7 +2176,7 @@ private[graft] object EvolutionQueries {
       import graft.sinks.{GraftFileIndex, SnapshotStats, SnapshotStore}
       import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
       import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q219").toString
+      val dir = DevRun.fixtureRoot("q219")
       val factR = s"$dir/lineitem"; val dimOR = s"$dir/orders"
       val dimSR = s"$dir/supplier"
       SnapshotStore.commit(s,
@@ -2290,7 +2272,7 @@ private[graft] object EvolutionQueries {
     // the oracle filters on the key directly.
     ("q220_nested_skipping", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q220").toString
+      val dir = DevRun.fixtureRoot("q220")
       val root = s"$dir/unified"
       val src0 = t(s, d, "orders")
         .filter(pmod(col("o_orderkey"), lit(2)) === 0)
@@ -2337,7 +2319,7 @@ private[graft] object EvolutionQueries {
     // equivalent date arithmetic.
     ("q221_generated_partition", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q221").toString
+      val dir = DevRun.fixtureRoot("q221")
       val root = s"$dir/events"
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sinks.GraftCatalog].getName)
@@ -2454,7 +2436,7 @@ private[graft] object EvolutionQueries {
     // as a predicate in DuckDB — deleted rows provably absent).
     ("q223_dfp_dv_fact", (s: SparkSession, d: String) => {
       import graft.sinks.{DynamicPruningRule, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q223").toString
+      val dir = DevRun.fixtureRoot("q223")
       val fact = s"$dir/lineitem"
       val li = t(s, d, "lineitem")
         .filter(pmod(col("l_orderkey"), lit(2)) === 0)
@@ -2531,7 +2513,7 @@ private[graft] object EvolutionQueries {
     // stats. Delta derives the same predicates; this is that algebra.
     ("q224_generated_derive_int96", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q224").toString
+      val dir = DevRun.fixtureRoot("q224")
       val root = s"$dir/events"
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sinks.GraftCatalog].getName)
@@ -2590,7 +2572,7 @@ private[graft] object EvolutionQueries {
     // deleted multiples of 7, plus {n1+n2+1..n1+n2+n3}).
     ("q225_identity_column", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q225").toString
+      val dir = DevRun.fixtureRoot("q225")
       val root = s"$dir/events"
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sinks.GraftCatalog].getName)
@@ -2651,7 +2633,7 @@ private[graft] object EvolutionQueries {
     // plan-invariant, oracled vs DuckDB's replay of the CASE.
     ("q226_histogram_selectivity", (s: SparkSession, d: String) => {
       import graft.sinks.{SnapshotStats, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q226").toString
+      val dir = DevRun.fixtureRoot("q226")
       val root = s"$dir/dim"
       SnapshotStore.commit(s,
         t(s, d, "orders").select(
@@ -2730,7 +2712,7 @@ private[graft] object EvolutionQueries {
     // in closed form from the slices.
     ("q228_identity_by_default", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q228").toString
+      val dir = DevRun.fixtureRoot("q228")
       val root = s"$dir/events"
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sinks.GraftCatalog].getName)
@@ -2806,7 +2788,7 @@ private[graft] object EvolutionQueries {
     // replays the join).
     ("q227_dfp_runtime_dim", (s: SparkSession, d: String) => {
       import graft.sinks.{DynamicPruningRule, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q227").toString
+      val dir = DevRun.fixtureRoot("q227")
       val fact = s"$dir/lineitem"
       val li = t(s, d, "lineitem")
         .filter(pmod(col("l_orderkey"), lit(2)) === 0)
@@ -2891,7 +2873,7 @@ private[graft] object EvolutionQueries {
     // aggregate, oracled vs DuckDB.
     ("q229_auto_bloom", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q229").toString
+      val dir = DevRun.fixtureRoot("q229")
       val root = s"$dir/fact"
       val li = t(s, d, "lineitem")
         .filter(pmod(col("l_orderkey"), lit(2)) === 0)
@@ -2951,7 +2933,7 @@ private[graft] object EvolutionQueries {
     // plan-invariant, oracled vs DuckDB's replay of the star.
     ("q230_histogram_join_estimation", (s: SparkSession, d: String) => {
       import graft.sinks.{SnapshotStats, SnapshotStore}
-      val dir = java.nio.file.Files.createTempDirectory("graft_q230").toString
+      val dir = DevRun.fixtureRoot("q230")
       val rootA = s"$dir/dim_a"; val rootB = s"$dir/dim_b"
       val rootC = s"$dir/fact"
       SnapshotStore.commit(s,
@@ -3041,7 +3023,7 @@ private[graft] object EvolutionQueries {
     // disjoint from the default strings by construction).
     ("q231_column_defaults", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q231").toString
+      val dir = DevRun.fixtureRoot("q231")
       val root = s"$dir/events"
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sinks.GraftCatalog].getName)
@@ -3092,7 +3074,7 @@ private[graft] object EvolutionQueries {
     // form.
     ("q232_insert_overwrite", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q232").toString
+      val dir = DevRun.fixtureRoot("q232")
       val root = s"$dir/events"
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sinks.GraftCatalog].getName)
@@ -3156,7 +3138,7 @@ private[graft] object EvolutionQueries {
     // (everything except partition 2) in closed form.
     ("q233_fsck_repair", (s: SparkSession, d: String) => {
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q233").toString
+      val dir = DevRun.fixtureRoot("q233")
       val root = s"$dir/events"
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sinks.GraftCatalog].getName)
@@ -3206,7 +3188,7 @@ private[graft] object EvolutionQueries {
     // must never print — a copy-paste re-create reopening allocated
     // ids is the failure mode the managed-state exclusion exists for.
     ("q234_show_create_table", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q234").toString
+      val dir = DevRun.fixtureRoot("q234")
       val root = s"$dir/events"
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sinks.GraftCatalog].getName)

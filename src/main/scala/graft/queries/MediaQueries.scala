@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, RangeJoin, Similarity, Upsert}
-import graft.functions.{Parsers, TextAnalysis, Vectors}
 
 /** Multimodal corpus queries: pure-Scala header codecs (png/bmp/
   * webp/mp3/mp4), pixel featurization, and the media capstone.
@@ -13,7 +10,7 @@ import graft.functions.{Parsers, TextAnalysis, Vectors}
   * and determinism rules live there; this file only contributes
   * entries. */
 private[graft] object MediaQueries {
-  import Queries.{t, dsum, sparseFixture}
+  import Queries.t
 
   val all: Seq[(String, Queries.Q, Option[String])] = Seq(
 
@@ -928,8 +925,7 @@ private[graft] object MediaQueries {
           (col("duration_ms").isNull || col("duration_ms") > 0))
         .select(col("media_id"), col("media_type"), col("fmt"),
           col("width"), col("height"), col("duration_ms"), col("near_rep"))
-      val root = java.nio.file.Files.createTempDirectory("graft_q161_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q161_store") + "/t"
       SnapshotStore.commit(s, gated, root, "media_type")
       SnapshotStore.read(s, root)
         .select(col("media_id"), col("fmt"), col("width"), col("height"),

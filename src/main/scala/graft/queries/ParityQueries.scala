@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, RangeJoin, Similarity, Upsert}
-import graft.functions.{Parsers, TextAnalysis, Vectors}
+import graft.operators.{RangeJoin, Upsert}
+import graft.functions.Parsers
 
 /** Reference-parity core: TPC-H-ish relational queries, parser/
   * scalar-function parity (F1-F19), and the window/join/aggregate
@@ -14,7 +14,7 @@ import graft.functions.{Parsers, TextAnalysis, Vectors}
   * and determinism rules live there; this file only contributes
   * entries. */
 private[graft] object ParityQueries {
-  import Queries.{t, dsum, sparseFixture}
+  import Queries.{t, dsum}
 
   val all: Seq[(String, Queries.Q, Option[String])] = Seq(
 
@@ -553,7 +553,7 @@ private[graft] object ParityQueries {
     // not SQL-expressible in DuckDB.
     ("q71_unified_readside", (s: SparkSession, d: String) => {
       import graft.pipeline.{Pipeline, SupplierConfig}
-      val sink = java.nio.file.Files.createTempDirectory("graft-q71").toString + "/products"
+      val sink = DevRun.fixtureRoot("q71") + "/products"
       val refDir = "/root/reference/sample data"
       val cfgs = Seq(
         "midocean" -> s"$refDir/MidOcean Sample Data.jsonc",  // P3 printable
@@ -621,7 +621,7 @@ private[graft] object ParityQueries {
     // (regenerate: tools/gen_values_oracle.py).
     ("q81_variant_view", (s: SparkSession, d: String) => {
       import graft.pipeline.{Pipeline, SupplierConfig}
-      val sink = java.nio.file.Files.createTempDirectory("graft-q81").toString + "/products"
+      val sink = DevRun.fixtureRoot("q81") + "/products"
       val refDir = "/root/reference/sample data"
       val cfgs = Seq(
         "midocean" -> s"$refDir/MidOcean Sample Data.jsonc",

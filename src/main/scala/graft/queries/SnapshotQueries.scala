@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, RangeJoin, Similarity, Upsert}
-import graft.functions.{Parsers, TextAnalysis, Vectors}
 
 /** Snapshot-store lifecycle: atomic commits, DML + maintenance
   * SQL (MERGE/DELETE/UPDATE/OPTIMIZE/RESTORE…), time travel, CDC,
@@ -14,7 +11,7 @@ import graft.functions.{Parsers, TextAnalysis, Vectors}
   * and determinism rules live there; this file only contributes
   * entries. */
 private[graft] object SnapshotQueries {
-  import Queries.{t, dsum, sparseFixture}
+  import Queries.{t, dsum}
 
   val all: Seq[(String, Queries.Q, Option[String])] = Seq(
 
@@ -40,8 +37,7 @@ private[graft] object SnapshotQueries {
     // source table itself (backup must be lossless).
     ("q65_backup_stats", (s: SparkSession, d: String) => {
       import s.implicits._
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_backup_q65").getAbsolutePath
+      val dir = DevRun.fixtureRoot("backup_q65") + "/backup"
       graft.operators.Upsert.backup(t(s, d, "nation"), dir)
       val st = graft.operators.Stats.tableStats(s, dir)
       Seq((st.rowCount, st.fileCount >= 1, st.totalBytes > 0))
@@ -56,7 +52,7 @@ private[graft] object SnapshotQueries {
     // Two commits then a read-back; merge semantics match q16's oracle
     // window (version desc, incoming wins ties).
     ("q75_snapshot_merge", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft-q75").toString + "/customers"
+      val root = DevRun.fixtureRoot("q75") + "/customers"
       val c = t(s, d, "customer")
       val base = c.filter(col("c_custkey") <= 1000)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"),
@@ -131,8 +127,7 @@ private[graft] object SnapshotQueries {
     // the index-side parity with the reference's Mongo text index
     // (unified_product_schema.py:241; q72 is the scan-side parity).
     ("q90_indexed_search", (s: SparkSession, d: String) => {
-      val idx = java.nio.file.Files.createTempDirectory("graft_q90_idx")
-        .resolve("index").toString
+      val idx = DevRun.fixtureRoot("q90_idx") + "/index"
       val table = s"$d/documents.parquet"
       graft.operators.TextIndex.buildWordIndex(s, table, "text", idx)
       graft.operators.TextIndex.searchWord(s, table, idx, "text", "dup")
@@ -153,8 +148,7 @@ private[graft] object SnapshotQueries {
     // scan the oracle runs; the pruning itself is measured in
     // DataSkippingSpec and SCALE.md.
     ("q91_snapshot_skipping", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q91_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q91_store") + "/t"
       val orders = t(s, d, "orders")
         .repartitionByRange(8, col("o_orderkey"))
         .sortWithinPartitions(col("o_orderkey"))
@@ -180,8 +174,7 @@ private[graft] object SnapshotQueries {
     // oracle runs). DataSkippingSpec pins the pruning counts; this row
     // gates the result through the full table() read path.
     ("q94_bloom_lookup", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q94_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q94_store") + "/t"
       val customers = t(s, d, "customer")
         .withColumn("part", pmod(col("c_custkey"), lit(4)).cast("string"))
         .repartition(8)
@@ -204,8 +197,7 @@ private[graft] object SnapshotQueries {
     // The relation behind the view is exactly SnapshotStore.table's
     // (DataSkippingSpec pins the shared pruning counts).
     ("q101_sql_snapshot", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q101_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q101_store") + "/t"
       val li = t(s, d, "lineitem")
         .repartitionByRange(8, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
@@ -233,8 +225,7 @@ private[graft] object SnapshotQueries {
     // content equals the plain scan. DataSkippingSpec pins the
     // pruning-count improvement on the same shape.
     ("q102_compact_zorder", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q102_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q102_store") + "/t"
       val orders = t(s, d, "orders").withColumn("part", lit("x"))
       graft.sinks.SnapshotStore.commit(s,
         orders.filter(pmod(col("o_orderkey"), lit(4)) === 0).repartition(4),
@@ -265,7 +256,7 @@ private[graft] object SnapshotQueries {
     // exactly q90's oracle (the edit only prefixes text, so 'dup'
     // membership is unchanged).
     ("q110_snapshot_text_index", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q110").toString
+      val dir = DevRun.fixtureRoot("q110")
       val root = s"$dir/t"; val idx = s"$dir/idx"
       val docs = t(s, d, "documents")
         .withColumn("part", pmod(col("doc_id"), lit(4)).cast("string"))
@@ -297,8 +288,7 @@ private[graft] object SnapshotQueries {
     // the base table and the update rule; GraftCatalogSpec pins that
     // these reads still plan through the skipping file index.
     ("q118_sql_time_travel", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q118_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q118_store") + "/t"
       val c = t(s, d, "customer").select(col("c_custkey"),
         col("c_acctbal").cast("decimal(18,2)").as("bal"),
         col("c_mktsegment").as("part"), lit(1L).as("ver"))
@@ -338,8 +328,7 @@ private[graft] object SnapshotQueries {
     // partitions to rewrite, carry the rest by reference, and the
     // post-delete read must equal the oracle's anti-filter.
     ("q125_snapshot_delete", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q125_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q125_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_custkey"),
         col("o_totalprice"))
@@ -365,8 +354,7 @@ private[graft] object SnapshotQueries {
     // values, deletes with from-version values, untouched keys ABSENT
     // — and the oracle derives all of it from the key arithmetic.
     ("q126_change_feed", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q126_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q126_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -406,8 +394,7 @@ private[graft] object SnapshotQueries {
     // oracle replays the md5 signatures, the banded probe vs the
     // corpus, and the within-batch keep-first, all in SQL.
     ("q127_incremental_dedup", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q127_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q127_store") + "/t"
       val docs = t(s, d, "documents")
       val corpus = docs.filter(col("doc_id") < 100)
         .select(col("doc_id"), col("text"))
@@ -481,8 +468,7 @@ private[graft] object SnapshotQueries {
     // row-level diffs with no Scala API in sight. Same oracle as the
     // API form: the classifications derive from the key arithmetic.
     ("q135_sql_change_feed", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q135_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q135_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -522,8 +508,7 @@ private[graft] object SnapshotQueries {
     // vanish, yet remain time-travelable (spec-pinned). Oracle derives
     // v1 from the same key arithmetic that built it.
     ("q136_snapshot_restore", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q136_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q136_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -554,8 +539,7 @@ private[graft] object SnapshotQueries {
     // same key arithmetic (total_rows via the stats sidecar — no data
     // read).
     ("q137_snapshot_history", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q137_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q137_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -600,10 +584,8 @@ private[graft] object SnapshotQueries {
     // the source shows the delete but not the merge. Oracle derives
     // both sides from the same arithmetic.
     ("q144_shallow_clone", (s: SparkSession, d: String) => {
-      val src = java.nio.file.Files.createTempDirectory("graft_q144_src")
-        .resolve("t").toString
-      val dst = java.nio.file.Files.createTempDirectory("graft_q144_dst")
-        .resolve("t").toString
+      val src = DevRun.fixtureRoot("q144_src") + "/t"
+      val dst = DevRun.fixtureRoot("q144_dst") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m7 = pmod(col("o_orderkey"), lit(7))
@@ -644,8 +626,7 @@ private[graft] object SnapshotQueries {
     // through a path-addressed GraftCatalog. Oracle identical to
     // q137's: the SQL surface must be indistinguishable from the API.
     ("q148_sql_restore_history", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q148_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q148_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -696,8 +677,7 @@ private[graft] object SnapshotQueries {
     // the read-back must be byte-identical to the source rows — the
     // oracle is a plain projection.
     ("q155_sql_optimize", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q155_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q155_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       graft.sinks.SnapshotStore.commit(s, orders.repartition(4),
@@ -729,8 +709,7 @@ private[graft] object SnapshotQueries {
     // (q126's construction), now reached without any graft API call
     // on the write side.
     ("q156_dataframe_writer", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q156_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q156_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -766,8 +745,7 @@ private[graft] object SnapshotQueries {
     // Oracle replays the key arithmetic — same construction as q156,
     // now with zero graft API calls on the merge side.
     ("q157_sql_merge_into", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q157_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q157_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -809,8 +787,7 @@ private[graft] object SnapshotQueries {
     // and unioned so the oracle derives each epoch's content from the
     // key arithmetic alone (wall-clock values never reach the output).
     ("q158_timestamp_as_of", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q158_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q158_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -856,7 +833,7 @@ private[graft] object SnapshotQueries {
     ("q160_ivf_incremental", (s: SparkSession, d: String) => {
       import graft.operators.Similarity
       import graft.sinks.SnapshotStore
-      val dir = java.nio.file.Files.createTempDirectory("graft_q160").toString
+      val dir = DevRun.fixtureRoot("q160")
       val root = s"$dir/t"
       val idxPath = s"$dir/ivf_index"
       val e = s.read.parquet(s"$d/embeddings.parquet")
@@ -936,8 +913,7 @@ private[graft] object SnapshotQueries {
     // holding a match (probed through the file-skipping index). The
     // oracle keeps the complement of the predicate.
     ("q162_sql_delete", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q162_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q162_store") + "/t"
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .write.format("graft-snapshot")
@@ -963,8 +939,7 @@ private[graft] object SnapshotQueries {
     // back to the columns' existing types, and only partitions holding
     // a match rewrite. Oracle replays the CASE arithmetic.
     ("q163_sql_update", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q163_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q163_store") + "/t"
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .withColumn("tier", lit(0))
@@ -1000,7 +975,7 @@ private[graft] object SnapshotQueries {
     // the plain union of all waves — any double-load doubles rows and
     // breaks the hash.
     ("q164_copy_into", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q164").toString
+      val dir = DevRun.fixtureRoot("q164")
       val root = s"$dir/t"
       val src = s"$dir/incoming"
       val orders = t(s, d, "orders")
@@ -1038,8 +1013,7 @@ private[graft] object SnapshotQueries {
     // nulls for carried-over rows. The oracle derives both from key
     // arithmetic.
     ("q165_schema_evolution", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q165_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q165_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -1071,8 +1045,7 @@ private[graft] object SnapshotQueries {
     // enforcement is proven by the %7-batch only appearing with its
     // post-drop values.
     ("q168_sql_constraints", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q168_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q168_store") + "/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -1122,8 +1095,7 @@ private[graft] object SnapshotQueries {
     // oracle is content equality — a layout operation must never
     // change a row.
     ("q169_sql_optimize_where", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q169_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q169_store") + "/t"
       graft.sinks.SnapshotStore.commit(s,
         t(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -1155,8 +1127,7 @@ private[graft] object SnapshotQueries {
     // partition count, constraints in force) oracled; file counts and
     // byte sizes are environment-shaped and pinned by spec instead.
     ("q170_describe_detail", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q170_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q170_store") + "/t"
       graft.sinks.SnapshotStore.commit(s,
         t(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
@@ -1193,8 +1164,7 @@ private[graft] object SnapshotQueries {
     // row count. The oracle keeps the complement of the union of both
     // predicates.
     ("q171_deletion_vectors", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q171_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q171_store") + "/t"
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .write.format("graft-snapshot")
@@ -1236,8 +1206,8 @@ private[graft] object SnapshotQueries {
     // ALTERs proves carry-forward, and the clone REQUIRE pins
     // property inheritance.
     ("q172_tblproperties", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q172_store")
-      val root = dir.resolve("t").toString
+      val dir = DevRun.fixtureRoot("q172_store")
+      val root = s"$dir/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val st = graft.sinks.SnapshotStore
@@ -1253,7 +1223,7 @@ private[graft] object SnapshotQueries {
         "('owner' = 'ml-platform')")
       s.sql(s"ALTER TABLE graft_q172.`$root` UNSET TBLPROPERTIES " +
         "('retention.days')")
-      val clone = dir.resolve("c").toString
+      val clone = s"$dir/c"
       st.cloneTo(s, root, clone)
       require(st.tablePropertiesMap(s, clone) ==
         Map("owner" -> "ml-platform", "pipeline" -> "pim"),
@@ -1272,8 +1242,7 @@ private[graft] object SnapshotQueries {
     // The oracle is q163's, so the two UPDATE modes are pinned
     // result-identical.
     ("q175_sql_dv_update", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q175_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q175_store") + "/t"
       t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .withColumn("tier", lit(0))
@@ -1316,8 +1285,7 @@ private[graft] object SnapshotQueries {
     // files carry by reference — REQUIRE-pinned. The oracle is the
     // union of the seed, the SELECT wave, and the VALUES literals.
     ("q176_sql_insert_into", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q176_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q176_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m3 = pmod(col("o_orderkey"), lit(3))
@@ -1355,8 +1323,7 @@ private[graft] object SnapshotQueries {
     // by a raw read). The hashed result reads through the catalog so
     // the mapping projection sits under real SQL.
     ("q177_rename_column", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q177_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q177_store") + "/t"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       val m5 = pmod(col("o_orderkey"), lit(5))
@@ -1398,8 +1365,7 @@ private[graft] object SnapshotQueries {
     // note column, append a wave that POPULATES it. Require-pins: both
     // ALTERs rewrite zero files; version 1 still shows c_acctbal.
     ("q178_drop_add_column", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q178_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q178_store") + "/t"
       val cust = t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), col("c_name"),
           col("c_acctbal"))
@@ -1440,7 +1406,7 @@ private[graft] object SnapshotQueries {
     // mis-application (double insert, missed delete, stale update)
     // breaks the hash.
     ("q179_cdc_mirror", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q179_store")
+      val dir = DevRun.fixtureRoot("q179_store")
       val src = s"$dir/src"; val dst = s"$dir/dst"
       val orders = t(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -1484,8 +1450,7 @@ private[graft] object SnapshotQueries {
     // query commits as version 1 through the create-only primitive.
     // The result reads back through the catalog.
     ("q180_ctas", (s: SparkSession, d: String) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q180_store")
-        .resolve("t").toString
+      val root = DevRun.fixtureRoot("q180_store") + "/t"
       s.conf.set("spark.sql.catalog.graft_q180",
         classOf[graft.sinks.GraftCatalog].getName)
       t(s, d, "orders").createOrReplaceTempView("q180_orders")
@@ -1508,7 +1473,7 @@ private[graft] object SnapshotQueries {
     // delete was DV-form (op tag, zero rewritten files); the oracle
     // recomputes the surviving matches from the predicate arithmetic.
     ("q181_dv_index_search", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q181_store")
+      val dir = DevRun.fixtureRoot("q181_store")
       val root = s"$dir/t"; val idx = s"$dir/index"
       val docs = t(s, d, "documents")
         .select(col("doc_id"), col("text"), col("lang"))

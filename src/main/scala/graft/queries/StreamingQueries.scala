@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, RangeJoin, Similarity, Upsert}
-import graft.functions.{Parsers, TextAnalysis, Vectors}
+import graft.functions.TextAnalysis
 
 /** Structured Streaming forms: incremental stock/doc ingest,
   * sessionization, the snapshot sink/source formats, and the
@@ -14,7 +13,7 @@ import graft.functions.{Parsers, TextAnalysis, Vectors}
   * and determinism rules live there; this file only contributes
   * entries. */
 private[graft] object StreamingQueries {
-  import Queries.{t, dsum, sparseFixture}
+  import Queries.t
 
   val all: Seq[(String, Queries.Q, Option[String])] = Seq(
 
@@ -28,7 +27,7 @@ private[graft] object StreamingQueries {
     ("q103_stream_snapshot_sink", (s: SparkSession, d: String) => {
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_q103").toString
+      val dir = DevRun.fixtureRoot("q103")
       val root = s"$dir/store"
       val updates = t(s, d, "events").filter(col("user_id") < 50)
         .groupBy(concat(lit("sku_"), col("user_id")).as("sku"), col("ts"))
@@ -330,7 +329,7 @@ private[graft] object StreamingQueries {
     ("q133_stream_ingest", (s: SparkSession, d: String) => {
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_q133").toString
+      val dir = DevRun.fixtureRoot("q133")
       val (idxRoot, accRoot) = (s"$dir/idx", s"$dir/acc")
       val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") < 50)
@@ -446,7 +445,7 @@ private[graft] object StreamingQueries {
     // rows (content diff, not file diff). The oracle rebuilds the
     // feed per version from key arithmetic.
     ("q147_stream_change_feed", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q147").toString
+      val dir = DevRun.fixtureRoot("q147")
       val root = s"$dir/t"
       val orders = t(s, d, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -507,7 +506,7 @@ private[graft] object StreamingQueries {
     ("q159_stream_sink_format", (s: SparkSession, d: String) => {
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_q159").toString
+      val dir = DevRun.fixtureRoot("q159")
       val root = s"$dir/store"
       val updates = t(s, d, "events").filter(col("user_id") < 50)
         .groupBy(concat(lit("sku_"), col("user_id")).as("sku"), col("ts"))
@@ -562,7 +561,7 @@ private[graft] object StreamingQueries {
     // versions). The oracle is the plain union of the waves — a
     // re-emitted baseline or a compaction echo breaks the hash.
     ("q173_stream_snapshot_source", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q173").toString
+      val dir = DevRun.fixtureRoot("q173")
       val root = s"$dir/t"
       val st = graft.sinks.SnapshotStore
       val orders = t(s, d, "orders")
@@ -599,7 +598,7 @@ private[graft] object StreamingQueries {
     // up through the shared cursor (the batch-mirror property) and
     // converges to exactly the source-arithmetic state.
     ("q186_mirror_stream", (s: SparkSession, d: String) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q186_store")
+      val dir = DevRun.fixtureRoot("q186_store")
       val src = s"$dir/src"; val dst = s"$dir/dst"
       val ckpt = s"$dir/ckpt"
       val orders = t(s, d, "orders")

@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, RangeJoin, Similarity, Upsert}
-import graft.functions.{Parsers, TextAnalysis, Vectors}
 
 /** Supplier pipelines over the reference sample feeds (P/J/R/X
   * families): the nine unified projections plus the pipeline
@@ -14,7 +11,7 @@ import graft.functions.{Parsers, TextAnalysis, Vectors}
   * and determinism rules live there; this file only contributes
   * entries. */
 private[graft] object SupplierQueries {
-  import Queries.{t, dsum, sparseFixture}
+  import Queries.{t, sparseFixture}
 
   val all: Seq[(String, Queries.Q, Option[String])] = Seq(
 
@@ -68,7 +65,7 @@ private[graft] object SupplierQueries {
 
     ("q51_pipeline_full_sync", (s: SparkSession, d: String) => {
       import graft.pipeline.{Pipeline, SupplierConfig}
-      val sink = java.nio.file.Files.createTempDirectory("graft-q51").toString + "/products"
+      val sink = DevRun.fixtureRoot("q51") + "/products"
       val results = Pipeline.runFullSync(s, Seq(
         SupplierConfig("midocean", "/root/reference/sample data/MidOcean Sample Data.jsonc"),
         SupplierConfig("laltex", "/root/reference/sample data/Laltex Sample Data.jsonc")), sink)
@@ -390,8 +387,8 @@ private[graft] object SupplierQueries {
     ("q134_validate_probe", (s: SparkSession, d: String) => {
       import s.implicits._
       val sample = "/root/reference/sample data/MidOcean Sample Data.jsonc"
-      val empty = java.nio.file.Files
-        .createTempFile("graft_empty_feed", ".jsonc").toString
+      val empty = java.nio.file.Files.createFile(java.nio.file.Paths.get(
+        DevRun.fixtureRoot("empty_feed"), "empty.jsonc")).toString
       Seq(
         ("empty", graft.sources.FeedReader.validate(s, empty)),
         ("midocean", graft.sources.FeedReader.validate(s, sample)),

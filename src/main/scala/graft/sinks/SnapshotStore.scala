@@ -7,8 +7,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Upsert
-
 /** Atomic, versioned parquet sink — the crash-safe replacement for
   * dynamic partition overwrite (the reference's per-document-atomic
   * `bulk_write`, mongodb_loader.py:93-197, re-expressed as
@@ -152,14 +150,18 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
         case s => map.remove(k); weight -= s.w; None // stale fingerprint
       }
     }
+    /** An entry heavier than the whole bound is not cached: inserting
+      * it would evict every other entry and then itself. */
     def put(k: MetaKey, fp: MetaFp, v: V): Unit = synchronized {
       val w = math.max(1L, weigh(v))
       Option(map.remove(k)).foreach(s => weight -= s.w)
-      map.put(k, Slot(fp, v, w))
-      weight += w
-      val it = map.entrySet().iterator()
-      while ((map.size > maxEntries || weight > maxWeight) && it.hasNext) {
-        val e = it.next(); weight -= e.getValue.w; it.remove()
+      if (w <= maxWeight) {
+        map.put(k, Slot(fp, v, w))
+        weight += w
+        val it = map.entrySet().iterator()
+        while ((map.size > maxEntries || weight > maxWeight) && it.hasNext) {
+          val e = it.next(); weight -= e.getValue.w; it.remove()
+        }
       }
     }
     def invalidate(k: MetaKey): Unit = synchronized {

@@ -284,4 +284,30 @@ class TextIndexSpec extends SparkSpec {
       .map(_.getPath.getName).filter(n => n.contains(".tmp-") || n.contains(".old-"))
     assert(leftovers.isEmpty, s"swap left orphans: ${leftovers.mkString(", ")}")
   }
+
+  test("a crash between the swap's two renames loses no index: the next build restores it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tix_window").toString
+    val docs = (0 until 100).map(i => (i.toLong, s"alpha beta doc $i")).toDF("id", "text")
+    docs.write.parquet(s"$dir/table")
+    TextIndex.buildWordIndex(spark, s"$dir/table", "text", s"$dir/index")
+    val before = spark.read.parquet(s"$dir/index").collect().toSet
+    // The crash: the live index was set aside, its replacement never
+    // published.
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/index"),
+      new org.apache.hadoop.fs.Path(s"$dir/.index.old-x")))
+    // A rebuild that then fails must not have swept the only copy.
+    intercept[RuntimeException] {
+      TextIndex.overwriteViaSwap(spark, s"$dir/index") { _ =>
+        throw new RuntimeException("simulated failed rebuild")
+      }
+    }
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/index")),
+      "the set-aside index was not restored")
+    assert(spark.read.parquet(s"$dir/index").collect().toSet == before)
+    TextIndex.buildWordIndex(spark, s"$dir/table", "text", s"$dir/index")
+    assert(TextIndex.searchWord(spark, s"$dir/table", s"$dir/index",
+      "text", "alpha").count() == 100)
+  }
 }
