@@ -74,58 +74,21 @@ object Registry {
   import graft.suppliers.{Keramikos, Laltex, MidOcean, PfConcept, Preseli,
     Ralawise, SandS, Sanmar, Xd}
 
-  object MidOceanPipeline extends SupplierPipeline {
-    val id = MidOcean.supplierId
-    def unified(spark: SparkSession, feedPath: String): DataFrame =
-      MidOcean.unified(spark, feedPath)
-  }
-  object LaltexPipeline extends SupplierPipeline {
-    val id = Laltex.supplierId
-    def unified(spark: SparkSession, feedPath: String): DataFrame =
-      Laltex.unified(spark, feedPath)
+  private final case class Builtin(id: String, run: (SparkSession, String) => DataFrame)
+      extends SupplierPipeline {
+    def unified(spark: SparkSession, feedPath: String): DataFrame = run(spark, feedPath)
   }
 
-  object RalawisePipeline extends SupplierPipeline {
-    val id = Ralawise.supplierId
-    def unified(spark: SparkSession, feedPath: String): DataFrame =
-      Ralawise.unified(spark, feedPath)
-  }
-
-  object KeramikosPipeline extends SupplierPipeline {
-    val id = Keramikos.supplierId
-    def unified(spark: SparkSession, feedPath: String): DataFrame =
-      Keramikos.unified(spark, feedPath)
-  }
-  object PreseliPipeline extends SupplierPipeline {
-    val id = Preseli.supplierId
-    def unified(spark: SparkSession, feedPath: String): DataFrame =
-      Preseli.unified(spark, feedPath)
-  }
-  object XdPipeline extends SupplierPipeline {
-    val id = Xd.supplierId
-    def unified(spark: SparkSession, feedPath: String): DataFrame =
-      Xd.unified(spark, feedPath)
-  }
-  object PfConceptPipeline extends SupplierPipeline {
-    val id = PfConcept.supplierId
-    def unified(spark: SparkSession, feedPath: String): DataFrame =
-      PfConcept.unified(spark, feedPath)
-  }
-  object SandSPipeline extends SupplierPipeline {
-    val id = SandS.supplierId
-    def unified(spark: SparkSession, feedPath: String): DataFrame =
-      SandS.unified(spark, feedPath)
-  }
-  object SanmarPipeline extends SupplierPipeline {
-    val id = Sanmar.supplierId
-    def unified(spark: SparkSession, feedPath: String): DataFrame =
-      Sanmar.unified(spark, feedPath)
-  }
-
-  private val builtins: Map[String, SupplierPipeline] =
-    Seq(MidOceanPipeline, LaltexPipeline, RalawisePipeline,
-      KeramikosPipeline, PreseliPipeline, XdPipeline, PfConceptPipeline,
-      SandSPipeline, SanmarPipeline).map(p => p.id -> p).toMap
+  private val builtins: Map[String, SupplierPipeline] = Seq(
+    Builtin(MidOcean.supplierId, MidOcean.unified),
+    Builtin(Laltex.supplierId, Laltex.unified),
+    Builtin(Ralawise.supplierId, Ralawise.unified),
+    Builtin(Keramikos.supplierId, Keramikos.unified),
+    Builtin(Preseli.supplierId, Preseli.unified),
+    Builtin(Xd.supplierId, Xd.unified),
+    Builtin(PfConcept.supplierId, PfConcept.unified),
+    Builtin(SandS.supplierId, SandS.unified),
+    Builtin(Sanmar.supplierId, Sanmar.unified)).map(p => p.id -> p).toMap
 
   /** Runtime registrations (R1's open registry — the reference's
     * `@etl_component` decorator lets deployments add suppliers without

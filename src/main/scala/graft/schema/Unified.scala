@@ -249,7 +249,7 @@ case class Product(
     raw_data: Option[String] = None)
 
 object Unified {
-  import org.apache.spark.sql.Encoders
+  import org.apache.spark.sql.{Column, Encoders, functions}
   import org.apache.spark.sql.types._
 
   private def nullable(dt: DataType): DataType = dt match {
@@ -268,14 +268,60 @@ object Unified {
   lazy val schema: StructType =
     nullable(Encoders.product[Product].schema).asInstanceOf[StructType]
 
-  /** The variants array's element struct. */
-  lazy val variantSchema: StructType = schema("variants").dataType
-    .asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+  /** The struct `parent`'s field `name` holds, or holds a list of. */
+  private def structOf(parent: StructType, name: String): StructType =
+    parent(name).dataType match {
+      case ArrayType(s: StructType, _) => s
+      case s: StructType => s
+      case other => throw new IllegalArgumentException(s"$name is $other, not a struct")
+    }
 
-  /** The per-variant stock struct. */
-  lazy val stockSchema: StructType =
-    variantSchema("stock").dataType.asInstanceOf[StructType]
+  // The unified-shaped structs a supplier builds, one per Scala case class.
+  lazy val supplierSchema: StructType = structOf(schema, "supplier")
+  lazy val categorySchema: StructType = structOf(schema, "categories")
+  lazy val dimensionsSchema: StructType = structOf(schema, "dimensions")
+  lazy val weightSchema: StructType = structOf(schema, "weight")
+  lazy val priceSchema: StructType = structOf(schema, "base_prices")
+  lazy val imageSchema: StructType = structOf(schema, "images")
+  lazy val printPositionSchema: StructType = structOf(schema, "print_positions")
+  lazy val printOptionSchema: StructType = structOf(schema, "print_options")
+  lazy val packagingSchema: StructType = structOf(schema, "packaging")
+  lazy val cartonSchema: StructType = structOf(packagingSchema, "outer_carton")
+  lazy val sustainabilitySchema: StructType = structOf(schema, "sustainability")
+  lazy val lifecycleSchema: StructType = structOf(schema, "lifecycle")
+  lazy val localizedSchema: StructType = structOf(schema, "localized")
+  lazy val variantSchema: StructType = structOf(schema, "variants")
+  lazy val colorSchema: StructType = structOf(variantSchema, "color")
+  lazy val stockSchema: StructType = structOf(variantSchema, "stock")
+  lazy val dueInSchema: StructType = structOf(stockSchema, "due_ins")
+  lazy val stockLocationSchema: StructType = structOf(stockSchema, "locations")
 
-  /** The stock.locations array type (per-warehouse snapshots). */
-  lazy val stockLocationsType: DataType = stockSchema("locations").dataType
+  /** `dt`'s fields in schema order, as columns. A field in `fields` is
+    * cast to its schema type; every other field holds what an unmapped
+    * field holds in the unified row — an empty list if its type is an
+    * array, a typed null otherwise (the nested-record rule: an absent
+    * repeated field reads as empty, an absent optional one as NULL).
+    * The case classes' own defaults (`"active"`, `1`, `"GBP"`) are not
+    * applied: a supplier states those values itself. A name that is not
+    * a field of `dt`, or is given twice, throws
+    * `IllegalArgumentException` when the plan is built. */
+  def fill(dt: StructType, fields: (String, Column)*): Seq[Column] = {
+    val unknown = fields.map(_._1).filterNot(dt.fieldNames.contains)
+    require(unknown.isEmpty,
+      s"not a field of ${dt.catalogString}: ${unknown.mkString(", ")}")
+    val byName = fields.toMap
+    require(byName.size == fields.size,
+      s"field given twice: ${fields.map(_._1).diff(byName.keys.toSeq).mkString(", ")}")
+    dt.fields.toSeq.map { f =>
+      val value = byName.get(f.name).map(_.cast(f.dataType)).getOrElse(f.dataType match {
+        case a: ArrayType => functions.array().cast(a)
+        case other => functions.lit(null).cast(other)
+      })
+      value.as(f.name)
+    }
+  }
+
+  /** [[fill]] as one struct column of type `dt`. */
+  def struct(dt: StructType, fields: (String, Column)*): Column =
+    functions.struct(fill(dt, fields: _*): _*)
 }

@@ -1432,7 +1432,13 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     val f = fs(spark, root)
     val token = java.util.UUID.randomUUID().toString
     val tmp = new Path(root, s"manifests/.v_$version.tmp-$token")
-    val out = f.create(tmp, false)
+    // A local root writes the tmp without a `.crc` sidecar: the
+    // hard-link publish below cannot carry one along atomically.
+    val local = f.getUri.getScheme == "file"
+    val out =
+      if (local) FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).getRaw
+        .create(tmp, false)
+      else f.create(tmp, false)
     // Commit wall-clock, clamped monotonic against the predecessor so
     // `TIMESTAMP AS OF` resolution can trust that version order and
     // timestamp order agree even across clock skew between writers
@@ -1571,21 +1577,32 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     }).mkString("\n").getBytes(UTF_8))
     finally out.close()
     val dst = manifestPath(root, version)
-    // Atomic publish. `FileSystem.rename` on the local filesystem (and
-    // many object-store connectors) silently OVERWRITES an existing
-    // destination, so exists()-then-rename lets two racing committers
-    // both "win" a version — the loser's commit would be silently
-    // replaced. `FileContext.rename(..., Rename.NONE)` instead fails
-    // when the destination exists on every Hadoop filesystem,
-    // including RawLocalFs, closing that window.
+    // Atomic create-if-absent publish. `FileSystem.rename` on the local
+    // filesystem (and many object-store connectors) silently
+    // OVERWRITES an existing destination, so exists()-then-rename lets
+    // two racing committers both "win" a version. On the local
+    // checksum filesystem even `FileContext.rename(..., Rename.NONE)`
+    // is check-then-act — it tests that the destination is absent,
+    // then renames the data file and its `.crc` one after the other —
+    // so two committers can both publish and leave one's data under
+    // the other's checksum (the version then fails every read with a
+    // ChecksumException). A local root therefore publishes with
+    // `Files.createLink`: one atomic syscall that fails when the
+    // target exists, over a tmp that has no `.crc` to split from.
+    // Other filesystems keep the no-overwrite rename.
     val renamed = try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        f.getUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(f.makeQualified(tmp), f.makeQualified(dst),
-        org.apache.hadoop.fs.Options.Rename.NONE)
+      if (local)
+        java.nio.file.Files.createLink(java.nio.file.Paths.get(f.makeQualified(dst).toUri),
+          java.nio.file.Paths.get(f.makeQualified(tmp).toUri))
+      else
+        org.apache.hadoop.fs.FileContext.getFileContext(
+          f.getUri, spark.sparkContext.hadoopConfiguration)
+          .rename(f.makeQualified(tmp), f.makeQualified(dst),
+            org.apache.hadoop.fs.Options.Rename.NONE)
       true
     } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+          _: java.nio.file.FileAlreadyExistsException => false
       case e: java.io.IOException if f.exists(dst) &&
           !manifestCommitter(spark, root, version).contains(token) => false
     }
@@ -1594,7 +1611,8 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // committer whose token survived owns the version; anyone else
     // retries on the next number.
     val won = renamed && manifestCommitter(spark, root, version).contains(token)
-    if (!won && f.exists(tmp)) f.delete(tmp, false)
+    // A local publish leaves the tmp as a second link to the manifest.
+    if ((local || !won) && f.exists(tmp)) f.delete(tmp, false)
     // Every Nth commit refreshes the `_last_checkpoint` hint so
     // current-version resolution stays O(N) forever. Our manifests are
     // SELF-CONTAINED snapshots (unlike Delta's delta-logs), so the

@@ -2,6 +2,9 @@ package graft.suppliers
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.Unified
+import graft.schema.Unified.{categorySchema, dimensionsSchema, imageSchema, priceSchema,
+  printOptionSchema, supplierSchema, variantSchema, weightSchema}
 import graft.sources.FeedReader
 
 /** Keramikos supplier pipeline: ceramics catalog with boolean print
@@ -64,15 +67,13 @@ object Keramikos {
     val grid = broadcast(FeedReader.conform(feed.prices, priceCols).select(
       col("prodCode").as("__price_code"),
       col("printTypeName").as("__price_type"),
-      transform(col("printPrices"), p => struct(
-        p.getField("unitPrice").cast("double").as("value"),
-        lit("GBP").as("currency"),
-        p.getField("quantityFrom").cast("int").as("min_quantity"),
-        lit(null).cast("int").as("max_quantity"),
-        lit("unit").as("type"),
-        concat(lit("colours="), p.getField("numberOfColours").cast("string")).as("description"),
-        lit(null).cast("timestamp").as("valid_until")))
-        .cast(graft.schema.Unified.schema("base_prices").dataType).as("__grid_prices")))
+      transform(col("printPrices"), p => Unified.struct(priceSchema,
+        "value" -> p.getField("unitPrice"),
+        "currency" -> lit("GBP"),
+        "min_quantity" -> p.getField("quantityFrom"),
+        "type" -> lit("unit"),
+        "description" -> concat(lit("colours="), p.getField("numberOfColours").cast("string"))))
+        .as("__grid_prices")))
 
     val base = products.join(grid, col("Prodcode") === col("__price_code"), "left_outer")
 
@@ -81,111 +82,68 @@ object Keramikos {
     val techniquesArr = array_compact(array(techniques: _*))
 
     val printOptions = filter(
-      transform(techniquesArr, tech => struct(
-        tech.as("technique"),
-        lit("various").as("position"),
-        lit(1).as("max_colors"),
-        lit(null).cast("double").as("setup_charge"),
+      transform(techniquesArr, tech => Unified.struct(printOptionSchema,
+        "technique" -> tech,
+        "position" -> lit("various"),
+        "max_colors" -> lit(1),
         // Attach the joined grid to the option the grid names
         // ("Digital Printing" → digital_print), empty elsewhere.
-        when(tech === "digital_print" && col("__price_type").isNotNull &&
+        "prices" -> when(tech === "digital_print" && col("__price_type").isNotNull &&
             lower(col("__price_type")).contains("digital"), col("__grid_prices"))
-          .otherwise(array().cast(graft.schema.Unified.schema("base_prices").dataType))
-          .as("prices"),
-        lit(null).cast("string").as("lead_time"),
-        lit(false).as("is_default"),
-          lit(null).cast("map<string,string>").as("technique_names"))),
+          .otherwise(array()),
+        "is_default" -> lit(false))),
       o => o.getField("technique").isNotNull)
 
-    val images = filter(array(
-      struct(col("ImageUri").as("url"), lit("standard").as("type"),
-        lit(null).cast("string").as("description"), lit(null).cast("string").as("color_variant")),
-      struct(col("HiresImageUri").as("url"), lit("hires").as("type"),
-        lit(null).cast("string").as("description"), lit(null).cast("string").as("color_variant"))),
+    val img = (url: Column, t: String) =>
+      Unified.struct(imageSchema, "url" -> url, "type" -> lit(t))
+    val images = filter(array(img(col("ImageUri"), "standard"), img(col("HiresImageUri"), "hires")),
       i => i.getField("url").isNotNull)
 
     val weight = {
       val w = element_at(specs, "Weight (g)").try_cast("double")
-      when(w.isNotNull, struct(w.as("value"), lit("g").as("unit")))
+      when(w.isNotNull, Unified.struct(weightSchema, "value" -> w, "unit" -> lit("g")))
     }
     val dims = {
       val h = element_at(specs, "Height (mm)").try_cast("double")
       val dia = element_at(specs, "Diameter (mm)").try_cast("double")
-      when(coalesce(h, dia).isNotNull, struct(
-        lit(null).cast("double").as("length"), lit(null).cast("double").as("width"),
-        h.as("height"), dia.as("diameter"), lit("mm").as("unit")))
+      when(coalesce(h, dia).isNotNull, Unified.struct(dimensionsSchema,
+        "height" -> h, "diameter" -> dia, "unit" -> lit("mm")))
     }
 
     val status = when(coalesce(col("Discontinued"), lit(false)), "discontinued")
       .otherwise("active")
 
-    val variant = struct(
-      coalesce(col("Prodcode"), lit("")).as("sku"),
-      col("ProductId").cast("string").as("variant_id"),
-      lit(null).cast(graft.schema.Unified.schema("variants").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]("color").dataType).as("color"),
-      lit(null).cast("string").as("size"),
-      nullif(col("ShapeName"), lit("")).as("material_variant"),
-      lit(null).cast(graft.schema.Unified.schema("dimensions").dataType).as("dimensions"),
-      lit(null).cast(graft.schema.Unified.schema("weight").dataType).as("weight"),
-      array().cast(graft.schema.Unified.schema("base_prices").dataType).as("prices"),
-      lit(null).cast(graft.schema.Unified.schema("variants").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]("stock").dataType).as("stock"),
-      images.cast(graft.schema.Unified.schema("images").dataType).as("images"),
-      status.as("status"),
-      lit(null).cast("string").as("gtin"))
+    val variant = Unified.struct(variantSchema,
+      "sku" -> coalesce(col("Prodcode"), lit("")),
+      "variant_id" -> col("ProductId"),
+      "material_variant" -> nullif(col("ShapeName"), lit("")),
+      "images" -> images,
+      "status" -> status)
 
-    base.select(
-      concat(lit("keramikos_"), coalesce(col("Prodcode"), lit(""))).as("product_id"),
-      struct(lit(supplierId).as("id"), lit("Keramikos").as("name"),
-        lit(null).cast("string").as("api_version"),
-        lit(null).cast("map<string,string>").as("contact_info")).as("supplier"),
-      coalesce(col("Prodcode"), lit("")).as("supplier_product_code"),
-      coalesce(col("Name"), lit("")).as("name"),
-      lit(null).cast("string").as("title"),
-      col("Description").as("short_description"),
-      lit(null).cast("string").as("long_description"),
-      array().cast("array<string>").as("keywords"),
-      filter(array(struct(
-        lit(null).cast("string").as("id"), col("CategoryName").as("name"),
-        lit(1).as("level"), lit(null).cast("string").as("parent_id"))),
-        c => c.getField("name").isNotNull)
-        .cast(graft.schema.Unified.schema("categories").dataType).as("categories"),
-      nullif(col("Brand"), lit("")).as("brand"),
-      dims.as("dimensions"),
-      weight.as("weight"),
-      lit(null).cast("string").as("material"),
-      array().cast("array<string>").as("colors_available"),
-      array(variant).cast(graft.schema.Unified.schema("variants").dataType).as("variants"),
-      array().cast(graft.schema.Unified.schema("base_prices").dataType).as("base_prices"),
-      (size(techniquesArr) > 0).as("is_printable"),
-      array().cast(graft.schema.Unified.schema("print_positions").dataType).as("print_positions"),
-      printOptions.cast(graft.schema.Unified.schema("print_options").dataType).as("print_options"),
-      images.cast(graft.schema.Unified.schema("images").dataType).as("images"),
-      array().cast("array<string>").as("artwork_templates"),
-      lit(1).as("minimum_order_quantity"),
-      col("QuantityPerBox").try_cast("int").as("carton_quantity"),
-      lit(null).cast("string").as("lead_time"),
-      array().cast(graft.schema.Unified.schema("shipping_options").dataType).as("shipping_options"),
-      lit(null).cast("string").as("country_of_origin"),
-      lit(null).cast("string").as("tariff_code"),
-      lit(null).cast("string").as("commodity_code"),
-      status.as("status"),
-      lit(null).cast(graft.schema.Unified.schema("packaging").dataType).as("packaging"),
-      lit(null).cast(graft.schema.Unified.schema("sustainability").dataType).as("sustainability"),
-      lit(null).cast(graft.schema.Unified.schema("lifecycle").dataType).as("lifecycle"),
-      array().cast("array<string>").as("related_products"),
-      array().cast("array<string>").as("alternative_products"),
-      lit(null).cast(graft.schema.Unified.schema("localized").dataType).as("localized"),
+    base.select(Unified.fill(Unified.schema,
+      "product_id" -> concat(lit("keramikos_"), coalesce(col("Prodcode"), lit(""))),
+      "supplier" -> Unified.struct(supplierSchema,
+        "id" -> lit(supplierId), "name" -> lit("Keramikos")),
+      "supplier_product_code" -> coalesce(col("Prodcode"), lit("")),
+      "name" -> coalesce(col("Name"), lit("")),
+      "short_description" -> col("Description"),
+      "categories" -> filter(array(Unified.struct(categorySchema,
+        "name" -> col("CategoryName"), "level" -> lit(1))),
+        c => c.getField("name").isNotNull),
+      "brand" -> nullif(col("Brand"), lit("")),
+      "dimensions" -> dims,
+      "weight" -> weight,
+      "variants" -> array(variant),
+      "is_printable" -> (size(techniquesArr) > 0),
+      "print_options" -> printOptions,
+      "images" -> images,
+      "minimum_order_quantity" -> lit(1),
+      "carton_quantity" -> col("QuantityPerBox").try_cast("int"),
+      "status" -> status,
       // Open attributes (ref unified.jsonc:94 shapeName).
-      map_filter(map(lit("shapeName"), nullif(col("ShapeName"), lit(""))),
-        (_, v) => v.isNotNull).as("product_extra_data"),
-      lit(null).cast("timestamp").as("created_at"),
-      lit(null).cast("timestamp").as("updated_at"),
-      lit(null).cast("timestamp").as("last_sync"),
-      to_json(struct(products.columns.toSeq.map(col): _*)).as("raw_data"))
+      "product_extra_data" -> map_filter(map(lit("shapeName"), nullif(col("ShapeName"), lit(""))),
+        (_, v) => v.isNotNull),
+      "raw_data" -> to_json(struct(products.columns.toSeq.map(col): _*))): _*)
   }
 
   def unified(spark: SparkSession, path: String): DataFrame =

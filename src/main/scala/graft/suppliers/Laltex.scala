@@ -3,6 +3,10 @@ package graft.suppliers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Parsers
+import graft.schema.Unified
+import graft.schema.Unified.{cartonSchema, categorySchema, colorSchema, dimensionsSchema,
+  dueInSchema, imageSchema, packagingSchema, priceSchema, printOptionSchema,
+  printPositionSchema, stockSchema, supplierSchema, variantSchema, weightSchema}
 import graft.sources.FeedReader
 
 /** Laltex supplier pipeline: products + stocks endpoints → unified rows.
@@ -55,20 +59,16 @@ object Laltex {
       filter(coalesce(pp, array()),
         p => Parsers.parseCurrency(p.getField("Price")).isNotNull &&
           p.getField("MinQuantity").try_cast("int").isNotNull),
-      p => struct(
-        Parsers.parseCurrency(p.getField("Price")).as("value"),
-        lit("GBP").as("currency"),
-        p.getField("MinQuantity").try_cast("int").as("min_quantity"),
-        p.getField("MaxQuantity").try_cast("int").as("max_quantity"),
-        lit("unit").as("type"),
-        lit(null).cast("string").as("description"),
-        lit(null).cast("timestamp").as("valid_until")))
+      p => Unified.struct(priceSchema,
+        "value" -> Parsers.parseCurrency(p.getField("Price")),
+        "currency" -> lit("GBP"),
+        "min_quantity" -> p.getField("MinQuantity").try_cast("int"),
+        "max_quantity" -> p.getField("MaxQuantity").try_cast("int"),
+        "type" -> lit("unit")))
 
   private def urlImages(urls: Column, imgType: String): Column =
-    transform(coalesce(urls, array()), u => struct(
-      u.as("url"), lit(imgType).as("type"),
-      lit(null).cast("string").as("description"),
-      lit(null).cast("string").as("color_variant")))
+    transform(coalesce(urls, array()),
+      u => Unified.struct(imageSchema, "url" -> u, "type" -> lit(imgType)))
 
   /** Column contracts (FeedReader.conform): sparse captures resolve
     * every referenced column/nested field. */
@@ -97,45 +97,38 @@ object Laltex {
     // J4: per-item stock dimension, broadcast.
     val stocks = broadcast(FeedReader.conform(feed.stocks, stockCols).select(
       col("ProductCode").as("__stock_code"),
-      struct(
-        coalesce(col("FreeStock").try_cast("int"), lit(0)).as("available"),
-        transform(coalesce(col("DueIns"), array()), d => struct(
-          d.getField("DueInQty").try_cast("int").as("quantity"),
-          d.getField("DueInETA").cast("string").as("expected_date"))).as("due_ins"),
-        array().cast(graft.schema.Unified.stockLocationsType).as("locations"),
-        lit(null).cast("timestamp").as("last_updated")).as("__stock")))
+      Unified.struct(stockSchema,
+        "available" -> coalesce(col("FreeStock").try_cast("int"), lit(0)),
+        "due_ins" -> transform(coalesce(col("DueIns"), array()), d => Unified.struct(dueInSchema,
+          "quantity" -> d.getField("DueInQty").try_cast("int"),
+          "expected_date" -> d.getField("DueInETA"))))
+        .as("__stock")))
 
     val v = products.select(
       col("ProductCode"), tierPrices(col("ProductPrice")).as("__tier_prices"),
       posexplode_outer(col("Items")).as(Seq("__pos", "item")))
     val joined = v.join(stocks, col("item.ItemCode") === col("__stock_code"), "left_outer")
 
-    val variantStruct = struct(
-      coalesce(col("item.ItemCode"), lit("")).as("sku"),
-      lit(null).cast("string").as("variant_id"),
-      struct(
-        coalesce(col("item.ItemColour"), lit("")).as("code"),
-        coalesce(col("item.ItemColour"), lit("")).as("name"),
-        lit(null).cast("string").as("hex_color"),
-        col("item.PMS").as("pms_color"),
-        urlImages(col("item.ItemImages"), "item").as("images"),
-        lit("active").as("status")).as("color"),
-      col("item.ItemSize").as("size"),
-      lit(null).cast("string").as("material_variant"),
-      {
+    val variantStruct = Unified.struct(variantSchema,
+      "sku" -> coalesce(col("item.ItemCode"), lit("")),
+      "color" -> Unified.struct(colorSchema,
+        "code" -> coalesce(col("item.ItemColour"), lit("")),
+        "name" -> coalesce(col("item.ItemColour"), lit("")),
+        "pms_color" -> col("item.PMS"),
+        "images" -> urlImages(col("item.ItemImages"), "item"),
+        "status" -> lit("active")),
+      "size" -> col("item.ItemSize"),
+      "dimensions" -> {
         val d = Parsers.parseDims(col("item.ItemSize"))
-        struct(d.getField("length").as("length"), d.getField("width").as("width"),
-          d.getField("height").as("height"), lit(null).cast("double").as("diameter"),
-          d.getField("unit").as("unit"))
-      }.as("dimensions"),
-      lit(null).cast("struct<value:double,unit:string>").as("weight"),
-      col("__tier_prices")
-        .cast(graft.schema.Unified.schema("base_prices").dataType).as("prices"),
-      col("__stock").as("stock"),
-      concat(urlImages(col("item.ItemImages"), "item"),
-        urlImages(col("item.PlainImages"), "plain")).as("images"),
-      lit("active").as("status"),
-      lit(null).cast("string").as("gtin"))
+        Unified.struct(dimensionsSchema, "length" -> d.getField("length"),
+          "width" -> d.getField("width"), "height" -> d.getField("height"),
+          "unit" -> d.getField("unit"))
+      },
+      "prices" -> col("__tier_prices"),
+      "stock" -> col("__stock"),
+      "images" -> concat(urlImages(col("item.ItemImages"), "item"),
+        urlImages(col("item.PlainImages"), "plain")),
+      "status" -> lit("active"))
 
     val variantsByProduct = joined
       .groupBy(col("ProductCode"))
@@ -145,132 +138,91 @@ object Laltex {
     val base = products.join(variantsByProduct, Seq("ProductCode"), "left_outer")
 
     val categories = filter(array(
-      struct(lit(null).cast("string").as("id"), col("Category").as("name"),
-        lit(1).as("level"), lit(null).cast("string").as("parent_id")),
-      struct(lit(null).cast("string").as("id"), col("SubCategory").as("name"),
-        lit(2).as("level"), lit(null).cast("string").as("parent_id"))),
+      Unified.struct(categorySchema, "name" -> col("Category"), "level" -> lit(1)),
+      Unified.struct(categorySchema, "name" -> col("SubCategory"), "level" -> lit(2))),
       c => c.getField("name").isNotNull && c.getField("name") =!= "")
 
     val printPositions = transform(coalesce(col("PrintDetails"), array()), p => {
       // "PrintArea": "120x25mm" is WxH.
       val areaPat = "^\\s*([0-9]+(?:[.,][0-9]+)?)\\s*x\\s*([0-9]+(?:[.,][0-9]+)?)\\s*(mm|cm)?\\s*$"
       val areaNorm = regexp_replace(lower(coalesce(p.getField("PrintArea"), lit(""))), ",", ".")
-      struct(
-        coalesce(p.getField("PrintPosition"), lit("")).as("id"),
-        coalesce(p.getField("PrintPosition"), lit("")).as("name"),
-        regexp_extract(areaNorm, areaPat, 1).try_cast("double").as("max_width"),
-        regexp_extract(areaNorm, areaPat, 2).try_cast("double").as("max_height"),
-        lit(null).cast("double").as("max_area"),
-        lit("mm").as("unit"),
-        filter(array(element_at(printTypeCol, p.getField("PrintType"))),
-          t => t.isNotNull).as("techniques"),
-        lit(null).cast("int").as("max_colors"),
-        lit(null).cast("map<string,string>").as("coordinates"),
-        array().cast("array<struct<url:string,type:string,description:string,color_variant:string>>").as("images"))
+      Unified.struct(printPositionSchema,
+        "id" -> coalesce(p.getField("PrintPosition"), lit("")),
+        "name" -> coalesce(p.getField("PrintPosition"), lit("")),
+        "max_width" -> regexp_extract(areaNorm, areaPat, 1).try_cast("double"),
+        "max_height" -> regexp_extract(areaNorm, areaPat, 2).try_cast("double"),
+        "unit" -> lit("mm"),
+        "techniques" -> filter(array(element_at(printTypeCol, p.getField("PrintType"))),
+          t => t.isNotNull))
     })
 
     val printOptions = transform(
       filter(coalesce(col("PrintDetails"), array()),
         p => element_at(printTypeCol, p.getField("PrintType")).isNotNull),
-      p => struct(
-        element_at(printTypeCol, p.getField("PrintType")).as("technique"),
-        coalesce(p.getField("PrintPosition"), lit("various")).as("position"),
-        lit(1).as("max_colors"),
-        lit(null).cast("double").as("setup_charge"),
-        array().cast("array<struct<value:double,currency:string,min_quantity:int,max_quantity:int,type:string,description:string,valid_until:timestamp>>").as("prices"),
-        lit(null).cast("string").as("lead_time"),
-        lit(false).as("is_default"),
-          lit(null).cast("map<string,string>").as("technique_names")))
+      p => Unified.struct(printOptionSchema,
+        "technique" -> element_at(printTypeCol, p.getField("PrintType")),
+        "position" -> coalesce(p.getField("PrintPosition"), lit("various")),
+        "max_colors" -> lit(1),
+        "is_default" -> lit(false)))
 
     val weight = {
       val w = Parsers.parseWeight(col("UnitWeight"))
-      when(w.getField("value").isNull, lit(null)).otherwise(struct(
-        w.getField("value").as("value"),
-        coalesce(w.getField("unit"), lit("g")).as("unit")))
+      when(w.getField("value").isNull, lit(null)).otherwise(Unified.struct(weightSchema,
+        "value" -> w.getField("value"), "unit" -> coalesce(w.getField("unit"), lit("g"))))
     }
 
-    base.select(
-      concat(lit("laltex_"), coalesce(col("ProductCode"), lit(""))).as("product_id"),
-      struct(lit(supplierId).as("id"), lit("Laltex").as("name"),
-        lit("v1").as("api_version"),
-        map(lit("website"), lit("https://www.laltex.com")).as("contact_info")).as("supplier"),
-      coalesce(col("ProductCode"), lit("")).as("supplier_product_code"),
-      coalesce(col("ProductName"), lit("")).as("name"),
-      col("ProductTitle").as("title"),
-      col("Description").as("short_description"),
-      col("WebDescription").as("long_description"),
-      Parsers.splitKeywords(coalesce(col("KeyWords"), lit(""))).as("keywords"),
-      categories.as("categories"),
-      lit(null).cast("string").as("brand"),
-      when(Parsers.parseDims(col("ProductDims")).getField("length").isNull, lit(null))
-        .otherwise(struct(
-          Parsers.parseDims(col("ProductDims")).getField("length").as("length"),
-          Parsers.parseDims(col("ProductDims")).getField("width").as("width"),
-          Parsers.parseDims(col("ProductDims")).getField("height").as("height"),
-          lit(null).cast("double").as("diameter"),
-          coalesce(Parsers.parseDims(col("ProductDims")).getField("unit"), lit("mm")).as("unit")))
-        .as("dimensions"),
-      weight.as("weight"),
-      col("Material").as("material"),
-      Parsers.splitKeywords(coalesce(col("AvailableColours"), lit(""))).as("colors_available"),
-      // Cast before coalesce: lambda-built struct aliases degrade to
-      // colN through collect_list/getField paths, and coalesce insists
-      // on identical types.
-      coalesce(col("__variants").cast(graft.schema.Unified.schema("variants").dataType),
-        array().cast(graft.schema.Unified.schema("variants").dataType)).as("variants"),
-      tierPrices(col("ProductPrice"))
-        .cast(graft.schema.Unified.schema("base_prices").dataType).as("base_prices"),
-      (size(coalesce(col("PrintDetails"), array())) > 0).as("is_printable"),
-      printPositions.cast(graft.schema.Unified.schema("print_positions").dataType)
-        .as("print_positions"),
-      printOptions.cast(graft.schema.Unified.schema("print_options").dataType)
-        .as("print_options"),
-      array().cast(graft.schema.Unified.schema("images").dataType).as("images"),
-      transform(coalesce(col("ArtworkTemplates"), array()),
-        t => t.getField("Template")).as("artwork_templates"),
-      coalesce(col("MinimumOrderQty").try_cast("int"), lit(1)).as("minimum_order_quantity"),
-      col("CartonQty").try_cast("int").as("carton_quantity"),
-      lit(null).cast("string").as("lead_time"),
-      array().cast(graft.schema.Unified.schema("shipping_options").dataType).as("shipping_options"),
-      col("CountryOfOrigin").as("country_of_origin"),
-      col("TariffCode").as("tariff_code"),
-      lit(null).cast("string").as("commodity_code"),
-      lit("active").as("status"),
+    val dims = {
+      val d = Parsers.parseDims(col("ProductDims"))
+      when(d.getField("length").isNull, lit(null)).otherwise(Unified.struct(dimensionsSchema,
+        "length" -> d.getField("length"), "width" -> d.getField("width"),
+        "height" -> d.getField("height"), "unit" -> coalesce(d.getField("unit"), lit("mm"))))
+    }
+
+    base.select(Unified.fill(Unified.schema,
+      "product_id" -> concat(lit("laltex_"), coalesce(col("ProductCode"), lit(""))),
+      "supplier" -> Unified.struct(supplierSchema,
+        "id" -> lit(supplierId), "name" -> lit("Laltex"), "api_version" -> lit("v1"),
+        "contact_info" -> map(lit("website"), lit("https://www.laltex.com"))),
+      "supplier_product_code" -> coalesce(col("ProductCode"), lit("")),
+      "name" -> coalesce(col("ProductName"), lit("")),
+      "title" -> col("ProductTitle"),
+      "short_description" -> col("Description"),
+      "long_description" -> col("WebDescription"),
+      "keywords" -> Parsers.splitKeywords(coalesce(col("KeyWords"), lit(""))),
+      "categories" -> categories,
+      "dimensions" -> dims,
+      "weight" -> weight,
+      "material" -> col("Material"),
+      "colors_available" -> Parsers.splitKeywords(coalesce(col("AvailableColours"), lit(""))),
+      "variants" -> coalesce(col("__variants"), array()),
+      "base_prices" -> tierPrices(col("ProductPrice")),
+      "is_printable" -> (size(coalesce(col("PrintDetails"), array())) > 0),
+      "print_positions" -> printPositions,
+      "print_options" -> printOptions,
+      "artwork_templates" -> transform(coalesce(col("ArtworkTemplates"), array()),
+        t => t.getField("Template")),
+      "minimum_order_quantity" -> coalesce(col("MinimumOrderQty").try_cast("int"), lit(1)),
+      "carton_quantity" -> col("CartonQty").try_cast("int"),
+      "country_of_origin" -> col("CountryOfOrigin"),
+      "tariff_code" -> col("TariffCode"),
+      "status" -> lit("active"),
       // Carton packaging (ref unified.jsonc:136-161): "42 x 37 x 55 cm"
       // dims (F17 parse) + "9.000 kg" gross weight (F17 weight parse).
-      {
+      "packaging" -> {
         val d = Parsers.parseDims(col("CartonDims"))
         val w = Parsers.parseWeight(col("CartonGrossWeight"))
-        struct(
-          lit(null).cast(graft.schema.Unified.schema("packaging").dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType]("inner_carton")
-            .dataType).as("inner_carton"),
-          when(coalesce(col("CartonQty").try_cast("int").cast("double"),
-              d.getField("length")).isNotNull, struct(
-            col("CartonQty").try_cast("int").as("qty"),
-            d.getField("length").as("length"),
-            d.getField("width").as("width"),
-            d.getField("height").as("height"),
-            coalesce(d.getField("unit"), lit("cm")).as("unit"),
-            lit(null).cast("double").as("weight_net"),
-            w.getField("value").as("weight_gross"),
-            coalesce(w.getField("unit"), lit("kg")).as("weight_unit"),
-            lit(null).cast("double").as("volume"),
-            lit(null).cast("string").as("volume_unit"))).as("outer_carton"),
-          lit(null).cast("string").as("type"),
-          lit(null).cast("string").as("type_item"))
-          .cast(graft.schema.Unified.schema("packaging").dataType).as("packaging")
+        Unified.struct(packagingSchema,
+          "outer_carton" -> when(coalesce(col("CartonQty").try_cast("int").cast("double"),
+              d.getField("length")).isNotNull, Unified.struct(cartonSchema,
+            "qty" -> col("CartonQty").try_cast("int"),
+            "length" -> d.getField("length"),
+            "width" -> d.getField("width"),
+            "height" -> d.getField("height"),
+            "unit" -> coalesce(d.getField("unit"), lit("cm")),
+            "weight_gross" -> w.getField("value"),
+            "weight_unit" -> coalesce(w.getField("unit"), lit("kg")))))
       },
-      lit(null).cast(graft.schema.Unified.schema("sustainability").dataType).as("sustainability"),
-      lit(null).cast(graft.schema.Unified.schema("lifecycle").dataType).as("lifecycle"),
-      array().cast("array<string>").as("related_products"),
-      array().cast("array<string>").as("alternative_products"),
-      lit(null).cast(graft.schema.Unified.schema("localized").dataType).as("localized"),
-      lit(null).cast("map<string,string>").as("product_extra_data"),
-      lit(null).cast("timestamp").as("created_at"),
-      lit(null).cast("timestamp").as("updated_at"),
-      lit(null).cast("timestamp").as("last_sync"),
-      to_json(struct(products.columns.toSeq.map(col): _*)).as("raw_data"))
+      "raw_data" -> to_json(struct(products.columns.toSeq.map(col): _*))): _*)
   }
 
   def unified(spark: SparkSession, path: String): DataFrame =

@@ -3,6 +3,10 @@ package graft.suppliers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Parsers
+import graft.schema.Unified
+import graft.schema.Unified.{cartonSchema, categorySchema, colorSchema, dimensionsSchema,
+  imageSchema, lifecycleSchema, localizedSchema, packagingSchema, priceSchema,
+  printOptionSchema, printPositionSchema, supplierSchema, variantSchema, weightSchema}
 import graft.sources.FeedReader
 
 /** MidOcean supplier pipeline: 5-endpoint feed → unified product rows
@@ -126,24 +130,21 @@ object MidOcean {
   private def imagesOf(assets: Column): Column =
     transform(
       filter(coalesce(assets, array()), a => a.getField("type") === "image"),
-      a => struct(
-        coalesce(a.getField("url"), lit("")).as("url"),
-        a.getField("subtype").as("type"),
-        Parsers.snakeToTitle(a.getField("subtype")).as("description"),
-        lit(null).cast("string").as("color_variant")))
+      a => Unified.struct(imageSchema,
+        "url" -> coalesce(a.getField("url"), lit("")),
+        "type" -> a.getField("subtype"),
+        "description" -> Parsers.snakeToTitle(a.getField("subtype"))))
 
   /** Full Price struct from a pricelist row (comma-decimal price,
     * GBP, tier 1..∞, unit price, optional valid_until —
     * ref: midocean_transformer.py:329-361). */
   private def priceStruct(price: Column, validUntil: Column): Column =
-    struct(
-      Parsers.parseFloatComma(price).as("value"),
-      lit("GBP").as("currency"),
-      lit(1).as("min_quantity"),
-      lit(null).cast("int").as("max_quantity"),
-      lit("unit").as("type"),
-      lit(null).cast("string").as("description"),
-      Parsers.parseIsoDate(validUntil).cast("timestamp").as("valid_until"))
+    Unified.struct(priceSchema,
+      "value" -> Parsers.parseFloatComma(price),
+      "currency" -> lit("GBP"),
+      "min_quantity" -> lit(1),
+      "type" -> lit("unit"),
+      "valid_until" -> Parsers.parseIsoDate(validUntil))
 
   /** P7 — variant status with the 2099-12-31 sentinel
     * (ref: midocean_transformer.py:477-489). */
@@ -177,29 +178,19 @@ object MidOcean {
       priceStruct(col("price"), col("valid_until")).as("__price")))
     val priced = v.join(prices, col("v.sku") === col("__price_sku"), "left_outer")
 
-    val variantStruct = struct(
-      coalesce(col("v.sku"), lit("")).as("sku"),
-      col("v.variant_id").as("variant_id"),
-      struct(
-        coalesce(col("v.color_code"), lit("")).as("code"),
-        coalesce(col("v.color_description"), lit("")).as("name"),
-        lit(null).cast("string").as("hex_color"),
-        col("v.pms_color").as("pms_color"),
-        imagesOf(col("v.digital_assets")).as("images"),
-        lit("active").as("status")).as("color"),
-      lit(null).cast("string").as("size"),
-      lit(null).cast("string").as("material_variant"),
-      lit(null).cast(graft.schema.Unified.schema("dimensions").dataType).as("dimensions"),
-      lit(null).cast(graft.schema.Unified.schema("weight").dataType).as("weight"),
-      when(col("__price").isNotNull, array(col("__price")))
-        .otherwise(array().cast("array<struct<value:double,currency:string,min_quantity:int,max_quantity:int,type:string,description:string,valid_until:timestamp>>"))
-        .as("prices"),
-      lit(null).cast(graft.schema.Unified.schema("variants").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]("stock").dataType).as("stock"),
-      imagesOf(col("v.digital_assets")).as("images"),
-      variantStatus(col("v")).as("status"),
-      col("v.gtin").as("gtin"))
+    val variantStruct = Unified.struct(variantSchema,
+      "sku" -> coalesce(col("v.sku"), lit("")),
+      "variant_id" -> col("v.variant_id"),
+      "color" -> Unified.struct(colorSchema,
+        "code" -> coalesce(col("v.color_code"), lit("")),
+        "name" -> coalesce(col("v.color_description"), lit("")),
+        "pms_color" -> col("v.pms_color"),
+        "images" -> imagesOf(col("v.digital_assets")),
+        "status" -> lit("active")),
+      "prices" -> when(col("__price").isNotNull, array(col("__price"))).otherwise(array()),
+      "images" -> imagesOf(col("v.digital_assets")),
+      "status" -> variantStatus(col("v")),
+      "gtin" -> col("v.gtin"))
 
     // Re-nest preserving feed order (A5 depends on element 1).
     val variantsByProduct = priced
@@ -211,40 +202,30 @@ object MidOcean {
     // J2: printdata products → print positions (left outer on master_code).
     val positions = feed.printdataProducts
       .select(col("master_code"),
-        transform(col("printing_positions"), p => struct(
-          coalesce(p.getField("position_id"), lit("")).as("id"),
-          coalesce(p.getField("position_id"), lit("")).as("name"),
-          p.getField("max_print_size_width").cast("double").as("max_width"),
-          p.getField("max_print_size_height").cast("double").as("max_height"),
-          lit(null).cast("double").as("max_area"),
-          lit("mm").as("unit"),
-          filter(transform(p.getField("printing_techniques"),
-            t => element_at(techMapCol, t.getField("id"))), x => x.isNotNull)
-            .as("techniques"),
-          lit(null).cast("int").as("max_colors"),
-          lit(null).cast("map<string,string>").as("coordinates"),
-          transform(coalesce(p.getField("images"), array()), i => struct(
-            coalesce(i.getField("print_position_image_with_area"), lit("")).as("url"),
-            lit("print_position").as("type"),
-            concat(lit("Print position: "),
-              coalesce(p.getField("position_id"), lit(""))).as("description"),
-            lit(null).cast("string").as("color_variant"))).as("images")))
+        transform(col("printing_positions"), p => Unified.struct(printPositionSchema,
+          "id" -> coalesce(p.getField("position_id"), lit("")),
+          "name" -> coalesce(p.getField("position_id"), lit("")),
+          "max_width" -> p.getField("max_print_size_width"),
+          "max_height" -> p.getField("max_print_size_height"),
+          "unit" -> lit("mm"),
+          "techniques" -> filter(transform(p.getField("printing_techniques"),
+            t => element_at(techMapCol, t.getField("id"))), x => x.isNotNull),
+          "images" -> transform(coalesce(p.getField("images"), array()),
+            i => Unified.struct(imageSchema,
+              "url" -> coalesce(i.getField("print_position_image_with_area"), lit("")),
+              "type" -> lit("print_position"),
+              "description" -> concat(lit("Print position: "),
+                coalesce(p.getField("position_id"), lit("")))))))
           .as("__print_positions"))
 
     // J3/F14: global print techniques → print options, computed once.
-    // (All-nullable literal type: schema-derived Price has NOT NULL
-    // fields that a built struct can't cast into.)
-    val fullPrice = "array<struct<value:double,currency:string,min_quantity:int,max_quantity:int,type:string,description:string,valid_until:timestamp>>"
     val scalePrices = flatten(transform(col("t.var_costs"), vc =>
       filter(
-        transform(vc.getField("scales"), sc => struct(
-          Parsers.parseFloatComma(sc.getField("price")).as("value"),
-          lit("GBP").as("currency"),
-          Parsers.parseIntSeparators(sc.getField("minimum_quantity")).as("min_quantity"),
-          lit(null).cast("int").as("max_quantity"),
-          lit("unit").as("type"),
-          lit(null).cast("string").as("description"),
-          lit(null).cast("timestamp").as("valid_until"))),
+        transform(vc.getField("scales"), sc => Unified.struct(priceSchema,
+          "value" -> Parsers.parseFloatComma(sc.getField("price")),
+          "currency" -> lit("GBP"),
+          "min_quantity" -> Parsers.parseIntSeparators(sc.getField("minimum_quantity")),
+          "type" -> lit("unit"))),
         // Python truthiness: zero or unparseable price/min-qty is skipped
         // (midocean_transformer.py:452).
         p => p.getField("value").isNotNull && p.getField("value") =!= 0.0 &&
@@ -264,15 +245,14 @@ object MidOcean {
       .filter(col("technique").isNotNull)
       .select(struct(
         col("__pos"),
-        struct(
-          col("technique").as("technique"),
-          lit("various").as("position"),
-          lit(1).as("max_colors"),
-          col("setup").as("setup_charge"),
-          col("prices").cast(fullPrice).as("prices"),
-          lit(null).cast("string").as("lead_time"),
-          lit(false).as("is_default"),
-          col("__tech_names").as("technique_names")).as("o")).as("po"))
+        Unified.struct(printOptionSchema,
+          "technique" -> col("technique"),
+          "position" -> lit("various"),
+          "max_colors" -> lit(1),
+          "setup_charge" -> col("setup"),
+          "prices" -> col("prices"),
+          "is_default" -> lit(false),
+          "technique_names" -> col("__tech_names")).as("o")).as("po"))
       // Explicit __pos comparator: the option struct now carries a map
       // (technique_names), which default struct ordering can't compare.
       .agg(transform(
@@ -297,24 +277,22 @@ object MidOcean {
       val l = Parsers.parseFloatComma(col("length"))
       val w = Parsers.parseFloatComma(col("width"))
       val h = Parsers.parseFloatComma(col("height"))
-      when(coalesce(l, w, h).isNull, lit(null)).otherwise(struct(
-        l.as("length"), w.as("width"), h.as("height"),
-        lit(null).cast("double").as("diameter"),
-        when(lower(coalesce(col("length_unit"), lit("cm"))) === "cm", "cm")
-          .otherwise("mm").as("unit")))
+      when(coalesce(l, w, h).isNull, lit(null)).otherwise(Unified.struct(dimensionsSchema,
+        "length" -> l, "width" -> w, "height" -> h,
+        "unit" -> when(lower(coalesce(col("length_unit"), lit("cm"))) === "cm", "cm")
+          .otherwise("mm")))
     }
     val weight = {
       val value = coalesce(Parsers.parseFloatComma(col("gross_weight")),
         Parsers.parseFloatComma(col("net_weight")))
-      when(value.isNull, lit(null)).otherwise(struct(
-        value.as("value"),
-        when(lower(coalesce(col("gross_weight_unit"), lit("kg"))) === "kg", "kg")
-          .otherwise("g").as("unit")))
+      when(value.isNull, lit(null)).otherwise(Unified.struct(weightSchema,
+        "value" -> value,
+        "unit" -> when(lower(coalesce(col("gross_weight_unit"), lit("kg"))) === "kg", "kg")
+          .otherwise("g")))
     }
     val categories = {
-      val cat = (name: Column, level: Int) => struct(
-        lit(null).cast("string").as("id"), name.as("name"),
-        lit(level).as("level"), lit(null).cast("string").as("parent_id"))
+      val cat = (name: Column, level: Int) =>
+        Unified.struct(categorySchema, "name" -> name, "level" -> lit(level))
       filter(array(
         cat(col("product_class"), 1),
         cat(rawVariant1.getField("category_level1"), 1),
@@ -322,126 +300,86 @@ object MidOcean {
         cat(rawVariant1.getField("category_level3"), 3)),
         c => c.getField("name").isNotNull)
     }
+    val innerQty = Parsers.parseIntSeparators(col("inner_carton_quantity"))
+    val outerQty = Parsers.parseIntSeparators(col("outer_carton_quantity"))
 
-    base.select(
-      concat(lit("midocean_"), coalesce(col("master_code"), lit(""))).as("product_id"),
-      struct(
-        lit(supplierId).as("id"), lit("MidOcean").as("name"),
-        lit("2.0").as("api_version"),
-        map(lit("website"), lit("https://www.midocean.com"),
-          lit("api_base"), lit("https://api.midocean.com/gateway/")).as("contact_info"))
-        .as("supplier"),
-      coalesce(col("master_code"), lit("")).as("supplier_product_code"),
-      coalesce(col("product_name"), lit("")).as("name"),
-      lit(null).cast("string").as("title"),
-      col("short_description"),
-      col("long_description"),
-      array().cast("array<string>").as("keywords"),
-      categories.as("categories"),
-      col("brand"),
-      dims.as("dimensions"),
-      weight.as("weight"),
-      col("material"),
-      array().cast("array<string>").as("colors_available"),
-      coalesce(col("variants"), array().cast(graft.schema.Unified.schema("variants").dataType)).as("variants"),
-      coalesce(slice(firstVariant.getField("prices"), 1, 1), array().cast(fullPrice)).as("base_prices"),
-      (lower(coalesce(col("printable"), lit(""))) === "yes").as("is_printable"),
-      coalesce(col("__print_positions"),
-        array().cast(graft.schema.Unified.schema("print_positions").dataType)).as("print_positions"),
-      coalesce(col("__print_options"),
-        array().cast(graft.schema.Unified.schema("print_options").dataType)).as("print_options"),
-      coalesce(firstVariant.getField("images"),
-        array().cast(graft.schema.Unified.schema("images").dataType)).as("images"),
-      array().cast("array<string>").as("artwork_templates"),
-      lit(1).as("minimum_order_quantity"),
-      Parsers.parseIntSeparators(col("outer_carton_quantity")).as("carton_quantity"),
-      lit(null).cast("string").as("lead_time"),
-      array().cast(graft.schema.Unified.schema("shipping_options").dataType).as("shipping_options"),
-      col("country_of_origin"),
-      col("commodity_code").as("tariff_code"),
-      lit(null).cast("string").as("commodity_code"),
-      lit("active").as("status"),
+    base.select(Unified.fill(Unified.schema,
+      "product_id" -> concat(lit("midocean_"), coalesce(col("master_code"), lit(""))),
+      "supplier" -> Unified.struct(supplierSchema,
+        "id" -> lit(supplierId), "name" -> lit("MidOcean"), "api_version" -> lit("2.0"),
+        "contact_info" -> map(lit("website"), lit("https://www.midocean.com"),
+          lit("api_base"), lit("https://api.midocean.com/gateway/"))),
+      "supplier_product_code" -> coalesce(col("master_code"), lit("")),
+      "name" -> coalesce(col("product_name"), lit("")),
+      "short_description" -> col("short_description"),
+      "long_description" -> col("long_description"),
+      "categories" -> categories,
+      "brand" -> col("brand"),
+      "dimensions" -> dims,
+      "weight" -> weight,
+      "material" -> col("material"),
+      "variants" -> coalesce(col("variants"), array()),
+      "base_prices" -> coalesce(slice(firstVariant.getField("prices"), 1, 1), array()),
+      "is_printable" -> (lower(coalesce(col("printable"), lit(""))) === "yes"),
+      "print_positions" -> coalesce(col("__print_positions"), array()),
+      "print_options" -> coalesce(col("__print_options"), array()),
+      "images" -> coalesce(firstVariant.getField("images"), array()),
+      "minimum_order_quantity" -> lit(1),
+      "carton_quantity" -> outerQty,
+      "country_of_origin" -> col("country_of_origin"),
+      "tariff_code" -> col("commodity_code"),
+      "status" -> lit("active"),
       // Carton packaging (ref unified.jsonc:136-161; feed units: carton
       // dims in m, weight kg — kept as-declared via the unit fields).
-      struct(
-        when(Parsers.parseIntSeparators(col("inner_carton_quantity")).isNotNull,
-          struct(
-            Parsers.parseIntSeparators(col("inner_carton_quantity")).as("qty"),
-            lit(null).cast("double").as("length"),
-            lit(null).cast("double").as("width"),
-            lit(null).cast("double").as("height"),
-            lit("cm").as("unit"),
-            lit(null).cast("double").as("weight_net"),
-            lit(null).cast("double").as("weight_gross"),
-            lit("kg").as("weight_unit"),
-            lit(null).cast("double").as("volume"),
-            lit(null).cast("string").as("volume_unit"))).as("inner_carton"),
-        when(coalesce(Parsers.parseIntSeparators(col("outer_carton_quantity")),
+      "packaging" -> Unified.struct(packagingSchema,
+        "inner_carton" -> when(innerQty.isNotNull, Unified.struct(cartonSchema,
+          "qty" -> innerQty, "unit" -> lit("cm"), "weight_unit" -> lit("kg"))),
+        "outer_carton" -> when(coalesce(outerQty,
             Parsers.parseFloatComma(col("carton_length"))).isNotNull,
-          struct(
-            Parsers.parseIntSeparators(col("outer_carton_quantity")).as("qty"),
-            Parsers.parseFloatComma(col("carton_length")).as("length"),
-            Parsers.parseFloatComma(col("carton_width")).as("width"),
-            Parsers.parseFloatComma(col("carton_height")).as("height"),
-            coalesce(col("carton_length_unit"), lit("m")).as("unit"),
-            lit(null).cast("double").as("weight_net"),
-            Parsers.parseFloatComma(col("carton_gross_weight")).as("weight_gross"),
-            coalesce(col("carton_gross_weight_unit"), lit("kg")).as("weight_unit"),
-            Parsers.parseFloatComma(col("carton_volume")).as("volume"),
-            col("carton_volume_unit").cast("string").as("volume_unit"))).as("outer_carton"),
-        lit(null).cast("string").as("type"),
-        lit(null).cast("string").as("type_item"))
-        .cast(graft.schema.Unified.schema("packaging").dataType).as("packaging"),
-      lit(null).cast(graft.schema.Unified.schema("sustainability").dataType)
-        .as("sustainability"),
+          Unified.struct(cartonSchema,
+            "qty" -> outerQty,
+            "length" -> Parsers.parseFloatComma(col("carton_length")),
+            "width" -> Parsers.parseFloatComma(col("carton_width")),
+            "height" -> Parsers.parseFloatComma(col("carton_height")),
+            "unit" -> coalesce(col("carton_length_unit"), lit("m")),
+            "weight_gross" -> Parsers.parseFloatComma(col("carton_gross_weight")),
+            "weight_unit" -> coalesce(col("carton_gross_weight_unit"), lit("kg")),
+            "volume" -> Parsers.parseFloatComma(col("carton_volume")),
+            "volume_unit" -> col("carton_volume_unit")))),
       // Lifecycle (ref unified.jsonc:14-22): feed carries type and a
       // per-product modification timestamp.
-      struct(
-        col("type_of_products").cast("string").as("type_of_product"),
-        lit(null).cast("string").as("product_lifecycle"),
-        lit(null).cast("timestamp").as("intro_date"),
-        lit(null).cast("timestamp").as("release_date"),
-        col("timestamp").try_cast("timestamp").as("modified_date"),
-        lit(null).cast("timestamp").as("discontinued_date"))
-        .cast(graft.schema.Unified.schema("lifecycle").dataType).as("lifecycle"),
-      array().cast("array<string>").as("related_products"),
-      array().cast("array<string>").as("alternative_products"),
+      "lifecycle" -> Unified.struct(lifecycleSchema,
+        "type_of_product" -> col("type_of_products"),
+        "modified_date" -> col("timestamp").try_cast("timestamp")),
       // Localized content maps (ref unified.jsonc:25-33 `{lang}`
       // convention): one capture is single-language, so each non-null
       // field fills this run's language key; per-language technique
       // names ride in print_options.technique_names, and full
       // multilingual product maps come from merging per-language runs
       // (Localize.mergeLanguageRuns).
-      {
+      "localized" -> {
         val en = (c: Column) => when(c.isNotNull, map(lit(language), c))
-        struct(
-          en(col("brand")).as("brand"),
-          en(col("product_name")).as("name"),
-          lit(null).cast("map<string,string>").as("title"),
-          en(col("short_description")).as("short_description"),
-          en(col("long_description")).as("long_description"),
-          lit(null).cast("map<string,string>").as("web_description"),
-          lit(null).cast("map<string,string>").as("keywords"))
-          .cast(graft.schema.Unified.schema("localized").dataType).as("localized")
+        Unified.struct(localizedSchema,
+          "brand" -> en(col("brand")),
+          "name" -> en(col("product_name")),
+          "short_description" -> en(col("short_description")),
+          "long_description" -> en(col("long_description")))
       },
       // Open attribute map (ref unified.jsonc:86-122 productExtraData):
       // feed fields outside the core schema, stringified; null-valued
       // entries dropped.
-      map_filter(map(
+      "product_extra_data" -> map_filter(map(
         lit("master_id"), col("master_id").cast("string"),
         lit("type_of_products"), col("type_of_products").cast("string"),
         lit("number_of_print_positions"), col("number_of_print_positions").cast("string"),
         lit("volume"), col("volume").cast("string"),
         lit("volume_unit"), col("volume_unit").cast("string"),
         lit("inner_carton_quantity"), col("inner_carton_quantity").cast("string")),
-        (_, v) => v.isNotNull).as("product_extra_data"),
-      lit(null).cast("timestamp").as("created_at"),
-      lit(null).cast("timestamp").as("updated_at"),
-      lit(null).cast("timestamp").as("last_sync"),
-      to_json(struct(products.columns.toSeq.map {
+        (_, v) => v.isNotNull),
+      "raw_data" -> to_json(struct(products.columns.toSeq.map {
         case "variants" => col("variants_raw").as("variants")
         case c => col(c)
-      }: _*)).as("raw_data"))
+      }: _*))): _*)
   }
 
   /** Convenience: read + transform in one call. */

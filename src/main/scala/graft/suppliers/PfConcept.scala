@@ -3,6 +3,10 @@ package graft.suppliers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Parsers
+import graft.schema.Unified
+import graft.schema.Unified.{categorySchema, colorSchema, dimensionsSchema, dueInSchema,
+  imageSchema, priceSchema, printOptionSchema, stockSchema, supplierSchema, variantSchema,
+  weightSchema}
 import graft.sources.FeedReader
 
 /** PFConcept supplier pipeline: five XML-converted feeds → unified
@@ -117,15 +121,11 @@ object PfConcept {
   def readFeed(spark: SparkSession, path: String): Feed =
     Feed(FeedReader.readJsonc(spark, path, Some(requiredSchema)))
 
-  private val priceType = graft.schema.Unified.schema("base_prices").dataType
-  private val imageType = graft.schema.Unified.schema("images").dataType
-
   private def priceStruct(value: Column, currency: Column, minQ: Column,
-                          maxQ: Column, desc: Column): Column = struct(
-    value.as("value"), coalesce(currency, lit("GBP")).as("currency"),
-    coalesce(minQ, lit(1)).as("min_quantity"), maxQ.cast("int").as("max_quantity"),
-    lit("unit").as("type"), desc.cast("string").as("description"),
-    lit(null).cast("timestamp").as("valid_until"))
+                          maxQ: Column, desc: Column): Column = Unified.struct(priceSchema,
+    "value" -> value, "currency" -> coalesce(currency, lit("GBP")),
+    "min_quantity" -> coalesce(minQ, lit(1)), "max_quantity" -> maxQ,
+    "type" -> lit("unit"), "description" -> desc)
 
   /** Flatten the five-level deco-charge grid into one broadcastable
     * dimension: printCode → (technique, setup charge, tier prices). */
@@ -158,15 +158,13 @@ object PfConcept {
 
     sc.select(
       col("__dc.printCode").as("__print_code"),
-      struct(
-        canonTechnique(col("__dc.impMethod")).as("technique"),
-        lit("various").as("position"),
-        coalesce(col("__dc.maxColor").try_cast("int"), lit(1)).as("max_colors"),
-        Parsers.parseFloatComma(col("__sc.SetupCharge")).as("setup_charge"),
-        tiers.cast(priceType).as("prices"),
-        lit(null).cast("string").as("lead_time"),
-        lit(false).as("is_default"),
-          lit(null).cast("map<string,string>").as("technique_names")).as("__option"))
+      Unified.struct(printOptionSchema,
+        "technique" -> canonTechnique(col("__dc.impMethod")),
+        "position" -> lit("various"),
+        "max_colors" -> coalesce(col("__dc.maxColor").try_cast("int"), lit(1)),
+        "setup_charge" -> Parsers.parseFloatComma(col("__sc.SetupCharge")),
+        "prices" -> tiers,
+        "is_default" -> lit(false)).as("__option"))
   }
 
   def unified(feed: Feed): DataFrame = {
@@ -196,7 +194,7 @@ object PfConcept {
             try_element_at(rawScales, (i + 1).cast("int"))
               .getField("priceBar").try_cast("int") - 1,
             lit(null))),
-        t => t.getField("value").isNotNull).cast(priceType).as("__tier_prices"))
+        t => t.getField("value").isNotNull).as("__tier_prices"))
 
     // Stock feed: stockDirect now + stockNextPo due-in.
     val stockModels = feed.stockFeed.select(
@@ -205,14 +203,12 @@ object PfConcept {
       explode(FeedReader.asArray(stockModels, col("__sm.items.item"))).as("__si"))
     val stockItems = stockItems0.select(
       col("__si._itemCode").as("__stock_item"),
-      struct(
-        coalesce(col("__si.stockDirect").try_cast("int"), lit(0)).as("available"),
-        filter(array(struct(
-          col("__si.stockNextPo").try_cast("int").as("quantity"),
-          col("__si.stockDateNextPo").cast("string").as("expected_date"))),
-          d => d.getField("quantity").isNotNull).as("due_ins"),
-        array().cast(graft.schema.Unified.stockLocationsType).as("locations"),
-        lit(null).cast("timestamp").as("last_updated")).as("__stock"))
+      Unified.struct(stockSchema,
+        "available" -> coalesce(col("__si.stockDirect").try_cast("int"), lit(0)),
+        "due_ins" -> filter(array(Unified.struct(dueInSchema,
+          "quantity" -> col("__si.stockNextPo").try_cast("int"),
+          "expected_date" -> col("__si.stockDateNextPo"))),
+          d => d.getField("quantity").isNotNull)).as("__stock"))
 
     // Print options: item's decoCharge CSV → explode → broadcast join
     // on printCode → re-nest per item.
@@ -253,17 +249,17 @@ object PfConcept {
     val m = (f: String) => Parsers.parseFloatComma(col(s"__item.measurements.$f"))
     val dims = when(coalesce(m("lengthCm"), m("widthCm"), m("heightCm"),
       m("diameterCm")).isNotNull,
-      struct(m("lengthCm").as("length"), m("widthCm").as("width"),
-        m("heightCm").as("height"), m("diameterCm").as("diameter"),
-        lit("cm").as("unit")))
+      Unified.struct(dimensionsSchema, "length" -> m("lengthCm"), "width" -> m("widthCm"),
+        "height" -> m("heightCm"), "diameter" -> m("diameterCm"), "unit" -> lit("cm")))
 
     // F10: gross preferred over nett; comma-decimal kg strings.
     val weight = {
       val g = Parsers.parseFloatComma(col("__item.measurements.weightGr"))
       val kg = coalesce(Parsers.parseFloatComma(col("__item.grossWeightKg")),
         Parsers.parseFloatComma(col("__item.nettWeightKg")))
-      when(g.isNotNull, struct(g.as("value"), lit("g").as("unit")))
-        .otherwise(when(kg.isNotNull, struct(kg.as("value"), lit("kg").as("unit"))))
+      when(g.isNotNull, Unified.struct(weightSchema, "value" -> g, "unit" -> lit("g")))
+        .otherwise(when(kg.isNotNull,
+          Unified.struct(weightSchema, "value" -> kg, "unit" -> lit("kg"))))
     }
 
     val itemStatus = when(
@@ -271,35 +267,29 @@ object PfConcept {
       "discontinued").otherwise("active")
 
     val deco0 = col("__item.decorationSettings.decoDefault")
-    val defaultOption = when(deco0.getField("method").isNotNull, struct(
-      canonTechnique(deco0.getField("method")).as("technique"),
-      coalesce(deco0.getField("impLocationDefault"), lit("various")).as("position"),
-      coalesce(deco0.getField("maxColoursDefault").try_cast("int"), lit(1)).as("max_colors"),
-      lit(null).cast("double").as("setup_charge"),
-      array().cast(priceType).as("prices"),
-      deco0.getField("leadTime").cast("string").as("lead_time"),
-      lit(true).as("is_default"),
-      lit(null).cast("map<string,string>").as("technique_names")))
+    val defaultOption = when(deco0.getField("method").isNotNull, Unified.struct(printOptionSchema,
+      "technique" -> canonTechnique(deco0.getField("method")),
+      "position" -> coalesce(deco0.getField("impLocationDefault"), lit("various")),
+      "max_colors" -> coalesce(deco0.getField("maxColoursDefault").try_cast("int"), lit(1)),
+      "lead_time" -> deco0.getField("leadTime"),
+      "is_default" -> lit(true)))
 
-    val variantStruct = struct(
-      coalesce(col("__item._itemCode"), lit("")).as("sku"),
-      col("__item._itemCode").as("variant_id"),
-      when(firstColor.isNotNull, struct(
-        coalesce(firstColor.getField("_colorCode"), lit("")).as("code"),
-        coalesce(firstColor.getField("colorDesc"), lit("")).as("name"),
-        firstColor.getField("hexColor").cast("string").as("hex_color"),
-        firstColor.getField("pmsColorReference").cast("string").as("pms_color"),
-        array().cast(imageType).as("images"),
-        lit("active").as("status"))).as("color"),
-      col("__item.size").cast("string").as("size"),
-      lit(null).cast("string").as("material_variant"),
-      dims.as("dimensions"),
-      weight.as("weight"),
-      coalesce(col("__tier_prices"), array().cast(priceType)).as("prices"),
-      col("__stock").as("stock"),
-      array().cast(imageType).as("images"),
-      itemStatus.as("status"),
-      col("__item.eanCode").cast("string").as("gtin"))
+    val variantStruct = Unified.struct(variantSchema,
+      "sku" -> coalesce(col("__item._itemCode"), lit("")),
+      "variant_id" -> col("__item._itemCode"),
+      "color" -> when(firstColor.isNotNull, Unified.struct(colorSchema,
+        "code" -> coalesce(firstColor.getField("_colorCode"), lit("")),
+        "name" -> coalesce(firstColor.getField("colorDesc"), lit("")),
+        "hex_color" -> firstColor.getField("hexColor"),
+        "pms_color" -> firstColor.getField("pmsColorReference"),
+        "status" -> lit("active"))),
+      "size" -> col("__item.size"),
+      "dimensions" -> dims,
+      "weight" -> weight,
+      "prices" -> coalesce(col("__tier_prices"), array()),
+      "stock" -> col("__stock"),
+      "status" -> itemStatus,
+      "gtin" -> col("__item.eanCode"))
 
     val imageFields = Seq(
       "imageMain" -> "main", "imageFront" -> "front", "imageBack" -> "back",
@@ -308,9 +298,8 @@ object PfConcept {
       "imageDetail1" -> "detail", "imageDetail2" -> "detail",
       "imageDetail3" -> "detail")
     val images = filter(array(imageFields.map { case (f, t) =>
-      struct(nullif(col("__imagedata").getField(f), lit("")).as("url"),
-        lit(t).as("type"), lit(null).cast("string").as("description"),
-        lit(null).cast("string").as("color_variant")) }: _*),
+      Unified.struct(imageSchema,
+        "url" -> nullif(col("__imagedata").getField(f), lit("")), "type" -> lit(t)) }: _*),
       i => i.getField("url").isNotNull)
 
     val parentCols = Seq("description", "extDesc", "keywords",
@@ -337,9 +326,7 @@ object PfConcept {
 
     val grouped = joined
       .select(Seq(col("__model"), col("__pos"),
-        variantStruct.cast(graft.schema.Unified.schema("variants").dataType
-          .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType)
-          .as("__variant")) ++ parentCols.map(col) ++ parentFromItem: _*)
+        variantStruct.as("__variant")) ++ parentCols.map(col) ++ parentFromItem: _*)
       .groupBy(col("__model"))
       .agg(
         min_by(struct(parentCols.map(col) ++ Seq(col("__coo"), col("__hs"),
@@ -359,76 +346,62 @@ object PfConcept {
       .select(col("__model"), col("__p.*"), col("variants"), col("__related_all"))
 
     val categories = filter(array(
-      struct(col("__catdata").getField("groupCode").cast("string").as("id"),
-        col("__catdata").getField("groupDesc").as("name"),
-        lit(1).as("level"), lit(null).cast("string").as("parent_id")),
-      struct(col("__catdata").getField("catCode").cast("string").as("id"),
-        col("__catdata").getField("catDesc").as("name"),
-        lit(2).as("level"),
-        col("__catdata").getField("groupCode").cast("string").as("parent_id"))),
+      Unified.struct(categorySchema,
+        "id" -> col("__catdata").getField("groupCode"),
+        "name" -> col("__catdata").getField("groupDesc"),
+        "level" -> lit(1)),
+      Unified.struct(categorySchema,
+        "id" -> col("__catdata").getField("catCode"),
+        "name" -> col("__catdata").getField("catDesc"),
+        "level" -> lit(2),
+        "parent_id" -> col("__catdata").getField("groupCode"))),
       c => c.getField("name").isNotNull)
 
     val printOptions = concat(
       filter(array(col("__default_option")), o => o.isNotNull),
-      coalesce(col("__print_options"),
-        array().cast(graft.schema.Unified.schema("print_options").dataType)))
+      coalesce(col("__print_options"), array()))
+    val firstVariant = try_element_at(col("variants"), lit(1))
 
-    grouped.select(
-      concat(lit("pfconcept_"), coalesce(col("__model"), lit(""))).as("product_id"),
-      struct(lit(supplierId).as("id"), lit("PF Concept").as("name"),
-        lit(null).cast("string").as("api_version"),
-        lit(null).cast("map<string,string>").as("contact_info")).as("supplier"),
-      coalesce(col("__model"), lit("")).as("supplier_product_code"),
-      coalesce(col("description"), lit("")).as("name"),
-      lit(null).cast("string").as("title"),
-      col("productComments").as("short_description"),
-      col("extDesc").as("long_description"),
-      Parsers.splitKeywords(col("keywords")).as("keywords"),
-      categories.cast(graft.schema.Unified.schema("categories").dataType).as("categories"),
-      nullif(col("__brand"), lit("")).as("brand"),
-      try_element_at(col("variants"), lit(1)).getField("dimensions").as("dimensions"),
-      try_element_at(col("variants"), lit(1)).getField("weight").as("weight"),
-      nullif(col("__material"), lit("")).as("material"),
-      array_distinct(filter(
+    grouped.select(Unified.fill(Unified.schema,
+      "product_id" -> concat(lit("pfconcept_"), coalesce(col("__model"), lit(""))),
+      "supplier" -> Unified.struct(supplierSchema,
+        "id" -> lit(supplierId), "name" -> lit("PF Concept")),
+      "supplier_product_code" -> coalesce(col("__model"), lit("")),
+      "name" -> coalesce(col("description"), lit("")),
+      "short_description" -> col("productComments"),
+      "long_description" -> col("extDesc"),
+      "keywords" -> Parsers.splitKeywords(col("keywords")),
+      "categories" -> categories,
+      "brand" -> nullif(col("__brand"), lit("")),
+      "dimensions" -> firstVariant.getField("dimensions"),
+      "weight" -> firstVariant.getField("weight"),
+      "material" -> nullif(col("__material"), lit("")),
+      "colors_available" -> array_distinct(filter(
         transform(col("variants"), v => v.getField("color").getField("name")),
-        c => c.isNotNull)).as("colors_available"),
-      col("variants"),
-      try_element_at(col("variants"), lit(1)).getField("prices").as("base_prices"),
-      (size(printOptions) > 0).as("is_printable"),
-      array().cast(graft.schema.Unified.schema("print_positions").dataType).as("print_positions"),
-      printOptions.cast(graft.schema.Unified.schema("print_options").dataType)
-        .as("print_options"),
-      images.cast(imageType).as("images"),
-      coalesce(col("__artwork"), array().cast("array<string>")).as("artwork_templates"),
-      coalesce(col("__min_deco_qty"), lit(1)).as("minimum_order_quantity"),
-      col("__carton").as("carton_quantity"),
-      lit(null).cast("string").as("lead_time"),
-      array().cast(graft.schema.Unified.schema("shipping_options").dataType).as("shipping_options"),
-      initcap(lower(nullif(col("__coo"), lit("")))).as("country_of_origin"),
-      nullif(col("__hs"), lit("")).as("tariff_code"),
-      lit(null).cast("string").as("commodity_code"),
-      when(exists(col("variants"), v => v.getField("status") === "active"), "active")
-        .otherwise("discontinued").as("status"),
-      lit(null).cast(graft.schema.Unified.schema("packaging").dataType).as("packaging"),
-      lit(null).cast(graft.schema.Unified.schema("sustainability").dataType).as("sustainability"),
-      lit(null).cast(graft.schema.Unified.schema("lifecycle").dataType).as("lifecycle"),
-      coalesce(col("__related_all"), array().cast("array<string>"))
-        .cast("array<string>").as("related_products"),
-      array().cast("array<string>").as("alternative_products"),
-      lit(null).cast(graft.schema.Unified.schema("localized").dataType).as("localized"),
+        c => c.isNotNull)),
+      "variants" -> col("variants"),
+      "base_prices" -> firstVariant.getField("prices"),
+      "is_printable" -> (size(printOptions) > 0),
+      "print_options" -> printOptions,
+      "images" -> images,
+      "artwork_templates" -> coalesce(col("__artwork"), array()),
+      "minimum_order_quantity" -> coalesce(col("__min_deco_qty"), lit(1)),
+      "carton_quantity" -> col("__carton"),
+      "country_of_origin" -> initcap(lower(nullif(col("__coo"), lit("")))),
+      "tariff_code" -> nullif(col("__hs"), lit("")),
+      "status" -> when(exists(col("variants"), v => v.getField("status") === "active"), "active")
+        .otherwise("discontinued"),
+      "related_products" -> coalesce(col("__related_all"), array()),
       // Open attributes (ref unified.jsonc:79-84 variantAttributes
       // sizeGrid/sizeRange/gender — product-wide in the PFC feed).
-      map_filter(map(
+      "product_extra_data" -> map_filter(map(
         lit("sizeGrid"), nullif(col("__size_grid"), lit("")),
         lit("sizeRange"), nullif(col("__size_range"), lit("")),
         lit("gender"), nullif(col("__gender"), lit(""))),
-        (_, v) => v.isNotNull).as("product_extra_data"),
-      lit(null).cast("timestamp").as("created_at"),
-      lit(null).cast("timestamp").as("updated_at"),
-      lit(null).cast("timestamp").as("last_sync"),
+        (_, v) => v.isNotNull),
       // First item's full source row (ref unified_product_schema.py:201).
-      to_json(struct(col("__model").as("modelCode"),
-        col("__raw_item").as("firstItem"))).as("raw_data"))
+      "raw_data" -> to_json(struct(col("__model").as("modelCode"),
+        col("__raw_item").as("firstItem")))): _*)
   }
 
   def unified(spark: SparkSession, path: String): DataFrame =

@@ -3,6 +3,9 @@ package graft.suppliers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Parsers
+import graft.schema.Unified
+import graft.schema.Unified.{dimensionsSchema, imageSchema, priceSchema, printOptionSchema,
+  supplierSchema, variantSchema, weightSchema}
 import graft.sources.FeedReader
 
 /** Preseli supplier pipeline: single-product response with nested
@@ -56,118 +59,76 @@ object Preseli {
     // Per-unit product price tiers: every (technique, quantity) block's
     // Type='Product' detail.
     val priceBlocks = coalesce(col("Prices.Price"), array())
+    val detail = (b: Column, t: String) =>
+      try_element_at(filter(b.getField("PriceDetails"), d => d.getField("Type") === t), lit(1))
+        .getField("Value").try_cast("double")
     val tierPrices = filter(
-      transform(priceBlocks, b => struct(
-        try_element_at(
-          filter(b.getField("PriceDetails"), d => d.getField("Type") === "Product"), lit(1))
-          .getField("Value").try_cast("double").as("value"),
-        lit("GBP").as("currency"),
-        b.getField("Quantity").try_cast("int").as("min_quantity"),
-        lit(null).cast("int").as("max_quantity"),
-        lit("unit").as("type"),
-        b.getField("Name").as("description"),
-        lit(null).cast("timestamp").as("valid_until"))),
+      transform(priceBlocks, b => Unified.struct(priceSchema,
+        "value" -> detail(b, "Product"),
+        "currency" -> lit("GBP"),
+        "min_quantity" -> b.getField("Quantity").try_cast("int"),
+        "type" -> lit("unit"),
+        "description" -> b.getField("Name"))),
       p => p.getField("value").isNotNull && p.getField("min_quantity").isNotNull)
 
     val printOptions = filter(
-      transform(priceBlocks, b => struct(
-        element_at(techniqueCol, b.getField("Name")).as("technique"),
-        lit("various").as("position"),
-        lit(1).as("max_colors"),
-        try_element_at(
-          filter(b.getField("PriceDetails"), d => d.getField("Type") === "Additional Charge"), lit(1))
-          .getField("Value").try_cast("double").as("setup_charge"),
-        array().cast(graft.schema.Unified.schema("base_prices").dataType).as("prices"),
-        lit(null).cast("string").as("lead_time"),
-        lit(false).as("is_default"),
-          lit(null).cast("map<string,string>").as("technique_names"))),
+      transform(priceBlocks, b => Unified.struct(printOptionSchema,
+        "technique" -> element_at(techniqueCol, b.getField("Name")),
+        "position" -> lit("various"),
+        "max_colors" -> lit(1),
+        "setup_charge" -> detail(b, "Additional Charge"),
+        "is_default" -> lit(false))),
       o => o.getField("technique").isNotNull)
 
-    val images = transform(coalesce(col("Images.Image"), array()), u => struct(
-      u.as("url"), lit("product").as("type"),
-      lit(null).cast("string").as("description"),
-      lit(null).cast("string").as("color_variant")))
+    val images = transform(coalesce(col("Images.Image"), array()),
+      u => Unified.struct(imageSchema, "url" -> u, "type" -> lit("product")))
 
     val dims = {
       val h = Parsers.parseFloatComma(col("Height"))
       val w = Parsers.parseFloatComma(col("Width"))
-      when(coalesce(h, w).isNotNull, struct(
-        lit(null).cast("double").as("length"), w.as("width"), h.as("height"),
-        lit(null).cast("double").as("diameter"),
-        coalesce(lower(col("DimensionUnit")), lit("mm")).as("unit")))
+      when(coalesce(h, w).isNotNull, Unified.struct(dimensionsSchema,
+        "width" -> w, "height" -> h, "unit" -> coalesce(lower(col("DimensionUnit")), lit("mm"))))
     }
     val weight = {
       val v = Parsers.parseFloatComma(col("Weight"))
-      when(v.isNotNull, struct(v.as("value"),
-        coalesce(lower(col("WeightUnit")), lit("g")).as("unit")))
+      when(v.isNotNull, Unified.struct(weightSchema,
+        "value" -> v, "unit" -> coalesce(lower(col("WeightUnit")), lit("g"))))
     }
 
-    val variant = struct(
-      coalesce(col("ProductCode"), lit("")).as("sku"),
-      lit(null).cast("string").as("variant_id"),
-      lit(null).cast(graft.schema.Unified.schema("variants").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]("color").dataType).as("color"),
-      nullif(col("Size"), lit("")).as("size"),
-      lit(null).cast("string").as("material_variant"),
-      lit(null).cast(graft.schema.Unified.schema("dimensions").dataType).as("dimensions"),
-      lit(null).cast(graft.schema.Unified.schema("weight").dataType).as("weight"),
-      tierPrices.cast(graft.schema.Unified.schema("base_prices").dataType).as("prices"),
-      lit(null).cast(graft.schema.Unified.schema("variants").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]("stock").dataType).as("stock"),
-      images.cast(graft.schema.Unified.schema("images").dataType).as("images"),
-      lit("active").as("status"),
-      lit(null).cast("string").as("gtin"))
+    val variant = Unified.struct(variantSchema,
+      "sku" -> coalesce(col("ProductCode"), lit("")),
+      "size" -> nullif(col("Size"), lit("")),
+      "prices" -> tierPrices,
+      "images" -> images,
+      "status" -> lit("active"))
 
-    products.select(
-      concat(lit("preseli_"), coalesce(col("ProductCode"), lit(""))).as("product_id"),
-      struct(lit(supplierId).as("id"), lit("Preseli").as("name"),
-        lit("v1").as("api_version"),
-        lit(null).cast("map<string,string>").as("contact_info")).as("supplier"),
-      coalesce(col("ProductCode"), lit("")).as("supplier_product_code"),
-      coalesce(col("ProductName"), lit("")).as("name"),
-      lit(null).cast("string").as("title"),
-      lit(null).cast("string").as("short_description"),
-      col("Description").as("long_description"),
-      array().cast("array<string>").as("keywords"),
-      array().cast(graft.schema.Unified.schema("categories").dataType).as("categories"),
-      lit(null).cast("string").as("brand"),
-      dims.as("dimensions"),
-      weight.as("weight"),
-      nullif(col("Material"), lit("")).as("material"),
-      coalesce(col("Colours.Colour"), array().cast("array<string>")).as("colors_available"),
-      array(variant).cast(graft.schema.Unified.schema("variants").dataType).as("variants"),
-      tierPrices.cast(graft.schema.Unified.schema("base_prices").dataType).as("base_prices"),
-      (size(priceBlocks) > 0).as("is_printable"),
-      array().cast(graft.schema.Unified.schema("print_positions").dataType).as("print_positions"),
-      printOptions.cast(graft.schema.Unified.schema("print_options").dataType).as("print_options"),
-      images.cast(graft.schema.Unified.schema("images").dataType).as("images"),
-      filter(array(col("Artwork")), a => a.isNotNull).as("artwork_templates"),
-      lit(1).as("minimum_order_quantity"),
-      lit(null).cast("int").as("carton_quantity"),
-      nullif(col("LeadTime"), lit("")).as("lead_time"),
-      array().cast(graft.schema.Unified.schema("shipping_options").dataType).as("shipping_options"),
-      lit(null).cast("string").as("country_of_origin"),
-      lit(null).cast("string").as("tariff_code"),
-      lit(null).cast("string").as("commodity_code"),
-      lit("active").as("status"),
-      lit(null).cast(graft.schema.Unified.schema("packaging").dataType).as("packaging"),
-      lit(null).cast(graft.schema.Unified.schema("sustainability").dataType).as("sustainability"),
-      lit(null).cast(graft.schema.Unified.schema("lifecycle").dataType).as("lifecycle"),
-      array().cast("array<string>").as("related_products"),
-      array().cast("array<string>").as("alternative_products"),
-      lit(null).cast(graft.schema.Unified.schema("localized").dataType).as("localized"),
+    products.select(Unified.fill(Unified.schema,
+      "product_id" -> concat(lit("preseli_"), coalesce(col("ProductCode"), lit(""))),
+      "supplier" -> Unified.struct(supplierSchema,
+        "id" -> lit(supplierId), "name" -> lit("Preseli"), "api_version" -> lit("v1")),
+      "supplier_product_code" -> coalesce(col("ProductCode"), lit("")),
+      "name" -> coalesce(col("ProductName"), lit("")),
+      "long_description" -> col("Description"),
+      "dimensions" -> dims,
+      "weight" -> weight,
+      "material" -> nullif(col("Material"), lit("")),
+      "colors_available" -> coalesce(col("Colours.Colour"), array()),
+      "variants" -> array(variant),
+      "base_prices" -> tierPrices,
+      "is_printable" -> (size(priceBlocks) > 0),
+      "print_options" -> printOptions,
+      "images" -> images,
+      "artwork_templates" -> filter(array(col("Artwork")), a => a.isNotNull),
+      "minimum_order_quantity" -> lit(1),
+      "lead_time" -> nullif(col("LeadTime"), lit("")),
+      "status" -> lit("active"),
       // Open attributes (ref unified.jsonc:108 dataSheet "Preseli
       // style"): datasheet + end-user site URLs.
-      map_filter(map(
+      "product_extra_data" -> map_filter(map(
         lit("dataSheet"), col("DataSheet").cast("string"),
         lit("endUserWebsite"), col("EndUserWebsite").cast("string")),
-        (_, v) => v.isNotNull).as("product_extra_data"),
-      lit(null).cast("timestamp").as("created_at"),
-      lit(null).cast("timestamp").as("updated_at"),
-      lit(null).cast("timestamp").as("last_sync"),
-      to_json(struct(products.columns.toSeq.map(col): _*)).as("raw_data"))
+        (_, v) => v.isNotNull),
+      "raw_data" -> to_json(struct(products.columns.toSeq.map(col): _*))): _*)
   }
 
   def unified(spark: SparkSession, path: String): DataFrame =

@@ -3,6 +3,9 @@ package graft.suppliers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Nest
+import graft.schema.Unified
+import graft.schema.Unified.{categorySchema, colorSchema, imageSchema, priceSchema,
+  supplierSchema, variantSchema, weightSchema}
 import graft.sources.FeedReader
 
 /** Ralawise supplier pipeline: flat per-SKU rows → unified products.
@@ -43,55 +46,37 @@ object Ralawise {
   def unified(feed: Feed): DataFrame = {
     val rows = FeedReader.conform(feed.skuRows, skuCols)
 
-    val img = (url: Column, t: String) => struct(
-      url.as("url"), lit(t).as("type"),
-      lit(null).cast("string").as("description"),
-      lit(null).cast("string").as("color_variant"))
+    val img = (url: Column, t: String) =>
+      Unified.struct(imageSchema, "url" -> url, "type" -> lit(t))
+    val colourImages = filter(array(img(col("`Colour Image`"), "colour")),
+      i => i.getField("url").isNotNull)
 
-    val variantStruct = struct(
-      coalesce(col("`Sku Code`"), lit("")).as("sku"),
-      lit(null).cast("string").as("variant_id"),
-      struct(
-        coalesce(col("`Colour Code`"), lit("")).as("code"),
-        coalesce(col("`Colour Name`"), lit("")).as("name"),
-        lit(null).cast("string").as("hex_color"),
-        nullif(col("Pantone"), lit("")).as("pms_color"),
-        filter(array(img(col("`Colour Image`"), "colour")),
-          i => i.getField("url").isNotNull).as("images"),
-        lit("active").as("status")).as("color"),
-      col("`Size Name`").as("size"),
-      lit(null).cast("string").as("material_variant"),
-      lit(null).cast(graft.schema.Unified.schema("dimensions").dataType).as("dimensions"),
-      when(col("`Item Weight in KG`").isNotNull,
-        struct(col("`Item Weight in KG`").cast("double").as("value"), lit("kg").as("unit")))
-        .as("weight"),
-      when(col("`Single Price`").isNotNull, array(struct(
-        col("`Single Price`").cast("double").as("value"),
-        lit("GBP").as("currency"), lit(1).as("min_quantity"),
-        lit(null).cast("int").as("max_quantity"), lit("unit").as("type"),
-        lit(null).cast("string").as("description"),
-        lit(null).cast("timestamp").as("valid_until"))))
-        .otherwise(array().cast(graft.schema.Unified.schema("base_prices").dataType))
-        .as("prices"),
-      lit(null).cast(
-        graft.schema.Unified.schema("variants").dataType
-          .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-          .asInstanceOf[org.apache.spark.sql.types.StructType]("stock").dataType).as("stock"),
-      filter(array(img(col("`Colour Image`"), "colour")),
-        i => i.getField("url").isNotNull).as("images"),
-      when(upper(coalesce(col("`Sku Status`"), lit("LIVE"))) === "LIVE", "active")
-        .otherwise("discontinued").as("status"),
-      nullif(nullif(col("`EAN Code`"), lit("")), lit("Not available")).as("gtin"))
+    val variantStruct = Unified.struct(variantSchema,
+      "sku" -> coalesce(col("`Sku Code`"), lit("")),
+      "color" -> Unified.struct(colorSchema,
+        "code" -> coalesce(col("`Colour Code`"), lit("")),
+        "name" -> coalesce(col("`Colour Name`"), lit("")),
+        "pms_color" -> nullif(col("Pantone"), lit("")),
+        "images" -> colourImages,
+        "status" -> lit("active")),
+      "size" -> col("`Size Name`"),
+      "weight" -> when(col("`Item Weight in KG`").isNotNull, Unified.struct(weightSchema,
+        "value" -> col("`Item Weight in KG`"), "unit" -> lit("kg"))),
+      "prices" -> when(col("`Single Price`").isNotNull, array(Unified.struct(priceSchema,
+        "value" -> col("`Single Price`"), "currency" -> lit("GBP"),
+        "min_quantity" -> lit(1), "type" -> lit("unit"))))
+        .otherwise(array()),
+      "images" -> colourImages,
+      "status" -> when(upper(coalesce(col("`Sku Status`"), lit("LIVE"))) === "LIVE", "active")
+        .otherwise("discontinued"),
+      "gtin" -> nullif(nullif(col("`EAN Code`"), lit("")), lit("Not available")))
 
     val parentCols = Seq("Style Name", "Brand", "Specification", "Retail Description",
       "Fabric", "Categorisation", "Carton Quantity", "Commodity Code",
       "Country of Origin", "Primary Product Image URL", "Product Type")
 
     val grouped = Nest.rollupWithParent(
-      rows, Seq("Style Code"), parentCols,
-      variantStruct.cast(graft.schema.Unified.schema("variants").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType),
-      col("`Sku Code`"), "variants")
+      rows, Seq("Style Code"), parentCols, variantStruct, col("`Sku Code`"), "variants")
 
     val colorsAvailable = array_distinct(transform(col("variants"),
       v => v.getField("color").getField("name")))
@@ -100,61 +85,36 @@ object Ralawise {
       zip_with(
         split(coalesce(col("Categorisation"), lit("")), "\\|"),
         sequence(lit(1), greatest(size(split(coalesce(col("Categorisation"), lit("")), "\\|")), lit(1))),
-        (name, level) => struct(
-          lit(null).cast("string").as("id"), trim(name).as("name"),
-          level.cast("int").as("level"), lit(null).cast("string").as("parent_id"))),
+        (name, level) => Unified.struct(categorySchema, "name" -> trim(name), "level" -> level)),
       c => c.getField("name").isNotNull && c.getField("name") =!= "")
 
-    grouped.select(
-      concat(lit("ralawise_"), coalesce(col("`Style Code`"), lit(""))).as("product_id"),
-      struct(lit(supplierId).as("id"), lit("Ralawise").as("name"),
-        lit(null).cast("string").as("api_version"),
-        lit(null).cast("map<string,string>").as("contact_info")).as("supplier"),
-      coalesce(col("`Style Code`"), lit("")).as("supplier_product_code"),
-      coalesce(col("`Style Name`"), lit("")).as("name"),
-      lit(null).cast("string").as("title"),
-      col("`Retail Description`").as("short_description"),
-      col("Specification").as("long_description"),
-      filter(array(nullif(col("`Product Type`"), lit(""))), k => k.isNotNull).as("keywords"),
-      categories.cast(graft.schema.Unified.schema("categories").dataType).as("categories"),
-      nullif(col("Brand"), lit("")).as("brand"),
-      lit(null).cast(graft.schema.Unified.schema("dimensions").dataType).as("dimensions"),
-      lit(null).cast(graft.schema.Unified.schema("weight").dataType).as("weight"),
-      nullif(col("Fabric"), lit("")).as("material"),
-      colorsAvailable.as("colors_available"),
-      col("variants"),
-      slice(try_element_at(col("variants"), lit(1)).getField("prices"), 1, 1).as("base_prices"),
-      lit(false).as("is_printable"),
-      array().cast(graft.schema.Unified.schema("print_positions").dataType).as("print_positions"),
-      array().cast(graft.schema.Unified.schema("print_options").dataType).as("print_options"),
-      filter(array(struct(
-        col("`Primary Product Image URL`").as("url"), lit("primary").as("type"),
-        lit(null).cast("string").as("description"),
-        lit(null).cast("string").as("color_variant"))),
-        i => i.getField("url").isNotNull).as("images"),
-      array().cast("array<string>").as("artwork_templates"),
-      lit(1).as("minimum_order_quantity"),
-      col("`Carton Quantity`").try_cast("int").as("carton_quantity"),
-      lit(null).cast("string").as("lead_time"),
-      array().cast(graft.schema.Unified.schema("shipping_options").dataType).as("shipping_options"),
-      nullif(col("`Country of Origin`"), lit("")).as("country_of_origin"),
-      nullif(col("`Commodity Code`"), lit("")).as("tariff_code"),
-      lit(null).cast("string").as("commodity_code"),
-      lit("active").as("status"),
-      lit(null).cast(graft.schema.Unified.schema("packaging").dataType).as("packaging"),
-      lit(null).cast(graft.schema.Unified.schema("sustainability").dataType).as("sustainability"),
-      lit(null).cast(graft.schema.Unified.schema("lifecycle").dataType).as("lifecycle"),
-      array().cast("array<string>").as("related_products"),
-      array().cast("array<string>").as("alternative_products"),
-      lit(null).cast(graft.schema.Unified.schema("localized").dataType).as("localized"),
-      lit(null).cast("map<string,string>").as("product_extra_data"),
-      lit(null).cast("timestamp").as("created_at"),
-      lit(null).cast("timestamp").as("updated_at"),
-      lit(null).cast("timestamp").as("last_sync"),
+    grouped.select(Unified.fill(Unified.schema,
+      "product_id" -> concat(lit("ralawise_"), coalesce(col("`Style Code`"), lit(""))),
+      "supplier" -> Unified.struct(supplierSchema,
+        "id" -> lit(supplierId), "name" -> lit("Ralawise")),
+      "supplier_product_code" -> coalesce(col("`Style Code`"), lit("")),
+      "name" -> coalesce(col("`Style Name`"), lit("")),
+      "short_description" -> col("`Retail Description`"),
+      "long_description" -> col("Specification"),
+      "keywords" -> filter(array(nullif(col("`Product Type`"), lit(""))), k => k.isNotNull),
+      "categories" -> categories,
+      "brand" -> nullif(col("Brand"), lit("")),
+      "material" -> nullif(col("Fabric"), lit("")),
+      "colors_available" -> colorsAvailable,
+      "variants" -> col("variants"),
+      "base_prices" -> slice(try_element_at(col("variants"), lit(1)).getField("prices"), 1, 1),
+      "is_printable" -> lit(false),
+      "images" -> filter(array(img(col("`Primary Product Image URL`"), "primary")),
+        i => i.getField("url").isNotNull),
+      "minimum_order_quantity" -> lit(1),
+      "carton_quantity" -> col("`Carton Quantity`").try_cast("int"),
+      "country_of_origin" -> nullif(col("`Country of Origin`"), lit("")),
+      "tariff_code" -> nullif(col("`Commodity Code`"), lit("")),
+      "status" -> lit("active"),
       // Style-level source fields, as the reference keeps per-document
       // raw_data (unified_product_schema.py:201).
-      to_json(struct((Seq("Style Code") ++ parentCols)
-        .map(c => col(s"`$c`").as(c)): _*)).as("raw_data"))
+      "raw_data" -> to_json(struct((Seq("Style Code") ++ parentCols)
+        .map(c => col(s"`$c`").as(c)): _*))): _*)
   }
 
   def unified(spark: SparkSession, path: String): DataFrame =

@@ -2,6 +2,9 @@ package graft.suppliers
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.Unified
+import graft.schema.Unified.{categorySchema, colorSchema, dueInSchema, imageSchema,
+  priceSchema, stockLocationSchema, stockSchema, supplierSchema, variantSchema, weightSchema}
 import graft.sources.FeedReader
 
 /** S&S Activewear supplier pipeline: flat per-SKU rows + three
@@ -39,13 +42,8 @@ object SandS {
       "styles.Response" -> styleCols,
       "specs.Response" -> specCols))))
 
-  private val priceType = graft.schema.Unified.schema("base_prices").dataType
-  private val imageType = graft.schema.Unified.schema("images").dataType
-
   private def img(url: Column, t: String, colorVariant: Column = lit(null)): Column =
-    struct(url.as("url"), lit(t).as("type"),
-      lit(null).cast("string").as("description"),
-      colorVariant.cast("string").as("color_variant"))
+    Unified.struct(imageSchema, "url" -> url, "type" -> lit(t), "color_variant" -> colorVariant)
 
   /** Strip the HTML the styles descriptions arrive in (ref:
     * s&s.jsonc:101 — `<ul><li>...`): tags → space, entities decoded
@@ -92,11 +90,8 @@ object SandS {
       .groupBy(col("__sc_style"))
       .agg(transform(
         array_sort(collect_list(struct(col("__pos").as("o"),
-          struct(
-            col("__cat_id").cast("string").as("id"),
-            col("__cat_name").as("name"),
-            lit(2).as("level"),
-            lit(null).cast("string").as("parent_id")).as("v")))),
+          Unified.struct(categorySchema,
+            "id" -> col("__cat_id"), "name" -> col("__cat_name"), "level" -> lit(2)).as("v")))),
         x => x.getField("v")).as("__style_cats"))
 
     // Specs: per-style key/value rows → a map (F19 flavor).
@@ -122,47 +117,38 @@ object SandS {
 
     // Tiered wholesale prices: piece (1+), dozen (12+), case (caseQty+),
     // plus a sale price bounded by saleExpiration.
+    val price = (value: String, minQ: Column, maxQ: Column, desc: String) =>
+      Unified.struct(priceSchema,
+        "value" -> col(value).try_cast("double"), "currency" -> lit("USD"),
+        "min_quantity" -> minQ, "max_quantity" -> maxQ, "type" -> lit("unit"),
+        "description" -> lit(desc))
     val prices = filter(array(
-      struct(col("piecePrice").try_cast("double").as("value"),
-        lit("USD").as("currency"), lit(1).as("min_quantity"),
-        lit(11).cast("int").as("max_quantity"), lit("unit").as("type"),
-        lit("piece").cast("string").as("description"),
-        lit(null).cast("timestamp").as("valid_until")),
-      struct(col("dozenPrice").try_cast("double").as("value"),
-        lit("USD").as("currency"), lit(12).as("min_quantity"),
-        (coalesce(col("caseQty").try_cast("int"), lit(0)) - 1).as("max_quantity"),
-        lit("unit").as("type"), lit("dozen").cast("string").as("description"),
-        lit(null).cast("timestamp").as("valid_until")),
-      struct(col("casePrice").try_cast("double").as("value"),
-        lit("USD").as("currency"),
-        coalesce(col("caseQty").try_cast("int"), lit(1)).as("min_quantity"),
-        lit(null).cast("int").as("max_quantity"), lit("unit").as("type"),
-        lit("case").cast("string").as("description"),
-        lit(null).cast("timestamp").as("valid_until")),
-      struct(col("salePrice").try_cast("double").as("value"),
-        lit("USD").as("currency"), lit(1).as("min_quantity"),
-        lit(null).cast("int").as("max_quantity"), lit("unit").as("type"),
-        lit("sale").cast("string").as("description"),
-        col("saleExpiration").try_cast("timestamp").as("valid_until"))),
+      price("piecePrice", lit(1), lit(11), "piece"),
+      price("dozenPrice", lit(12), coalesce(col("caseQty").try_cast("int"), lit(0)) - 1, "dozen"),
+      price("casePrice", coalesce(col("caseQty").try_cast("int"), lit(1)), lit(null), "case"),
+      Unified.struct(priceSchema,
+        "value" -> col("salePrice").try_cast("double"), "currency" -> lit("USD"),
+        "min_quantity" -> lit(1), "type" -> lit("unit"), "description" -> lit("sale"),
+        "valid_until" -> col("saleExpiration").try_cast("timestamp"))),
       p => p.getField("value").isNotNull && p.getField("value") > 0)
 
     // Stock: total qty, per-warehouse due-ins (expected inventory), and
     // the per-warehouse snapshot itself (ref unified.jsonc:249-257
     // stock.locations — warehouseAbbr is both id and name; the feed
     // carries no per-warehouse country).
-    val stock = struct(
-      coalesce(col("qty").try_cast("int"), lit(0)).as("available"),
-      filter(transform(coalesce(col("warehouses"), array()), w => struct(
-        w.getField("qty").try_cast("int").as("quantity"),
-        w.getField("expectedInventory").cast("string").as("expected_date"))),
-        d => d.getField("quantity").isNotNull).as("due_ins"),
-      filter(transform(coalesce(col("warehouses"), array()), w => struct(
-        w.getField("warehouseAbbr").cast("string").as("id"),
-        w.getField("warehouseAbbr").cast("string").as("name"),
-        lit(null).cast("string").as("country"),
-        w.getField("qty").try_cast("int").as("qty"))),
-        l => l.getField("qty").isNotNull).as("locations"),
-      lit(null).cast("timestamp").as("last_updated"))
+    val stock = Unified.struct(stockSchema,
+      "available" -> coalesce(col("qty").try_cast("int"), lit(0)),
+      "due_ins" -> filter(transform(coalesce(col("warehouses"), array()),
+        w => Unified.struct(dueInSchema,
+          "quantity" -> w.getField("qty").try_cast("int"),
+          "expected_date" -> w.getField("expectedInventory"))),
+        d => d.getField("quantity").isNotNull),
+      "locations" -> filter(transform(coalesce(col("warehouses"), array()),
+        w => Unified.struct(stockLocationSchema,
+          "id" -> w.getField("warehouseAbbr"),
+          "name" -> w.getField("warehouseAbbr"),
+          "qty" -> w.getField("qty").try_cast("int"))),
+        l => l.getField("qty").isNotNull))
 
     val colorImages = filter(array(
       img(col("colorFrontImage"), "front", col("colorName")),
@@ -171,100 +157,68 @@ object SandS {
       img(col("colorSwatchImage"), "swatch", col("colorName"))),
       i => i.getField("url").isNotNull && i.getField("url") =!= "")
 
-    val variantStruct = struct(
-      coalesce(col("sku"), lit("")).as("sku"),
-      col("skuID_Master").cast("string").as("variant_id"),
-      struct(
-        coalesce(col("colorCode"), lit("")).as("code"),
-        coalesce(col("colorName"), lit("")).as("name"),
-        nullif(col("color1"), lit("")).as("hex_color"),
-        lit(null).cast("string").as("pms_color"),
-        colorImages.cast(imageType).as("images"),
-        lit("active").as("status")).as("color"),
-      col("sizeName").as("size"),
-      lit(null).cast("string").as("material_variant"),
-      lit(null).cast(graft.schema.Unified.schema("dimensions").dataType).as("dimensions"),
-      when(col("unitWeight").isNotNull,
-        struct(col("unitWeight").try_cast("double").as("value"), lit("lb").as("unit")))
-        .as("weight"),
-      prices.cast(priceType).as("prices"),
-      stock.as("stock"),
-      colorImages.cast(imageType).as("images"),
-      lit("active").as("status"),
-      nullif(col("gtin"), lit("")).as("gtin"))
+    val variantStruct = Unified.struct(variantSchema,
+      "sku" -> coalesce(col("sku"), lit("")),
+      "variant_id" -> col("skuID_Master"),
+      "color" -> Unified.struct(colorSchema,
+        "code" -> coalesce(col("colorCode"), lit("")),
+        "name" -> coalesce(col("colorName"), lit("")),
+        "hex_color" -> nullif(col("color1"), lit("")),
+        "images" -> colorImages,
+        "status" -> lit("active")),
+      "size" -> col("sizeName"),
+      "weight" -> when(col("unitWeight").isNotNull, Unified.struct(weightSchema,
+        "value" -> col("unitWeight").try_cast("double"), "unit" -> lit("lb"))),
+      "prices" -> prices,
+      "stock" -> stock,
+      "images" -> colorImages,
+      "status" -> lit("active"),
+      "gtin" -> nullif(col("gtin"), lit("")))
 
     val parentCols = Seq("brandName", "styleName", "countryOfOrigin",
       "caseQty", "__title", "__description", "__base_category",
       "__style_image", "__style_cats", "__specs")
 
     val grouped = graft.operators.Nest.rollupWithParent(
-      rows, Seq("styleID"), parentCols,
-      variantStruct.cast(graft.schema.Unified.schema("variants").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType),
-      col("sku"), "variants")
+      rows, Seq("styleID"), parentCols, variantStruct, col("sku"), "variants")
 
     val categories = concat(
-      filter(array(struct(
-        lit(null).cast("string").as("id"), col("__base_category").as("name"),
-        lit(1).as("level"), lit(null).cast("string").as("parent_id"))),
+      filter(array(Unified.struct(categorySchema,
+        "name" -> col("__base_category"), "level" -> lit(1))),
         c => c.getField("name").isNotNull && c.getField("name") =!= ""),
-      coalesce(col("__style_cats"),
-        array().cast(graft.schema.Unified.schema("categories").dataType)))
+      coalesce(col("__style_cats"), array()))
 
-    grouped.select(
-      concat(lit("ss_"), coalesce(col("styleID").cast("string"), lit(""))).as("product_id"),
-      struct(lit(supplierId).as("id"), lit("S&S Activewear").as("name"),
-        lit("v2").cast("string").as("api_version"),
-        lit(null).cast("map<string,string>").as("contact_info")).as("supplier"),
-      coalesce(col("styleName"), col("styleID").cast("string"), lit(""))
-        .as("supplier_product_code"),
-      coalesce(col("__title"), col("styleName"), lit("")).as("name"),
-      col("__title").as("title"),
-      lit(null).cast("string").as("short_description"),
-      col("__description").as("long_description"),
-      array().cast("array<string>").as("keywords"),
-      categories.cast(graft.schema.Unified.schema("categories").dataType).as("categories"),
-      nullif(col("brandName"), lit("")).as("brand"),
-      lit(null).cast(graft.schema.Unified.schema("dimensions").dataType).as("dimensions"),
-      try_element_at(col("variants"), lit(1)).getField("weight").as("weight"),
-      try_element_at(col("__specs"), lit("Fabric")).as("material"),
-      array_distinct(filter(
+    grouped.select(Unified.fill(Unified.schema,
+      "product_id" -> concat(lit("ss_"), coalesce(col("styleID").cast("string"), lit(""))),
+      "supplier" -> Unified.struct(supplierSchema,
+        "id" -> lit(supplierId), "name" -> lit("S&S Activewear"), "api_version" -> lit("v2")),
+      "supplier_product_code" -> coalesce(col("styleName"), col("styleID").cast("string"), lit("")),
+      "name" -> coalesce(col("__title"), col("styleName"), lit("")),
+      "title" -> col("__title"),
+      "long_description" -> col("__description"),
+      "categories" -> categories,
+      "brand" -> nullif(col("brandName"), lit("")),
+      "weight" -> try_element_at(col("variants"), lit(1)).getField("weight"),
+      "material" -> try_element_at(col("__specs"), lit("Fabric")),
+      "colors_available" -> array_distinct(filter(
         transform(col("variants"), v => v.getField("color").getField("name")),
-        c => c.isNotNull)).as("colors_available"),
-      col("variants"),
-      try_element_at(col("variants"), lit(1)).getField("prices").as("base_prices"),
-      lit(false).as("is_printable"),
-      array().cast(graft.schema.Unified.schema("print_positions").dataType).as("print_positions"),
-      array().cast(graft.schema.Unified.schema("print_options").dataType).as("print_options"),
-      filter(array(img(col("__style_image"), "style")),
-        i => i.getField("url").isNotNull && i.getField("url") =!= "")
-        .cast(imageType).as("images"),
-      array().cast("array<string>").as("artwork_templates"),
-      lit(1).as("minimum_order_quantity"),
-      col("caseQty").try_cast("int").as("carton_quantity"),
-      lit(null).cast("string").as("lead_time"),
-      array().cast(graft.schema.Unified.schema("shipping_options").dataType).as("shipping_options"),
-      nullif(col("countryOfOrigin"), lit("")).as("country_of_origin"),
-      lit(null).cast("string").as("tariff_code"),
-      lit(null).cast("string").as("commodity_code"),
-      lit("active").as("status"),
-      lit(null).cast(graft.schema.Unified.schema("packaging").dataType).as("packaging"),
-      lit(null).cast(graft.schema.Unified.schema("sustainability").dataType).as("sustainability"),
-      lit(null).cast(graft.schema.Unified.schema("lifecycle").dataType).as("lifecycle"),
-      array().cast("array<string>").as("related_products"),
-      array().cast("array<string>").as("alternative_products"),
-      lit(null).cast(graft.schema.Unified.schema("localized").dataType).as("localized"),
-      lit(null).cast("map<string,string>").as("product_extra_data"),
-      lit(null).cast("timestamp").as("created_at"),
-      lit(null).cast("timestamp").as("updated_at"),
-      lit(null).cast("timestamp").as("last_sync"),
+        c => c.isNotNull)),
+      "variants" -> col("variants"),
+      "base_prices" -> try_element_at(col("variants"), lit(1)).getField("prices"),
+      "is_printable" -> lit(false),
+      "images" -> filter(array(img(col("__style_image"), "style")),
+        i => i.getField("url").isNotNull && i.getField("url") =!= ""),
+      "minimum_order_quantity" -> lit(1),
+      "carton_quantity" -> col("caseQty").try_cast("int"),
+      "country_of_origin" -> nullif(col("countryOfOrigin"), lit("")),
+      "status" -> lit("active"),
       // Style-level source fields + spec map (ref
       // unified_product_schema.py:201).
-      to_json(struct(col("styleID"), col("brandName"), col("styleName"),
+      "raw_data" -> to_json(struct(col("styleID"), col("brandName"), col("styleName"),
         col("countryOfOrigin"), col("caseQty"), col("__title").as("title"),
         col("__description").as("description"),
         col("__base_category").as("baseCategory"),
-        col("__specs").as("specs"))).as("raw_data"))
+        col("__specs").as("specs")))): _*)
   }
 
   def unified(spark: SparkSession, path: String): DataFrame =

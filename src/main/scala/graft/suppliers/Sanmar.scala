@@ -2,6 +2,10 @@ package graft.suppliers
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.Unified
+import graft.schema.Unified.{categorySchema, colorSchema, dimensionsSchema, imageSchema,
+  lifecycleSchema, priceSchema, stockLocationSchema, stockSchema, supplierSchema,
+  variantSchema, weightSchema}
 import graft.sources.FeedReader
 
 /** Sanmar supplier pipeline: PromoStandards service captures → unified
@@ -83,9 +87,6 @@ object Sanmar {
   def readFeed(spark: SparkSession, path: String): Feed =
     Feed(FeedReader.readJsonc(spark, path, Some(requiredSchema)))
 
-  private val priceType = graft.schema.Unified.schema("base_prices").dataType
-  private val imageType = graft.schema.Unified.schema("images").dataType
-
   /** Inventory per part: available total + per-location snapshot
     * (ref Sanmar Sample Data.jsonc:430-560 PartInventory with
     * InventoryLocationArray → unified.jsonc:249-257 stock.locations).
@@ -98,23 +99,19 @@ object Sanmar {
         col("PartInventoryArray.PartInventory"))).as("__inv"))
     invParts.select(
       col("__inv.partId").as("__stock_part"),
-      struct(
-        coalesce(col("__inv.quantityAvailable.Quantity.value").try_cast("int"),
-          lit(0)).as("available"),
-        array().cast(graft.schema.Unified.stockSchema("due_ins").dataType)
-          .as("due_ins"),
-        filter(transform(
+      Unified.struct(stockSchema,
+        "available" ->
+          coalesce(col("__inv.quantityAvailable.Quantity.value").try_cast("int"), lit(0)),
+        "locations" -> filter(transform(
           FeedReader.asArray(invParts,
             col("__inv.InventoryLocationArray.InventoryLocation")),
-          l => struct(
-            l.getField("inventoryLocationId").cast("string").as("id"),
-            l.getField("inventoryLocationName").cast("string").as("name"),
-            l.getField("country").cast("string").as("country"),
-            l.getField("inventoryLocationQuantity").getField("Quantity")
-              .getField("value").try_cast("int").as("qty"))),
-          l => l.getField("qty").isNotNull)
-          .cast(graft.schema.Unified.stockLocationsType).as("locations"),
-        lit(null).cast("timestamp").as("last_updated")).as("__stock"))
+          l => Unified.struct(stockLocationSchema,
+            "id" -> l.getField("inventoryLocationId"),
+            "name" -> l.getField("inventoryLocationName"),
+            "country" -> l.getField("country"),
+            "qty" -> l.getField("inventoryLocationQuantity").getField("Quantity")
+              .getField("value").try_cast("int"))),
+          l => l.getField("qty").isNotNull)).as("__stock"))
   }
 
   def unified(feed: Feed): DataFrame = {
@@ -125,12 +122,10 @@ object Sanmar {
       .filter(col("mediaType") === "Image")
       .groupBy(col("partId").as("__media_part"))
       .agg(transform(
-        array_sort(collect_list(struct(col("url").as("o"), struct(
-          col("url").as("url"),
-          lower(coalesce(col("ClassTypeArray.ClassType.classTypeName"),
-            lit("image"))).as("type"),
-          lit(null).cast("string").as("description"),
-          col("color").cast("string").as("color_variant")).as("v")))),
+        array_sort(collect_list(struct(col("url").as("o"), Unified.struct(imageSchema,
+          "url" -> col("url"),
+          "type" -> lower(coalesce(col("ClassTypeArray.ClassType.classTypeName"), lit("image"))),
+          "color_variant" -> col("color")).as("v")))),
         x => x.getField("v")).as("__media_images"))
 
     // Part price tiers from the pricing service.
@@ -141,14 +136,12 @@ object Sanmar {
       col("__part.partId").as("__price_part"),
       transform(
         FeedReader.asArray(pricingParts, col("__part.PartPriceArray.PartPrice")),
-        p => struct(
-          p.getField("price").cast("double").as("value"),
-          coalesce(col("__currency"), lit("USD")).as("currency"),
-          coalesce(p.getField("minQuantity").cast("int"), lit(1)).as("min_quantity"),
-          lit(null).cast("int").as("max_quantity"),
-          lit("unit").as("type"),
-          lit(null).cast("string").as("description"),
-          p.getField("priceExpiryDate").try_cast("timestamp").as("valid_until")))
+        p => Unified.struct(priceSchema,
+          "value" -> p.getField("price"),
+          "currency" -> coalesce(col("__currency"), lit("USD")),
+          "min_quantity" -> coalesce(p.getField("minQuantity").cast("int"), lit(1)),
+          "type" -> lit("unit"),
+          "valid_until" -> p.getField("priceExpiryDate").try_cast("timestamp")))
         .as("__part_prices"))
 
     val stockByPart = Sanmar.stockByPart(feed)
@@ -177,46 +170,38 @@ object Sanmar {
       coalesce(d("depth"), d("width"), d("height")).isNotNull &&
         (coalesce(d("depth"), lit(0.0)) + coalesce(d("width"), lit(0.0)) +
           coalesce(d("height"), lit(0.0))) > 0,
-      struct(d("depth").as("length"), d("width").as("width"),
-        d("height").as("height"), lit(null).cast("double").as("diameter"),
-        lit("in").as("unit")))
+      Unified.struct(dimensionsSchema, "length" -> d("depth"), "width" -> d("width"),
+        "height" -> d("height"), "unit" -> lit("in")))
 
     val weightUom = lower(coalesce(col("__part.Dimension.weightUom"), lit("OZ")))
-    val weight = when(col("__part.Dimension.weight").isNotNull, struct(
-      col("__part.Dimension.weight").try_cast("double").as("value"),
-      when(weightUom.isin("lb", "lbs"), "lb").otherwise("oz").as("unit")))
+    val weight = when(col("__part.Dimension.weight").isNotNull, Unified.struct(weightSchema,
+      "value" -> col("__part.Dimension.weight").try_cast("double"),
+      "unit" -> when(weightUom.isin("lb", "lbs"), "lb").otherwise("oz")))
 
-    val variantStruct = struct(
-      coalesce(col("__part.partId"), lit("")).as("sku"),
-      col("__part.partId").as("variant_id"),
-      when(col("__part.primaryColor.Color.colorName").isNotNull, struct(
-        coalesce(col("__part.primaryColor.Color.standardColorName"),
-          col("__part.primaryColor.Color.colorName"), lit("")).as("code"),
-        coalesce(col("__part.primaryColor.Color.colorName"), lit("")).as("name"),
-        lit(null).cast("string").as("hex_color"),
-        col("__part.ColorArray.Color.approximatePms").cast("string").as("pms_color"),
-        array().cast(imageType).as("images"),
-        lit("active").as("status"))).as("color"),
-      col("__part.ApparelSize.labelSize").cast("string").as("size"),
-      lit(null).cast("string").as("material_variant"),
-      dims.as("dimensions"),
-      weight.as("weight"),
-      coalesce(col("__part_prices"), array().cast(priceType))
-        .cast(priceType).as("prices"),
-      col("__stock").as("stock"),
-      coalesce(col("__media_images"), array().cast(imageType))
-        .cast(imageType).as("images"),
-      when(coalesce(col("__part.isCloseout").try_cast("boolean"), lit(false)),
-        "discontinued").otherwise("active").as("status"),
-      col("__part.gtin").cast("string").as("gtin"))
+    val variantStruct = Unified.struct(variantSchema,
+      "sku" -> coalesce(col("__part.partId"), lit("")),
+      "variant_id" -> col("__part.partId"),
+      "color" -> when(col("__part.primaryColor.Color.colorName").isNotNull,
+        Unified.struct(colorSchema,
+          "code" -> coalesce(col("__part.primaryColor.Color.standardColorName"),
+            col("__part.primaryColor.Color.colorName"), lit("")),
+          "name" -> coalesce(col("__part.primaryColor.Color.colorName"), lit("")),
+          "pms_color" -> col("__part.ColorArray.Color.approximatePms"),
+          "status" -> lit("active"))),
+      "size" -> col("__part.ApparelSize.labelSize"),
+      "dimensions" -> dims,
+      "weight" -> weight,
+      "prices" -> coalesce(col("__part_prices"), array()),
+      "stock" -> col("__stock"),
+      "images" -> coalesce(col("__media_images"), array()),
+      "status" -> when(coalesce(col("__part.isCloseout").try_cast("boolean"), lit(false)),
+        "discontinued").otherwise("active"),
+      "gtin" -> col("__part.gtin"))
 
     val variantsByProduct = joined
       .groupBy(col("productId"))
       .agg(transform(
-        array_sort(collect_list(struct(col("__part.partId").as("o"),
-          variantStruct.cast(graft.schema.Unified.schema("variants").dataType
-            .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType)
-            .as("v")))),
+        array_sort(collect_list(struct(col("__part.partId").as("o"), variantStruct.as("v")))),
         x => x.getField("v")).as("variants"))
 
     val base = product.join(variantsByProduct, Seq("productId"), "left_outer")
@@ -228,12 +213,9 @@ object Sanmar {
     val categories = {
       val cats = FeedReader.asArray(product, col("ProductCategoryArray.ProductCategory"))
       flatten(transform(cats, c => filter(array(
-        struct(lit(null).cast("string").as("id"),
-          c.getField("category").as("name"), lit(1).as("level"),
-          lit(null).cast("string").as("parent_id")),
-        struct(lit(null).cast("string").as("id"),
-          c.getField("subCategory").as("name"), lit(2).as("level"),
-          c.getField("category").cast("string").as("parent_id"))),
+        Unified.struct(categorySchema, "name" -> c.getField("category"), "level" -> lit(1)),
+        Unified.struct(categorySchema, "name" -> c.getField("subCategory"), "level" -> lit(2),
+          "parent_id" -> c.getField("category"))),
         x => x.getField("name").isNotNull)))
     }
 
@@ -254,68 +236,44 @@ object Sanmar {
           pick(coalesce(r.getField("relationType"), lit("")))),
         r => r.getField("productId").cast("string"))))
 
-    base.select(
-      concat(lit("sanmar_"), coalesce(col("productId"), lit(""))).as("product_id"),
-      struct(lit(supplierId).as("id"), lit("Sanmar").as("name"),
-        lit("PromoStandards-V2").cast("string").as("api_version"),
-        lit(null).cast("map<string,string>").as("contact_info")).as("supplier"),
-      coalesce(col("productId"), lit("")).as("supplier_product_code"),
-      coalesce(col("productName"), lit("")).as("name"),
-      lit(null).cast("string").as("title"),
-      try_element_at(descArr, lit(1)).cast("string").as("short_description"),
-      concat_ws("\n", descArr).as("long_description"),
-      keywords.cast("array<string>").as("keywords"),
-      categories.cast(graft.schema.Unified.schema("categories").dataType).as("categories"),
-      nullif(col("productBrand"), lit("")).as("brand"),
-      try_element_at(col("variants"), lit(1)).getField("dimensions").as("dimensions"),
-      try_element_at(col("variants"), lit(1)).getField("weight").as("weight"),
-      lit(null).cast("string").as("material"),
-      array_distinct(filter(
+    val firstVariant = try_element_at(col("variants"), lit(1))
+
+    base.select(Unified.fill(Unified.schema,
+      "product_id" -> concat(lit("sanmar_"), coalesce(col("productId"), lit(""))),
+      "supplier" -> Unified.struct(supplierSchema,
+        "id" -> lit(supplierId), "name" -> lit("Sanmar"),
+        "api_version" -> lit("PromoStandards-V2")),
+      "supplier_product_code" -> coalesce(col("productId"), lit("")),
+      "name" -> coalesce(col("productName"), lit("")),
+      "short_description" -> try_element_at(descArr, lit(1)),
+      "long_description" -> concat_ws("\n", descArr),
+      "keywords" -> keywords,
+      "categories" -> categories,
+      "brand" -> nullif(col("productBrand"), lit("")),
+      "dimensions" -> firstVariant.getField("dimensions"),
+      "weight" -> firstVariant.getField("weight"),
+      "colors_available" -> array_distinct(filter(
         transform(col("variants"), v => v.getField("color").getField("name")),
-        c => c.isNotNull)).as("colors_available"),
-      coalesce(col("variants"),
-        array().cast(graft.schema.Unified.schema("variants").dataType)).as("variants"),
-      try_element_at(col("variants"), lit(1)).getField("prices").as("base_prices"),
-      lit(false).as("is_printable"),
-      array().cast(graft.schema.Unified.schema("print_positions").dataType).as("print_positions"),
-      array().cast(graft.schema.Unified.schema("print_options").dataType).as("print_options"),
-      filter(array(struct(
-        col("primaryImageUrl").as("url"), lit("primary").as("type"),
-        lit(null).cast("string").as("description"),
-        lit(null).cast("string").as("color_variant"))),
-        i => i.getField("url").isNotNull).cast(imageType).as("images"),
-      array().cast("array<string>").as("artwork_templates"),
-      lit(1).as("minimum_order_quantity"),
-      lit(null).cast("int").as("carton_quantity"),
-      lit(null).cast("string").as("lead_time"),
-      array().cast(graft.schema.Unified.schema("shipping_options").dataType).as("shipping_options"),
-      lit(null).cast("string").as("country_of_origin"),
-      lit(null).cast("string").as("tariff_code"),
-      lit(null).cast("string").as("commodity_code"),
-      lit("active").as("status"),
-      lit(null).cast(graft.schema.Unified.schema("packaging").dataType).as("packaging"),
-      lit(null).cast(graft.schema.Unified.schema("sustainability").dataType).as("sustainability"),
+        c => c.isNotNull)),
+      "variants" -> coalesce(col("variants"), array()),
+      "base_prices" -> firstVariant.getField("prices"),
+      "is_printable" -> lit(false),
+      "images" -> filter(array(Unified.struct(imageSchema,
+        "url" -> col("primaryImageUrl"), "type" -> lit("primary"))),
+        i => i.getField("url").isNotNull),
+      "minimum_order_quantity" -> lit(1),
+      "status" -> lit("active"),
       // Lifecycle (ref unified.jsonc:14-22): PromoStandards carries
       // creation + last-change service dates.
-      struct(
-        lit(null).cast("string").as("type_of_product"),
-        lit(null).cast("string").as("product_lifecycle"),
-        lit(null).cast("timestamp").as("intro_date"),
-        col("creationDate").try_cast("timestamp").as("release_date"),
-        col("lastChangeDate").try_cast("timestamp").as("modified_date"),
-        lit(null).cast("timestamp").as("discontinued_date"))
-        .cast(graft.schema.Unified.schema("lifecycle").dataType).as("lifecycle"),
-      relationCodes(t => t =!= "Substitute").cast("array<string>")
-        .as("related_products"),
-      relationCodes(t => t === "Substitute").cast("array<string>")
-        .as("alternative_products"),
-      lit(null).cast(graft.schema.Unified.schema("localized").dataType).as("localized"),
-      lit(null).cast("map<string,string>").as("product_extra_data"),
-      col("creationDate").try_cast("timestamp").as("created_at"),
-      col("lastChangeDate").try_cast("timestamp").as("updated_at"),
-      lit(null).cast("timestamp").as("last_sync"),
+      "lifecycle" -> Unified.struct(lifecycleSchema,
+        "release_date" -> col("creationDate").try_cast("timestamp"),
+        "modified_date" -> col("lastChangeDate").try_cast("timestamp")),
+      "related_products" -> relationCodes(t => t =!= "Substitute"),
+      "alternative_products" -> relationCodes(t => t === "Substitute"),
+      "created_at" -> col("creationDate").try_cast("timestamp"),
+      "updated_at" -> col("lastChangeDate").try_cast("timestamp"),
       // Full product service body (ref unified_product_schema.py:201).
-      to_json(struct(product.columns.toSeq.map(col): _*)).as("raw_data"))
+      "raw_data" -> to_json(struct(product.columns.toSeq.map(col): _*))): _*)
   }
 
   def unified(spark: SparkSession, path: String): DataFrame =

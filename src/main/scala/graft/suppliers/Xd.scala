@@ -2,6 +2,11 @@ package graft.suppliers
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.Unified
+import graft.schema.Unified.{cartonSchema, categorySchema, colorSchema, dimensionsSchema,
+  imageSchema, lifecycleSchema, localizedSchema, packagingSchema, priceSchema,
+  printOptionSchema, printPositionSchema, stockSchema, supplierSchema, sustainabilitySchema,
+  variantSchema, weightSchema}
 import graft.sources.FeedReader
 
 /** XD / Xindao supplier pipeline: five correlated feeds → unified rows.
@@ -51,6 +56,9 @@ object Xd {
       element_at(techniqueMapCol, lower(coalesce(label, lit("")))),
       regexp_replace(lower(coalesce(label, lit(""))), "[^a-z0-9]+", "_"))
 
+  private def img(url: Column, t: String): Column =
+    Unified.struct(imageSchema, "url" -> url, "type" -> lit(t))
+
   case class Feed(doc: DataFrame) {
     def products: DataFrame = FeedReader.sectionOf(doc, "Products.Response")
     def prices: DataFrame = FeedReader.sectionOf(doc, "ProductPrices.Response")
@@ -67,8 +75,6 @@ object Xd {
       "PrintPrices.Response" -> printPriceCols,
       "Stock.Response" -> stockCols))))
 
-  private val priceType = graft.schema.Unified.schema("base_prices").dataType
-
   /** Unpivot the Qty1..Qty6 / ItemPriceNet_Qty1..6 column pairs into a
     * tier array; max_quantity of tier i is Qty(i+1)-1 (open-ended last
     * tier). Map-side only; the input must be conformed (see
@@ -77,15 +83,13 @@ object Xd {
     val entries = (1 to 6).map { i =>
       val nextQty =
         if (i < 6) col(s"Qty${i + 1}").try_cast("int") - 1
-        else lit(null).cast("int")
-      struct(
-        col(s"ItemPriceNet_Qty$i").try_cast("double").as("value"),
-        coalesce(currency, lit("GBP")).as("currency"),
-        coalesce(col(s"Qty$i").try_cast("int"), lit(1)).as("min_quantity"),
-        nextQty.as("max_quantity"),
-        lit("unit").as("type"),
-        lit(null).cast("string").as("description"),
-        lit(null).cast("timestamp").as("valid_until"))
+        else lit(null)
+      Unified.struct(priceSchema,
+        "value" -> col(s"ItemPriceNet_Qty$i").try_cast("double"),
+        "currency" -> coalesce(currency, lit("GBP")),
+        "min_quantity" -> coalesce(col(s"Qty$i").try_cast("int"), lit(1)),
+        "max_quantity" -> nextQty,
+        "type" -> lit("unit"))
     }
     filter(array(entries: _*), t => t.getField("value").isNotNull)
   }
@@ -96,16 +100,14 @@ object Xd {
   private def printTiers(currency: Column): Column = {
     val entries = printBreaks.zipWithIndex.map { case (q, i) =>
       val maxQ =
-        if (i < printBreaks.size - 1) lit(printBreaks(i + 1) - 1).cast("int")
-        else lit(null).cast("int")
-      struct(
-        col(s"PrintPriceNet_$q").try_cast("double").as("value"),
-        coalesce(currency, lit("GBP")).as("currency"),
-        lit(q).as("min_quantity"),
-        maxQ.as("max_quantity"),
-        lit("unit").as("type"),
-        lit(null).cast("string").as("description"),
-        lit(null).cast("timestamp").as("valid_until"))
+        if (i < printBreaks.size - 1) lit(printBreaks(i + 1) - 1)
+        else lit(null)
+      Unified.struct(priceSchema,
+        "value" -> col(s"PrintPriceNet_$q").try_cast("double"),
+        "currency" -> coalesce(currency, lit("GBP")),
+        "min_quantity" -> lit(q),
+        "max_quantity" -> maxQ,
+        "type" -> lit("unit"))
     }
     filter(array(entries: _*), t => t.getField("value").isNotNull)
   }
@@ -169,12 +171,8 @@ object Xd {
     // J4: stock by ItemCode.
     val stock = FeedReader.conform(feed.stock, stockCols).select(
       col("ItemCode").as("__stock_item"),
-      struct(
-        coalesce(col("CurrentStock").try_cast("int"), lit(0)).as("available"),
-        array().cast(graft.schema.Unified.stockSchema("due_ins").dataType)
-          .as("due_ins"),
-        array().cast(graft.schema.Unified.stockLocationsType).as("locations"),
-        lit(null).cast("timestamp").as("last_updated")).as("__stock"))
+      Unified.struct(stockSchema,
+        "available" -> coalesce(col("CurrentStock").try_cast("int"), lit(0))).as("__stock"))
 
     // PrintPrices: small technique dimension keyed by PrintCode → broadcast.
     val printPriceDim = broadcast(
@@ -191,42 +189,34 @@ object Xd {
         transform(
           graft.operators.Nest.sortByKey(collect_list(struct(
             struct(col("PrintCode"), col("PrintPosition")).as("o"),
-            struct(
-              canonTechnique(col("PrintTechnique")).as("technique"),
-              coalesce(col("PrintPosition"), lit("")).as("position"),
-              coalesce(col("MaxColors").try_cast("int"), lit(1)).as("max_colors"),
-              col("__pp_setup").as("setup_charge"),
-              coalesce(col("__pp_tiers"), array().cast(priceType)).as("prices"),
-              lit(null).cast("string").as("lead_time"),
-              coalesce(col("Default").try_cast("boolean"), lit(false)).as("is_default"),
-              lit(null).cast("map<string,string>").as("technique_names"))
+            Unified.struct(printOptionSchema,
+              "technique" -> canonTechnique(col("PrintTechnique")),
+              "position" -> coalesce(col("PrintPosition"), lit("")),
+              "max_colors" -> coalesce(col("MaxColors").try_cast("int"), lit(1)),
+              "setup_charge" -> col("__pp_setup"),
+              "prices" -> coalesce(col("__pp_tiers"), array()),
+              "is_default" -> coalesce(col("Default").try_cast("boolean"), lit(false)))
               .as("v")))),
           x => x.getField("v")).as("__print_options"),
         transform(
           graft.operators.Nest.sortByKey(collect_list(struct(
             struct(col("PrintPositionCode"), col("PrintCode")).as("o"),
-            struct(
-              coalesce(col("PrintPositionCode"), col("PrintPosition"), lit("")).as("id"),
-              coalesce(col("PrintPosition"), lit("")).as("name"),
-              col("MaxPrintWidthMM").try_cast("double").as("max_width"),
-              col("MaxPrintHeightMM").try_cast("double").as("max_height"),
-              lit(null).cast("double").as("max_area"),
-              lit("mm").as("unit"),
-              array(canonTechnique(col("PrintTechnique"))).as("techniques"),
-              col("MaxColors").try_cast("int").as("max_colors"),
-              map(
+            Unified.struct(printPositionSchema,
+              "id" -> coalesce(col("PrintPositionCode"), col("PrintPosition"), lit("")),
+              "name" -> coalesce(col("PrintPosition"), lit("")),
+              "max_width" -> col("MaxPrintWidthMM").try_cast("double"),
+              "max_height" -> col("MaxPrintHeightMM").try_cast("double"),
+              "unit" -> lit("mm"),
+              "techniques" -> array(canonTechnique(col("PrintTechnique"))),
+              "max_colors" -> col("MaxColors").try_cast("int"),
+              "coordinates" -> map(
                 lit("top_left_x"), col("VRP_X").cast("string"),
                 lit("top_left_y"), col("VRP_Y").cast("string"),
                 lit("width"), col("VRP_Width").cast("string"),
-                lit("height"), col("VRP_Height").cast("string")).as("coordinates"),
-              filter(array(
-                struct(col("VRP_URL").as("url"), lit("vrp").as("type"),
-                  lit(null).cast("string").as("description"),
-                  lit(null).cast("string").as("color_variant")),
-                struct(col("LineDrawing").as("url"), lit("line_drawing").as("type"),
-                  lit(null).cast("string").as("description"),
-                  lit(null).cast("string").as("color_variant"))),
-                i => i.getField("url").isNotNull).as("images"))
+                lit("height"), col("VRP_Height").cast("string")),
+              "images" -> filter(array(img(col("VRP_URL"), "vrp"),
+                img(col("LineDrawing"), "line_drawing")),
+                i => i.getField("url").isNotNull))
               .as("v")))),
           x => x.getField("v")).as("__print_positions"))
 
@@ -241,39 +231,36 @@ object Xd {
     val dims = when(
       coalesce(opt("ItemLengthCM"), opt("ItemWidthCM"),
         opt("ItemHeightCM"), opt("ItemDiameterCM")).isNotNull,
-      struct(
-        opt("ItemLengthCM").try_cast("double").as("length"),
-        opt("ItemWidthCM").try_cast("double").as("width"),
-        opt("ItemHeightCM").try_cast("double").as("height"),
-        opt("ItemDiameterCM").try_cast("double").as("diameter"),
-        lit("cm").as("unit")))
+      Unified.struct(dimensionsSchema,
+        "length" -> opt("ItemLengthCM").try_cast("double"),
+        "width" -> opt("ItemWidthCM").try_cast("double"),
+        "height" -> opt("ItemHeightCM").try_cast("double"),
+        "diameter" -> opt("ItemDiameterCM").try_cast("double"),
+        "unit" -> lit("cm")))
 
     // F10: gross weight preferred over net; grams.
     val weight = {
       val w = coalesce(col("ItemWeightGrossGr").try_cast("double"),
         col("ItemWeightNetGr").try_cast("double"))
-      when(w.isNotNull, struct(w.as("value"), lit("g").as("unit")))
+      when(w.isNotNull, Unified.struct(weightSchema, "value" -> w, "unit" -> lit("g")))
     }
 
-    val variantStruct = struct(
-      coalesce(col("ItemCode"), lit("")).as("sku"),
-      col("ItemCode").as("variant_id"),
-      when(col("Color").isNotNull, struct(
-        coalesce(col("Color"), lit("")).as("code"),
-        coalesce(col("Color"), lit("")).as("name"),
-        nullif(col("HexColor1"), lit("")).as("hex_color"),
-        nullif(col("PMSColor1"), lit("")).as("pms_color"),
-        array().cast(graft.schema.Unified.schema("images").dataType).as("images"),
-        lit("active").as("status"))).as("color"),
-      lit(null).cast("string").as("size"),
-      nullif(col("Material"), lit("")).as("material_variant"),
-      dims.as("dimensions"),
-      weight.as("weight"),
-      coalesce(col("__tier_prices"), array().cast(priceType)).as("prices"),
-      col("__stock").as("stock"),
-      array().cast(graft.schema.Unified.schema("images").dataType).as("images"),
-      status.as("status"),
-      nullif(col("EANCode"), lit("")).as("gtin"))
+    val variantStruct = Unified.struct(variantSchema,
+      "sku" -> coalesce(col("ItemCode"), lit("")),
+      "variant_id" -> col("ItemCode"),
+      "color" -> when(col("Color").isNotNull, Unified.struct(colorSchema,
+        "code" -> coalesce(col("Color"), lit("")),
+        "name" -> coalesce(col("Color"), lit("")),
+        "hex_color" -> nullif(col("HexColor1"), lit("")),
+        "pms_color" -> nullif(col("PMSColor1"), lit("")),
+        "status" -> lit("active"))),
+      "material_variant" -> nullif(col("Material"), lit("")),
+      "dimensions" -> dims,
+      "weight" -> weight,
+      "prices" -> coalesce(col("__tier_prices"), array()),
+      "stock" -> col("__stock"),
+      "status" -> status,
+      "gtin" -> nullif(col("EANCode"), lit("")))
 
     val parentCols = Seq("ItemName", "Brand", "MainCategory", "SubCategory",
       "Material", "LongDescription", "CountryOfOrigin", "CommodityCode",
@@ -287,10 +274,7 @@ object Xd {
       "VariableDataPrinting", "RestrictedCountriesForSale")
 
     val grouped = graft.operators.Nest.rollupWithParent(
-      joined, Seq("ModelCode"), parentCols,
-      variantStruct.cast(graft.schema.Unified.schema("variants").dataType
-        .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType),
-      col("ItemCode"), "variants")
+      joined, Seq("ModelCode"), parentCols, variantStruct, col("ItemCode"), "variants")
       .join(printByModel, Seq("ModelCode"), "left_outer")
 
     val colorsAvailable = array_distinct(filter(
@@ -298,155 +282,105 @@ object Xd {
       c => c.isNotNull))
 
     val categories = filter(array(
-      struct(lit(null).cast("string").as("id"), col("MainCategory").as("name"),
-        lit(1).as("level"), lit(null).cast("string").as("parent_id")),
-      struct(lit(null).cast("string").as("id"), col("SubCategory").as("name"),
-        lit(2).as("level"), col("MainCategory").as("parent_id"))),
+      Unified.struct(categorySchema, "name" -> col("MainCategory"), "level" -> lit(1)),
+      Unified.struct(categorySchema, "name" -> col("SubCategory"), "level" -> lit(2),
+        "parent_id" -> col("MainCategory"))),
       c => c.getField("name").isNotNull && c.getField("name") =!= "")
 
-    grouped.select(
-      concat(lit("xd_"), coalesce(col("ModelCode"), lit(""))).as("product_id"),
-      struct(lit(supplierId).as("id"), lit("XD Connects").as("name"),
-        lit(null).cast("string").as("api_version"),
-        lit(null).cast("map<string,string>").as("contact_info")).as("supplier"),
-      coalesce(col("ModelCode"), lit("")).as("supplier_product_code"),
-      coalesce(col("ItemName"), lit("")).as("name"),
-      lit(null).cast("string").as("title"),
-      lit(null).cast("string").as("short_description"),
-      col("LongDescription").as("long_description"),
-      array().cast("array<string>").as("keywords"),
-      categories.cast(graft.schema.Unified.schema("categories").dataType).as("categories"),
-      nullif(col("Brand"), lit("")).as("brand"),
-      try_element_at(col("variants"), lit(1)).getField("dimensions").as("dimensions"),
-      try_element_at(col("variants"), lit(1)).getField("weight").as("weight"),
-      nullif(col("Material"), lit("")).as("material"),
-      colorsAvailable.as("colors_available"),
-      col("variants"),
-      try_element_at(col("variants"), lit(1)).getField("prices").as("base_prices"),
-      (size(coalesce(col("__print_options"),
-        array().cast(graft.schema.Unified.schema("print_options").dataType))) > 0)
-        .as("is_printable"),
-      coalesce(col("__print_positions"),
-        array().cast(graft.schema.Unified.schema("print_positions").dataType))
-        .cast(graft.schema.Unified.schema("print_positions").dataType)
-        .as("print_positions"),
-      coalesce(col("__print_options"),
-        array().cast(graft.schema.Unified.schema("print_options").dataType))
-        .cast(graft.schema.Unified.schema("print_options").dataType)
-        .as("print_options"),
+    val firstVariant = try_element_at(col("variants"), lit(1))
+    val printOptions = coalesce(col("__print_options"), array())
+
+    grouped.select(Unified.fill(Unified.schema,
+      "product_id" -> concat(lit("xd_"), coalesce(col("ModelCode"), lit(""))),
+      "supplier" -> Unified.struct(supplierSchema,
+        "id" -> lit(supplierId), "name" -> lit("XD Connects")),
+      "supplier_product_code" -> coalesce(col("ModelCode"), lit("")),
+      "name" -> coalesce(col("ItemName"), lit("")),
+      "long_description" -> col("LongDescription"),
+      "categories" -> categories,
+      "brand" -> nullif(col("Brand"), lit("")),
+      "dimensions" -> firstVariant.getField("dimensions"),
+      "weight" -> firstVariant.getField("weight"),
+      "material" -> nullif(col("Material"), lit("")),
+      "colors_available" -> colorsAvailable,
+      "variants" -> col("variants"),
+      "base_prices" -> firstVariant.getField("prices"),
+      "is_printable" -> (size(printOptions) > 0),
+      "print_positions" -> coalesce(col("__print_positions"), array()),
+      "print_options" -> printOptions,
       // Feed images: MainImage as the primary plus the AllImages CSV as
       // gallery entries (ref: XD Sample Data.jsonc:67-71 — the spec's
       // "insert as gallery type in images" comment).
-      {
+      "images" -> {
         val main = nullif(col("MainImage"), lit(""))
         val gallery = filter(transform(
           split(coalesce(col("AllImages"), lit("")), ",\\s*"), u => trim(u)),
           u => u =!= "" && u =!= coalesce(main, lit("")))
         concat(
-          filter(array(struct(main.as("url"), lit("main").as("type"),
-            lit(null).cast("string").as("description"),
-            lit(null).cast("string").as("color_variant"))),
-            i => i.getField("url").isNotNull),
-          transform(gallery, u => struct(u.as("url"), lit("gallery").as("type"),
-            lit(null).cast("string").as("description"),
-            lit(null).cast("string").as("color_variant"))))
-          .cast(graft.schema.Unified.schema("images").dataType).as("images")
+          filter(array(img(main, "main")), i => i.getField("url").isNotNull),
+          transform(gallery, u => img(u, "gallery")))
       },
-      array().cast("array<string>").as("artwork_templates"),
-      lit(1).as("minimum_order_quantity"),
-      col("OuterCartonQty").try_cast("int").as("carton_quantity"),
-      lit(null).cast("string").as("lead_time"),
-      array().cast(graft.schema.Unified.schema("shipping_options").dataType).as("shipping_options"),
-      nullif(col("CountryOfOrigin"), lit("")).as("country_of_origin"),
-      nullif(col("CommodityCode"), lit("")).as("tariff_code"),
-      lit(null).cast("string").as("commodity_code"),
-      when(exists(col("variants"), v => v.getField("status") === "active"), "active")
-        .otherwise("discontinued").as("status"),
+      "minimum_order_quantity" -> lit(1),
+      "carton_quantity" -> col("OuterCartonQty").try_cast("int"),
+      "country_of_origin" -> nullif(col("CountryOfOrigin"), lit("")),
+      "tariff_code" -> nullif(col("CommodityCode"), lit("")),
+      "status" -> when(exists(col("variants"), v => v.getField("status") === "active"), "active")
+        .otherwise("discontinued"),
       // Carton packaging (ref unified.jsonc:136-161 — XD Sample
       // Data.jsonc:31-42 outer carton dims/weights in cm/kg).
-      struct(
-        when(col("InnerboxQty").try_cast("int").isNotNull, struct(
-          col("InnerboxQty").try_cast("int").as("qty"),
-          lit(null).cast("double").as("length"),
-          lit(null).cast("double").as("width"),
-          lit(null).cast("double").as("height"),
-          lit("cm").as("unit"),
-          lit(null).cast("double").as("weight_net"),
-          lit(null).cast("double").as("weight_gross"),
-          lit("kg").as("weight_unit"),
-          lit(null).cast("double").as("volume"),
-          lit(null).cast("string").as("volume_unit"))).as("inner_carton"),
-        when(coalesce(col("OuterCartonQty").try_cast("int"),
-            col("OuterCartonLengthCM").try_cast("double")).isNotNull, struct(
-          col("OuterCartonQty").try_cast("int").as("qty"),
-          col("OuterCartonLengthCM").try_cast("double").as("length"),
-          col("OuterCartonWidthCM").try_cast("double").as("width"),
-          col("OuterCartonHeightCM").try_cast("double").as("height"),
-          lit("cm").as("unit"),
-          col("OuterCartonWeightNetKG").try_cast("double").as("weight_net"),
-          col("OuterCartonWeightGrossKG").try_cast("double").as("weight_gross"),
-          lit("kg").as("weight_unit"),
-          lit(null).cast("double").as("volume"),
-          lit(null).cast("string").as("volume_unit"))).as("outer_carton"),
-        lit(null).cast("string").as("type"),
-        nullif(col("PackagingTypeItem"), lit("")).as("type_item"))
-        .cast(graft.schema.Unified.schema("packaging").dataType).as("packaging"),
+      "packaging" -> Unified.struct(packagingSchema,
+        "inner_carton" -> when(col("InnerboxQty").try_cast("int").isNotNull,
+          Unified.struct(cartonSchema,
+            "qty" -> col("InnerboxQty").try_cast("int"),
+            "unit" -> lit("cm"), "weight_unit" -> lit("kg"))),
+        "outer_carton" -> when(coalesce(col("OuterCartonQty").try_cast("int"),
+            col("OuterCartonLengthCM").try_cast("double")).isNotNull,
+          Unified.struct(cartonSchema,
+            "qty" -> col("OuterCartonQty").try_cast("int"),
+            "length" -> col("OuterCartonLengthCM").try_cast("double"),
+            "width" -> col("OuterCartonWidthCM").try_cast("double"),
+            "height" -> col("OuterCartonHeightCM").try_cast("double"),
+            "unit" -> lit("cm"),
+            "weight_net" -> col("OuterCartonWeightNetKG").try_cast("double"),
+            "weight_gross" -> col("OuterCartonWeightGrossKG").try_cast("double"),
+            "weight_unit" -> lit("kg"))),
+        "type_item" -> nullif(col("PackagingTypeItem"), lit(""))),
       // Eco/compliance (ref unified.jsonc:188-231 — XD Sample
       // Data.jsonc:43-66 eco flags, recycled %, CO2, audits, certs).
-      struct(
-        col("Eco").try_cast("boolean").as("eco"),
-        col("`Recycled Content Percent`").try_cast("double")
-          .as("recycled_content_pct"),
-        col("`Total CO2 emissions`").try_cast("double").as("co2_total"),
-        col("`Total CO2 emissions benchmark`").try_cast("double")
-          .as("co2_total_benchmark"),
-        nullif(col("Compliance"), lit("")).as("compliance"),
-        filter(transform(split(coalesce(col("`Social Audits`"), lit("")), ","),
-          s => trim(s)), s => s =!= "").as("social_audits"),
-        filter(transform(split(coalesce(col("Certifications"), lit("")), ",\\s*"),
-          s => trim(s)), s => s =!= "").as("certificates"))
-        .cast(graft.schema.Unified.schema("sustainability").dataType)
-        .as("sustainability"),
+      "sustainability" -> Unified.struct(sustainabilitySchema,
+        "eco" -> col("Eco").try_cast("boolean"),
+        "recycled_content_pct" -> col("`Recycled Content Percent`").try_cast("double"),
+        "co2_total" -> col("`Total CO2 emissions`").try_cast("double"),
+        "co2_total_benchmark" -> col("`Total CO2 emissions benchmark`").try_cast("double"),
+        "compliance" -> nullif(col("Compliance"), lit("")),
+        "social_audits" -> filter(transform(split(coalesce(col("`Social Audits`"), lit("")), ","),
+          s => trim(s)), s => s =!= ""),
+        "certificates" -> filter(transform(split(coalesce(col("Certifications"), lit("")), ",\\s*"),
+          s => trim(s)), s => s =!= "")),
       // Lifecycle (ref unified.jsonc:14-22 — ProductLifeCycle enum +
       // IntroDate).
-      struct(
-        lit(null).cast("string").as("type_of_product"),
-        nullif(col("ProductLifeCycle"), lit("")).as("product_lifecycle"),
-        col("IntroDate").try_cast("timestamp").as("intro_date"),
-        lit(null).cast("timestamp").as("release_date"),
-        lit(null).cast("timestamp").as("modified_date"),
-        lit(null).cast("timestamp").as("discontinued_date"))
-        .cast(graft.schema.Unified.schema("lifecycle").dataType).as("lifecycle"),
-      array().cast("array<string>").as("related_products"),
-      array().cast("array<string>").as("alternative_products"),
+      "lifecycle" -> Unified.struct(lifecycleSchema,
+        "product_lifecycle" -> nullif(col("ProductLifeCycle"), lit("")),
+        "intro_date" -> col("IntroDate").try_cast("timestamp")),
       // Localized content maps (ref unified.jsonc:25-33): the feed is
       // single-language (one URL per language), so each non-null field
       // fills this run's language key.
-      {
+      "localized" -> {
         val l = (c: Column) => when(c.isNotNull, map(lit(language), c))
-        struct(
-          l(nullif(col("Brand"), lit(""))).as("brand"),
-          l(nullif(col("ItemName"), lit(""))).as("name"),
-          lit(null).cast("map<string,string>").as("title"),
-          lit(null).cast("map<string,string>").as("short_description"),
-          l(nullif(col("LongDescription"), lit(""))).as("long_description"),
-          lit(null).cast("map<string,string>").as("web_description"),
-          lit(null).cast("map<string,string>").as("keywords"))
-          .cast(graft.schema.Unified.schema("localized").dataType).as("localized")
+        Unified.struct(localizedSchema,
+          "brand" -> l(nullif(col("Brand"), lit(""))),
+          "name" -> l(nullif(col("ItemName"), lit(""))),
+          "long_description" -> l(nullif(col("LongDescription"), lit(""))))
       },
       // Open attributes (ref unified.jsonc:91 giftWrappingPossible;
       // :260-266 variableDataPrinting).
-      map_filter(map(
+      "product_extra_data" -> map_filter(map(
         lit("restrictedCountries"), nullif(col("RestrictedCountriesForSale"), lit("")),
         lit("giftWrappingPossible"), col("GiftWrappingPossible").cast("string"),
         lit("variableDataPrinting"), col("VariableDataPrinting").cast("string")),
-        (_, v) => v.isNotNull).as("product_extra_data"),
-      lit(null).cast("timestamp").as("created_at"),
-      lit(null).cast("timestamp").as("updated_at"),
-      lit(null).cast("timestamp").as("last_sync"),
+        (_, v) => v.isNotNull),
       // Model-level source fields (ref unified_product_schema.py:201).
-      to_json(struct((Seq("ModelCode") ++ parentCols).map(col): _*))
-        .as("raw_data"))
+      "raw_data" -> to_json(struct((Seq("ModelCode") ++ parentCols).map(col): _*))): _*)
   }
 
   def unified(spark: SparkSession, path: String): DataFrame =
