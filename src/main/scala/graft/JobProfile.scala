@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev-only wall-time breakdown for one registered query (guide §1):
   * `runMain graft.JobProfile <query> [runs]` runs the query with a
@@ -10,24 +11,46 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * where the commit machinery (manifest IO, planning, footer reads)
   * spends time vs actual cluster work. */
 object JobProfile {
+
+  /** The first `graft.` frame of an SQL execution's call-site long form
+    * (`SparkListenerSQLExecutionStart.details`, one frame a line): the
+    * program code that started the execution. A job's own
+    * `callSite.short` cannot name it when AQE submits the job from its
+    * own thread — it then reads `withThreadLocalCaptured at
+    * CompletableFuture.java`. */
+  private[graft] def graftFrame(details: String): Option[String] =
+    Option(details).toSeq.flatMap(_.linesIterator).map(_.trim.stripPrefix("at "))
+      .find(_.startsWith("graft."))
+
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q212_autosync_freq_hist")
     val runs = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = DevRun.session()
 
-    case class J(id: Int, desc: String, site: String, start: Long,
+    case class J(id: Int, exec: String, desc: String, site: String, start: Long,
                  var end: Long = 0, var stages: Int = 0, var tasks: Int = 0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
+    // SQL execution id -> the graft frame that started it
+    val execSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     // site ("op at File.scala:line") -> (stage count, Σ wall ms, Σ tasks)
     val sites = new java.util.concurrent.ConcurrentHashMap[String, (Int, Long, Int)]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          graftFrame(s.details).foreach(execSites.put(s.executionId, _))
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
-        jobs.put(e.jobId, J(e.jobId, desc, site, e.time))
+        def prop(k: String): Option[String] =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        // Keyed by SQL execution: the execution's graft frame names
+        // the job; a job outside any SQL execution keeps its call site.
+        val exec = prop("spark.sql.execution.id")
+        val site = exec.flatMap(x => Option(execSites.get(x.toLong)))
+          .orElse(prop("callSite.short")).getOrElse("")
+        val desc = prop("spark.job.description").getOrElse("")
+        jobs.put(e.jobId, J(e.jobId, exec.getOrElse("-"), desc, site, e.time))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         Option(jobs.get(e.jobId)).foreach(_.end = e.time)
@@ -91,7 +114,7 @@ object JobProfile {
       val totalJob = js.map(j => (j.end - j.start) / 1e3).sum
       println(f"== $name run $r: wall=$wall%.3f s, jobs=${js.size}, sum(job)=$totalJob%.3f s, driver-gap=${wall - totalJob}%.3f s")
       js.sortBy(j => -(j.end - j.start)).take(15).foreach { j =>
-        println(f"   job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.3f s stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.site.take(60)}%-60s ${j.desc.take(70)}")
+        println(f"   job ${j.id}%4d exec=${j.exec}%-5s ${(j.end - j.start) / 1e3}%7.3f s stages=${j.stages}%2d tasks=${j.tasks}%4d  ${j.site.take(60)}%-60s ${j.desc.take(70)}")
       }
       println("   -- main-thread samples by graft call path (10 ms each) --")
       samples.entrySet().asScala.toSeq.sortBy(-_.getValue).take(35).foreach { en =>

@@ -77,6 +77,9 @@ object Rollup {
       * stays away, but auto-sync still replays it. */
     def contentIdentity: Boolean
     def props: Seq[(String, String)]
+    /** The source columns the derive reads: the change window
+      * [[sync]] diffs carries them besides the rollup's own columns. */
+    def inputs: Seq[String]
   }
 
   /** The frequency-table high-cardinality guard
@@ -88,6 +91,7 @@ object Rollup {
     require(maxDistinctPerGroup > 0,
       "FreqGuard with no cap is just the identity — pass no spec instead")
     override def contentIdentity: Boolean = true
+    override def inputs: Seq[String] = guardGroupCols :+ valueCol
     override def props: Seq[(String, String)] = Seq(
       DeriveKindProp -> "freqGuard",
       DeriveValueColProp -> valueCol,
@@ -121,6 +125,7 @@ object Rollup {
   final case class HistBin(valueCol: String, binCol: String,
                            lo: Double, hi: Double, bins: Int) extends DeriveSpec {
     override def contentIdentity: Boolean = false
+    override def inputs: Seq[String] = Seq(valueCol)
     override def props: Seq[(String, String)] = Seq(
       DeriveKindProp -> "histBin",
       DeriveValueColProp -> valueCol,
@@ -380,6 +385,19 @@ object Rollup {
         if (cursor == cur) return cur
         require(cursor < cur,
           s"rollup cursor v$cursor is ahead of source v$cur — wrong source?")
+        val meta = (CursorProp -> cur.toString) +:
+          metaProps(srcRoot, srcKeys, groupCols, sumCols, minMaxCols,
+            derivedFlag, deriveSpec)
+        // The window diffs only the columns the rollup maintains, plus
+        // a recorded derive's inputs: a row whose group, sum and
+        // min/max values are unchanged would add and subtract the same
+        // contribution to the same group, so it drops out of the diff
+        // instead. A closure derive may read any column and gets them
+        // all.
+        val windowCols =
+          if (deriveSpec.isEmpty && (derive ne Identity)) None
+          else Some(groupCols ++ sumCols ++ minMaxCols ++
+            deriveSpec.toSeq.flatMap(_.inputs))
         // Persist the RAW change window, then derive over the cached
         // frame: an eager derive guard (FreqGuard's distinct-count
         // action) otherwise executes the full CDC diff once on its
@@ -387,18 +405,26 @@ object Rollup {
         // probe now materializes the cache that every later consumer
         // (null check, delta aggregation, rebuild scoping) reads.
         val window = SnapshotStore.changes(spark, srcRoot, cursor, cur,
-          srcKeys, preImages = true).persist()
+          srcKeys, preImages = true, windowCols).persist()
         val feed = deriveFn(window)
         var mergedRowsCache: Option[DataFrame] = None
         try {
-          require(feed.filter(groupCols.map(col(_).isNull).reduce(_ || _))
-              .isEmpty,
+          // One job sizes the window and checks its group values.
+          val probe = feed.agg(count(lit(1)),
+            count_if(groupCols.map(col(_).isNull).reduce(_ || _))).head()
+          require(probe.getLong(1) == 0L,
             "rollup sync: null group value in the change window — group " +
               "columns must be non-null")
-          val merged = props.filterNot(p => MetaKeys(p._1)).toSeq ++
-            ((CursorProp -> cur.toString) +:
-              metaProps(srcRoot, srcKeys, groupCols, sumCols, minMaxCols,
-                derivedFlag, deriveSpec))
+          // An empty window (layout-only source commits, or edits to
+          // columns the rollup does not maintain) only advances the
+          // cursor: one metadata commit. The FULL meta set rides it
+          // (not just the cursor), so a pre-srcKeys rollup heals on its
+          // next window even when that window carries no content.
+          if (probe.getLong(0) == 0L) {
+            SnapshotStore.setProperties(spark, rollupRoot, meta)
+            return cur
+          }
+          val merged = props.filterNot(p => MetaKeys(p._1)).toSeq ++ meta
           val sign = when(col("_change_type")
             .isin("insert", "update_postimage"), 1).otherwise(-1)
           // MIN/MAX are not invertible: groups losing rows rebuild.
@@ -483,18 +509,11 @@ object Rollup {
           val committed = SnapshotStore.upsertDeleteCommit(spark, rollupRoot,
             withBucket(upserts), Some(deletes), groupCols, Bucket,
             properties = Some(merged))
-          // A window with no CONTENT delta (compact / z-order commits
-          // only) makes the merge a no-op that never writes the
-          // property set — advance the cursor with a metadata-only
-          // commit so later syncs stop re-diffing the same window.
-          // The FULL meta set rides it (not just the cursor), so a
-          // pre-srcKeys rollup heals on its next window even when
-          // that window carries no content.
+          // A window whose changes net to no group delta makes the
+          // merge a no-op that never writes the property set — advance
+          // the cursor with a metadata-only commit as above.
           if (before.contains(committed))
-            SnapshotStore.setProperties(spark, rollupRoot,
-              (CursorProp -> cur.toString) +:
-                metaProps(srcRoot, srcKeys, groupCols, sumCols, minMaxCols,
-                  derivedFlag, deriveSpec))
+            SnapshotStore.setProperties(spark, rollupRoot, meta)
           cur
         } finally {
           window.unpersist()

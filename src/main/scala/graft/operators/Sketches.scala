@@ -116,20 +116,30 @@ object Sketches {
         // Pre-images matter here too: an update that REGROUPS a row
         // must mark the OLD group touched (its sketch holds hashes of
         // rows that left), and the old group value only travels on the
-        // update_preimage row.
+        // update_preimage row. The window diffs only the group and
+        // sketched columns (see Rollup.sync): an update to any other
+        // column leaves every sketch as it was.
         val feed = SnapshotStore.changes(spark, srcRoot, cursor, cur,
-          srcKeys, preImages = true).persist()
+          srcKeys, preImages = true, Some(groupCols ++ cols)).persist()
         try {
-          require(feed.filter(groupCols.map(col(_).isNull)
-              .reduce(_ || _)).isEmpty,
+          // One job sizes the window, checks its group values and
+          // picks the path.
+          val probe = feed.agg(count(lit(1)),
+            count_if(groupCols.map(col(_).isNull).reduce(_ || _)),
+            count_if(col("_change_type") =!= "insert")).head()
+          require(probe.getLong(1) == 0L,
             "hllSync: null group value in the change window — group " +
               "columns must be non-null")
+          if (probe.getLong(0) == 0L) {
+            SnapshotStore.setProperties(spark, sketchRoot,
+              Seq(CursorProp -> cur.toString))
+            return cur
+          }
           val merged =
             props.filterNot(_._1 == CursorProp).toSeq :+ (CursorProp -> cur.toString)
           var committed = -1L
           val before = SnapshotStore.currentVersion(spark, sketchRoot)
-          val hasDoom =
-            !feed.filter(col("_change_type") =!= "insert").isEmpty
+          val hasDoom = probe.getLong(2) > 0L
           if (!hasDoom) {
             // Insert-only: sketch ONLY the delta, union into the stored
             // rows of the touched groups (a left join — untouched
@@ -177,10 +187,9 @@ object Sketches {
                 properties = Some(merged))
             } finally rebuilt.unpersist()
           }
-          // A content-no-op window (layout-only source commits) makes
-          // the merge above RETURN the unchanged version without
-          // writing the property set — advance the cursor with a
-          // metadata-only commit so later syncs stop re-diffing it.
+          // A merge that commits nothing RETURNS the unchanged version
+          // without writing the property set — advance the cursor with
+          // a metadata-only commit so later syncs stop re-diffing it.
           // Compared against the merge's RETURNED version (Rollup.sync's
           // convention): a second currentVersion read could see a
           // concurrent writer's commit and skip the advance forever.

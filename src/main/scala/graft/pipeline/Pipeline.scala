@@ -142,8 +142,11 @@ object Pipeline {
         tagged.filter(size(col("__errors")) === 0).drop("__errors"),
         "updated_at"), "created_at"), "last_sync")
         .withColumn("supplier_id", col("supplier.id"))
-      val errorCount = bad.count()
-      val successCount = good.count()
+      // One accounting pass over the persisted frame for both counts.
+      val counts = tagged.agg(count(lit(1)),
+        count_if(size(col("__errors")) > 0)).head()
+      val errorCount = counts.getLong(1)
+      val successCount = counts.getLong(0) - errorCount
       if (successCount > 0) {
         // Sink selection (S8): the default is dynamic-partition-
         // overwrite parquet; "snapshot" mode commits through the atomic
@@ -158,8 +161,10 @@ object Pipeline {
             keyCol = "product_id", versionCol = "last_sync",
             partitionCol = "supplier_id")
       }
-      val samples = bad.select(concat_ws("; ", col("__errors"))).limit(5)
-        .collect().map(_.getString(0)).toSeq
+      val samples =
+        if (errorCount == 0) Nil
+        else bad.select(concat_ws("; ", col("__errors"))).limit(5)
+          .collect().map(_.getString(0)).toSeq
       deadLetterPath.foreach { dl =>
         // Each supplier appends under its own hive-style directory:
         // readers of `dl` still infer supplier_id as a partition

@@ -576,7 +576,24 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * array, never a second join. */
   def changes(spark: SparkSession, root: String, fromVersion: Long,
               toVersion: Long, keyCols: ColSpec,
-              preImages: Boolean): DataFrame = {
+              preImages: Boolean): DataFrame =
+    changes(spark, root, fromVersion, toVersion, keyCols, preImages, None)
+
+  /** [[changes]] over a COLUMN PROJECTION: with `columns = Some(cs)`
+    * both sides select the keys plus `cs` before the diff, so a row
+    * whose named columns did not change cancels exactly, as a row in a
+    * byte-identical file does, and the scan reads only those columns.
+    * The window then answers "what changed in these columns", which
+    * is all a consumer that maintains a function of them (a rollup's
+    * group/sum/min/max columns, a sketch's columns) needs: the dropped
+    * row's pre-image and post-image would have contributed the same
+    * value to the same group. Names matched case-insensitively; a name
+    * the snapshot lacks (a derive's computed column) is ignored. A
+    * projection that leaves no non-key column still reports inserts
+    * and deletes of keys. `None` diffs every column. */
+  private[graft] def changes(spark: SparkSession, root: String, fromVersion: Long,
+                             toVersion: Long, keyCols: ColSpec, preImages: Boolean,
+                             columns: Option[Seq[String]]): DataFrame = {
     require(keyCols.nonEmpty, "change feed needs at least one key column")
     require(fromVersion != toVersion,
       s"change feed needs two distinct versions, got $fromVersion twice")
@@ -618,14 +635,20 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         SnapshotStore.presentLogical(
           SnapshotStore.readEntriesAt(spark, root, all, v).limit(0), mapping)
       else readVersion(spark, root, v, mappingVersion = Some(mvv))
-    val from = side(fromDiff, fromAll, fromVersion)
-    val to = side(toDiff, toAll, toVersion)
+    def projected(df: DataFrame): DataFrame = columns.fold(df) { cs =>
+      val wanted = keyCols.cols ++ cs
+      df.select(df.columns.toSeq
+        .filter(c => wanted.exists(_.equalsIgnoreCase(c))).map(col): _*)
+    }
+    val from = projected(side(fromDiff, fromAll, fromVersion))
+    val to = projected(side(toDiff, toAll, toVersion))
     val toCols = to.columns.toSeq
     val cols = toCols ++ from.columns.toSeq.filterNot(toCols.contains)
     val dataCols = cols.filterNot(keyCols.contains)
     keyCols.cols.foreach(k => require(cols.contains(k),
       s"key column $k missing from snapshot"))
-    require(dataCols.nonEmpty, "change feed needs at least one non-key column")
+    require(dataCols.nonEmpty || columns.isDefined,
+      "change feed needs at least one non-key column")
     def aligned(df: DataFrame, other: DataFrame): (DataFrame, Map[String, org.apache.spark.sql.types.DataType]) = {
       val have = df.columns.toSet
       val otherTypes = other.schema.map(f => f.name -> f.dataType).toMap
@@ -638,10 +661,14 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     val (tA, _) = aligned(to, from)
     def comparable(c: String): Column =
       if (hasMap(fTypes(c))) to_json(col(c)).as(c) else col(c).as(c)
+    // A key-only projection diffs presence: one constant field stands
+    // in for the empty row, so a key on both sides still cancels.
+    def rowOf(fields: Seq[Column]): Column =
+      struct((if (fields.isEmpty) Seq(lit(true).as("__present")) else fields): _*)
     def sided(df: DataFrame, side: String): DataFrame = df.select(
       keyCols.cols.map(col) :+
-      struct(dataCols.map(col): _*).as(s"_${side}_row") :+
-      struct(dataCols.map(comparable): _*).as(s"_${side}_cmp"): _*)
+      rowOf(dataCols.map(col)).as(s"_${side}_row") :+
+      rowOf(dataCols.map(comparable)).as(s"_${side}_cmp"): _*)
     val j = sided(fA, "from").join(sided(tA, "to"), keyCols.cols, "full_outer")
       .filter(!(col("_from_cmp") <=> col("_to_cmp")))
     if (!preImages) {

@@ -104,9 +104,11 @@ object Laltex {
           "expected_date" -> d.getField("DueInETA"))))
         .as("__stock")))
 
+    // A product with no items gets no variant row, so its `variants`
+    // is [] rather than one variant built from an all-null item.
     val v = products.select(
       col("ProductCode"), tierPrices(col("ProductPrice")).as("__tier_prices"),
-      posexplode_outer(col("Items")).as(Seq("__pos", "item")))
+      posexplode(col("Items")).as(Seq("__pos", "item")))
     val joined = v.join(stocks, col("item.ItemCode") === col("__stock_code"), "left_outer")
 
     val variantStruct = Unified.struct(variantSchema,

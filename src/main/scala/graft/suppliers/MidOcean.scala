@@ -170,9 +170,10 @@ object MidOcean {
     val pricelist = feed.pricelist
 
     // J1: explode variants (order-indexed), broadcast-join prices on sku.
+    // A product listing no variants gets none (not one all-null row).
     val v = products
       .select(col("master_code"),
-        posexplode_outer(col("variants")).as(Seq("__pos", "v")))
+        posexplode(col("variants")).as(Seq("__pos", "v")))
     val prices = broadcast(pricelist.select(
       col("sku").as("__price_sku"),
       priceStruct(col("price"), col("valid_until")).as("__price")))

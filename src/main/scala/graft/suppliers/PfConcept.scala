@@ -336,8 +336,11 @@ object PfConcept {
           col("__print_options"), col("__artwork"), col("__raw_item"),
           col("__size_grid"), col("__size_range"), col("__gender")): _*),
           col("__pos")).as("__p"),
-        transform(array_sort(collect_list(struct(col("__pos").as("o"),
-          col("__variant").as("v")))), x => x.getField("v")).as("variants"),
+        // A model with no items keeps its one outer row for the parent
+        // fields above, but that row is no variant.
+        transform(array_sort(collect_list(when(col("__pos").isNotNull,
+          struct(col("__pos").as("o"), col("__variant").as("v"))))),
+          x => x.getField("v")).as("variants"),
         // Sorted-distinct union of the per-item companion codes —
         // collect_list order is nondeterministic, the sort restores a
         // canonical form.
@@ -380,7 +383,7 @@ object PfConcept {
         transform(col("variants"), v => v.getField("color").getField("name")),
         c => c.isNotNull)),
       "variants" -> col("variants"),
-      "base_prices" -> firstVariant.getField("prices"),
+      "base_prices" -> coalesce(firstVariant.getField("prices"), array()),
       "is_printable" -> (size(printOptions) > 0),
       "print_options" -> printOptions,
       "images" -> images,

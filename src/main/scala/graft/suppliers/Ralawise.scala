@@ -78,8 +78,10 @@ object Ralawise {
     val grouped = Nest.rollupWithParent(
       rows, Seq("Style Code"), parentCols, variantStruct, col("`Sku Code`"), "variants")
 
-    val colorsAvailable = array_distinct(transform(col("variants"),
-      v => v.getField("color").getField("name")))
+    // A SKU without a colour name has colour name "": no colour.
+    val colorsAvailable = array_distinct(filter(
+      transform(col("variants"), v => v.getField("color").getField("name")),
+      c => c.isNotNull && c =!= ""))
 
     val categories = filter(
       zip_with(

@@ -81,12 +81,14 @@ object SandS {
       col("categoryID").cast("string").as("__cat_id"),
       trim(col("name")).as("__cat_name")))
 
-    // styles.categories is a CSV of ids: explode → join → re-nest.
+    // styles.categories is a CSV of ids: explode → join → re-nest. An
+    // id the category dimension lacks has no name and is dropped, as
+    // every supplier drops a category without a name.
     val styleCats = stylesC
       .select(col("styleID").as("__sc_style"),
-        posexplode_outer(split(coalesce(col("categories"), lit("")), ","))
-          .as(Seq("__pos", "__cat_id")))
-      .join(catDim, Seq("__cat_id"), "left_outer")
+        posexplode(split(col("categories"), ",")).as(Seq("__pos", "__cat_id")))
+      .join(catDim, Seq("__cat_id"))
+      .filter(col("__cat_name").isNotNull)
       .groupBy(col("__sc_style"))
       .agg(transform(
         array_sort(collect_list(struct(col("__pos").as("o"),
@@ -202,7 +204,7 @@ object SandS {
       "material" -> try_element_at(col("__specs"), lit("Fabric")),
       "colors_available" -> array_distinct(filter(
         transform(col("variants"), v => v.getField("color").getField("name")),
-        c => c.isNotNull)),
+        c => c.isNotNull && c =!= "")),
       "variants" -> col("variants"),
       "base_prices" -> try_element_at(col("variants"), lit(1)).getField("prices"),
       "is_printable" -> lit(false),

@@ -146,13 +146,14 @@ object Sanmar {
 
     val stockByPart = Sanmar.stockByPart(feed)
 
-    // Parts (colour variants) out of the product body.
+    // Parts (colour variants) out of the product body; a product with
+    // no parts gets no variant row.
     val parts = product.select(
       col("productId"), col("productName"), col("description"),
       col("productBrand"), col("primaryImageUrl"),
       col("ProductCategoryArray"), col("ProductKeywordArray"),
       col("lastChangeDate"), col("creationDate"),
-      explode_outer(FeedReader.asArray(product, col("ProductPartArray.ProductPart")))
+      explode(FeedReader.asArray(product, col("ProductPartArray.ProductPart")))
         .as("__part"))
 
     val joined = parts
@@ -205,6 +206,7 @@ object Sanmar {
         x => x.getField("v")).as("variants"))
 
     val base = product.join(variantsByProduct, Seq("productId"), "left_outer")
+      .withColumn("variants", coalesce(col("variants"), array()))
 
     val keywords = array_distinct(transform(
       FeedReader.asArray(product, col("ProductKeywordArray.ProductKeyword")),
@@ -255,8 +257,8 @@ object Sanmar {
       "colors_available" -> array_distinct(filter(
         transform(col("variants"), v => v.getField("color").getField("name")),
         c => c.isNotNull)),
-      "variants" -> coalesce(col("variants"), array()),
-      "base_prices" -> firstVariant.getField("prices"),
+      "variants" -> col("variants"),
+      "base_prices" -> coalesce(firstVariant.getField("prices"), array()),
       "is_printable" -> lit(false),
       "images" -> filter(array(Unified.struct(imageSchema,
         "url" -> col("primaryImageUrl"), "type" -> lit("primary"))),

@@ -185,4 +185,42 @@ class PipelineSpec extends SparkSpec {
       deadLetterPath = Some(s"$sink/dead"))
     assert(spark.read.parquet(s"$sink/dead").count() == 2)
   }
+
+  /** A registered in-memory supplier of `n` products; the ids in `bad`
+    * have no name and fail validation. */
+  private def registerFeed(supplier: String, n: Int, bad: Set[Int]): Unit =
+    Registry.register(new graft.pipeline.SupplierPipeline {
+      val id = supplier
+      def unified(s: org.apache.spark.sql.SparkSession, p: String) = {
+        import graft.schema.Unified
+        (1 to n).map(i => (s"${supplier}_$i", if (bad(i)) null else s"product $i"))
+          .toDF("pid", "nm")
+          .select(Unified.fill(Unified.schema,
+            "product_id" -> col("pid"), "name" -> col("nm"),
+            "supplier" -> Unified.struct(Unified.supplierSchema, "id" -> lit(supplier)),
+            "status" -> lit("active")): _*)
+      }
+    })
+
+  test("runSupplier on a clean feed: exact counts and no error samples") {
+    registerFeed("acct_clean", 25, Set.empty)
+    val sink = java.nio.file.Files.createTempDirectory("graft-acct").toString + "/products"
+    val r = Pipeline.runSupplier(spark, SupplierConfig("acct_clean", "unused"), sink,
+      atomicSink = true)
+    assert((r.status, r.processed, r.success, r.errors) == ("success", 25L, 25L, 0L), r)
+    assert(r.errorSamples.isEmpty)
+    assert(graft.sinks.SnapshotStore.read(spark, sink).count() == 25L)
+  }
+
+  test("runSupplier on a partly-bad feed: partial_success, exact counts, at most five samples") {
+    registerFeed("acct_partial", 30, (1 to 30).filter(_ % 3 == 0).toSet)
+    val sink = java.nio.file.Files.createTempDirectory("graft-acct").toString + "/products"
+    val r = Pipeline.runSupplier(spark, SupplierConfig("acct_partial", "unused"), sink,
+      atomicSink = true)
+    assert((r.status, r.processed, r.success, r.errors) ==
+      ("partial_success", 30L, 20L, 10L), r)
+    assert(r.errorSamples.size == 5 && r.errorSamples.forall(_.contains("missing name")),
+      r.errorSamples)
+    assert(graft.sinks.SnapshotStore.read(spark, sink).count() == 20L)
+  }
 }

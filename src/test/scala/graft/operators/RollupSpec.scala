@@ -248,4 +248,124 @@ class RollupSpec extends graft.SparkSpec {
     }
     assert(e.getMessage.contains("null group"), e.getMessage)
   }
+
+  /** Rollup rows in a fixed order for whole-table equality. */
+  private def sorted(df: org.apache.spark.sql.DataFrame, groupCols: Seq[String]) =
+    df.orderBy(groupCols.map(col): _*).collect().map(_.toSeq).toSeq
+
+  test("changes over a column projection: rows unchanged in the named columns cancel") {
+    val root = freshRoot("ru_proj")
+    SnapshotStore.commit(spark,
+      Seq((1L, "p0", "a", 10, 1.0), (2L, "p0", "b", 20, 2.0), (3L, "p0", "a", 30, 3.0))
+        .toDF("id", "part", "grp", "qty", "price"), root, "part")
+    // v2: id 1 changes only its price, id 2 moves groups, id 3 leaves,
+    // id 4 arrives.
+    SnapshotStore.upsertDeleteCommit(spark, root,
+      Seq((1L, "p0", "a", 10, 9.0), (2L, "p0", "a", 20, 2.0), (4L, "p0", "b", 40, 4.0))
+        .toDF("id", "part", "grp", "qty", "price"),
+      Some(Seq(Tuple1(3L)).toDF("id")), "id", "part")
+    def window(cols: Option[Seq[String]]) =
+      SnapshotStore.changes(spark, root, 1L, 2L, Seq("id"), preImages = true, cols)
+    val projected = window(Some(Seq("GRP", "qty", "not_a_column")))
+    assert(projected.columns.toSeq == Seq("id", "grp", "qty", "_change_type"))
+    assert(projected.as[(Long, String, Int, String)].collect().toSet == Set(
+      (2L, "b", 20, "update_preimage"), (2L, "a", 20, "update_postimage"),
+      (3L, "a", 30, "delete"), (4L, "b", 40, "insert")))
+    // The unprojected window still reports the price-only update.
+    assert(window(None).filter($"id" === 1L).count() == 2L)
+    // Keys alone: presence only — inserts and deletes, never updates.
+    assert(window(Some(Nil)).as[(Long, String)].collect().toSet ==
+      Set((3L, "delete"), (4L, "insert")))
+  }
+
+  test("a price-only merge leaves the rollup's files as they were and adds one version") {
+    val srcRoot = freshRoot("ru_price"); val rollRoot = freshRoot("ru_priceroll")
+    val base = rows(30).withColumn("price", $"qty" * 1.5)
+    SnapshotStore.commit(spark, base, srcRoot, "part")
+    def sync() = Rollup.sync(spark, srcRoot, rollRoot,
+      Seq("id"), Seq("grp"), Seq("qty"), Seq("score"))
+    sync()
+    val rollV = SnapshotStore.currentVersion(spark, rollRoot).get
+    val files = SnapshotStore.manifest(spark, rollRoot, rollV)
+    val before = sorted(SnapshotStore.read(spark, rollRoot), Seq("grp"))
+    SnapshotStore.upsertDeleteCommit(spark, srcRoot,
+      base.filter($"id" <= 12L).withColumn("price", $"price" + 1), None, "id", "part")
+    val srcV = SnapshotStore.currentVersion(spark, srcRoot).get
+    assert(sync() == srcV)
+    assert(SnapshotStore.currentVersion(spark, rollRoot).contains(rollV + 1),
+      "an empty window costs exactly one metadata commit")
+    assert(SnapshotStore.manifest(spark, rollRoot, rollV + 1) == files,
+      "no data file of the rollup may be rewritten")
+    assert(SnapshotStore.tablePropertiesMap(spark, rollRoot)
+      .get(Rollup.CursorProp).contains(srcV.toString))
+    assert(sorted(SnapshotStore.read(spark, rollRoot), Seq("grp")) == before)
+  }
+
+  test("a seeded DML sequence keeps sum and min/max rollups equal to the direct profile") {
+    val srcRoot = freshRoot("ru_seq")
+    val sumRoot = freshRoot("ru_seqsum"); val mmRoot = freshRoot("ru_seqmm")
+    val n = 80
+    SnapshotStore.commit(spark,
+      (1 to n).map(i => (i.toLong, s"p${i % 2}", s"g${i % 4}", i, Option(i.toDouble), i * 0.5))
+        .toDF("id", "part", "grp", "qty", "score", "price"), srcRoot, "part")
+    val rollups = Seq(
+      (sumRoot, Seq("qty", "score"), Seq.empty[String]),
+      (mmRoot, Seq("qty"), Seq("score")))
+    def syncAll(): Unit = rollups.foreach { case (r, s, m) =>
+      Rollup.sync(spark, srcRoot, r, Seq("id"), Seq("grp"), s, m) }
+    def check(step: String): Unit = rollups.foreach { case (r, s, m) =>
+      assert(sorted(Rollup.view(SnapshotStore.read(spark, r), Seq("grp"), s, m), Seq("grp")) ==
+        sorted(Rollup.view(Rollup.profile(SnapshotStore.read(spark, srcRoot), Seq("grp"), s, m),
+          Seq("grp"), s, m), Seq("grp")), s"$r after $step")
+    }
+    syncAll()
+    val rnd = new scala.util.Random(7)
+    var nextId = n + 1
+    (1 to 8).foreach { step =>
+      val live = SnapshotStore.read(spark, srcRoot)
+        .select($"id", $"part", $"grp", $"qty", $"score", $"price")
+        .as[(Long, String, String, Int, Option[Double], Double)].collect().toSeq
+      val picked = rnd.shuffle(live).take(6)
+      val edited = picked.zipWithIndex.map { case ((id, part, grp, qty, score, price), k) =>
+        k % 4 match {
+          case 0 => (id, part, s"g${rnd.nextInt(5)}", qty, score, price) // regroup
+          case 1 => (id, part, grp, qty + rnd.nextInt(50) - 25,         // sum edit
+            if (rnd.nextBoolean()) None else score, price)
+          case 2 => (id, part, grp, qty, score, price + 1.0)             // price only
+          case _ => (id, part, grp, qty, score.map(_ + 100.0), price)    // new max
+        }
+      }
+      val inserts = (0 until 2).map { _ =>
+        nextId += 1
+        (nextId.toLong, s"p${nextId % 2}", s"g${rnd.nextInt(5)}", nextId,
+          Option(nextId.toDouble), 1.0)
+      }
+      // The current extremum of a random group leaves: a min/max loser.
+      val g = s"g${rnd.nextInt(4)}"
+      val loser = live.filter(r => r._3 == g && r._5.isDefined)
+        .sortBy(-_._5.get).headOption.map(_._1).filterNot(picked.map(_._1).contains)
+      SnapshotStore.upsertDeleteCommit(spark, srcRoot,
+        (edited ++ inserts).toDF("id", "part", "grp", "qty", "score", "price"),
+        Some(loser.toSeq.toDF("id")), "id", "part")
+      syncAll()
+      check(s"step $step")
+    }
+  }
+
+  test("a rollup grouped by its own source key syncs inserts and deletes") {
+    val srcRoot = freshRoot("ru_key"); val rollRoot = freshRoot("ru_keyroll")
+    SnapshotStore.commit(spark, rows(10), srcRoot, "part")
+    // No non-key column is left after the projection: the window is
+    // key presence alone.
+    def sync() = Rollup.sync(spark, srcRoot, rollRoot, Seq("id"), Seq("id"), Nil)
+    sync()
+    SnapshotStore.upsertDeleteCommit(spark, srcRoot,
+      rows(12).filter($"id" > 10L || $"id" === 1L).withColumn("qty", $"qty" + 1),
+      Some(Seq(2L, 3L).toDF("id")), "id", "part")
+    val v = SnapshotStore.currentVersion(spark, srcRoot).get
+    assert(sync() == v)
+    val got = SnapshotStore.read(spark, rollRoot).select($"id", $"row_count")
+      .as[(Long, Long)].collect().toMap
+    assert(got == ((1L to 12L).toSet -- Set(2L, 3L)).map(_ -> 1L).toMap)
+  }
 }

@@ -185,4 +185,31 @@ class SketchesSpec extends graft.SparkSpec {
     }
     assert(e.getMessage.contains("null group"), e.getMessage)
   }
+
+  test("hllSync after an update to an unsketched column equals a full rebuild and rewrites no file") {
+    val srcRoot = freshRoot("sk_unsk"); val skRoot = freshRoot("sk_unsktab")
+    SnapshotStore.commit(spark, src(300).withColumn("part", $"id" % 2), srcRoot, "part")
+    def sync() = Sketches.hllSync(spark, srcRoot, skRoot, Seq("id"), Seq("grp"), Seq("user"))
+    def estimates(df: org.apache.spark.sql.DataFrame) =
+      Sketches.estimates(df, Seq("grp"), Seq("user")).orderBy("grp").collect().toSeq
+    sync()
+    val skV = SnapshotStore.currentVersion(spark, skRoot).get
+    val files = SnapshotStore.manifest(spark, skRoot, skV)
+    // `doc` is not sketched: the projected window is empty.
+    SnapshotStore.upsertDeleteCommit(spark, srcRoot,
+      src(300).withColumn("part", $"id" % 2).filter($"id" <= 50L)
+        .withColumn("doc", concat($"doc", lit("x"))), None, "id", "part")
+    assert(sync() == SnapshotStore.currentVersion(spark, srcRoot).get)
+    assert(SnapshotStore.currentVersion(spark, skRoot).contains(skV + 1))
+    assert(SnapshotStore.manifest(spark, skRoot, skV + 1) == files)
+    def rebuilt = Sketches.hllProfile(SnapshotStore.read(spark, srcRoot), Seq("grp"), Seq("user"))
+    assert(estimates(SnapshotStore.read(spark, skRoot)) == estimates(rebuilt))
+    // A window mixing an unsketched edit with a sketched one still
+    // rebuilds the touched group.
+    SnapshotStore.upsertDeleteCommit(spark, srcRoot,
+      Seq((7L, "g1", "brand_new_user", "d7", 1L), (8L, "g2", "u8", "dX", 0L))
+        .toDF("id", "grp", "user", "doc", "part"), None, "id", "part")
+    sync()
+    assert(estimates(SnapshotStore.read(spark, skRoot)) == estimates(rebuilt))
+  }
 }

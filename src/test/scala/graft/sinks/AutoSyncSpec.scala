@@ -300,4 +300,92 @@ class AutoSyncSpec extends graft.SparkSpec {
     SnapshotStore.appendCommit(spark, rowsDf(60 until 70), src, "part")
     assert(SnapshotStore.read(spark, src).count() == 70)
   }
+
+  /** (id, g, qty, v, color, price, part) */
+  private type R = (Long, String, Long, Double, String, Double, String)
+
+  test("a seeded DML sequence keeps auto-synced rollups, histograms and frequency tables exact") {
+    import graft.operators.{Frequencies, Histograms}
+    val dir = freshDir()
+    val src = s"$dir/src"; val roll = s"$dir/roll"; val hg = s"$dir/hg"; val fq = s"$dir/fq"
+    def df(rs: Seq[R]): DataFrame =
+      rs.toDF("id", "g", "qty", "v", "color", "price", "part")
+    SnapshotStore.commit(spark, df((0 until 120).map(i =>
+      (i.toLong, s"g${i % 3}", (i % 7).toLong, (i % 100).toDouble, s"c${i % 4}",
+        i * 0.25, (i % 2).toString))), src, "part")
+    Rollup.sync(spark, src, roll, Seq("id"), Seq("g"), Seq("qty"), Seq("v"))
+    Histograms.sync(spark, src, hg, Seq("id"), Seq("g"), "v", 0.0, 100.0, 10)
+    Frequencies.sync(spark, src, fq, Seq("id"), Seq("g"), "color",
+      maxDistinctPerGroup = 50)
+    Seq(roll, hg, fq).foreach(Rollup.enableAutoSync(spark, src, _))
+    def cursor(t: String): Long =
+      SnapshotStore.tablePropertiesMap(spark, t)(Rollup.CursorProp).toLong
+    def srcV(): Long = SnapshotStore.currentVersion(spark, src).get
+    def set(d: DataFrame): Set[String] = d.collect().map(_.toString).toSet
+    def rollupExact(step: String): Unit = {
+      val direct = Rollup.profile(SnapshotStore.read(spark, src), Seq("g"), Seq("qty"), Seq("v"))
+      assert(set(Rollup.view(SnapshotStore.read(spark, roll), Seq("g"), Seq("qty"), Seq("v"))) ==
+        set(Rollup.view(direct, Seq("g"), Seq("qty"), Seq("v"))), s"rollup after $step")
+      assert(set(Histograms.bins(SnapshotStore.read(spark, hg), Seq("g"))) ==
+        set(SnapshotStore.read(spark, src)
+          .withColumn("bin", Histograms.binOf(col("v"), 0.0, 100.0, 10))
+          .groupBy("g", "bin").agg(count(lit(1)).as("row_count"))), s"histogram after $step")
+      assert(cursor(roll) == srcV() && cursor(hg) == srcV(), step)
+    }
+    def freqExact(step: String): Unit = {
+      assert(set(SnapshotStore.read(spark, fq).select("g", "color", "row_count")) ==
+        set(SnapshotStore.read(spark, src).groupBy("g", "color")
+          .agg(count(lit(1)).as("row_count"))), s"frequencies after $step")
+      assert(cursor(fq) == srcV(), step)
+    }
+    val rnd = new scala.util.Random(11)
+    var nextId = 1000L
+    (1 to 6).foreach { step =>
+      val live = SnapshotStore.read(spark, src)
+        .select("id", "g", "qty", "v", "color", "price", "part").as[R].collect().toSeq
+      val picked = rnd.shuffle(live).take(6)
+      val edited = picked.zipWithIndex.map { case ((id, g, qty, v, c, price, part), k) =>
+        k match {
+          case 0 => (id, s"g${rnd.nextInt(4)}", qty, v, c, price, part)      // regroup
+          case 1 => (id, g, qty + 1 + rnd.nextInt(9), v, c, price, part)     // sum edit
+          case 2 => (id, g, qty, (v + 10 + rnd.nextInt(30)) % 100, c, price, part) // bin cross
+          case 3 => (id, g, qty, v, c, price + 1, part)                      // price only
+          case 4 => (id, g, qty, v, s"c${rnd.nextInt(6)}", price, part)      // value move
+          case _ => (id, g, qty, 150.0 + step, c, price, part)               // new max
+        }
+      }
+      nextId += 1
+      val insert = (nextId, s"g${rnd.nextInt(3)}", 3L, rnd.nextInt(100).toDouble, "c1", 1.0, "0")
+      // The maximum of a random group leaves: a min/max loser.
+      val g = s"g${rnd.nextInt(3)}"
+      val loser = live.filter(_._2 == g).sortBy(-_._4).map(_._1)
+        .find(id => !picked.exists(_._1 == id))
+      SnapshotStore.upsertDeleteCommit(spark, src, df(edited :+ insert),
+        Some(loser.toSeq.toDF("id")), "id", "part")
+      rollupExact(s"step $step")
+      freqExact(s"step $step")
+    }
+    // An edit to no maintained column: each derived table gains one
+    // metadata version and keeps every data file.
+    val tables = Seq(roll, hg, fq)
+    val before = tables.map { t =>
+      val v = SnapshotStore.currentVersion(spark, t).get
+      (v, SnapshotStore.manifest(spark, t, v))
+    }
+    SnapshotStore.upsertDeleteCommit(spark, src,
+      SnapshotStore.read(spark, src).filter(col("id") < 30L)
+        .withColumn("price", col("price") * 2), None, "id", "part")
+    tables.zip(before).foreach { case (t, (v, files)) =>
+      assert(SnapshotStore.currentVersion(spark, t).contains(v + 1), t)
+      assert(SnapshotStore.manifest(spark, t, v + 1) == files, t)
+    }
+    rollupExact("price-only merge")
+    freqExact("price-only merge")
+    // The recorded guard still sees the flood through the projected
+    // window: the frequency table refuses it, the others keep up.
+    SnapshotStore.appendCommit(spark, df((0 until 80).map(i =>
+      (5000L + i, "g0", 1L, 50.0, s"flood$i", 1.0, "0"))), src, "part")
+    assert(cursor(fq) < srcV(), "the FreqGuard flood must leave the cursor stale")
+    rollupExact("flood")
+  }
 }
