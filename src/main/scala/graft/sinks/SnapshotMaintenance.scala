@@ -1,13 +1,11 @@
 package graft.sinks
 
-import java.net.{URLDecoder, URLEncoder}
+import java.net.URLEncoder
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.operators.Upsert
 
 /** Maintenance + metadata DDL for [[SnapshotStore]]: UPDATE,
   * constraints, column mapping DDL, the change feed, layout
@@ -485,8 +483,18 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     require(columns.nonEmpty, "ADD COLUMNS needs at least one column")
     require(columns.map(_._1).distinct.size == columns.size,
       s"ADD COLUMNS lists a column twice: ${columns.map(_._1).mkString(", ")}")
+    // `<type> [COMMENT '…']`, read as a one-column schema so a comment
+    // rides along as field metadata, as it does at CREATE TABLE.
     val typed = columns.map { case (n, ddl) =>
-      n -> org.apache.spark.sql.types.DataType.fromDDL(ddl) }
+      val f = org.apache.spark.sql.types.StructType
+        .fromDDL(s"`${n.replace("`", "``")}` $ddl").fields match {
+        case Array(f) => f
+        case _ => throw new IllegalArgumentException(
+          s"ADD COLUMNS: '$ddl' is not one column type")
+      }
+      require(f.nullable,
+        s"cannot add NOT NULL column '$n': existing rows hold no value for it")
+      n -> f }
     occ(spark, root, "add-column") { cur =>
       val cols = logicalColumns(spark, root, cur)
       val (renames, dropped) = mappingAt(spark, root, cur)
@@ -500,8 +508,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
           s"cannot add column '$name': that is another column's physical name")
       }
       metadataCommit(spark, root, cur, "add-column",
-        schema = Some(org.apache.spark.sql.types.StructType(typed.map { case (n, dt) =>
-          org.apache.spark.sql.types.StructField(n, dt, nullable = true) })))
+        schema = Some(org.apache.spark.sql.types.StructType(typed.map(_._2))))
     }
   }
 

@@ -301,6 +301,11 @@ object MidOcean {
         cat(rawVariant1.getField("category_level3"), 3)),
         c => c.getField("name").isNotNull)
     }
+    val variants = coalesce(col("variants"), array())
+    // A variant without a colour name has colour name "": no colour.
+    val colorsAvailable = array_distinct(filter(
+      transform(variants, v => v.getField("color").getField("name")),
+      c => c.isNotNull && c =!= ""))
     val innerQty = Parsers.parseIntSeparators(col("inner_carton_quantity"))
     val outerQty = Parsers.parseIntSeparators(col("outer_carton_quantity"))
 
@@ -319,7 +324,8 @@ object MidOcean {
       "dimensions" -> dims,
       "weight" -> weight,
       "material" -> col("material"),
-      "variants" -> coalesce(col("variants"), array()),
+      "variants" -> variants,
+      "colors_available" -> colorsAvailable,
       "base_prices" -> coalesce(slice(firstVariant.getField("prices"), 1, 1), array()),
       "is_printable" -> (lower(coalesce(col("printable"), lit(""))) === "yes"),
       "print_positions" -> coalesce(col("__print_positions"), array()),

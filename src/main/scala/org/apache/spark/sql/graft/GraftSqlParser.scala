@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
-import org.apache.spark.sql.catalyst.parser.{ParserInterface, ParseException}
+import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -44,14 +44,13 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
   import GraftSqlParser._
 
-  /** Statement RECOGNITION runs on the same tokenizer discipline as
-    * the free-text splits ([[GraftSqlParser.lex]] shares
-    * [[topLevelIndices]]'s string/backtick/escape rules): each
-    * statement matches as a token sequence with backtracking, never as
-    * a regex over raw text — quoted keywords, nested parens in type
-    * DDL, and path-shaped backticked identifiers can never confuse
-    * dispatch. Anything unrecognized (or aimed at a non-graft catalog)
-    * flows to the session parser untouched. */
+  /** Statement recognition and every free-text split run on one
+    * lexer, [[GraftSqlParser.lex]]: each statement matches as a token
+    * sequence with backtracking, never as a regex over raw text —
+    * quoted keywords, nested parens in type DDL, and path-shaped
+    * backticked identifiers can never confuse dispatch. Anything
+    * unrecognized (or aimed at a non-graft catalog) flows to the
+    * session parser untouched. */
   override def parsePlan(sqlText: String): LogicalPlan =
     recognize(sqlText, delegate).getOrElse(delegate.parsePlan(sqlText))
 
@@ -87,14 +86,15 @@ object GraftSqlParser {
     Option(quoted).getOrElse(bare)
 
   // ------------------------------------------------------------------ //
-  //  Tokenizer-based statement recognition.                             //
+  //  The lexer: the one quoting discipline of the SQL surface.          //
   //                                                                     //
-  //  The lexer applies the SAME string/backtick/escape discipline as    //
-  //  [[topLevelIndices]] (single/double-quoted strings with backslash   //
-  //  and doubled-delimiter escapes, backtick identifiers with doubled-  //
-  //  backtick escapes), so recognition and free-text splitting can      //
-  //  never disagree about where a string ends. Recognizers consume     //
-  //  tokens with backtracking; captures that feed downstream parsers    //
+  //  Single- and double-quoted strings end at their delimiter; a        //
+  //  backslash escapes the next character and a doubled delimiter      //
+  //  escapes itself. Backtick identifiers end at a backtick; a doubled  //
+  //  backtick escapes itself. Recognizers consume tokens with           //
+  //  backtracking, and the free-text splits walk the same tokens        //
+  //  ([[topLevel]]), so no two parts of one statement can disagree      //
+  //  about where a string ends. Captures that feed downstream parsers   //
   //  (expressions, queries, type DDL) are RAW SOURCE SLICES taken from  //
   //  token offsets, so nothing is ever re-spaced or re-quoted.          //
   // ------------------------------------------------------------------ //
@@ -491,26 +491,10 @@ object GraftSqlParser {
         } yield InsertOverwriteSnapshotCommand(parts(t), query, spec)
       }
 
-      /** `p = v, q, r = w` → (col, Some(raw value sql) | None).
-        * Splits on top-level commas respecting BOTH quote kinds
-        * (Spark reads double-quoted literals as strings by default,
-        * so `p = "a,b"` must stay one entry). */
-      def partitionSpecList(inner: String): Seq[(String, Option[String])] = {
-        val out = Seq.newBuilder[String]
-        val buf = new StringBuilder
-        var q: Char = 0; var i = 0
-        while (i < inner.length) {
-          val ch = inner.charAt(i)
-          if (q != 0) { buf += ch; if (ch == q) q = 0 }
-          else ch match {
-            case '\'' | '"' => q = ch; buf += ch
-            case ',' => out += buf.toString; buf.clear()
-            case x => buf += x
-          }
-          i += 1
-        }
-        out += buf.toString
-        out.result().map(_.trim).filter(_.nonEmpty).map { part =>
+      /** `p = v, q, r = w` → (col, Some(raw value sql) | None), split
+        * on top-level commas (`p = "a,b"` stays one entry). */
+      def partitionSpecList(inner: String): Seq[(String, Option[String])] =
+        splitTop(inner, ",").filter(_.nonEmpty).map { part =>
           part.split("=", 2) match {
             case Array(c, v) =>
               (c.trim.stripPrefix("`").stripSuffix("`"), Some(v.trim))
@@ -518,7 +502,6 @@ object GraftSqlParser {
               (c.trim.stripPrefix("`").stripSuffix("`"), None)
           }
         }
-      }
 
       def copyInto: Option[LogicalPlan] = { val u = c()
         for {
@@ -705,32 +688,11 @@ object GraftSqlParser {
     * top-level commas — commas inside the <…>/(…) of decimal/map/
     * struct types don't split. */
   private[graft] def parseAddColumns(raw0: String): Seq[(String, String)] = {
-    var raw = raw0.trim
-    if (raw.startsWith("(")) {
-      var depth = 0; var wraps = raw.endsWith(")")
-      for (i <- 0 until raw.length) {
-        raw.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-            if (depth == 0 && i < raw.length - 1) wraps = false
-          case _ => ()
-        }
-      }
-      if (wraps && depth == 0) raw = raw.substring(1, raw.length - 1).trim
+    val raw = leadingGroup(raw0) match {
+      case Some((inner, "")) => inner
+      case _ => raw0.trim
     }
-    val parts = {
-      val out = Seq.newBuilder[String]
-      val cur = new StringBuilder
-      var depth = 0
-      raw.foreach { c =>
-        if (c == '(' || c == '<') { depth += 1; cur += c }
-        else if (c == ')' || c == '>') { depth -= 1; cur += c }
-        else if (c == ',' && depth == 0) { out += cur.toString; cur.clear() }
-        else cur += c
-      }
-      out += cur.toString
-      out.result().map(_.trim).filter(_.nonEmpty)
-    }
+    val parts = splitTop(raw, ",").filter(_.nonEmpty)
     require(parts.nonEmpty,
       s"malformed ADD COLUMN clause: ${raw0.trim.take(120)}")
     val NameType = s"(?s)\\A$colIdent\\s+(.+)\\z".r
@@ -745,7 +707,7 @@ object GraftSqlParser {
     * doubled '' escapes a quote inside either side). */
   def propertyAssignments(raw: String): Seq[(String, String)] = {
     val Pair = "\\A\\s*'((?:[^']|'')*)'\\s*=\\s*'((?:[^']|'')*)'\\s*\\z".r
-    val parts = splitTopLevel(raw)
+    val parts = splitTop(raw, ",").filter(_.nonEmpty)
     require(parts.nonEmpty, "SET TBLPROPERTIES needs at least one 'key' = 'value'")
     val pairs = parts.map {
       case Pair(k, v) => (k.replace("''", "'"), v.replace("''", "'"))
@@ -760,7 +722,7 @@ object GraftSqlParser {
   /** Parse `'k', 'k2'` (UNSET TBLPROPERTIES shape). */
   def propertyKeys(raw: String): Seq[String] = {
     val Key = "\\A\\s*'((?:[^']|'')*)'\\s*\\z".r
-    val parts = splitTopLevel(raw)
+    val parts = splitTop(raw, ",").filter(_.nonEmpty)
     require(parts.nonEmpty, "UNSET TBLPROPERTIES needs at least one 'key'")
     parts.map {
       case Key(k) => k.replace("''", "'")
@@ -769,70 +731,72 @@ object GraftSqlParser {
     }
   }
 
-  /** Split on top-level commas, respecting single-quoted strings
-    * (with '' escapes). */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inStr = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case ',' => out += cur.toString; cur.clear()
-        case x => cur += x
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  /** Types whose parameters sit in angle brackets: `<` right after
+    * one of these words opens a nesting level; anywhere else it is
+    * the comparison operator. */
+  private val AngleTypes = Set("ARRAY", "MAP", "STRUCT")
 
-  /** Positions of top-level occurrences of keyword `kw` in `s`:
-    * word-bounded, case-insensitive, and OUTSIDE string literals
-    * (single- OR double-quoted, with both backslash and
-    * doubled-quote escapes — Spark reads `"…"` as a string by
-    * default), backtick identifiers (`` `` `` doubling), parens, and
-    * CASE…END expressions. This is the statement-splitting primitive
-    * the free-text recognizers use instead of lazy regex groups — a
-    * `' where '` inside a SET string, a `CASE WHEN … THEN … END`
-    * inside a MERGE condition, or a subquery's own WHERE never split
-    * the statement. */
-  private[graft] def topLevelIndices(s: String, kw: String): Seq[Int] = {
-    val out = Seq.newBuilder[Int]
-    var depth = 0; var caseDepth = 0
-    var quote: Char = 0 // active string/identifier delimiter, 0 = none
-    var i = 0
-    val n = s.length
-    def wordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_' || c == '$'
-    def wordAt(w: String): Boolean =
-      s.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !wordChar(s.charAt(i - 1))) &&
-        (i + w.length >= n || !wordChar(s.charAt(i + w.length)))
-    while (i < n) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`') i += 2 // backslash escape
-        else if (c == quote) {
-          // Doubled delimiter = escaped delimiter, stay inside.
-          if (i + 1 < n && s.charAt(i + 1) == quote) i += 2
-          else { quote = 0; i += 1 }
-        } else i += 1
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
+  /** The top-level tokens of `s` — the one token walk behind every
+    * free-text split. Nesting levels open at `(`, at CASE, and at a
+    * `<` directly after ARRAY, MAP or STRUCT, and close at the
+    * matching `)`, END or `>`; a `)` also closes any CASE or `<` left
+    * open inside it. An opener and its closer are themselves top
+    * level, everything between them is not. A `' where '` inside a
+    * SET string, a `CASE WHEN … THEN … END` inside a MERGE
+    * condition, a subquery's own WHERE, or the comma of
+    * `MAP<STRING, INT>` never splits a statement. `s` is a slice of a
+    * statement [[lex]] accepted, so an unterminated string here is a
+    * caller's error. */
+  private def topLevel(s: String): Vector[Tok] = {
+    val toks = lex(s).getOrElse(throw new IllegalArgumentException(
+      s"unterminated string or backtick identifier: ${s.trim.take(120)}"))
+    def text(t: Tok): String = s.substring(t.start, t.end)
+    var open = List.empty[String] // innermost first: "(", "CASE" or "<"
+    var prev: Option[Tok] = None
+    val out = Vector.newBuilder[Tok]
+    toks.foreach { t =>
+      val atTop = open.isEmpty
+      val x = if (t.kind == 'w') text(t).toUpperCase else text(t)
+      (t.kind, x) match {
+        case ('p', "(") | ('w', "CASE") => open ::= x
+        case ('p', "<") if prev.exists(p =>
+            p.kind == 'w' && AngleTypes(text(p).toUpperCase)) => open ::= x
+        case ('p', ")") => open = open.dropWhile(_ != "(").drop(1)
+        case ('p', ">") if open.headOption.contains("<") => open = open.tail
+        case ('w', "END") if open.headOption.contains("CASE") => open = open.tail
         case _ =>
-          if (depth == 0 && wordAt("case")) { caseDepth += 1; i += 4 }
-          else if (depth == 0 && caseDepth > 0 && wordAt("end")) {
-            caseDepth -= 1; i += 3
-          } else if (depth == 0 && caseDepth == 0 && wordAt(kw)) {
-            out += i; i += kw.length
-          } else i += 1
       }
+      if (atTop || open.isEmpty) out += t
+      prev = Some(t)
     }
     out.result()
+  }
+
+  /** Offsets of the top-level tokens of `s` that read `tok` —
+    * case-insensitively, so `tok` is a keyword or a punctuation mark. */
+  private[graft] def topLevelIndices(s: String, tok: String): Seq[Int] =
+    topLevel(s).collect {
+      case t if t.end - t.start == tok.length &&
+          s.regionMatches(true, t.start, tok, 0, tok.length) => t.start
+    }
+
+  /** `s` cut at its top-level `sep` tokens (a punctuation mark or a
+    * keyword) into trimmed raw slices; empty slices are kept. */
+  private[graft] def splitTop(s: String, sep: String): Seq[String] = {
+    val at = topLevelIndices(s, sep)
+    (0 +: at.map(_ + sep.length)).zip(at :+ s.length)
+      .map { case (a, b) => s.substring(a, b).trim }
+  }
+
+  /** `(inner) rest` → (inner, rest), both trimmed, when `s` opens with
+    * a balanced parenthesized group; None otherwise. */
+  private[graft] def leadingGroup(s: String): Option[(String, String)] = {
+    val top = topLevel(s)
+    def is(i: Int, p: String) = top.lift(i).exists(t =>
+      t.kind == 'p' && s.substring(t.start, t.end) == p)
+    if (is(0, "(") && is(1, ")"))
+      Some((s.substring(top(0).end, top(1).start).trim, s.substring(top(1).end).trim))
+    else None
   }
 
   private def firstTopLevel(s: String, kw: String): Int =
@@ -893,8 +857,7 @@ object GraftSqlParser {
     }
     val where = head match {
       case "" => None
-      case w if w.toLowerCase.startsWith("where") &&
-          !Character.isLetterOrDigit(w.charAt(5.min(w.length - 1))) =>
+      case w if firstTopLevel(w, "where") == 0 && w.length > "where".length =>
         Some(w.substring("where".length).trim)
       case other => throw new IllegalArgumentException(
         "OPTIMIZE supports OPTIMIZE <t> [WHERE <pred>] [ZORDER BY (cols) " +
@@ -927,7 +890,7 @@ object GraftSqlParser {
     val Eq = s"(?is)\\A\\s*$qcol\\s*=\\s*$qcol\\s*\\z".r
     // A composite natural key is a top-level AND of same-named
     // equalities: ON t.supplier = s.supplier AND t.sku = s.sku.
-    val conjuncts = cond.split("(?i)\\s+AND\\s+").toSeq
+    val conjuncts = splitTop(cond, "and")
     val keys = conjuncts.map {
       case Eq(q1, c1, q2, c2) if strip(c1) == strip(c2) =>
         // Qualifiers, when present, must be known names and must not
@@ -1030,9 +993,7 @@ object GraftSqlParser {
           action match {
             case Explicit(colsRaw, valsRaw) =>
               val cols = identifierList(colsRaw)
-              // Value expressions split on top-level commas (an
-              // assignments-style split without the '=' step).
-              val vals = assignmentsSplitTop(valsRaw)
+              val vals = splitTop(valsRaw, ",").filter(_.nonEmpty)
               require(cols.nonEmpty && cols.size == vals.size,
                 s"INSERT lists ${cols.size} columns but ${vals.size} " +
                   s"values: $action")
@@ -1070,78 +1031,21 @@ object GraftSqlParser {
     clauses
   }
 
-  /** Top-level comma split honoring parens, single-quoted strings,
-    * and backticks — the VALUES-list and SET-list splitter. */
-  private[graft] def assignmentsSplitTop(raw: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false; var inTick = false
-    raw.foreach { c =>
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else if (inTick) { cur += c; if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case '`' => inTick = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case x => cur += x
-      }
-    }
-    out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Parse an UPDATE's SET list into (column, expression) pairs:
-    * top-level commas separate assignments (commas inside parens,
-    * single-quoted strings, or backticks don't — `SET a = f(x, y)` is
-    * one assignment), and each splits at its first top-level `=`. */
-  def assignments(raw: String): Seq[(String, String)] = {
-    def splitTop(s: String, sep: Char): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      val cur = new StringBuilder
-      var depth = 0; var inStr = false; var inTick = false; var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (inStr) { cur += c; if (c == '\'') inStr = false }
-        else if (inTick) { cur += c; if (c == '`') inTick = false }
-        else c match {
-          case '\'' => inStr = true; cur += c
-          case '`' => inTick = true; cur += c
-          case '(' => depth += 1; cur += c
-          case ')' => depth -= 1; cur += c
-          case x if x == sep && depth == 0 =>
-            out += cur.toString; cur.clear()
-          case x => cur += x
-        }
-        i += 1
-      }
-      out += cur.toString
-      out.result()
-    }
-    splitTop(raw, ',').map { a =>
-      val eq = {
-        // First top-level '=' not part of <=, >=, !=, <>, ==.
-        var depth = 0; var inStr = false; var inTick = false
-        var found = -1; var i = 0
-        while (i < a.length && found < 0) {
-          val c = a.charAt(i)
-          if (inStr) { if (c == '\'') inStr = false }
-          else if (inTick) { if (c == '`') inTick = false }
-          else c match {
-            case '\'' => inStr = true
-            case '`' => inTick = true
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case '=' if depth == 0 &&
-                (i == 0 || !"<>!=".contains(a.charAt(i - 1))) &&
-                (i + 1 >= a.length || a.charAt(i + 1) != '=') => found = i
-            case _ =>
-          }
-          i += 1
-        }
-        found
-      }
+    * top-level commas separate assignments (`SET a = f(x, y)` is one
+    * assignment), and each splits at its first top-level `=` that is
+    * not part of `<=`, `>=`, `!=`, `<=>` or `==`. */
+  def assignments(raw: String): Seq[(String, String)] =
+    splitTop(raw, ",").map { a =>
+      val top = topLevel(a)
+      def glued(t: Tok, u: Tok, ops: String) =
+        (u.end == t.start || u.start == t.end) &&
+          ops.contains(a.substring(u.start, u.end))
+      val eq = top.indices.collectFirst {
+        case i if a.substring(top(i).start, top(i).end) == "=" &&
+            !top.lift(i - 1).exists(glued(top(i), _, "<>!=")) &&
+            !top.lift(i + 1).exists(glued(top(i), _, "=")) => top(i).start
+      }.getOrElse(-1)
       require(eq > 0, s"malformed UPDATE assignment (no '='): ${a.trim}")
       val colName = a.substring(0, eq).trim
       val exprText = a.substring(eq + 1).trim
@@ -1152,7 +1056,6 @@ object GraftSqlParser {
         colName.stripPrefix("`").stripSuffix("`") else colName
       (stripped, exprText)
     }
-  }
 
   /** Tokenize a ZORDER-style column list with the same quoting rules
     * as table parts — a naive split(",") would mangle a backticked
@@ -1973,28 +1876,10 @@ private[graft] object InsertAlignment {
     // COLUMN LIST — provided columns map positionally to the list,
     // every other table column null-fills — told apart by whether
     // anything follows the balanced parenthesis group.
-    val trimmed = rawQuery.trim
-    var columnList: Option[Seq[String]] = None
-    var effectiveQuery = trimmed
-    if (trimmed.startsWith("(")) {
-      var depth = 0; var close = -1; var i = 0
-      var inStr = false
-      while (i < trimmed.length && close < 0) {
-        val c = trimmed.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else c match {
-          case '\'' => inStr = true
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ => ()
-        }
-        i += 1
-      }
-      if (close >= 0 && close < trimmed.length - 1) {
-        columnList = Some(GraftSqlParser.identifierList(
-          trimmed.substring(1, close)))
-        effectiveQuery = trimmed.substring(close + 1).trim
-      }
+    val (columnList, effectiveQuery) = GraftSqlParser.leadingGroup(rawQuery) match {
+      case Some((cols, query)) if query.nonEmpty =>
+        (Some(GraftSqlParser.identifierList(cols)), query)
+      case _ => (None, rawQuery.trim)
     }
     val cur = SnapshotStore.currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
@@ -2377,28 +2262,6 @@ case class CreateSnapshotTableCommand(table: Seq[String], schemaDdl: String,
       nullable = false)(),
     AttributeReference("version", LongType, nullable = false)())
 
-  /** Split a schema DDL blob at TOP-LEVEL commas (paren/quote-aware —
-    * a generation expression may contain both). */
-  private def splitTop(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var depth = 0; var start = 0; var i = 0
-    var quote: Char = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (quote != 0) { if (ch == quote) quote = 0 }
-      else ch match {
-        case '\'' | '"' | '`' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Extract `col TYPE GENERATED {ALWAYS | BY DEFAULT} AS IDENTITY
     * [(START WITH n INCREMENT BY k)]` clauses: returns (plain DDL,
     * (col, start, step, byDefault) tuples; start defaults 1, step
@@ -2410,7 +2273,7 @@ case class CreateSnapshotTableCommand(table: Seq[String], schemaDdl: String,
     val Id = ("(?is)^(.*?)\\s+GENERATED\\s+(ALWAYS|BY\\s+DEFAULT)\\s+AS\\s+IDENTITY" +
       "\\s*(?:\\(\\s*(?:START\\s+WITH\\s+(-?\\d+)\\s*)?" +
       "(?:INCREMENT\\s+BY\\s+(-?\\d+)\\s*)?\\))?\\s*$").r
-    val (plain, ids) = splitTop(ddl).map {
+    val (plain, ids) = GraftSqlParser.splitTop(ddl, ",").filter(_.nonEmpty).map {
       case Id(colDef, mode, start, step) =>
         val name = colDef.trim.split("\\s+").head
           .stripPrefix("`").stripSuffix("`")
@@ -2432,7 +2295,7 @@ case class CreateSnapshotTableCommand(table: Seq[String], schemaDdl: String,
     * keyword (validated for parse/fold/type at create). */
   private def extractDefaults(ddl: String): (String, Seq[(String, String)]) = {
     val Def = "(?is)^(.*?)\\s+DEFAULT\\s+(.+)$".r
-    val (plain, defs) = splitTop(ddl).map {
+    val (plain, defs) = GraftSqlParser.splitTop(ddl, ",").filter(_.nonEmpty).map {
       case Def(colDef, e) =>
         val name = colDef.trim.split("\\s+").head
           .stripPrefix("`").stripSuffix("`")
@@ -2446,7 +2309,7 @@ case class CreateSnapshotTableCommand(table: Seq[String], schemaDdl: String,
     * (plain DDL for StructType.fromDDL, (col → expr) pairs). */
   private def extractGenerated(ddl: String): (String, Seq[(String, String)]) = {
     val Gen = "(?is)^(.*?)\\s+GENERATED\\s+ALWAYS\\s+AS\\s*\\((.*)\\)\\s*$".r
-    val (plain, gens) = splitTop(ddl).map {
+    val (plain, gens) = GraftSqlParser.splitTop(ddl, ",").filter(_.nonEmpty).map {
       case Gen(colDef, e) =>
         val name = colDef.trim.split("\\s+").head.stripPrefix("`").stripSuffix("`")
         (colDef.trim, Some(name -> e.trim))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.sinks.SnapshotStore
 
@@ -12,9 +10,6 @@ import graft.sinks.SnapshotStore
   * exactly once, and that no-op versions emit nothing. */
 class ChangeFeedStreamSpec extends SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("changefeed").toString
 
   private def table(rows: (String, String, Int)*) =
     rows.toDF("product_id", "supplier", "version")

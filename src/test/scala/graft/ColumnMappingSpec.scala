@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.SnapshotStore
@@ -12,9 +10,6 @@ import graft.sinks.SnapshotStore
   * metadata-only ADD COLUMN. */
 class ColumnMappingSpec extends SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("colmap").toString
 
   override def beforeAll(): Unit = {
     super.beforeAll()

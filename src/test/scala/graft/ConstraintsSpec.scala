@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.SnapshotStore
@@ -15,14 +13,10 @@ class ConstraintsSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("constraints").resolve("t").toString
+    s"${freshDir()}/t"
 
   private def table(rows: (String, String, Int)*) =
     rows.toDF("product_id", "supplier", "qty")
-
-  private def bindCatalog(name: String): Unit =
-    spark.conf.set(s"spark.sql.catalog.$name",
-      classOf[graft.sinks.GraftCatalog].getName)
 
   test("ADD CONSTRAINT validates existing data and records table metadata") {
     val root = freshRoot()

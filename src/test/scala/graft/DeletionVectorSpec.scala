@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.SnapshotStore
@@ -12,9 +10,6 @@ import graft.sinks.SnapshotStore
   * materializes; TBLPROPERTIES routes SQL DELETE between the modes. */
 class DeletionVectorSpec extends SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("dvspec").toString
 
   /** 12 rows over 3 partitions, 2+ files per partition (repartition
     * upstream forces multiple files per partition value). */

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.SnapshotStore
@@ -13,15 +11,8 @@ import graft.sinks.SnapshotStore
 class DmlSqlSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDir(): String =
-    Files.createTempDirectory("dmlsql").toString
-
   private def table(rows: (String, String, Int)*) =
     rows.toDF("product_id", "supplier", "qty")
-
-  private def bindCatalog(name: String): Unit =
-    spark.conf.set(s"spark.sql.catalog.$name",
-      classOf[graft.sinks.GraftCatalog].getName)
 
   test("CTAS creates a snapshot table from a query; create-only; non-graft passes through") {
     val dir = freshDir()
@@ -391,6 +382,11 @@ class DmlSqlSpec extends SparkSpec {
       "a = concat(x, ',', y), `b c` = 'w = 3' , d = (e >= 2)")
     assert(got == Seq(("a", "concat(x, ',', y)"), ("b c", "'w = 3'"),
       ("d", "(e >= 2)")))
+    // Double-quoted strings and backslash escapes follow the lexer.
+    assert(org.apache.spark.sql.graft.GraftSqlParser.assignments(
+      """note = "a,b", k = 1""") == Seq(("note", "\"a,b\""), ("k", "1")))
+    assert(org.apache.spark.sql.graft.GraftSqlParser.assignments(
+      """note = 'don\'t, x'""") == Seq(("note", """'don\'t, x'""")))
   }
 
   test("DELETE/UPDATE on non-graft tables flow to the session parser untouched") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.SnapshotStore
@@ -14,14 +12,10 @@ class MergeSqlSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    s"${Files.createTempDirectory("mergesql")}/t"
+    s"${freshDir()}/t"
 
   private def table(rows: (String, String, Int)*) =
     rows.toDF("sku", "supplier", "qty")
-
-  private def bindCatalog(name: String): Unit =
-    spark.conf.set(s"spark.sql.catalog.$name",
-      classOf[graft.sinks.GraftCatalog].getName)
 
   test("CDC-apply: MATCHED-AND-DELETE + column SET + INSERT * in one atomic commit") {
     val root = freshRoot()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Replicate
@@ -12,9 +10,6 @@ import graft.sinks.SnapshotStore
   * re-application, and the convergence contract. */
 class MirrorSpec extends SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("mirror").toString
 
   private def table(rows: (String, String, Int)*) =
     rows.toDF("product_id", "supplier", "version")

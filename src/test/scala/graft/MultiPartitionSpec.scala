@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.SnapshotStore
@@ -15,7 +13,7 @@ class MultiPartitionSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    s"${Files.createTempDirectory("multipart")}/t"
+    s"${freshDir()}/t"
 
   private def rows(rs: (String, String, String, Int)*) =
     rs.toDF("sku", "supplier", "status", "qty")
@@ -248,8 +246,4 @@ class MultiPartitionSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
     assert(h == Set((1L, "commit", 1), (2L, "merge", 2)), h.toString)
   }
-
-  private def bindCatalog(name: String): Unit =
-    spark.conf.set(s"spark.sql.catalog.$name",
-      classOf[graft.sinks.GraftCatalog].getName)
 }

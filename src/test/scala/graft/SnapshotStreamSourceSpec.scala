@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.sinks.SnapshotStore
 
@@ -11,9 +9,6 @@ import graft.sinks.SnapshotStore
   * fail-or-skip, admission control via maxVersionsPerTrigger. */
 class SnapshotStreamSourceSpec extends SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("snapsource").toString
 
   private def table(rows: (String, String, Int)*) =
     rows.toDF("product_id", "supplier", "version")

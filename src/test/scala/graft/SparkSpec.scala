@@ -24,6 +24,10 @@ object SparkSpec {
       .config("spark.ui.retainedJobs", 20)
       .config("spark.ui.retainedStages", 20)
       .config("spark.sql.maxToStringFields", 25)
+      // Specs pin which table a plan scans by its root in the plan
+      // string; the default 100-character cap cuts the scan location
+      // before a `freshDir()` root ends.
+      .config("spark.sql.maxMetadataStringLength", 1000)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -35,6 +39,15 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   import org.apache.spark.sql.{DataFrame, Row}
 
   def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  /** A fresh directory under the JVM's self-cleaning fixture root
+    * (deleted at exit), named after the spec. */
+  def freshDir(): String = DevRun.fixtureRoot(getClass.getSimpleName)
+
+  /** Register `name` as a graft snapshot catalog in the session. */
+  def bindCatalog(name: String): Unit =
+    spark.conf.set(s"spark.sql.catalog.$name",
+      classOf[graft.sinks.GraftCatalog].getName)
 
   /** One-column string DataFrame helper. */
   def strDf(name: String, values: Seq[String]): DataFrame = {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sinks.SnapshotStore
@@ -13,13 +11,6 @@ import graft.sinks.SnapshotStore
   * SnapshotStore.bucketTable. */
 class SqlRecognizerSpec extends SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("sqlrec").toString
-
-  private def bindCatalog(name: String): Unit =
-    spark.conf.set(s"spark.sql.catalog.$name",
-      classOf[graft.sinks.GraftCatalog].getName)
 
   test("ALTER TABLE CLUSTER BY clusters, maintains, and unsets idempotently") {
     val dir = freshDir(); val root = s"$dir/t"
@@ -100,5 +91,63 @@ class SqlRecognizerSpec extends SparkSpec {
       spark.sql(s"VACUUM sqlrec3.`$dir/t` RETAIN 7")
     }
     assert(!vErr.getMessage.toLowerCase.contains("retain 7 hours"))
+  }
+
+  test("quoted commas, escaped quotes and angle-bracket types split as the lexer reads them") {
+    bindCatalog("sqlrec4")
+    // (k, note, tag, part), partitioned by part; CREATE cases start empty.
+    def seeded(): String = {
+      val root = s"${freshDir()}/t"
+      SnapshotStore.commit(spark, Seq((1L, "n1", "t1", "p"), (2L, "n2", "t2", "p"))
+        .toDF("k", "note", "tag", "part"), root, "part")
+      root
+    }
+    def rowsOf(root: String): Set[(Long, String, String, String)] =
+      SnapshotStore.read(spark, root).select(col("k").cast("long"),
+        col("note"), col("tag"), col("part"))
+        .as[(Long, String, String, String)].collect().toSet
+    def fields(root: String): Seq[String] =
+      SnapshotStore.read(spark, root).schema.fieldNames.toSeq
+    // (seed a table?, statement with $t for the table, check)
+    val cases: Seq[(Boolean, String, String => Unit)] = Seq(
+      (true, """UPDATE $t SET note = "a,b" WHERE k = 1""", r =>
+        assert(rowsOf(r) == Set((1L, "a,b", "t1", "p"), (2L, "n2", "t2", "p")))),
+      (true, """UPDATE $t SET note = 'don\'t, x' WHERE k = 2""", r =>
+        assert(rowsOf(r) == Set((1L, "n1", "t1", "p"), (2L, "don't, x", "t2", "p")))),
+      (true, """MERGE INTO $t t USING (SELECT 3L AS k) s ON t.k = s.k
+               |WHEN NOT MATCHED THEN INSERT (k, note, tag, part)
+               |VALUES (s.k, "q,r", 'x', 'p')""".stripMargin, r =>
+        assert(rowsOf(r).contains((3L, "q,r", "x", "p")) && rowsOf(r).size == 3)),
+      (true, "ALTER TABLE $t ADD COLUMNS (c STRING COMMENT 'a, b')", r =>
+        assert(fields(r) == Seq("k", "note", "tag", "part", "c"))),
+      (true, "ALTER TABLE $t ADD COLUMNS (c1 INT COMMENT 'x < y', d1 INT)", r =>
+        assert(fields(r) == Seq("k", "note", "tag", "part", "c1", "d1"))),
+      (false, "CREATE TABLE $t (id INT, m MAP<STRING, INT> DEFAULT map('a', 1), " +
+          "s STRING) USING graft-snapshot PARTITIONED BY (s)", r => {
+        assert(fields(r) == Seq("id", "m", "s"))
+        spark.sql(s"INSERT INTO sqlrec4.`$r` (id, s) VALUES (1, 'x')")
+        assert(SnapshotStore.read(spark, r).select("m").as[Map[String, Int]]
+          .collect().toSeq == Seq(Map("a" -> 1)))
+      }),
+      (false, """CREATE TABLE $t (id INT, note STRING DEFAULT 'it\'s x', s STRING)
+                |USING graft-snapshot PARTITIONED BY (s)""".stripMargin, r => {
+        assert(fields(r) == Seq("id", "note", "s"))
+        spark.sql(s"INSERT INTO sqlrec4.`$r` (id, s) VALUES (1, 'x')")
+        assert(SnapshotStore.read(spark, r).select("note").as[String]
+          .collect().toSeq == Seq("it's x"))
+      }),
+      (true, """INSERT INTO $t (SELECT 9L, 'a', "x)", 'p')""", r =>
+        assert(rowsOf(r).contains((9L, "a", "x)", "p")) && rowsOf(r).size == 3)),
+      (true, "INSERT OVERWRITE $t PARTITION (part = 'a\\'b, c') SELECT 5L, 'n5', 't5'", r =>
+        assert(rowsOf(r) == Set((1L, "n1", "t1", "p"), (2L, "n2", "t2", "p"),
+          (5L, "n5", "t5", "a'b, c")))))
+    cases.foreach { case (seed, stmt, check) =>
+      val root = if (seed) seeded() else s"${freshDir()}/t"
+      val sql = stmt.replace("$t", s"sqlrec4.`$root`")
+      withClue(s"$sql: ") {
+        spark.sql(sql)
+        check(root)
+      }
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
 
 import org.apache.spark.sql.DataFrame
@@ -20,9 +19,6 @@ import graft.operators.Rollup
   * worker COALESCE into one pass, bounding the queued debt. */
 class AsyncMaintenanceSpec extends graft.SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("asyncmaint").toString
 
   private def rowsDf(r: Range): DataFrame =
     r.map(i => (i.toLong, s"g${i % 4}", (i % 100).toLong, (i % 3).toString))

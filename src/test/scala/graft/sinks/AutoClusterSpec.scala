@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,9 +11,6 @@ import org.apache.spark.sql.functions._
   * with the other hooks in the right order. */
 class AutoClusterSpec extends graft.SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("autocluster").toString
 
   private def rows(r: Range): DataFrame =
     r.map(i => (i.toLong, (i * 37 % 1000).toLong, s"g${i % 4}", (i % 2).toString))

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -13,9 +12,6 @@ import org.apache.spark.sql.functions._
   * stream exactly-once are untouched. */
 class AutoCompactSpec extends graft.SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("autocompact").toString
 
   private def filesPerPartition(root: String): Map[String, Int] = {
     val v = SnapshotStore.currentVersion(spark, root).get

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,9 +12,6 @@ import graft.operators.Rollup
   * between commits with zero outside orchestration. */
 class AutoSyncSpec extends graft.SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("autosync").toString
 
   private def rowsDf(r: Range): DataFrame =
     r.map(i => (i.toLong, s"g${i % 4}", (i % 100).toLong, (i % 3).toString))

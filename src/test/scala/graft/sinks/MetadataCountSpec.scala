@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Metadata-only COUNT(*) and the DV-adjusted row-count surface:
@@ -12,11 +10,7 @@ class MetadataCountSpec extends graft.SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    s"${Files.createTempDirectory("metacount")}/t"
-
-  private def bindCatalog(name: String): Unit =
-    spark.conf.set(s"spark.sql.catalog.$name",
-      classOf[GraftCatalog].getName)
+    s"${freshDir()}/t"
 
   private def seed(root: String): Unit =
     SnapshotStore.commit(spark,

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,9 +14,6 @@ import graft.operators.Rollup
   * was scanned. */
 class RollupRewriteSpec extends graft.SparkSpec {
   import spark.implicits._
-
-  private def freshDir(): String =
-    Files.createTempDirectory("rollup_rw").toString
 
   /** (value multiset, whether the plan read the rollup). */
   private def run(df: DataFrame, rollupRoot: String,
