@@ -49,7 +49,7 @@ object Replicate {
              keyCol: String): Long = {
     val srcCur = SnapshotStore.currentVersion(spark, srcRoot).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $srcRoot"))
-    val partCol = SnapshotStore.partitionColumn(spark, srcRoot, srcCur)
+    val partCol = SnapshotStore.header(spark, srcRoot, srcCur).partcol
       .getOrElse(throw new IllegalStateException(
         s"source $srcRoot records no partition column"))
     val synced: Option[Long] = SnapshotStore.currentVersion(spark, dstRoot)
@@ -135,7 +135,7 @@ object Replicate {
                        dstRoot: String, keyCol: String): Unit = {
     if (batch.isEmpty) return
     val partCol = SnapshotStore.currentVersion(spark, dstRoot)
-      .flatMap(SnapshotStore.partitionColumn(spark, dstRoot, _))
+      .flatMap(SnapshotStore.header(spark, dstRoot, _).partcol)
       .getOrElse(throw new IllegalStateException(
         s"mirror destination $dstRoot records no partition column — " +
           "seed it with Replicate.mirror first"))

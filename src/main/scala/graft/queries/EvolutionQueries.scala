@@ -31,7 +31,7 @@ private[graft] object EvolutionQueries {
         .withColumn("bucket", pmod(col("o_orderkey"), lit(3)).cast("int"))
       graft.sinks.SnapshotStore.commit(s, orders.withColumn("rev", lit(1)),
         root, Seq("o_orderstatus", "bucket"))
-      require(graft.sinks.SnapshotStore.partitionColumn(s, root, 1L)
+      require(graft.sinks.SnapshotStore.header(s, root, 1L).partcol
         .contains("o_orderstatus,bucket"), "spec not recorded in #partcol")
       val m1 = graft.sinks.SnapshotStore.manifest(s, root, 1L)
       require(m1.forall(e => e.path.contains("/__part=") &&
@@ -547,9 +547,9 @@ private[graft] object EvolutionQueries {
       val v2 = graft.sinks.SnapshotStore.repartitionTable(s, root,
         Seq("o_orderstatus", "o_orderpriority"))
       require(v2 == 2L, s"evolution must be one commit, got v$v2")
-      require(graft.sinks.SnapshotStore.partitionColumn(s, root, 2L)
+      require(graft.sinks.SnapshotStore.header(s, root, 2L).partcol
         .contains("o_orderstatus,o_orderpriority"), "new spec not recorded")
-      require(graft.sinks.SnapshotStore.partitionColumn(s, root, 1L)
+      require(graft.sinks.SnapshotStore.header(s, root, 1L).partcol
         .contains("o_orderstatus"), "old spec must stay on v1")
       val m2 = graft.sinks.SnapshotStore.manifest(s, root, 2L).toSet
       graft.sinks.SnapshotStore.mergeCommitOrdered(s,

@@ -797,8 +797,8 @@ private[graft] object SnapshotQueries {
       graft.sinks.SnapshotStore.mergeCommit(s,
         orders.filter(m5 === 4).withColumn("rev", lit(2)), root,
         "o_orderkey", "rev", "o_orderstatus")
-      val ts1 = graft.sinks.SnapshotStore.commitTimestamp(s, root, 1L).get
-      val ts2 = graft.sinks.SnapshotStore.commitTimestamp(s, root, 2L).get
+      val ts1 = graft.sinks.SnapshotStore.header(s, root, 1L).ts.get
+      val ts2 = graft.sinks.SnapshotStore.header(s, root, 2L).ts.get
       require(ts2 > ts1, s"commit timestamps must be monotonic: $ts1, $ts2")
       s.conf.set("spark.sql.catalog.graft_q158",
         classOf[graft.sinks.GraftCatalog].getName)
@@ -1182,7 +1182,7 @@ private[graft] object SnapshotQueries {
         "DV deletes must not touch any data file")
       require(m4.exists(_.dv.nonEmpty), "v4 must carry deletion vectors")
       require(Seq(3L, 4L).forall(v =>
-        st.manifestOperation(s, root, v).contains("delete-dv")),
+        st.header(s, root, v).op.contains("delete-dv")),
         "both deletes must be merge-on-read commits")
       val live = s.sql("SELECT o_orderkey, o_orderstatus, o_totalprice " +
         s"FROM graft_q171.`$root`").orderBy(col("o_orderkey"))
@@ -1264,7 +1264,7 @@ private[graft] object SnapshotQueries {
       require(m3.map(_.path).toSet.size > p1.size,
         "DV update must append new files holding the updated copies")
       require(m3.exists(_.dv.nonEmpty), "DV update must attach vectors")
-      require(st.manifestOperation(s, root, 3L).contains("update-dv"),
+      require(st.header(s, root, 3L).op.contains("update-dv"),
         "the commit must tag update-dv")
       s.read.format("graft-snapshot").load(root)
         .select(col("o_orderkey"), col("o_orderstatus"),
@@ -1481,7 +1481,7 @@ private[graft] object SnapshotQueries {
       graft.operators.TextIndex.appendForSnapshotVersion(s, root, 1L, "text", idx)
       val v = graft.sinks.SnapshotStore.deleteWhereDv(s, root, "doc_id % 3 = 1")
       require(v == 2L, "DV delete must publish v2")
-      require(graft.sinks.SnapshotStore.manifestOperation(s, root, 2L)
+      require(graft.sinks.SnapshotStore.header(s, root, 2L).op
         .contains("delete-dv"), "delete must be merge-on-read")
       require(graft.sinks.SnapshotStore.manifest(s, root, 2L).map(_.path).toSet ==
         graft.sinks.SnapshotStore.manifest(s, root, 1L).map(_.path).toSet,

@@ -430,8 +430,8 @@ case class DynamicPruningRule(spark: SparkSession)
       root <- idx.tableRoot
       v <- idx.version
     } yield try {
-      val props = SnapshotStore.tableProperties(spark, root, v).toMap
-      val dropped = SnapshotStore.mappingAt(spark, root, v)._2
+      val props = SnapshotStore.header(spark, root, v).props
+      val dropped = SnapshotStore.headerOrEmpty(spark, root, v).mapping._2
       val schema = StructType(resolved.map { case (_, _, sk) =>
         StructField(sk.name, sk.dataType) })
       SnapshotStats.recordedColStats(props, schema, dropped)

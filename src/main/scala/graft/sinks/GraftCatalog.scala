@@ -176,7 +176,7 @@ case class GraftSnapshotTable(spark: SparkSession, root: String,
   /** The version's column mapping (renames + dropped physicals) —
     * empty for unmapped tables. */
   lazy val mapping: (Map[String, String], Set[String]) =
-    SnapshotStore.columnMappingAt(spark, root, resolvedVersion)
+    SnapshotStore.headerOrEmpty(spark, root, resolvedVersion).mapping
   /** Deletion vectors or column mapping present? Decides whether
     * [[ResolveGraftSnapshot]] can hand Spark the bare file relation or
     * must wrap it (DV anti-join and/or the logical-name projection —

@@ -101,7 +101,7 @@ object RollupRewrite {
   private[sinks] def load(spark: SparkSession, rollupRoot: String): Option[Registered] =
     for {
       rv <- SnapshotStore.currentVersion(spark, rollupRoot)
-      props = SnapshotStore.tableProperties(spark, rollupRoot, rv).toMap
+      props = SnapshotStore.header(spark, rollupRoot, rv).props
       if props.get("graft.rollup.derived").contains("false")
       source <- props.get("graft.rollup.source")
       cursor <- props.get(graft.operators.Rollup.CursorProp).map(_.toLong)
@@ -209,7 +209,7 @@ object RollupRewrite {
       // mapping projects them back to logical ABOVE the relation);
       // the rollup records LOGICAL names — resolve through the
       // version's mapping or a renamed table never rewrites.
-      toLogical = SnapshotStore.mappingAt(spark, root, version)
+      toLogical = SnapshotStore.headerOrEmpty(spark, root, version).mapping
         ._1.map(_.swap)
       resolveIn = (p: LogicalPlan, id: ExprId) =>
         resolveName(p, id).map(n => toLogical.getOrElse(n, n))
@@ -223,7 +223,7 @@ object RollupRewrite {
       partPredicate <- idx.prunedPartitions match {
         case None => Some(None)
         case Some(vals) =>
-          val pcs = SnapshotStore.partitionColumns(spark, root, version)
+          val pcs = SnapshotStore.header(spark, root, version).partitionCols
           if (pcs.nonEmpty) Some(Some((pcs, vals))) else None
       }
       groupNames <- agg.groupingExpressions.foldLeft(

@@ -1,8 +1,5 @@
 package graft.sinks
 
-import java.net.{URLDecoder, URLEncoder}
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,10 +37,10 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
              partitionCols: ColSpec,
              properties: Option[Seq[(String, String)]] = None): Long =
     occ(spark, root, "commit", needsTable = false) { cur =>
-      enforceConstraints(spark, root, df, cur, propertiesAt(spark, root, cur))
+      enforceConstraints(spark, root, df, cur, headerOrEmpty(spark, root, cur).props)
       val entries = writeDataFiles(spark, df, root, cur + 1, partitionCols.cols)
       new Staged(Nil, entries, "commit", partitionCols.header, Some(df.schema),
-        properties = properties)
+        h => h.copy(properties = properties.getOrElse(h.properties)))
     }
 
   /** CREATE-ONLY commit: publish `df` as version 1, or report that the
@@ -145,10 +142,9 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
         sortWithin = bucketBy.toSeq.flatMap(_._2).map(col))
       finally if (identity.nonEmpty) cachedDf.unpersist(false)
     if (writeManifest(spark, root, 1L, entries, "commit", partitionCols.header,
-        properties = Some(bucketProps.getOrElse(Nil) ++ genProps ++
-            identProps ++ defaultProps ++ properties)
-          .filter(_.nonEmpty),
-        constraints = Some(genChecks).filter(_.nonEmpty))) {
+        _.copy(properties = bucketProps.getOrElse(Nil) ++ genProps ++
+            identProps ++ defaultProps ++ properties,
+          constraints = genChecks))) {
       writeStats(spark, root, 1L, Nil, entries, Some(dfId.schema))
       postCommit(spark, root, 1L)
       Some(1L)
@@ -161,42 +157,37 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     * counterpart of [[mergeCommit]] — fact/event tables where rows are
     * immutable observations, and the commit primitive behind
     * [[copyInto]]. Cost ∝ the appended batch at any table size (zero
-    * existing data is read or rewritten). `extraHeaders` lines are
-    * published atomically with the manifest (COPY INTO's loaded-file
-    * ledger rides here — a sidecar written after the rename could tear
-    * away from its commit and break idempotence). */
+    * existing data is read or rewritten). */
   def appendCommit(spark: SparkSession, df: DataFrame, root: String,
                    partitionCols: ColSpec,
-                   operation: String = "append",
-                   extraHeaders: Seq[String] = Nil): Long =
+                   operation: String = "append"): Long =
     occ(spark, root, "append-commit", needsTable = false) { cur =>
-      appendAttempt(spark, df, root, partitionCols, cur, operation, extraHeaders)
+      appendAttempt(spark, df, root, partitionCols, cur, operation)
     }
 
-  /** One [[appendCommit]] attempt against tip `cur` (0 = no table). */
+  /** One [[appendCommit]] attempt against tip `cur` (0 = no table).
+    * `edit` rides the same manifest (COPY INTO's loaded-file ledger —
+    * a sidecar written after the rename could tear away from its
+    * commit and break idempotence). */
   private[sinks] def appendAttempt(spark: SparkSession, df: DataFrame, root: String,
                                    partitionCols: ColSpec, cur: Long, operation: String,
-                                   extraHeaders: Seq[String]): Staged = {
-    enforceConstraints(spark, root, df, cur, propertiesAt(spark, root, cur))
+                                   edit: ManifestHeader => ManifestHeader = identity): Staged = {
+    enforceConstraints(spark, root, df, cur, headerOrEmpty(spark, root, cur).props)
     enforceSchemaCompatible(spark, root, df, cur)
     val kept = if (cur == 0) Nil else manifest(spark, root, cur)
     val fresh = writeDataFiles(spark, df, root, cur + 1, partitionCols.cols)
-    new Staged(kept, fresh, operation, partitionCols.header, Some(df.schema),
-      extraHeaders = extraHeaders)
+    new Staged(kept, fresh, operation, partitionCols.header, Some(df.schema), edit)
   }
 
   /** Source files already loaded into the table by [[copyInto]]: the
-    * union of every version's `#copied` manifest headers. Header lines
-    * are URL-encoded paths, atomic with their commit — so a file
-    * appears here if and only if its rows are in the table, which is
-    * the idempotence invariant (a crash between data write and
-    * manifest publish leaves the file unlisted AND its rows
-    * unpublished; the retry re-copies and the orphan files are
+    * union of every version's `#copied` ledger, atomic with its
+    * commit — so a file appears here if and only if its rows are in
+    * the table, which is the idempotence invariant (a crash between
+    * data write and manifest publish leaves the file unlisted AND its
+    * rows unpublished; the retry re-copies and the orphan files are
     * vacuum-collected). */
   def copiedFiles(spark: SparkSession, root: String): Set[String] =
-    versions(spark, root).flatMap(v =>
-      manifestHeaderAll(spark, root, v, "copied")
-        .map(URLDecoder.decode(_, UTF_8))).toSet
+    versions(spark, root).flatMap(header(spark, root, _).copied).toSet
 
   /** `COPY INTO` — idempotent bulk file ingest (the Delta/Databricks
     * statement): list the data files under `source`, skip every file a
@@ -245,15 +236,15 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
         NoOp(cur)
       } else {
         val partCols = ColSpec.parse(
-          Some(cur).filter(_ >= 1).flatMap(partitionColumn(spark, root, _))
+          Some(cur).filter(_ >= 1).flatMap(header(spark, root, _).partcol)
             .orElse(partitionCol).getOrElse(throw new IllegalStateException(
               s"COPY INTO a new table needs an explicit partition column " +
                 s"(no existing manifest under $root records one)")))
         val df = spark.read.format(format).load(fresh: _*)
         partCols.cols.foreach(c => require(df.columns.contains(c),
           s"COPY INTO source files lack the table's partition column '$c'"))
-        val headers = fresh.map(p => s"#copied\t${URLEncoder.encode(p, UTF_8)}")
-        appendAttempt(spark, df, root, partCols, cur, "copy", headers)
+        appendAttempt(spark, df, root, partCols, cur, "copy",
+          h => h.copy(copied = h.copied.filterNot(fresh.contains) ++ fresh))
       }
     }
     (v, loaded)
@@ -334,7 +325,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
             else {
               val existing = applyColumnMapping(
                 readEntriesAt(spark, root, replaced, cur),
-                mappingAt(spark, root, cur))
+                headerOrEmpty(spark, root, cur).mapping)
               // Identity inheritance (Delta's MERGE contract): an
               // incoming batch that OMITS an identity column inherits
               // the matched row's id — the update keeps the identity,
@@ -396,16 +387,15 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
       identityColumns(tipProps).isEmpty || {
         try {
           def marks(at: Long): Map[String, Long] =
-            if (at >= 1) identityColumns(
-              tableProperties(spark, root, at).toMap)
+            if (at >= 1) identityColumns(header(spark, root, at).props)
               .map(s => s.col -> s.last).toMap
             else Map.empty
           marks(base) == marks(head)
         } catch { case scala.util.control.NonFatal(_) => false }
       }
     val constraintsSafe =
-      try (if (base >= 1) tableConstraints(spark, root, base) else Nil) ==
-        tableConstraints(spark, root, head)
+      try (if (base >= 1) header(spark, root, base).constraints else Nil) ==
+        header(spark, root, head).constraints
       catch { case scala.util.control.NonFatal(_) => false }
     // Disjoint: our touched partitions are byte-identical between
     // base and head, so head-minus-touched plus our files IS the
@@ -454,7 +444,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
           d, keys.cols)
         if (candidates.isEmpty) Set.empty[String]
         else applyColumnMapping(readEntriesAt(spark, root, candidates, cur),
-            mappingAt(spark, root, cur))
+            headerOrEmpty(spark, root, cur).mapping)
           .select((keys.cols ++
             partitionCols.cols.filterNot(keys.contains)).map(col): _*)
           .join(d, keys.cols, "left_semi")
@@ -472,7 +462,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
           if (replaced.isEmpty) upserts
           else {
             val existing = applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
-              mappingAt(spark, root, cur))
+              headerOrEmpty(spark, root, cur).mapping)
             val survivors = doomed match {
               case Some(d) => existing.join(d, keys.cols, "left_anti")
               case None => existing
@@ -492,7 +482,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
           }
         val fresh = writeDataFiles(spark, merged, root, cur + 1, partitionCols.cols)
         new Staged(kept, fresh, "merge", partitionCols.header, Some(merged.schema),
-          properties = properties)
+          h => h.copy(properties = properties.getOrElse(h.properties)))
       }
     }
   }
@@ -512,7 +502,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
                                       df: DataFrame, cur: Long): Unit =
     if (cur >= 1)
       schemaFor(spark, root, cur).foreach { prior =>
-        val renames = mappingAt(spark, root, cur)._1
+        val renames = headerOrEmpty(spark, root, cur).mapping._1
         val priorTypes = prior.fields.map(f => f.name -> f.dataType).toMap
         df.schema.fields.foreach { f =>
           priorTypes.get(renames.getOrElse(f.name, f.name)).foreach { pt =>
@@ -579,7 +569,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     if (values.isEmpty) { lastProbeCandidates.set(0); return Nil }
     // Stats/blooms are keyed by PHYSICAL column names, literal dots
     // escaped ([[FileStats.statKey]]).
-    val statsName = FileStats.statKey(Seq(mappingAt(spark, root, cur)._1
+    val statsName = FileStats.statKey(Seq(headerOrEmpty(spark, root, cur).mapping._1
       .getOrElse(keyCols.head, keyCols.head)))
     val filter = org.apache.spark.sql.sources.In(statsName, values)
     val stats = statsFor(spark, root, cur)
@@ -646,7 +636,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
       val touched: Set[String] =
         if (candidates.isEmpty) Set.empty
         else applyColumnMapping(readEntriesAt(spark, root, candidates, cur),
-            mappingAt(spark, root, cur))
+            headerOrEmpty(spark, root, cur).mapping)
           .select((keyCols.cols ++
             partitionCols.cols.filterNot(keyCols.contains)).map(col): _*)
           .join(doomed, keyCols.cols, "left_semi")
@@ -656,7 +646,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
       if (replaced.isEmpty) NoOp(cur)
       else {
         val remaining = applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
-            mappingAt(spark, root, cur))
+            headerOrEmpty(spark, root, cur).mapping)
           .join(doomed, keyCols.cols, "left_anti")
         val fresh = writeDataFiles(spark, remaining, root, cur + 1, partitionCols.cols)
         new Staged(kept, fresh, "delete", partitionCols.header, Some(remaining.schema))
@@ -760,7 +750,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
     if (!deterministicNoSubquery(spark, predicate)) return None
     val types: Map[String, org.apache.spark.sql.types.DataType] =
       schemaFor(spark, root, cur)
-        .map(ph => logicalSchema(ph, mappingAt(spark, root, cur)))
+        .map(ph => logicalSchema(ph, headerOrEmpty(spark, root, cur).mapping))
         .map(_.fields.map(f => f.name -> f.dataType).toMap)
         .getOrElse(Map.empty)
     val parts = entries.map(_.partition).distinct
@@ -808,7 +798,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
           if (replaced.isEmpty) NoOp(cur)
           else {
             val remaining = applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
-              mappingAt(spark, root, cur)).filter(!hit)
+              headerOrEmpty(spark, root, cur).mapping).filter(!hit)
             val fresh = writeDataFiles(spark, remaining, root, cur + 1, partCols)
             new Staged(kept, fresh, "delete", partCols.mkString(","),
               Some(remaining.schema))
@@ -875,7 +865,7 @@ private[sinks] trait SnapshotDml { this: SnapshotStore.type =>
             val m =
               if (replaced.isEmpty) incoming
               else applyColumnMapping(readEntriesAt(spark, root, replaced, cur),
-                mappingAt(spark, root, cur)).filter(!hit)
+                headerOrEmpty(spark, root, cur).mapping).filter(!hit)
                 .unionByName(incoming, allowMissingColumns = true)
             (m, touched)
         }

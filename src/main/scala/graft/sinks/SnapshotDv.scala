@@ -178,7 +178,7 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
     val doomed = applyColumnMapping(raw
         .withColumn("__graft_fk", dvKeyExpr(col("_metadata.file_path")))
         .withColumn("__graft_pos", col("_metadata.row_index")),
-        mappingAt(spark, root, cur))
+        headerOrEmpty(spark, root, cur).mapping)
       .select(col("__graft_fk").as("file_key"),
         col("__graft_pos").as("pos"), hit.as("__hit"))
       .filter(col("__hit")).drop("__hit")
@@ -253,7 +253,7 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
     val raw = applyColumnMapping(rawRel
         .withColumn("__fk", dvKeyExpr(col("_metadata.file_path")))
         .withColumn("__pos", col("_metadata.row_index")),
-      mappingAt(spark, root, cur))
+      headerOrEmpty(spark, root, cur).mapping)
     val dataCols = raw.columns.toSeq.filterNot(Set("__fk", "__pos"))
     val types = raw.schema.map(f => f.name -> f.dataType).toMap
     assignments.foreach { case (c, _) => require(types.contains(c) &&
@@ -261,7 +261,7 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
       s"UPDATE SET targets unknown column '$c' " +
         s"(columns: ${dataCols.mkString(", ")})") }
     // Allocator-owned on every surface, same as [[updateWhere]].
-    val identCols = identityColumnsAt(spark, root, cur).toSet
+    val identCols = header(spark, root, cur).identityColumns.toSet
     assignments.map(_._1).filter(identCols).foreach(c =>
       throw new IllegalArgumentException(
         s"UPDATE cannot SET identity column '$c' — GENERATED ALWAYS " +
@@ -298,7 +298,7 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
         // against its gen_ CHECK ([[SnapshotStore.recomputeGenerated]]).
         val updated = recomputeGenerated(spark, root, cur, assignedOnly,
           assign.keySet)
-        enforceConstraints(spark, root, updated, cur, propertiesAt(spark, root, cur))
+        enforceConstraints(spark, root, updated, cur, headerOrEmpty(spark, root, cur).props)
         val v = cur + 1
         val dvDir = s"dv/v_$v-${java.util.UUID.randomUUID().toString.take(8)}"
         writeDvDir(spark, root, dvDir, newDv, counts.values.sum)
@@ -329,7 +329,7 @@ private[sinks] trait SnapshotDv { this: SnapshotStore.type =>
         val materialized = readEntriesAt(spark, root, replaced, cur) // DV-aware
         // Physical rewrite (see compact): no translation, physical names.
         val fresh = writeDataFiles(spark, materialized, root, cur + 1,
-          partCols.map(physicalNameOf(mappingAt(spark, root, cur)._1, _)),
+          partCols.map(physicalNameOf(headerOrEmpty(spark, root, cur).mapping._1, _)),
           translate = false)
         new Staged(kept, fresh, "purge", partCols.mkString(","),
           compactEligible = false)

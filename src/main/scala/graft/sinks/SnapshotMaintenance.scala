@@ -52,7 +52,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         // as typed nulls, exactly like any scan). Both the frame and the
         // recorded schema pass through the column mapping first, so the
         // alignment (and the user's assignments) see LOGICAL names.
-        val mapping = mappingAt(spark, root, cur)
+        val mapping = headerOrEmpty(spark, root, cur).mapping
         val raw = applyColumnMapping(readEntriesAt(spark, root, replaced, cur), mapping)
         val current = schemaFor(spark, root, cur).map(logicalSchema(_, mapping)) match {
           case Some(sc) =>
@@ -69,7 +69,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         // GENERATED ALWAYS AS IDENTITY: the allocator owns the column on
         // every surface — SET id = … would reassign (possibly duplicate)
         // ids the table already vended.
-        val idents = identityColumnsAt(spark, root, cur).toSet
+        val idents = header(spark, root, cur).identityColumns.toSet
         assignments.map(_._1).filter(idents).foreach(c =>
           throw new IllegalArgumentException(
             s"UPDATE cannot SET identity column '$c' — GENERATED ALWAYS " +
@@ -87,7 +87,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         // change, see [[SnapshotStore.recomputeGenerated]].
         val updated = recomputeGenerated(spark, root, cur, assignedOnly,
           assign.keySet)
-        enforceConstraints(spark, root, updated, cur, propertiesAt(spark, root, cur))
+        enforceConstraints(spark, root, updated, cur, headerOrEmpty(spark, root, cur).props)
         val fresh = writeDataFiles(spark, updated, root, cur + 1, partCols)
         new Staged(kept, fresh, "update", partCols.mkString(","), Some(updated.schema))
       }
@@ -108,7 +108,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     require(name.matches("[A-Za-z_][\\w$]*"),
       s"constraint name must be an identifier, got '$name'")
     occ(spark, root, "add-constraint") { cur =>
-      val existing = tableConstraints(spark, root, cur)
+      val existing = header(spark, root, cur).constraints
       require(!existing.exists(_._1 == name),
         s"constraint '$name' already exists on $root")
       val bad = table(spark, root, Some(cur))
@@ -117,7 +117,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         s"cannot add CHECK constraint $name ($checkExpr): existing row " +
           s"violates it: ${bad.head}")
       metadataCommit(spark, root, cur, "constraint",
-        constraints = Some(existing :+ (name -> checkExpr)),
+        _.copy(constraints = existing :+ (name -> checkExpr)),
         schema = schemaFor(spark, root, cur))
     }
   }
@@ -127,12 +127,12 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * (silently "dropping" nothing would mask a typo forever). */
   def dropConstraint(spark: SparkSession, root: String, name: String): Long =
     occ(spark, root, "drop-constraint") { cur =>
-      val existing = tableConstraints(spark, root, cur)
+      val existing = header(spark, root, cur).constraints
       require(existing.exists(_._1 == name),
         s"no constraint named '$name' on $root " +
           s"(existing: ${existing.map(_._1).mkString(", ")})")
       metadataCommit(spark, root, cur, "constraint",
-        constraints = Some(existing.filterNot(_._1 == name)),
+        _.copy(constraints = existing.filterNot(_._1 == name)),
         schema = schemaFor(spark, root, cur))
     }
 
@@ -143,7 +143,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
                              cur: Long): Seq[String] = {
     val physical = schemaFor(spark, root, cur).getOrElse(
       readEntries(spark, root, manifest(spark, root, cur)).schema)
-    logicalSchema(physical, mappingAt(spark, root, cur)).fieldNames.toSeq
+    logicalSchema(physical, headerOrEmpty(spark, root, cur).mapping).fieldNames.toSeq
   }
 
   /** Conservative guard: does any CHECK constraint's expression
@@ -152,7 +152,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     * constraint.) */
   private[sinks] def constraintMentions(spark: SparkSession, root: String,
                                  cur: Long, name: String): Option[String] =
-    tableConstraints(spark, root, cur).collectFirst {
+    header(spark, root, cur).constraints.collectFirst {
       case (n, e) if ("""(?i)(?<![\w$])""" + java.util.regex.Pattern.quote(name) +
         """(?![\w$])""").r.findFirstIn(e).isDefined => n
     }
@@ -188,11 +188,12 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       throw new IllegalStateException(s"no committed snapshot under $root"))
     val schema = logicalSchemaAt(spark, root, cur).getOrElse(
       readVersion(spark, root, cur).schema)
-    val props = tableProperties(spark, root, cur).toMap
+    val hdr = header(spark, root, cur)
+    val props = hdr.props
     val gens = generatedColumns(props).toMap
     val idents = identityColumns(props).map(s => s.col -> s).toMap
     val defaults = defaultColumns(props).toMap
-    val partCols = partitionColumns(spark, root, cur)
+    val partCols = hdr.partitionCols
     val bucket = props.get(BucketSpecProp).flatMap(parseBucketSpec)
     val colLines = schema.fields.map { f =>
       val base = s"`${f.name}` ${f.dataType.sql}"
@@ -277,7 +278,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       else {
         val doomed = dropped.map(_._1).toSet
         new Staged(entries.filterNot(e => doomed(e.path)), Nil, "fsck",
-          partitionColumn(spark, root, cur).getOrElse(""))
+          header(spark, root, cur).partcol.getOrElse(""))
       }
     }
     (dropped, v)
@@ -313,7 +314,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     // the mark from the data anyway.
     clearPendingIdentityAlloc(root)
     occ(spark, root, "sync-identity") { cur =>
-      val existing = tableProperties(spark, root, cur)
+      val existing = header(spark, root, cur).properties
       val specs = identityColumns(existing.toMap)
       require(specs.nonEmpty,
         s"SYNC IDENTITY: no identity column is recorded on $root")
@@ -332,7 +333,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       val keys = updated.map(_._1).toSet
       val merged = existing.filterNot(p => keys(p._1)) ++ updated
       if (merged.toMap == existing.toMap) NoOp(cur)
-      else metadataCommit(spark, root, cur, "set-properties", properties = Some(merged))
+      else metadataCommit(spark, root, cur, "set-properties", _.copy(properties = merged))
     }
   }
 
@@ -355,20 +356,21 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         throw new IllegalArgumentException(
           s"ALTER COLUMN: unknown column '$colName' " +
             s"(columns: ${schema.fieldNames.mkString(", ")})"))
-      val (gens, _, idents, _) = autoColumnsAt(spark, root, cur)
-      require(!gens(colName) && !idents(colName),
+      val hdr = header(spark, root, cur)
+      require(!hdr.props.contains(s"$GeneratedPropPrefix$colName") &&
+          !hdr.identityColumns.contains(colName),
         s"'$colName' is a generated/identity column — its value is " +
           "computed, a DEFAULT would never apply")
-      require(!partitionColumns(spark, root, cur).contains(colName),
+      require(!hdr.partitionCols.contains(colName),
         s"'$colName' is a partition column — INSERT requires it " +
           "listed, so a DEFAULT could never fill it")
       exprSql.foreach(e => validateDefault(spark, colName, field.dataType, e))
-      val existing = tableProperties(spark, root, cur)
+      val existing = hdr.properties
       val key = s"$DefaultPropPrefix$colName"
       val merged = existing.filterNot(_._1 == key) ++
         exprSql.map(key -> _).toSeq
       if (merged.toMap == existing.toMap) NoOp(cur)
-      else metadataCommit(spark, root, cur, "set-properties", properties = Some(merged))
+      else metadataCommit(spark, root, cur, "set-properties", _.copy(properties = merged))
     }
 
   def renameColumn(spark: SparkSession, root: String, from: String,
@@ -388,10 +390,11 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       // strand the record pointing at nothing and every later write
       // would resurrect a phantom column under the old name. Same
       // boundary as CHECK constraints.
-      require(!identityColumnsAt(spark, root, cur).contains(from),
+      val hdr = header(spark, root, cur)
+      require(!hdr.identityColumns.contains(from),
         s"cannot rename identity column '$from' — the identity record " +
           "names it (same boundary as CHECK constraints)")
-      val (renames, dropped) = mappingAt(spark, root, cur)
+      val (renames, dropped) = hdr.mapping
       val physical = physicalNameOf(renames, from)
       require(!dropped(to),
         s"cannot rename to '$to': that name is reserved by a dropped " +
@@ -401,7 +404,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       // Renaming BACK to the physical name dissolves the mapping entry.
       val newRenames = (renames - from) ++
         (if (to == physical) Map.empty[String, String] else Map(to -> physical))
-      val newPartCol = partitionColumn(spark, root, cur) match {
+      val newPartCol = hdr.partcol match {
         case Some(p) if p == from => to
         case other => other.getOrElse("")
       }
@@ -411,14 +414,14 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       // allocation-bearing) a default is freely rewritable metadata.
       val defaultKey = s"$DefaultPropPrefix$from"
       val renamedProps: Option[Seq[(String, String)]] = {
-        val existing = tableProperties(spark, root, cur)
+        val existing = hdr.properties
         existing.collectFirst { case (k, v) if k == defaultKey => v }
           .map(v => existing.filterNot(_._1 == defaultKey) :+
             (s"$DefaultPropPrefix$to" -> v))
       }
       new Staged(entries, Nil, "rename-column", newPartCol,
-        properties = renamedProps,
-        columnMapping = Some((newRenames.toSeq, dropped.toSeq)),
+        edit = h => h.copy(properties = renamedProps.getOrElse(h.properties),
+          renames = newRenames.toSeq, dropped = dropped.toSeq),
         compactEligible = false)
     }
   }
@@ -435,7 +438,8 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       require(cols.contains(name),
         s"cannot drop missing column '$name' (columns: ${cols.mkString(", ")})")
       require(cols.size > 1, s"cannot drop '$name': it is the only column")
-      require(!partitionColumn(spark, root, cur).contains(name),
+      val hdr = header(spark, root, cur)
+      require(!hdr.partcol.contains(name),
         s"cannot drop partition column '$name'")
       constraintMentions(spark, root, cur, name).foreach(n =>
         throw new IllegalStateException(
@@ -443,25 +447,20 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
             "DROP the constraint first"))
       // An identity record outliving its column would resurrect it on
       // every later write (the allocator sees "absent" and appends).
-      require(!identityColumnsAt(spark, root, cur).contains(name),
+      require(!hdr.identityColumns.contains(name),
         s"cannot drop identity column '$name' — the identity record " +
           "names it")
-      val (renames, dropped) = mappingAt(spark, root, cur)
+      val (renames, dropped) = hdr.mapping
       val physical = physicalNameOf(renames, name)
       val entries = manifest(spark, root, cur)
       // A recorded DEFAULT dies with its column — an orphaned record
       // would spring back if the name is ever re-added.
-      val droppedProps: Option[Seq[(String, String)]] = {
-        val existing = tableProperties(spark, root, cur)
-        val key = s"$DefaultPropPrefix$name"
-        if (existing.exists(_._1 == key))
-          Some(existing.filterNot(_._1 == key))
-        else None
-      }
-      new Staged(entries, Nil, "drop-column",
-        partitionColumn(spark, root, cur).getOrElse(""),
-        properties = droppedProps,
-        columnMapping = Some(((renames - name).toSeq, (dropped + physical).toSeq)),
+      val key = s"$DefaultPropPrefix$name"
+      new Staged(entries, Nil, "drop-column", hdr.partcol.getOrElse(""),
+        edit = h => h.copy(
+          properties = if (hdr.props.contains(key)) hdr.properties.filterNot(_._1 == key)
+                       else h.properties,
+          renames = (renames - name).toSeq, dropped = (dropped + physical).toSeq),
         compactEligible = false)
     }
 
@@ -497,7 +496,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       n -> f }
     occ(spark, root, "add-column") { cur =>
       val cols = logicalColumns(spark, root, cur)
-      val (renames, dropped) = mappingAt(spark, root, cur)
+      val (renames, dropped) = headerOrEmpty(spark, root, cur).mapping
       typed.foreach { case (name, _) =>
         require(!cols.contains(name),
           s"cannot add column '$name': it already exists")
@@ -630,7 +629,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     // rename between the versions diffs the same columns under their
     // new names instead of fabricating a drop+add.
     val mvv = math.max(fromVersion, toVersion)
-    val mapping = SnapshotStore.columnMappingAt(spark, root, mvv)
+    val mapping = SnapshotStore.headerOrEmpty(spark, root, mvv).mapping
     def side(diff: Seq[SnapshotStore.ManifestEntry],
              all: Seq[SnapshotStore.ManifestEntry], v: Long): DataFrame =
       if (diff.nonEmpty)
@@ -747,7 +746,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       // Unknown sizes (legacy sidecar) degrade to the count-only
       // rule.
       val target = if (engaged.isDefined) None
-        else SnapshotStore.targetFileSize(propertiesAt(spark, root, cur))
+        else SnapshotStore.targetFileSize(headerOrEmpty(spark, root, cur).props)
       val sizes: Map[String, FileStats.FileStatsEntry] =
         if (target.isDefined) statsFor(spark, root, cur) else Map.empty
       def conformant(es: Seq[ManifestEntry]): Boolean = target match {
@@ -770,7 +769,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         // RAW (physical column names — column mapping never applies), so
         // the partition column resolves by its PHYSICAL name.
         val physParts = partitionCols.cols
-          .map(physicalNameOf(mappingAt(spark, root, cur)._1, _))
+          .map(physicalNameOf(headerOrEmpty(spark, root, cur).mapping._1, _))
         // On an ENGAGED bucketed table writeDataFiles owns the shuffle
         // (by bucket hash); repartitioning here too would shuffle twice.
         val raw = readEntriesAt(spark, root, replaced, cur)
@@ -813,7 +812,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       val over = manifest(spark, root, committed).groupBy(_.partition)
         .filter(_._2.size > eff).keys.toSeq
       if (over.nonEmpty)
-        partitionColumn(spark, root, committed).foreach { spec =>
+        header(spark, root, committed).partcol.foreach { spec =>
           compact(spark, root, ColSpec.parse(spec),
             maxFilesPerPartition = eff, partitions = Some(over))
           // An exception-free compaction clears a recorded autoCompact
@@ -1127,7 +1126,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       require(keys.nonEmpty,
         s"$AutoClusterProp must name at least one column, got '$raw'")
       val cur = currentVersion(spark, root).getOrElse(committed)
-      val partCols = partitionColumns(spark, root, cur)
+      val partCols = header(spark, root, cur).partitionCols
       require(partCols.nonEmpty,
         s"auto-cluster needs partition-column metadata under $root")
       clusterIncremental(spark, root, ColSpec(partCols), keys)
@@ -1196,7 +1195,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
               case None => Some(None) // all-supported: schema-adaptive
               case Some(phys) =>
                 val tip = currentVersion(spark, root).getOrElse(committed)
-                val (renames, dropped) = mappingAt(spark, root, tip)
+                val (renames, dropped) = headerOrEmpty(spark, root, tip).mapping
                 val byPhysical = renames.map(_.swap)
                 val fields = logicalSchemaAt(spark, root, tip)
                   .map(_.fields.map(f => f.name -> f.dataType).toMap)
@@ -1294,7 +1293,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       if (requirePartitionCols(spark, root, cur) == newSpec.cols) NoOp(cur)
       else {
         val entries = manifest(spark, root, cur)
-        val mapping = mappingAt(spark, root, cur)
+        val mapping = headerOrEmpty(spark, root, cur).mapping
         val physParts = newSpec.cols.map(physicalNameOf(mapping._1, _))
         // An EMPTY table re-specs as pure metadata: same (zero) entries,
         // new header.
@@ -1354,12 +1353,12 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         bucketCols.map(c => c -> fields(c).sql),
         sortCols.map(c => c -> fields(c).sql))
       val entries = manifest(spark, root, cur)
-      val mapping = mappingAt(spark, root, cur)
+      val mapping = headerOrEmpty(spark, root, cur).mapping
       val partCols = requirePartitionCols(spark, root, cur)
       val physParts = partCols.map(physicalNameOf(mapping._1, _))
       val physBuckets = bucketCols.map(physicalNameOf(mapping._1, _))
       val physSort = sortCols.map(c => col(physicalNameOf(mapping._1, c)))
-      val props = tableProperties(spark, root, cur)
+      val props = header(spark, root, cur).properties
         .filterNot(_._1 == BucketSpecProp) :+ (BucketSpecProp -> spec)
       val fresh =
         if (entries.isEmpty) Nil
@@ -1369,22 +1368,10 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
           bucketOverride = Some((numBuckets, physBuckets)),
           sortWithin = physSort)
       new Staged(Nil, fresh, "cluster-by", ColSpec(partCols).header,
-        properties = Some(props), compactEligible = false)
+        edit = _.copy(properties = props), compactEligible = false)
     }
   }
 
-  /** Layout maintenance: rewrite partitions (default: all) Z-ORDERED
-    * on `zKeys`, published as a new snapshot version. Incremental
-    * merges append files in arrival order, so a long-lived table's
-    * per-file ranges widen until [[FileStats]] skipping stops biting;
-    * this restores it — each rewritten file covers a narrow
-    * hyper-rectangle of the key space ([[graft.operators.Layout]]),
-    * and the commit's stats sidecar captures the new ranges, so
-    * multi-dimensional predicates through [[table]] go back to
-    * opening a handful of files. Cost: one range shuffle of the
-    * selected partitions (same as a global sort) + a min/max rank
-    * pass; untouched partitions are carried by reference, and the
-    * usual optimistic commit ([[occ]]) makes it crash-safe/non-blocking. */
   /** Layout-rewrite output file count: ⌈selected bytes /
     * graft.targetFileSize⌉ when the table sizes by bytes (the bytes
     * are sidecar-exact — the selected files are on disk); the
@@ -1402,59 +1389,80 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       else None
     }.getOrElse(fallback)
 
+  /** Z-order `replaced` at tip `cur` into version `cur + 1` — the
+    * rewrite [[compactZOrder]] and [[clusterIncremental]] share. On a
+    * bucketed table the hash layout owns the shuffle, so it z-sorts
+    * WITHIN each bucket instead (writeDataFiles applies sortWithin
+    * after its bucket repartition), keeping both bucket co-location and
+    * narrow per-file stats ranges; unbucketed, the classic
+    * range-partition + sort layout. ENGAGED, not merely recorded: a
+    * drifted spec (e.g. a type-widened bucket column) makes
+    * writeDataFiles skip the bucket shuffle, so deferring to it would
+    * rewrite partitions with no repartition and no ordering at all — a
+    * silent layout no-op. Drifted specs take the classic path. Physical
+    * names throughout: layout rewrites never translate (see compact);
+    * the caller's LOGICAL z-keys and partition columns resolve through
+    * the mapping. With `stamp`, the commit records itself as the
+    * clustering baseline on `zKeys` ([[ClusteredAtProp]],
+    * [[ClusterKeysProp]]); otherwise properties carry forward. */
+  private def zorderRewrite(spark: SparkSession, root: String, cur: Long,
+                            kept: Seq[ManifestEntry], replaced: Seq[ManifestEntry],
+                            partitionCols: ColSpec, zKeys: Seq[String],
+                            filesPerPartition: Int, bits: Int,
+                            props: Map[String, String], operation: String,
+                            stamp: Boolean): Staged = {
+    val nParts = replaced.map(_.partition).distinct.size
+    val renames = headerOrEmpty(spark, root, cur).mapping._1
+    val raw = readEntriesAt(spark, root, replaced, cur)
+    val zCols = zKeys.map(k => col(physicalNameOf(renames, k)))
+    val bucketed = bucketSpecEngaged(spark, root, cur).isDefined
+    val laid =
+      if (bucketed) raw
+      else graft.operators.Layout.zorderBy(raw, zCols,
+        numFiles = sizedFileCount(spark, root, cur, replaced,
+          filesPerPartition * nParts, props), bits = bits)
+    val v = cur + 1
+    val newEntries = writeDataFiles(spark, laid, root, v,
+      partitionCols.cols.map(physicalNameOf(renames, _)), translate = false,
+      sortWithin =
+        if (bucketed) Seq(graft.operators.Layout.zorderKey(raw, zCols, bits))
+        else Nil)
+    val stamped = (props - ClusteredAtProp - ClusterKeysProp).toSeq ++
+      Seq(ClusteredAtProp -> v.toString, ClusterKeysProp -> zKeys.mkString(","))
+    new Staged(kept, newEntries, operation, partitionCols.header,
+      edit = if (stamp) _.copy(properties = stamped) else identity,
+      compactEligible = false)
+  }
+
+  /** Layout maintenance: rewrite partitions (default: all) Z-ORDERED
+    * on `zKeys`, published as a new snapshot version. Incremental
+    * merges append files in arrival order, so a long-lived table's
+    * per-file ranges widen until [[FileStats]] skipping stops biting;
+    * this restores it — each rewritten file covers a narrow
+    * hyper-rectangle of the key space ([[graft.operators.Layout]]),
+    * and the commit's stats sidecar captures the new ranges, so
+    * multi-dimensional predicates through [[table]] go back to
+    * opening a handful of files. Cost: one range shuffle of the
+    * selected partitions (same as a global sort) + a min/max rank
+    * pass; untouched partitions are carried by reference, and the
+    * usual optimistic commit ([[occ]]) makes it crash-safe/non-blocking. */
   def compactZOrder(spark: SparkSession, root: String, partitionCols: ColSpec,
                     zKeys: Seq[String], filesPerPartition: Int = 4,
                     bits: Int = 8, partitions: Option[Seq[String]] = None): Long = {
     require(partitionCols.nonEmpty, "compactZOrder needs a partition spec")
     occ(spark, root, "z-order compaction") { cur =>
-      val props = propertiesAt(spark, root, cur)
+      val props = headerOrEmpty(spark, root, cur).props
       val entries = manifest(spark, root, cur)
       val sel = partitions.map(_.toSet).getOrElse(entries.map(_.partition).toSet)
       val (replaced, kept) = entries.partition(e => sel(e.partition))
+      // A FULL-scope z-order IS a clustering baseline: stamp it (keys
+      // included) so a following [[clusterIncremental]] diffs against
+      // this state instead of re-clustering everything the rewrite just
+      // laid out. A partition-scoped pass is NOT a full baseline —
+      // properties carry forward untouched.
       if (replaced.isEmpty) NoOp(cur)
-      else {
-        val nParts = replaced.map(_.partition).distinct.size
-        // Physical names throughout: layout rewrites never translate
-        // (see compact); the caller's LOGICAL z-keys and partition
-        // column resolve through the mapping.
-        val renames = mappingAt(spark, root, cur)._1
-        val raw = readEntriesAt(spark, root, replaced, cur)
-        val zCols = zKeys.map(k => col(physicalNameOf(renames, k)))
-        // On a bucketed table the hash layout owns the shuffle — z-sort
-        // WITHIN each bucket instead (writeDataFiles applies sortWithin
-        // after its bucket repartition), keeping both bucket co-location
-        // and narrow per-file stats ranges. Unbucketed: the classic
-        // range-partition + sort layout. ENGAGED, not merely recorded:
-        // a drifted spec (e.g. a type-widened bucket column) makes
-        // writeDataFiles skip the bucket shuffle, so deferring to it
-        // would rewrite partitions with no repartition and no ordering
-        // at all — a silent layout no-op. Drifted specs take the
-        // classic path.
-        val bucketed = bucketSpecEngaged(spark, root, cur).isDefined
-        val laid =
-          if (bucketed) raw
-          else graft.operators.Layout.zorderBy(raw, zCols,
-            numFiles = sizedFileCount(spark, root, cur, replaced,
-              filesPerPartition * nParts, props), bits = bits)
-        val v = cur + 1
-        val newEntries = writeDataFiles(spark, laid, root, v,
-          partitionCols.cols.map(physicalNameOf(renames, _)), translate = false,
-          sortWithin =
-            if (bucketed) Seq(graft.operators.Layout.zorderKey(raw, zCols, bits))
-            else Nil)
-        // A FULL-scope z-order IS a clustering baseline: stamp it (keys
-        // included) so a following [[clusterIncremental]] diffs against
-        // this state instead of re-clustering everything the rewrite
-        // just laid out. A partition-scoped pass is NOT a full baseline
-        // — properties carry forward untouched.
-        val stamped: Option[Seq[(String, String)]] =
-          if (partitions.isDefined) None
-          else Some((props - ClusteredAtProp - ClusterKeysProp).toSeq ++
-            Seq(ClusteredAtProp -> v.toString,
-              ClusterKeysProp -> zKeys.mkString(",")))
-        new Staged(kept, newEntries, "zorder", partitionCols.header,
-          properties = stamped, compactEligible = false)
-      }
+      else zorderRewrite(spark, root, cur, kept, replaced, partitionCols, zKeys,
+        filesPerPartition, bits, props, "zorder", stamp = partitions.isEmpty)
     }
   }
 
@@ -1496,7 +1504,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
                          filesPerPartition: Int = 4, bits: Int = 8): Long = {
     require(partitionCols.nonEmpty, "clusterIncremental needs a partition spec")
     occ(spark, root, "incremental-clustering") { cur =>
-      val props = tableProperties(spark, root, cur).toMap
+      val props = header(spark, root, cur).props
       // A baseline clustered on OTHER keys is not a baseline for these.
       val baseline = props.get(ClusteredAtProp).flatMap(s =>
         try Some(s.toLong) catch { case _: NumberFormatException => None })
@@ -1522,30 +1530,8 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
             val delta = unclustered.map(_.path).toSet
             (unclustered, entries.filterNot(e => delta(e.path)))
           }
-        val nParts = replaced.map(_.partition).distinct.size
-        val renames = mappingAt(spark, root, cur)._1
-        val raw = readEntriesAt(spark, root, replaced, cur)
-        val zCols = zKeys.map(k => col(physicalNameOf(renames, k)))
-        // Bucket-engaged tables keep the hash layout and z-sort WITHIN
-        // buckets; drifted specs take the classic path (see
-        // [[compactZOrder]] — same rationale).
-        val bucketed = bucketSpecEngaged(spark, root, cur).isDefined
-        val laid =
-          if (bucketed) raw
-          else graft.operators.Layout.zorderBy(raw, zCols,
-            numFiles = sizedFileCount(spark, root, cur, replaced,
-              filesPerPartition * nParts, props), bits = bits)
-        val v = cur + 1
-        val newEntries = writeDataFiles(spark, laid, root, v,
-          partitionCols.cols.map(physicalNameOf(renames, _)), translate = false,
-          sortWithin =
-            if (bucketed) Seq(graft.operators.Layout.zorderKey(raw, zCols, bits))
-            else Nil)
-        val stamped = (props - ClusteredAtProp - ClusterKeysProp).toSeq ++
-          Seq(ClusteredAtProp -> v.toString,
-            ClusterKeysProp -> zKeys.mkString(","))
-        new Staged(kept, newEntries, "zorder-incremental", partitionCols.header,
-          properties = Some(stamped), compactEligible = false)
+        zorderRewrite(spark, root, cur, kept, replaced, partitionCols, zKeys,
+          filesPerPartition, bits, props, "zorder-incremental", stamp = true)
       }
     }
   }
@@ -1579,19 +1565,19 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     // re-reading it per CAS retry would be wasted manifest GETs).
     // Restoring to a version that predates the header must not strip
     // it from the table tip: fall back to the current version's.
-    val partCol = partitionColumn(spark, root, toVersion)
-      .orElse(currentVersion(spark, root)
-        .flatMap(partitionColumn(spark, root, _)))
+    val partCol = header(spark, root, toVersion).partcol
+      .orElse(currentVersion(spark, root).flatMap(header(spark, root, _).partcol))
       .getOrElse("")
     occ(spark, root, "restore") { cur =>
+      val tgt = headerOrEmpty(spark, root, toVersion)
       // No-op only when FILES **and** METADATA already match: a
       // metadata-only commit (rename/drop column) carries the same
       // file set as its parent, so the file comparison alone would
       // wrongly skip restoring across it.
-      if (manifest(spark, root, cur).toSet == target.toSet &&
-          mappingAt(spark, root, cur) == mappingAt(spark, root, toVersion) &&
-          tableProperties(spark, root, cur).toSet ==
-            tableProperties(spark, root, toVersion).toSet)
+      if (manifest(spark, root, cur).toSet == target.toSet && {
+          val tip = header(spark, root, cur)
+          tip.mapping == tgt.mapping && tip.properties.toSet == tgt.properties.toSet
+        })
         NoOp(cur)
       // The column mapping snaps back to the TARGET's, exactly like the
       // recorded schema (basis): restoring across a rename must show
@@ -1604,12 +1590,8 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
       // snap-back) — auto-synced rollups must follow it; layout-wise
       // nothing new to compact.
       else new Staged(target, Nil, "restore", partCol,
-        columnMapping = Some(
-          try columnMapping(spark, root, toVersion)
-          catch { case _: java.io.IOException => (Nil, Nil) }),
-        properties = Some(
-          try tableProperties(spark, root, toVersion)
-          catch { case _: java.io.IOException => Nil }),
+        edit = _.copy(properties = tgt.properties, renames = tgt.renames,
+          dropped = tgt.dropped),
         basis = Some(toVersion), compactEligible = false)
     }
   }
@@ -1644,20 +1626,13 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
              else f.makeQualified(new Path(srcRoot, e.dv)).toString))
     // Cloning a version that predates partition-column metadata still
     // inherits the source TIP's header when one exists.
+    val src = header(spark, srcRoot, v)
     if (!writeManifest(spark, dstRoot, 1L, abs, "clone",
-        partitionColumn(spark, srcRoot, v)
-          .orElse(currentVersion(spark, srcRoot)
-            .flatMap(partitionColumn(spark, srcRoot, _)))
+        src.partcol
+          .orElse(currentVersion(spark, srcRoot).flatMap(header(spark, srcRoot, _).partcol))
           .getOrElse(""),
-        constraints = Some(
-          try tableConstraints(spark, srcRoot, v)
-          catch { case _: java.io.IOException => Nil }),
-        properties = Some(
-          try tableProperties(spark, srcRoot, v)
-          catch { case _: java.io.IOException => Nil }),
-        columnMapping = Some(
-          try columnMapping(spark, srcRoot, v)
-          catch { case _: java.io.IOException => (Nil, Nil) })))
+        _.copy(constraints = src.constraints, properties = src.properties,
+          renames = src.renames, dropped = src.dropped)))
       throw new java.util.ConcurrentModificationException(
         s"lost the clone race publishing v1 under $dstRoot")
     writeStats(spark, dstRoot, 1L, abs, Nil, schemaFor(spark, srcRoot, v))
@@ -1723,11 +1698,9 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         if (ps.forall(from.contains))
           java.lang.Long.valueOf(ps.toSeq.map(from(_).rows).sum)
         else null
+      val h = header(spark, root, v)
       val row = org.apache.spark.sql.Row(
-        v,
-        commitTimestamp(spark, root, v)
-          .map(new java.sql.Timestamp(_)).orNull,
-        manifestOperation(spark, root, v).orNull, m.size,
+        v, h.ts.map(new java.sql.Timestamp(_)).orNull, h.op.orNull, m.size,
         m.map(_.partition).distinct.size,
         added.size, removed.size, totalRows,
         rowSum(added, st), rowSum(removed, prevStats))
@@ -1777,7 +1750,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
     // Same restriction for column mapping: external engines read the
     // files' PHYSICAL names with no way to apply renames/drops (Delta
     // blocks generate under column mapping for the same reason).
-    require({ val (r, d) = mappingAt(spark, root, v); r.isEmpty && d.isEmpty },
+    require({ val (r, d) = headerOrEmpty(spark, root, v).mapping; r.isEmpty && d.isEmpty },
       s"version $v under $root uses column mapping (renamed or dropped " +
         "columns), which a bare symlink manifest cannot express — " +
         "external engines would see the physical column names")
@@ -1892,7 +1865,7 @@ private[sinks] trait SnapshotMaintenance { this: SnapshotStore.type =>
         val cutoffV = System.currentTimeMillis() - floorMillis
         // No commit timestamp (pre-#ts manifest) = old = droppable.
         dropByCount.filter(v =>
-          commitTimestamp(spark, root, v).forall(_ < cutoffV))
+          header(spark, root, v).ts.forall(_ < cutoffV))
       }
     val keepVs = vs.filterNot(drop.toSet)
     val keptEntries = keepVs.flatMap(v => manifest(spark, root, v))

@@ -157,7 +157,7 @@ class SnapshotSource extends RelationProvider
         // check would readmit the exact failure the guard exists for)
         // unless the caller explicitly vouches for the column.
         SnapshotStore.currentVersion(spark, root).foreach { cur =>
-          SnapshotStore.partitionColumn(spark, root, cur) match {
+          SnapshotStore.header(spark, root, cur).partcol match {
             case Some(recorded)
                 if ColSpec.parse(recorded) != ColSpec.parse(partitionCol) =>
               throw new IllegalArgumentException(
@@ -243,7 +243,7 @@ class SnapshotSource extends RelationProvider
         val (rel, _, entries) = SnapshotStore.relationWithIndex(
           spark0, root, version, partitions)
         val v = version.orElse(SnapshotStore.currentVersion(spark0, root)).get
-        val mapping = SnapshotStore.columnMappingAt(spark0, root, v)
+        val mapping = SnapshotStore.headerOrEmpty(spark0, root, v).mapping
         if (entries.forall(_.dv.isEmpty) &&
             mapping._1.isEmpty && mapping._2.isEmpty) rel
         else {

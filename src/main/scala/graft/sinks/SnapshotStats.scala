@@ -324,7 +324,7 @@ object SnapshotStats {
     // across renames, so stats recorded before an `ALTER … RENAME`
     // keep costing the column after it (the read side re-checks the
     // type, which renames never change).
-    val renames = SnapshotStore.mappingAt(spark, root, cur)._1
+    val renames = SnapshotStore.headerOrEmpty(spark, root, cur).mapping._1
     val props = Seq(
       AnalyzedVersionProp -> cur.toString,
       AnalyzedRowsProp -> row.getLong(row.fieldIndex("live_rows")).toString,
@@ -398,8 +398,8 @@ object SnapshotStats {
                                      physicalSchema: StructType,
                                      physicalRows: Boolean = false): Option[CatalogTable] = {
     if (!statsConsumable(spark)) return None
-    val props = SnapshotStore.tableProperties(spark, root, version).toMap
-    val mapping = SnapshotStore.mappingAt(spark, root, version)
+    val props = SnapshotStore.header(spark, root, version).props
+    val mapping = SnapshotStore.headerOrEmpty(spark, root, version).mapping
     val colStats = recordedColStats(props, physicalSchema, mapping._2)
     // `physicalRows`: the caller attaches these stats to the BARE scan
     // UNDER a DV anti-join wrapper, which physically emits the pre-DV

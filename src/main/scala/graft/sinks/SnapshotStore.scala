@@ -180,9 +180,8 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
   // bytes: 2M manifest entries ≈ a few hundred MB worst case across
   // ALL cached versions — the deliberate ceiling.
   private val manifestCache =
-    new MetaLru[(Seq[String], Seq[ManifestEntry])](256, 2L << 20, _._2.size.toLong)
-  private val headerCache =
-    new MetaLru[Seq[String]](1024, 1L << 20, _.size.toLong)
+    new MetaLru[Seq[ManifestEntry]](256, 2L << 20, _.size.toLong)
+  private val headerCache = new MetaLru[ManifestHeader](1024, 1L << 20, _.size)
   private val statsCache = new MetaLru[(Map[String, FileStats.FileStatsEntry],
     Option[org.apache.spark.sql.types.StructType])](256, 2L << 20, _._1.size.toLong)
   private val bloomCache =
@@ -297,7 +296,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
 
   /** Parse a manifest. Partition values are URL-encoded on write so
     * arbitrary strings survive the line format. Lines starting with
-    * `#` are metadata headers (committer token), not entries. */
+    * `#` are the [[ManifestHeader]] block, not entries. */
   def manifest(spark: SparkSession, root: String, version: Long): Seq[ManifestEntry] = {
     val f = fs(spark, root)
     val p = manifestPath(root, version)
@@ -306,12 +305,12 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // at `f.open` exactly as it did before the cache existed.
     val fp = if (metaCacheEnabled(spark)) Some(metaFp(f, p)) else None
     fp.flatMap(manifestCache.get(key, _)) match {
-      case Some((_, entries)) => return entries
+      case Some(entries) => return entries
       case None => ()
     }
     val in = f.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val headers = text.linesIterator.takeWhile(_.startsWith("#")).toList
+    val header = ManifestHeader.parse(text.linesIterator.takeWhile(_.startsWith("#")).toList)
     // Protocol gate (Delta's minReaderVersion/table-features design):
     // `#require` names a feature this manifest's files CANNOT be read
     // correctly without. Every other header is advisory — a reader
@@ -322,10 +321,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // the single parse point every read path funnels through. A
     // gate-failing manifest is never cached — the refusal re-derives
     // from the file every time, like every other parse error.
-    val unknown = headers
-      .filter(_.startsWith("#require\t"))
-      .map(_.stripPrefix("#require\t").trim)
-      .filterNot(SupportedReaderFeatures)
+    val unknown = header.required.filterNot(SupportedReaderFeatures)
     if (unknown.nonEmpty) throw new IllegalStateException(
       s"manifest v$version under $root requires reader feature(s) " +
         s"${unknown.mkString(", ")} that this reader does not support " +
@@ -343,69 +339,46 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // A full parse subsumes the header block — seed BOTH caches so the
     // first header probe after an entry read is already a hit.
     fp.foreach { x =>
-      manifestCache.put(key, x, (headers, entries))
-      headerCache.put(key, x, headers)
+      manifestCache.put(key, x, entries)
+      headerCache.put(key, x, header)
     }
     entries
   }
 
-  /** EVERY header line of a version's manifest in one read (headers
-    * are written before any entry line, so the scan stops at the
-    * first entry without holding a large manifest). The single-read
-    * building block behind [[manifestHeader]]/[[manifestHeaderAll]]
-    * and the one-open metadata fan-in in [[writeManifest]] — a commit
+  /** Version `version`'s parsed [[ManifestHeader]], read once per
+    * (root, version) — headers are written before any entry line, so
+    * the read stops at the first entry without holding a large
+    * manifest. Every table-metadata read goes through here: a commit
     * used to open its predecessor five times for ts / constraints /
     * properties / mapping / copied-ledger, five metadata round-trips
-    * per commit on an object store. */
-  private[sinks] def manifestHeaderLines(spark: SparkSession, root: String,
-                                         version: Long): Seq[String] = {
+    * per commit on an object store. Fails like [[manifest]] on a
+    * missing or unreadable manifest. */
+  def header(spark: SparkSession, root: String, version: Long): ManifestHeader = {
     val f = fs(spark, root)
     val p = manifestPath(root, version)
     val key = MetaKey(root, version)
     val fp = if (metaCacheEnabled(spark)) Some(metaFp(f, p)) else None
     fp.flatMap(headerCache.get(key, _)) match {
-      case Some(headers) => return headers
+      case Some(h) => return h
       case None => ()
     }
     val in = f.open(p)
-    val headers = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .takeWhile(_.startsWith("#")).toList
+    val h = try ManifestHeader.parse(scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().takeWhile(_.startsWith("#")).toList)
     finally in.close()
     // Headers alone (the prefix read) — entry parses stay lazy: a
     // header probe over a million-entry manifest must not read it all.
-    fp.foreach(headerCache.put(key, _, headers))
-    headers
+    fp.foreach(headerCache.put(key, _, h))
+    h
   }
 
-  private def headerFirst(lines: Seq[String], name: String): Option[String] = {
-    val prefix = s"#$name\t"
-    lines.collectFirst { case l if l.startsWith(prefix) => l.stripPrefix(prefix) }
-  }
-
-  private def headerAll(lines: Seq[String], name: String): Seq[String] = {
-    val prefix = s"#$name\t"
-    lines.collect { case l if l.startsWith(prefix) => l.stripPrefix(prefix) }
-  }
-
-  private def parseConstraintHeaders(lines: Seq[String]): Seq[(String, String)] =
-    headerAll(lines, "constraint").map { l =>
-      val Array(n, e) = l.split("\t", 2)
-      (n, URLDecoder.decode(e, UTF_8))
-    }
-
-  private def parsePropHeaders(lines: Seq[String]): Seq[(String, String)] =
-    headerAll(lines, "prop").map { l =>
-      val Array(k, v) = l.split("\t", 2)
-      (URLDecoder.decode(k, UTF_8), URLDecoder.decode(v, UTF_8))
-    }
-
-  private def parseMappingHeaders(lines: Seq[String])
-      : (Seq[(String, String)], Seq[String]) = (
-    headerAll(lines, "colmap").map { l =>
-      val Array(lg, ph) = l.split("\t", 2)
-      (URLDecoder.decode(lg, UTF_8), URLDecoder.decode(ph, UTF_8))
-    },
-    headerAll(lines, "coldrop").map(URLDecoder.decode(_, UTF_8)))
+  /** [[header]], degraded to the empty header for `version < 1` or a
+    * missing/unreadable manifest — for DERIVED metadata (column
+    * mapping, properties a write consults), which never blocks. */
+  def headerOrEmpty(spark: SparkSession, root: String, version: Long): ManifestHeader =
+    if (version < 1) ManifestHeader.empty
+    else try header(spark, root, version)
+    catch { case _: java.io.IOException => ManifestHeader.empty }
 
   /** Write-job commit-protocol options for the repo's append/error-mode
     * parquet writes (data files, DV sidecars, index shards):
@@ -423,54 +396,25 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     "mapreduce.fileoutputcommitter.algorithm.version" -> "2",
     "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
 
-  /** One header value from a version's manifest. Headers are written
-    * first, so the scan stops at the first match without holding more
-    * than a line at a time. */
-  private[sinks] def manifestHeader(spark: SparkSession, root: String, version: Long,
-                             name: String): Option[String] =
-    // Routed through the cached header block: the ts / op / partcol /
-    // committer probes of one planning or commit pass all parse the
-    // SAME prefix — one open per (root, version), not one per probe.
-    headerFirst(manifestHeaderLines(spark, root, version), name)
-
-  private[sinks] def manifestCommitter(spark: SparkSession, root: String, version: Long): Option[String] =
-    manifestHeader(spark, root, version, "committer")
-
-  /** Every value of a repeatable header (`#copied`) in a version's
-    * manifest — unlike [[manifestHeader]], which stops at the first. */
-  private[sinks] def manifestHeaderAll(spark: SparkSession, root: String, version: Long,
-                                name: String): Seq[String] =
-    headerAll(manifestHeaderLines(spark, root, version), name)
-
   /** The operation tag a version's committer recorded (`commit`,
     * `merge`, `delete`, `compact`, `zorder`, `restore`). None for
     * manifests written before operation tagging existed — [[history]]
     * surfaces those as null rather than guessing. */
   def manifestOperation(spark: SparkSession, root: String, version: Long): Option[String] =
-    manifestHeader(spark, root, version, "op")
+    header(spark, root, version).op
 
-  /** The table's partition column as recorded in version `version`'s
-    * manifest header (`#partcol`) — table metadata in the log, so SQL
-    * maintenance (`OPTIMIZE`) needs no out-of-band knowledge. None
-    * for manifests written before the header existed; callers should
-    * fall back to an explicit argument and error otherwise. */
+  /** The table's partition spec as recorded in version `version`'s
+    * `#partcol` header (comma-joined for multi-column specs). None for
+    * manifests written before the header existed. */
   def partitionColumn(spark: SparkSession, root: String, version: Long): Option[String] =
-    manifestHeader(spark, root, version, "partcol")
-
-  /** [[partitionColumn]] parsed as a column LIST (the `#partcol`
-    * header stores a comma-joined spec for multi-column partitioning).
-    * Empty for manifests predating the header. */
-  def partitionColumns(spark: SparkSession, root: String,
-                       version: Long): Seq[String] =
-    partitionColumn(spark, root, version)
-      .map(ColSpec.parse(_).cols).getOrElse(Nil)
+    header(spark, root, version).partcol
 
   /** The partition spec maintenance paths resolve from the manifest,
     * failing with re-commit advice when the table predates the
     * header. */
   private[sinks] def requirePartitionCols(spark: SparkSession, root: String,
                                    cur: Long): Seq[String] = {
-    val cols = partitionColumns(spark, root, cur)
+    val cols = header(spark, root, cur).partitionCols
     if (cols.isEmpty) throw new IllegalStateException(
       s"manifest v$cur under $root predates partition-column metadata; " +
         "re-commit once through any SnapshotStore write path first")
@@ -484,7 +428,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     * `TIMESTAMP AS OF` resolution relies on (Delta's in-commit
     * timestamp behavior). */
   def commitTimestamp(spark: SparkSession, root: String, version: Long): Option[Long] =
-    manifestHeader(spark, root, version, "ts").map(_.toLong)
+    header(spark, root, version).ts
 
   /** `TIMESTAMP AS OF` resolution: the latest version committed at or
     * before `tsMillis` (Delta semantics — "the table as it was at that
@@ -498,7 +442,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
   def versionAtTimestamp(spark: SparkSession, root: String, tsMillis: Long): Long = {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"no committed snapshot under $root")
-    val stamped = vs.map(v => v -> commitTimestamp(spark, root, v))
+    val stamped = vs.map(v => v -> header(spark, root, v).ts)
     val hit = stamped.filter(_._2.exists(_ <= tsMillis)).map(_._1)
     if (hit.nonEmpty) hit.max
     else {
@@ -511,53 +455,6 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
           "there is no snapshot to read at that time")
     }
   }
-
-  /** Column mapping recorded in a version's manifest — Delta's
-    * column-mapping NAME MODE: parquet files keep their original
-    * ("physical") column names forever; renames and drops are pure
-    * metadata. Two header shapes:
-    *  - `#colmap\t<logical-enc>\t<physical-enc>` — one per RENAMED
-    *    column (identity mappings are never stored);
-    *  - `#coldrop\t<physical-enc>` — one per dropped physical column
-    *    (a tombstone: readers project it away; the data stays in the
-    *    files until they are naturally rewritten).
-    * Returns (renames logical→physical, dropped physical names). Both
-    * empty for an unmapped table — every mapping-aware code path must
-    * be ZERO extra cost then. */
-  def columnMapping(spark: SparkSession, root: String,
-                    version: Long): (Seq[(String, String)], Seq[String]) = {
-    val renames = manifestHeaderAll(spark, root, version, "colmap").map { l =>
-      val Array(lg, ph) = l.split("\t", 2)
-      (URLDecoder.decode(lg, UTF_8), URLDecoder.decode(ph, UTF_8))
-    }
-    val dropped = manifestHeaderAll(spark, root, version, "coldrop")
-      .map(URLDecoder.decode(_, UTF_8))
-    (renames, dropped)
-  }
-
-  /** [[columnMapping]] under a name visible where a `columnMapping`
-    * PARAMETER shadows the method ([[writeManifest]]). */
-  private[sinks] def columnMapping0(spark: SparkSession, root: String,
-                             version: Long): (Seq[(String, String)], Seq[String]) =
-    columnMapping(spark, root, version)
-
-  /** [[columnMapping]] as lookup structures, degraded to empty on a
-    * missing/unreadable manifest (derived metadata never blocks). */
-  private[sinks] def mappingAt(spark: SparkSession, root: String,
-                        version: Long): (Map[String, String], Set[String]) =
-    if (version < 1) (Map.empty, Set.empty)
-    else try {
-      val (r, d) = columnMapping(spark, root, version)
-      (r.toMap, d.toSet)
-    } catch { case _: java.io.IOException => (Map.empty, Set.empty) }
-
-  /** [[columnMapping]] as lookup structures (renames logical→physical,
-    * dropped physical names) — empty when the manifest is missing or
-    * predates mapping. Public for the streaming sources and SQL
-    * commands, which live outside this package. */
-  def columnMappingAt(spark: SparkSession, root: String,
-                      version: Long): (Map[String, String], Set[String]) =
-    mappingAt(spark, root, version)
 
   /** Present a PHYSICAL frame (a raw file read) through a column
     * mapping — the read half of the mapping boundary, public for the
@@ -572,7 +469,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
   def logicalSchemaAt(spark: SparkSession, root: String,
       version: Long): Option[org.apache.spark.sql.types.StructType] =
     schemaFor(spark, root, version)
-      .map(logicalSchema(_, mappingAt(spark, root, version)))
+      .map(logicalSchema(_, headerOrEmpty(spark, root, version).mapping))
 
   /** Physical column name of logical `name` under `renames` (identity
     * when unmapped). */
@@ -647,33 +544,26 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
   }
 
   /** CHECK constraints recorded in a version's manifest
-    * (`#constraint\tname\turl-encoded-expr` headers) — table metadata
-    * in the log, the Delta constraint convention. */
+    * (`#constraint` headers) — table metadata in the log, the Delta
+    * constraint convention. */
   def tableConstraints(spark: SparkSession, root: String,
                        version: Long): Seq[(String, String)] =
-    manifestHeaderAll(spark, root, version, "constraint").map { l =>
-      val Array(n, e) = l.split("\t", 2)
-      (n, URLDecoder.decode(e, UTF_8))
-    }
+    header(spark, root, version).constraints
 
-  /** Table properties recorded in a version's manifest
-    * (`#prop\tkey\tvalue` headers, URL-encoded) — free-form table
-    * metadata in the log, Delta's TBLPROPERTIES. Properties this store
-    * itself consults: `graft.enableDeletionVectors` (= "true" routes
-    * SQL DELETE through [[deleteWhereDv]] instead of the rewriting
-    * [[deleteWhere]] — exactly Delta's opt-in). */
+  /** Table properties recorded in a version's manifest (`#prop`
+    * headers) — free-form table metadata in the log, Delta's
+    * TBLPROPERTIES. Properties this store itself consults:
+    * `graft.enableDeletionVectors` (= "true" routes SQL DELETE through
+    * [[deleteWhereDv]] instead of the rewriting [[deleteWhere]] —
+    * exactly Delta's opt-in). */
   def tableProperties(spark: SparkSession, root: String,
                       version: Long): Seq[(String, String)] =
-    manifestHeaderAll(spark, root, version, "prop").map { l =>
-      val Array(k, v) = l.split("\t", 2)
-      (URLDecoder.decode(k, UTF_8), URLDecoder.decode(v, UTF_8))
-    }
+    header(spark, root, version).properties
 
   /** Current-version table properties as a Map (empty for an empty or
     * pre-properties table). */
   def tablePropertiesMap(spark: SparkSession, root: String): Map[String, String] =
-    currentVersion(spark, root)
-      .map(v => tableProperties(spark, root, v).toMap).getOrElse(Map.empty)
+    currentVersion(spark, root).map(header(spark, root, _).props).getOrElse(Map.empty)
 
   /** `ALTER TABLE … SET TBLPROPERTIES` — metadata-only commit: every
     * data file carries by reference; only the property set changes
@@ -708,9 +598,9 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     }
     val keys = props.map(_._1).toSet
     occ(spark, root, "set-properties") { cur =>
-      val existing = tableProperties(spark, root, cur)
+      val existing = header(spark, root, cur).properties
       metadataCommit(spark, root, cur, "set-properties",
-        properties = Some(existing.filterNot(p => keys(p._1)) ++ props))
+        _.copy(properties = existing.filterNot(p => keys(p._1)) ++ props))
     }
   }
 
@@ -726,12 +616,12 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
   def updateProperty(spark: SparkSession, root: String, key: String)
                     (f: Option[String] => String): Long =
     occ(spark, root, "update-property") { cur =>
-      val existing = tableProperties(spark, root, cur)
+      val existing = header(spark, root, cur).properties
       val old = existing.collectFirst { case (k, v) if k == key => v }
       val next = f(old)
       if (old.contains(next)) NoOp(cur)
       else metadataCommit(spark, root, cur, "set-properties",
-        properties = Some(existing.filterNot(_._1 == key) :+ (key -> next)))
+        _.copy(properties = existing.filterNot(_._1 == key) :+ (key -> next)))
     }
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES` — metadata-only removal.
@@ -760,14 +650,14 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     }
     val doomed = keys.toSet
     occ(spark, root, "unset-properties") { cur =>
-      val existing = tableProperties(spark, root, cur)
+      val existing = header(spark, root, cur).properties
       val have = existing.map(_._1).toSet
       val missing = keys.filterNot(have)
       require(missing.isEmpty,
         s"table $root has no propert${if (missing.size == 1) "y" else "ies"} " +
           s"${missing.mkString(", ")} (have: ${have.mkString(", ")})")
       metadataCommit(spark, root, cur, "unset-properties",
-        properties = Some(existing.filterNot(p => doomed(p._1))))
+        _.copy(properties = existing.filterNot(p => doomed(p._1))))
     }
   }
 
@@ -784,7 +674,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // that checked against an older version could publish a violating
     // row on top of a concurrently added constraint. `props` is read
     // only when a constraint exists.
-    val cs = if (tip >= 1) tableConstraints(spark, root, tip) else Nil
+    val cs = if (tip >= 1) header(spark, root, tip).constraints else Nil
     if (cs.isEmpty) return
     // Generated columns absent from the batch are computed downstream
     // by writeDataFiles — check the POST-computation batch (what
@@ -1059,42 +949,11 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
       if (r == root) pendingIdentityAllocs.remove()
     }
 
-  /** Identity column NAMES recorded at `version` (both modes) — the
-    * UPDATE/rename/drop guards read through this: the allocator owns
-    * the column's MUTATION surface regardless of mode. */
-  def identityColumnsAt(spark: SparkSession, root: String,
-                        version: Long): Seq[String] =
-    identityColumns(tableProperties(spark, root, version).toMap).map(_.col)
-
-  /** GENERATED ALWAYS identity names only — the explicit-value
-    * refusal sites read through this (a BY DEFAULT column accepts
-    * caller-supplied values by contract). */
-  def alwaysIdentityColumnsAt(spark: SparkSession, root: String,
-                              version: Long): Seq[String] =
-    identityColumns(tableProperties(spark, root, version).toMap)
-      .filterNot(_.byDefault).map(_.col)
-
-  /** (generated names, ALWAYS identity names, all identity names,
-    * column defaults) in ONE properties read — the INSERT alignment
-    * consults all four on the hot SQL path: generated and identity
-    * columns may be omitted; only ALWAYS identity columns refuse
-    * explicit values; omitted DEFAULT columns fill from their
-    * recorded expression. */
-  def autoColumnsAt(spark: SparkSession, root: String, version: Long)
-      : (Set[String], Set[String], Set[String], Map[String, String]) = {
-    val props = tableProperties(spark, root, version).toMap
-    val ids = identityColumns(props)
-    (generatedColumns(props).map(_._1).toSet,
-      ids.filterNot(_.byDefault).map(_.col).toSet,
-      ids.map(_.col).toSet,
-      defaultColumns(props).toMap)
-  }
-
   /** (column → generation expr sql) recorded at `version` — the SQL
     * surface (INSERT alignment, DESCRIBE) reads through this. */
   def generatedColumnsAt(spark: SparkSession, root: String,
                          version: Long): Seq[(String, String)] =
-    generatedColumns(tableProperties(spark, root, version).toMap)
+    generatedColumns(header(spark, root, version).props)
 
   /** COLUMN DEFAULT VALUES (Delta's `DEFAULT` clause, E142): recorded
     * as `graft.default.<col> = <sql>`. A default fills a column
@@ -1138,7 +997,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
   /** (column → default expr sql) recorded at `version`. */
   def defaultColumnsAt(spark: SparkSession, root: String,
                        version: Long): Seq[(String, String)] =
-    defaultColumns(tableProperties(spark, root, version).toMap)
+    defaultColumns(header(spark, root, version).props)
 
   /** Validate a DEFAULT expression for column `name : dt`: must
     * parse, resolve with ZERO column references, be FOLDABLE (a
@@ -1249,13 +1108,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     * applied to the commit entry too). None for a fresh table. */
   private[sinks] def tipVersionAndProps(spark: SparkSession,
                                         root: String): Option[(Long, Map[String, String])] =
-    currentVersion(spark, root).map(v => (v, propertiesAt(spark, root, v)))
-
-  /** Version `v`'s property map, empty when unreadable. */
-  private[sinks] def propertiesAt(spark: SparkSession, root: String,
-                                  v: Long): Map[String, String] =
-    scala.util.Try(tableProperties(spark, root, v).toMap)
-      .getOrElse(Map.empty[String, String])
+    currentVersion(spark, root).map(v => (v, headerOrEmpty(spark, root, v).props))
 
   /** [[withGeneratedColumns]] against the table's tip — the content
     * entry points apply this EARLY so partition-touch probes and the
@@ -1333,23 +1186,20 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
   private[sinks] final case class NoOp(version: Long) extends Attempt
 
   /** A commit computed against the attempt's tip: the manifest lists
-    * `carried ++ fresh`; `constraints` / `properties` / `columnMapping`
-    * REPLACE the carried-forward metadata when given (see
-    * [[writeManifest]]); `schema` (by-name, read only after the publish
-    * wins) and `basis` feed [[writeStats]]; `compactEligible` feeds
-    * [[postCommit]]. `rebase`, given (base, head) after a lost publish,
-    * returns the carried entries that let the SAME fresh files publish
-    * at head + 1 — or None for a true conflict, which recomputes. */
+    * `carried ++ fresh`; `edit` turns the predecessor's carried-forward
+    * [[ManifestHeader]] into this version's (see [[writeManifest]]);
+    * `schema` (by-name, read only after the publish wins) and `basis`
+    * feed [[writeStats]]; `compactEligible` feeds [[postCommit]].
+    * `rebase`, given (base, head) after a lost publish, returns the
+    * carried entries that let the SAME fresh files publish at head + 1
+    * — or None for a true conflict, which recomputes. */
   private[sinks] final class Staged(
       val carried: Seq[ManifestEntry],
       val fresh: Seq[ManifestEntry],
       val operation: String,
       val partitionHeader: String,
       schema0: => Option[org.apache.spark.sql.types.StructType] = None,
-      val constraints: Option[Seq[(String, String)]] = None,
-      val properties: Option[Seq[(String, String)]] = None,
-      val columnMapping: Option[(Seq[(String, String)], Seq[String])] = None,
-      val extraHeaders: Seq[String] = Nil,
+      val edit: ManifestHeader => ManifestHeader = identity,
       val basis: Option[Long] = None,
       val compactEligible: Boolean = true,
       val rebase: Option[(Long, Long) => Option[Seq[ManifestEntry]]] = None)
@@ -1386,8 +1236,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
           var publishing = true
           while (publishing) {
             if (writeManifest(spark, root, v, carried ++ s.fresh, s.operation,
-                s.partitionHeader, s.extraHeaders, s.constraints, s.properties,
-                s.columnMapping)) {
+                s.partitionHeader, s.edit)) {
               writeStats(spark, root, v, carried, s.fresh, s.schema, s.basis)
               postCommit(spark, root, v, s.compactEligible)
               return v
@@ -1412,23 +1261,21 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     * carries by reference under the tip's partition header. */
   private[sinks] def metadataCommit(spark: SparkSession, root: String, cur: Long,
                                     operation: String,
-                                    properties: Option[Seq[(String, String)]] = None,
-                                    constraints: Option[Seq[(String, String)]] = None,
-                                    schema: => Option[org.apache.spark.sql.types.StructType] = None): Staged = {
-    val entries = manifest(spark, root, cur)
-    new Staged(entries, Nil, operation, partitionColumn(spark, root, cur).getOrElse(""),
-      schema, constraints = constraints, properties = properties,
-      compactEligible = false)
-  }
+                                    edit: ManifestHeader => ManifestHeader = identity,
+                                    schema: => Option[org.apache.spark.sql.types.StructType] = None): Staged =
+    new Staged(manifest(spark, root, cur), Nil, operation,
+      header(spark, root, cur).partcol.getOrElse(""), schema, edit, compactEligible = false)
 
+  /** Publish version `version`: its header is the predecessor's
+    * carried-forward metadata ([[ManifestHeader.carried]]; nothing for
+    * a first commit or a missing predecessor) after `edit`, with this
+    * commit's committer token, timestamp, required features, operation
+    * and partition spec. Returns whether this writer won the version. */
   private[sinks] def writeManifest(spark: SparkSession, root: String, version: Long,
                             entries: Seq[ManifestEntry],
                             operation: String = "",
                             partitionCol: String = "",
-                            extraHeaders: Seq[String] = Nil,
-                            constraints: Option[Seq[(String, String)]] = None,
-                            properties: Option[Seq[(String, String)]] = None,
-                            columnMapping: Option[(Seq[(String, String)], Seq[String])] = None): Boolean = {
+                            edit: ManifestHeader => ManifestHeader = identity): Boolean = {
     val f = fs(spark, root)
     val token = java.util.UUID.randomUUID().toString
     val tmp = new Path(root, s"manifests/.v_$version.tmp-$token")
@@ -1439,39 +1286,28 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
       if (local) FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).getRaw
         .create(tmp, false)
       else f.create(tmp, false)
+    // ONE read of the predecessor's header block serves every
+    // carried-forward metadata family (ts clamp, constraints,
+    // properties, column mapping, the COPY INTO ledger). A missing or
+    // unreadable predecessor (first commit, vacuumed) carries nothing.
+    // The ledger carries forward like every other piece of table
+    // metadata: if it lived only in the manifest of the version that
+    // loaded the files, a routine VACUUM would drop it and a re-fired
+    // COPY INTO would silently double-load.
+    val prev = headerOrEmpty(spark, root, version - 1)
     // Commit wall-clock, clamped monotonic against the predecessor so
     // `TIMESTAMP AS OF` resolution can trust that version order and
     // timestamp order agree even across clock skew between writers
     // (Delta's in-commit-timestamp clamp). Predecessor missing
     // (first commit, vacuumed, or pre-#ts) → the clock as-is.
-    // ONE read of the predecessor's header block serves every
-    // carried-forward metadata family below (ts clamp, constraints,
-    // properties, column mapping, the COPY INTO ledger) — this path
-    // used to open the same file five times per commit. A missing or
-    // unreadable predecessor (first commit, vacuumed) carries nothing,
-    // exactly as each individual read used to degrade.
-    val prevHeaders: Seq[String] =
-      if (version > 1)
-        try manifestHeaderLines(spark, root, version - 1)
-        catch { case _: java.io.IOException => Nil }
-      else Nil
     val ts = {
       val now = System.currentTimeMillis()
-      val prev = headerFirst(prevHeaders, "ts")
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-      prev.map(p => math.max(now, p + 1)).getOrElse(now)
+      prev.ts.map(p => math.max(now, p + 1)).getOrElse(now)
     }
-    // Constraints carry forward automatically (they are table
-    // metadata, like #partcol) unless the caller REPLACES the set
-    // (ALTER ADD/DROP CONSTRAINT). A missing predecessor (first
-    // commit, vacuumed) carries nothing.
-    val effectiveConstraints =
-      constraints.getOrElse(parseConstraintHeaders(prevHeaders))
-    // Table properties carry forward exactly like constraints unless
-    // the caller REPLACES the set (ALTER TABLE SET/UNSET TBLPROPERTIES).
+    val edited = edit(prev.carried)
     // A pending swallowed-maintenance failure (or recovery-clear)
     // rides THIS commit (see [[MaintenanceErrorProp]]) — merged after
-    // the caller's set so it can never be lost to a replacement, and
+    // the caller's edit so it can never be lost to a replacement, and
     // cleared from the ledger only when this attempt wins. A pending
     // entry at version 1 is always stale (hooks run POST-commit, so a
     // fresh table cannot have failed yet — it belongs to a dropped
@@ -1493,7 +1329,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
         case _ => Map.empty[String, Long]
       }
     val effectiveProperties = {
-      val base = properties.getOrElse(parsePropHeaders(prevHeaders))
+      val base = edited.properties
       val withErr = maintErr match {
         case Some("") => base.filterNot(_._1 == MaintenanceErrorProp)
         case Some(err) =>
@@ -1526,20 +1362,6 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
         case other => other
       }
     }
-    // Column mapping carries forward exactly like constraints unless
-    // the caller REPLACES it (ALTER TABLE RENAME/DROP COLUMN, restore,
-    // clone).
-    val effectiveMapping =
-      columnMapping.getOrElse(parseMappingHeaders(prevHeaders))
-    // The COPY INTO loaded-file ledger carries forward like every
-    // other piece of table metadata: if it lived only in the manifest
-    // of the version that loaded the files, a routine VACUUM would
-    // drop it and a re-fired COPY INTO would silently double-load.
-    // Cost: ledger size × ~1 line per manifest — proportional to the
-    // table's copied-file count, the price of the idempotence
-    // contract surviving maintenance.
-    val carriedCopied = headerAll(prevHeaders, "copied")
-      .map(c => s"#copied\t$c").filterNot(extraHeaders.contains)
     // Reader-mandatory features of THIS manifest (see the gate in
     // [[manifest]]): derived per version rather than carried — a
     // version that stopped using a feature (REORG PURGE dropped every
@@ -1547,27 +1369,12 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // again by readers without it. `#require` lines ride the same
     // atomic publish as everything else.
     val required =
-      (if (effectiveMapping._1.nonEmpty || effectiveMapping._2.nonEmpty)
-         Seq("colmap") else Nil) ++
+      (if (edited.renames.nonEmpty || edited.dropped.nonEmpty) Seq("colmap") else Nil) ++
       (if (entries.exists(_.dv.nonEmpty)) Seq("dv") else Nil) ++
       (if (partitionCol.contains(",")) Seq("multipart") else Nil)
-    val headers = s"#committer\t$token" +:
-      (Seq(s"#ts\t$ts") ++
-        required.map(f => s"#require\t$f") ++
-        (if (operation.nonEmpty) Seq(s"#op\t$operation") else Nil) ++
-        // Table metadata in the log (the Delta convention): the
-        // partition column name, so table-level maintenance (SQL
-        // OPTIMIZE) needs no out-of-band knowledge.
-        (if (partitionCol.nonEmpty) Seq(s"#partcol\t$partitionCol") else Nil) ++
-        effectiveConstraints.map { case (n, e) =>
-          s"#constraint\t$n\t${URLEncoder.encode(e, UTF_8)}" } ++
-        effectiveProperties.map { case (k, v) =>
-          s"#prop\t${URLEncoder.encode(k, UTF_8)}\t${URLEncoder.encode(v, UTF_8)}" } ++
-        effectiveMapping._1.map { case (lg, ph) =>
-          s"#colmap\t${URLEncoder.encode(lg, UTF_8)}\t${URLEncoder.encode(ph, UTF_8)}" } ++
-        effectiveMapping._2.map(ph => s"#coldrop\t${URLEncoder.encode(ph, UTF_8)}") ++
-        carriedCopied ++
-        extraHeaders)
+    val headers = edited.copy(committer = Some(token), ts = Some(ts), required = required,
+      op = Some(operation).filter(_.nonEmpty), partcol = Some(partitionCol).filter(_.nonEmpty),
+      properties = effectiveProperties).render
     try out.write((headers ++ entries.map { e =>
       val base = s"${URLEncoder.encode(e.partition, UTF_8)}\t${e.path}"
       // A DV attachment appends exactly two more fields; DV-free
@@ -1604,13 +1411,13 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
       case _: org.apache.hadoop.fs.FileAlreadyExistsException |
           _: java.nio.file.FileAlreadyExistsException => false
       case e: java.io.IOException if f.exists(dst) &&
-          !manifestCommitter(spark, root, version).contains(token) => false
+          !header(spark, root, version).committer.contains(token) => false
     }
     // Belt-and-suspenders: even if a filesystem's rename raced through,
     // the published content carries the committer token — only the
     // committer whose token survived owns the version; anyone else
     // retries on the next number.
-    val won = renamed && manifestCommitter(spark, root, version).contains(token)
+    val won = renamed && header(spark, root, version).committer.contains(token)
     // A local publish leaves the tmp as a second link to the manifest.
     if ((local || !won) && f.exists(tmp)) f.delete(tmp, false)
     // Every Nth commit refreshes the `_last_checkpoint` hint so
@@ -1817,7 +1624,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // LOGICAL schema — translate renamed fields back. Identity for
     // unmapped tables.
     val newSchema = newSchemaLogical.map { s =>
-      val (renames, _) = mappingAt(spark, root, v)
+      val (renames, _) = headerOrEmpty(spark, root, v).mapping
       if (renames.isEmpty) s
       else org.apache.spark.sql.types.StructType(s.fields.toSeq.map(fld =>
         renames.get(fld.name).map(ph => fld.copy(name = ph)).getOrElse(fld)))
@@ -2169,7 +1976,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     val (rel, idx, entries) = relationWithIndex(spark, root, Some(v), partitions)
     val df = applyColumnMapping(applyDvs(spark, root,
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .baseRelationToDataFrame(rel), entries), mappingAt(spark, root, v))
+        .baseRelationToDataFrame(rel), entries), headerOrEmpty(spark, root, v).mapping)
     // Optimizer-statistics rider ([[SnapshotStats]]): exact live
     // rowCount + last-ANALYZE column stats on the scan's catalogTable
     // hook. Plans only, never results — any failure here degrades to
@@ -2205,6 +2012,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // schema (it used to be parsed twice per planning pass).
     val (stats, recorded) = statsSidecar(spark, root, v)
     val all = manifest(spark, root, v)
+    val hdr = header(spark, root, v)
     val wanted = partitions match {
       case Some(ps) => val keep = ps.toSet; all.filter(e => keep(e.partition))
       case None => all
@@ -2218,7 +2026,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // never the read.
     val derivers =
       try {
-        val props = tableProperties(spark, root, v).toMap
+        val props = hdr.props
         val gens = generatedColumns(props)
         if (gens.isEmpty) Nil
         else FileStats.generatedDerivers(spark, gens, schema,
@@ -2231,8 +2039,8 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // recorded type (hash placement is type-sensitive). Any drift
     // degrades to a plain scan — co-location is an optimization, never
     // an assumption.
-    val bucketSpec = bucketSpecAt(spark, root, v).flatMap { sp =>
-      val renames = mappingAt(spark, root, v)._1
+    val bucketSpec = hdr.props.get(BucketSpecProp).flatMap(parseBucketSpec).flatMap { sp =>
+      val renames = hdr.renames.toMap
       val fields = schema.fields.map(f => f.name -> f.dataType).toMap
       def typedPhys(cs: Seq[(String, String)]): Option[Seq[String]] = {
         val named = cs.map { case (c, t) => (physicalNameOf(renames, c), t) }
@@ -2341,11 +2149,6 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     }
   }
 
-  private[sinks] def bucketSpecAt(spark: SparkSession, root: String,
-                                  version: Long): Option[TableBucketSpec] =
-    tableProperties(spark, root, version).toMap.get(BucketSpecProp)
-      .flatMap(parseBucketSpec)
-
   /** The bucket count when the spec is ENGAGED at `version` — every
     * bucket/sort column still present in the recorded schema at its
     * recorded type (the writer's own gate). A drifted spec returns
@@ -2353,9 +2156,9 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     * would assume a re-bucketing that writeDataFiles will skip. */
   private[sinks] def bucketSpecEngaged(spark: SparkSession, root: String,
                                        version: Long): Option[Int] =
-    bucketSpecAt(spark, root, version).flatMap { sp =>
+    header(spark, root, version).props.get(BucketSpecProp).flatMap(parseBucketSpec).flatMap { sp =>
       schemaFor(spark, root, version).flatMap { sc =>
-        val renames = mappingAt(spark, root, version)._1
+        val renames = headerOrEmpty(spark, root, version).renames.toMap
         val fields = sc.fields.map(f => f.name -> f.dataType).toMap
         val ok = (sp.cols ++ sp.sortCols).forall { case (c, t) =>
           fields.get(physicalNameOf(renames, c)).exists(_.sql == t) }
@@ -2420,7 +2223,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // properties to consult).
     def resolveTyped(cs: Seq[(String, String)]): Option[Seq[String]] = {
       val renames = if (translate) Map.empty[String, String]
-        else mappingAt(spark, root, v - 1)._1
+        else headerOrEmpty(spark, root, v - 1).mapping._1
       val named = cs.map { case (c, t) => (physicalNameOf(renames, c), t) }
       val fields = df.schema.fields.map(f => f.name -> f.dataType).toMap
       if (named.forall { case (c, t) => fields.get(c).exists(_.sql == t) })
@@ -2437,8 +2240,8 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
     // miss (they re-write rows as-is).
     val priorProps: Map[String, String] =
       if (v <= 1) Map.empty
-      else if (translate) tableProperties(spark, root, v - 1).toMap
-      else scala.util.Try(tableProperties(spark, root, v - 1).toMap)
+      else if (translate) header(spark, root, v - 1).props
+      else scala.util.Try(header(spark, root, v - 1).props)
         .getOrElse(Map.empty)
     // Generated columns (graft.generated.*): a content batch missing
     // one gets it computed HERE — before partition-dir derivation and
@@ -2538,7 +2341,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
       else withDirs
     val physical =
       if (!translate) ordered
-      else toPhysical(ordered, mappingAt(spark, root, v - 1))
+      else toPhysical(ordered, headerOrEmpty(spark, root, v - 1).mapping)
     // Advisory file sizing (graft.targetFileSize): rows-per-file from
     // the PREDECESSOR sidecar's measured bytes-per-row — same data
     // shape, same codec, no write-time guessing. One extra sidecar
@@ -2660,7 +2463,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
       .filter(e => candidates.exists(_.endsWith(e.path)))
     if (entries.isEmpty) readVersion(spark, root, version).limit(0)
     else applyColumnMapping(readEntriesAt(spark, root, entries, version),
-      mappingAt(spark, root, version))
+      headerOrEmpty(spark, root, version).mapping)
   }
 
   /** Read the current snapshot; `partitions` prunes at the MANIFEST
@@ -2685,7 +2488,7 @@ object SnapshotStore extends SnapshotDml with SnapshotDv with SnapshotMaintenanc
       case Some(ps) => val keep = ps.toSet; all.filter(e => keep(e.partition))
       case None => all
     }
-    val mapping = mappingAt(spark, root, mappingVersion.getOrElse(version))
+    val mapping = headerOrEmpty(spark, root, mappingVersion.getOrElse(version)).mapping
     // A fully-pruned selection keeps the snapshot's schema (limit 0
     // over the full file set) rather than failing on an empty path
     // list. A version with NO files at all (a deleteCommit emptied

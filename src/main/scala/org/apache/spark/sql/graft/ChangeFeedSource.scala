@@ -397,7 +397,7 @@ object ChangeFeedSourceProvider {
       case (None, Some(ts)) =>
         val millis = graft.sinks.SnapshotSource.parseTimestampMillis(ts)
         SnapshotStore.versions(spark, root)
-          .find(v => SnapshotStore.commitTimestamp(spark, root, v)
+          .find(v => SnapshotStore.header(spark, root, v).ts
             .exists(_ >= millis))
           .map(_ - 1)
           .getOrElse(SnapshotStore.currentVersion(spark, root).getOrElse(0L))

@@ -1205,7 +1205,7 @@ case class OptimizeSnapshotCommand(table: Seq[String], zorderBy: Seq[String],
     val root = GraftSqlParser.resolveRoot(spark, table)
     val cur = SnapshotStore.currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
-    val partCols = SnapshotStore.partitionColumns(spark, root, cur)
+    val partCols = SnapshotStore.header(spark, root, cur).partitionCols
     if (partCols.isEmpty) throw new IllegalStateException(
       s"manifest v$cur under $root predates partition-column metadata; " +
         "re-commit once through any SnapshotStore write path (or use the " +
@@ -1307,7 +1307,7 @@ case class MergeIntoSnapshotCommand(table: Seq[String],
     // inserted rows allocate — drop the column from the source.
     // BY DEFAULT identity columns are exempt: explicit values are
     // their contract, and the write path mark-advances past them.
-    val identCols = SnapshotStore.alwaysIdentityColumnsAt(spark, root, cur).toSet
+    val identCols = SnapshotStore.header(spark, root, cur).alwaysIdentityColumns.toSet
     src.columns.filter(identCols).foreach(c =>
       throw new IllegalArgumentException(
         s"MERGE source carries identity column '$c' — GENERATED ALWAYS " +
@@ -1321,7 +1321,7 @@ case class MergeIntoSnapshotCommand(table: Seq[String],
             "GENERATED ALWAYS AS IDENTITY is allocator-owned; omit it")
       case _ => ()
     }
-    val partCols = SnapshotStore.partitionColumns(spark, root, cur)
+    val partCols = SnapshotStore.header(spark, root, cur).partitionCols
     if (partCols.isEmpty) throw new IllegalStateException(
       s"manifest v$cur under $root predates partition-column metadata; " +
         "re-commit once through any SnapshotStore write path first")
@@ -1368,7 +1368,7 @@ case class MergeIntoSnapshotCommand(table: Seq[String],
     val target = SnapshotStore.table(spark, root)
     val tTypes = target.schema.map(f => f.name -> f.dataType).toMap
     val identSet = SnapshotStore.currentVersion(spark, root)
-      .map(SnapshotStore.identityColumnsAt(spark, root, _).toSet)
+      .map(SnapshotStore.header(spark, root, _).identityColumns.toSet)
       .getOrElse(Set.empty[String])
     val matchedClauses = clauses.collect {
       case u: MatchedUpdate => u: GraftSqlParser.MergeClause
@@ -1667,7 +1667,7 @@ case class ShowPartitionsCommand(table: Seq[String])
     val root = GraftSqlParser.resolveRoot(spark, table)
     val cur = SnapshotStore.currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
-    val partCols = SnapshotStore.partitionColumns(spark, root, cur)
+    val partCols = SnapshotStore.header(spark, root, cur).partitionCols
     require(partCols.nonEmpty,
       s"manifest v$cur under $root predates partition-column metadata")
     val counts = SnapshotStore.partitionRowCounts(spark, root, Some(cur))
@@ -1782,7 +1782,7 @@ case class ClusterByCommand(table: Seq[String], cols: Seq[String],
         // CLUSTER BY NONE: idempotent unset.
         val cur = SnapshotStore.currentVersion(spark, root).getOrElse(
           throw new IllegalStateException(s"no committed snapshot under $root"))
-        if (SnapshotStore.tableProperties(spark, root, cur)
+        if (SnapshotStore.header(spark, root, cur).properties
             .exists(_._1 == SnapshotStore.BucketSpecProp))
           SnapshotStore.unsetProperties(spark, root,
             Seq(SnapshotStore.BucketSpecProp))
@@ -1883,7 +1883,8 @@ private[graft] object InsertAlignment {
     }
     val cur = SnapshotStore.currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $root"))
-    val partCol = SnapshotStore.partitionColumn(spark, root, cur).getOrElse(
+    val hdr = SnapshotStore.header(spark, root, cur)
+    val partCol = hdr.partcol.getOrElse(
       throw new IllegalStateException(
         s"manifest v$cur under $root predates partition-column metadata; " +
           "re-commit once through any SnapshotStore write path first"))
@@ -1904,8 +1905,9 @@ private[graft] object InsertAlignment {
     // columns may be provided (explicit values are their contract —
     // the write path mark-advances past them) or omitted; an omitted
     // one stays absent so the write path allocates.
-    val (gens, alwaysIdents, idents, defaults) =
-      SnapshotStore.autoColumnsAt(spark, root, cur)
+    val gens = SnapshotStore.generatedColumnsAt(spark, root, cur).map(_._1).toSet
+    val (alwaysIdents, idents) = (hdr.alwaysIdentityColumns.toSet, hdr.identityColumns.toSet)
+    val defaults = SnapshotStore.defaultColumnsAt(spark, root, cur).toMap
     // PARTITION-clause columns behave like auto columns here: absent
     // from the aligned frame (the caller supplies their values), and
     // never fillable from a DEFAULT.
@@ -1964,8 +1966,7 @@ private[graft] object InsertAlignment {
         // the null-sentinel partition — almost certainly a statement
         // bug; require it listed. A GENERATED partition column is the
         // exception: omitting it is the feature.
-        val partColsOfTable = SnapshotStore.partitionColumns(spark, root, cur)
-        partColsOfTable.filterNot(auto).foreach(c => require(cols.contains(c),
+        hdr.partitionCols.filterNot(auto).foreach(c => require(cols.contains(c),
           s"INSERT INTO column list must include partition column '$c'"))
         val byListed = cols.zip(df.columns.toSeq).toMap
         df.select(target.fields.toSeq.flatMap { f =>
@@ -2023,7 +2024,7 @@ case class InsertOverwriteSnapshotCommand(table: Seq[String], query: String,
       "PARTITION clause repeats a column")
     val (aligned0, partCol, cur) = InsertAlignment(spark, root, query,
       excluded = staticSpec.map(_._1).toSet)
-    val tableParts = SnapshotStore.partitionColumns(spark, root, cur)
+    val tableParts = SnapshotStore.header(spark, root, cur).partitionCols
     partitionSpec.map(_._1).foreach(c => require(tableParts.contains(c),
       s"PARTITION clause names '$c', which is not a partition column " +
         s"of the table (${tableParts.mkString(", ")})"))
@@ -2112,23 +2113,22 @@ case class DescribeDetailCommand(table: Seq[String])
       if (m.forall(e => stats.contains(e.path)))
         java.lang.Long.valueOf(m.map(e => stats(e.path).len).sum)
       else null
-    val props = SnapshotStore.tableProperties(spark, root, cur).toMap
+    val hdr = SnapshotStore.header(spark, root, cur)
+    val props = hdr.props
     def longProp(k: String): java.lang.Long =
       props.get(k).flatMap(s => scala.util.Try(s.toLong).toOption)
         .map(java.lang.Long.valueOf).orNull
     Seq(Row(
       "graft-snapshot", root,
-      SnapshotStore.partitionColumn(spark, root, cur).orNull,
+      hdr.partcol.orNull,
       cur,
-      SnapshotStore.commitTimestamp(spark, root, cur)
-        .map(new java.sql.Timestamp(_)).orNull,
+      hdr.ts.map(new java.sql.Timestamp(_)).orNull,
       m.size, m.map(_.partition).distinct.size, size,
       // DV-adjusted row count from the sidecar — metadata-priced like
       // everything else in this summary (null if any file lacks stats).
       SnapshotStore.rowCount(spark, root)
         .map(java.lang.Long.valueOf).orNull,
-      SnapshotStore.tableConstraints(spark, root, cur)
-        .map { case (n, e) => s"$n CHECK ($e)" },
+      hdr.constraints.map { case (n, e) => s"$n CHECK ($e)" },
       // The last swallowed post-commit maintenance failure (auto-sync
       // / auto-compact / auto-analyze) — the operator signal that a
       // dashboard MV has silently degraded to full scans. Null = no

@@ -73,7 +73,7 @@ class SnapshotStreamSource(
 
   private val pinnedMapping: (Map[String, String], Set[String]) =
     pinnedMappingVersion
-      .map(SnapshotStore.columnMappingAt(spark, root, _))
+      .map(SnapshotStore.headerOrEmpty(spark, root, _).mapping)
       .getOrElse((Map.empty, Set.empty))
 
   /** Pinned at stream creation: the snapshot's recorded schema. */
@@ -137,7 +137,7 @@ class SnapshotStreamSource(
     val committed = SnapshotStore.versions(spark, root)
     val emit = committed.filter(v => v > from && v <= to)
     val feeds = emit.flatMap { v =>
-      val op = SnapshotStore.manifestOperation(spark, root, v).getOrElse("")
+      val op = SnapshotStore.header(spark, root, v).op.getOrElse("")
       // The missing-predecessor branch comes FIRST: the layout-op skip
       // is only a valid statement about the v-1 -> v TRANSITION, which
       // requires v-1's manifest to exist. When the oldest retained

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.sinks.SnapshotStore
 
 /** Streaming consumption of the snapshot-store change feed

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.{Checkpoints, Dedup}
 
 /** The one-config reliable-checkpoint switch: every lineage-truncation

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.sinks.SnapshotStore
 
 /** E53: shallow clone — a new table referencing the source's files by

@@ -503,7 +503,6 @@ class DataSkippingSpec extends SparkSpec {
   }
 
   test("translate covers the pushable subset and stays conservative elsewhere") {
-    import org.apache.spark.sql.catalyst.dsl.expressions._
     val id = org.apache.spark.sql.catalyst.expressions.AttributeReference(
       "id", org.apache.spark.sql.types.LongType)()
     val lit5 = org.apache.spark.sql.catalyst.expressions.Literal(5L)

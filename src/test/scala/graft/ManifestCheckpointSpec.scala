@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.sinks.SnapshotStore
 
 /** `_last_checkpoint`: every Nth commit records a version pointer so

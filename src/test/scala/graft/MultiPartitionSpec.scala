@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.sinks.SnapshotStore
 
 /** Multi-column partitioning and composite keys through the snapshot

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.functions.Parsers
 
 /** F1–F19 scalar parser semantics, incl. the SURVEY §7.4 risk cases:

@@ -157,7 +157,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("decontamination broadcasts the benchmark; line dedup never goes quadratic") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = (1L to 50L).map(i => (i, s"alpha beta gamma doc $i content"))
       .toDF("id", "text")
@@ -174,7 +173,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("packing and weighted mix shard the stratum window; no shuffled join") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = (1L to 100L).map(i => (i, if (i % 2 == 0) "en" else "de", 10L))
       .toDF("id", "lang", "tokens")
@@ -198,7 +196,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("hashSplit is shuffle-free; domain scrub explodes only the id projection") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = (1L to 100L).map(i => (i, s"https://s$i.example.com/p", "x" * 50))
       .toDF("id", "url", "text")
@@ -242,7 +239,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("change feed joins per-key over the changed partitions only, never cartesian") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.sinks.SnapshotStore
     val root = java.nio.file.Files.createTempDirectory("planshape_cdc")

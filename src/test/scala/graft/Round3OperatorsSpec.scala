@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 class IvfTopKSpec extends SparkSpec {
   import graft.operators.Similarity
   import spark.implicits._

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
 import graft.streaming.Sessionize
 
 /** Gap sessionization: batch semantics, and stream/batch equivalence

@@ -24,10 +24,6 @@ object SparkSpec {
       .config("spark.ui.retainedJobs", 20)
       .config("spark.ui.retainedStages", 20)
       .config("spark.sql.maxToStringFields", 25)
-      // Specs pin which table a plan scans by its root in the plan
-      // string; the default 100-character cap cuts the scan location
-      // before a `freshDir()` root ends.
-      .config("spark.sql.maxMetadataStringLength", 1000)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.functions.Vectors
 
 /** The codegen kernels must agree bit-for-bit with the HOF reference
@@ -62,7 +61,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("luhn_valid: known cards, spacing, rejections, SQL surface, codegen = interpreted") {
-    import graft.functions.TextAnalysis
     val rows = Seq(
       ("visa", "4111111111111111"),        // canonical valid test number
       ("spaced", "4111 1111 1111 1111"),   // separators skipped in place
@@ -197,7 +195,6 @@ b').dup_line_frac AS f""").collect()(0)
   test("interpreted eval path (outside codegen) agrees too") {
     // Force the interpreted path by evaluating inside a literal-only context.
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.ArrayData
     import graft.expressions.{CosineSimilarity, DotProduct}
     val a = Literal.create(Array(1.0, 2.0, 3.0), org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
     val b = Literal.create(Array(4.0, 5.0, 6.0), org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))

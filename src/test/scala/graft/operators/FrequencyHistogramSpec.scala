@@ -2,8 +2,6 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.sinks.SnapshotStore
 
 /** The count-only rollup layers: exact frequency tables / top-k

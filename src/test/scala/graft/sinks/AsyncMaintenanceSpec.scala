@@ -54,9 +54,8 @@ class AsyncMaintenanceSpec extends graft.SparkSpec {
       try {
         val q = SnapshotStore.table(spark, src).groupBy("g")
           .agg(count(lit(1)).as("n"), sum(col("qty")).as("s"))
-        val plan = q.queryExecution.executedPlan.toString
-        assert(plan.contains(src) && !plan.contains(roll),
-          s"a lagging rollup must degrade to the scan:\n$plan")
+        assert(graft.DevRun.readsOnly(q, src),
+          s"a lagging rollup must degrade to the scan: ${q.inputFiles.mkString(", ")}")
         val direct = SnapshotStore.read(spark, src).groupBy("g")
           .agg(count(lit(1)).as("n"), sum(col("qty")).as("s"))
           .collect().map(_.toString).toSet
@@ -72,9 +71,8 @@ class AsyncMaintenanceSpec extends graft.SparkSpec {
       try {
         val q2 = SnapshotStore.table(spark, src).groupBy("g")
           .agg(count(lit(1)).as("n"), sum(col("qty")).as("s"))
-        val plan2 = q2.queryExecution.executedPlan.toString
-        assert(plan2.contains(roll) && !plan2.contains(src),
-          s"the drained rollup must answer the dashboard again:\n$plan2")
+        assert(graft.DevRun.readsOnly(q2, roll),
+          s"the drained rollup must answer the dashboard again: ${q2.inputFiles.mkString(", ")}")
       } finally spark.conf.unset(RollupRewrite.RegistryConf)
     } finally { SnapshotStore.asyncTestGate = None; gate.countDown() }
   }

@@ -3,7 +3,6 @@ package graft.sinks
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Self-healing optimizer statistics
   * ([[SnapshotMaintenance.maybeAutoAnalyze]]): a table that opted in

@@ -27,7 +27,7 @@ class CommitPrimitiveSpec extends graft.SparkSpec {
         attempts += 1
         if (attempts == 1) SnapshotStore.addConstraint(spark, root, "k_pos", "k > 0")
         SnapshotStore.appendAttempt(spark, bad, root, ColSpec.parse("part"), cur,
-          "append", Nil)
+          "append")
       }
     }
     assert(e.getMessage.contains("k_pos"), e.getMessage)
@@ -67,7 +67,7 @@ class CommitPrimitiveSpec extends graft.SparkSpec {
       // An interloper takes cur + 1 after this body staged its files.
       SnapshotStore.setProperties(spark, root, Seq("n" -> "1"))
       val staged = SnapshotStore.appendAttempt(spark, Seq((2L, "b")).toDF("k", "part"),
-        root, ColSpec.parse("part"), cur, "append", Nil)
+        root, ColSpec.parse("part"), cur, "append")
       new SnapshotStore.Staged(staged.carried, staged.fresh, "append", "part",
         rebase = Some { (base: Long, head: Long) =>
           bases += (base -> head)

@@ -2,8 +2,6 @@ package graft.sinks
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 /** The `#require` manifest protocol gate: advisory headers may be
   * skipped by readers that don't know them, but a manifest naming a
   * reader-MANDATORY feature this build doesn't support must refuse to

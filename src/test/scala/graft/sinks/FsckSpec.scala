@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** `FSCK REPAIR TABLE` ([[SnapshotStore.fsckRepair]], E144): a table
   * whose data (or DV) files were deleted out-of-band reads again

@@ -381,7 +381,6 @@ class IdentityColumnSpec extends graft.SparkSpec {
   }
 
   test("a garbled identity record fails loudly, never null-fills or re-allocates") {
-    import org.apache.spark.sql.types._
     val garbled = Map(s"${SnapshotStore.IdentityPropPrefix}id" -> "start=1;stp=?")
     val e = intercept[IllegalStateException](
       SnapshotStore.identityColumns(garbled))

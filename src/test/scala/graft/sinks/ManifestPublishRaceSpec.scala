@@ -1,6 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
 import java.util.concurrent.{Callable, CyclicBarrier, Executors}
 
 import scala.jdk.CollectionConverters._
@@ -17,7 +16,7 @@ class ManifestPublishRaceSpec extends graft.SparkSpec {
   private val Rounds = 60
 
   test("racing writers of one version leave exactly one readable winner") {
-    val root = Files.createTempDirectory("publish_race").resolve("t").toString
+    val root = s"${freshDir()}/t"
     val pool = Executors.newFixedThreadPool(Writers)
     try (1 to Rounds).foreach { v =>
       val entries = (0 until Writers).map(w =>
@@ -29,16 +28,16 @@ class ManifestPublishRaceSpec extends graft.SparkSpec {
           def call(): Boolean = {
             start.await()
             SnapshotStore.writeManifest(spark, root, v, entries(w), "race",
-              extraHeaders = Seq(s"#racer\t$w"))
+              edit = _.copy(extra = Seq(s"#racer\t$w")))
           }
         }
       }
       val won = pool.invokeAll(racers.asJava).asScala.map(_.get())
       val winners = won.zipWithIndex.collect { case (true, w) => w }
       assert(winners.size == 1, s"v$v: winners ${winners.mkString(",")}")
-      assert(SnapshotStore.manifestHeader(spark, root, v, "racer").contains(winners.head.toString),
-        s"v$v")
-      assert(SnapshotStore.manifestCommitter(spark, root, v).isDefined, s"v$v")
+      val header = SnapshotStore.header(spark, root, v)
+      assert(header.extra == Seq(s"#racer\t${winners.head}"), s"v$v")
+      assert(header.committer.isDefined, s"v$v")
       assert(SnapshotStore.manifest(spark, root, v) == entries(winners.head), s"v$v")
     } finally pool.shutdownNow()
     assert(SnapshotStore.currentVersion(spark, root).contains(Rounds.toLong))

@@ -1,7 +1,5 @@
 package graft.sinks
 
-import org.apache.spark.sql.functions._
-
 /** Metadata-only COUNT(*) and the DV-adjusted row-count surface:
   * counts answered from the manifest + stats sidecar with zero data
   * files opened, and a scan fallback whenever the plan is not the

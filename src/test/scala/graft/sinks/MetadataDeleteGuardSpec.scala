@@ -2,8 +2,6 @@ package graft.sinks
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 /** The metadata-only DELETE fast path is sound ONLY for
   * deterministic, subquery-free partition predicates: it evaluates
   * the predicate once per partition VALUE, so a `rand()` that

@@ -15,13 +15,12 @@ import graft.operators.Rollup
 class RollupRewriteSpec extends graft.SparkSpec {
   import spark.implicits._
 
-  /** (value multiset, whether the plan read the rollup). */
+  /** (value multiset, whether the plan read only the rollup, whether
+    * it read only the source). */
   private def run(df: DataFrame, rollupRoot: String,
-                  srcRoot: String): (Set[String], Boolean, Boolean) = {
-    val plan = df.queryExecution.executedPlan.toString
+                  srcRoot: String): (Set[String], Boolean, Boolean) =
     (df.collect().map(_.toString).toSet,
-      plan.contains(rollupRoot), plan.contains(srcRoot))
-  }
+      graft.DevRun.readsOnly(df, rollupRoot), graft.DevRun.readsOnly(df, srcRoot))
 
   /** Run `body` with exactly `roots` registered (empty = none),
     * restoring the previous registration afterwards — nests safely. */

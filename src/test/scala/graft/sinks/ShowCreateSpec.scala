@@ -2,8 +2,6 @@ package graft.sinks
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 /** `SHOW CREATE TABLE` ([[SnapshotStore.showCreateTable]], E145):
   * the CREATE statement reconstructed from metadata, with ROUND-TRIP
   * fidelity as the contract — running the output on a fresh root
