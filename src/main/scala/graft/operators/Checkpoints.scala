@@ -5,7 +5,10 @@ import org.apache.spark.sql.DataFrame
 /** One switch for every lineage-truncation point (iterative operators
   * re-plan from a materialized prefix: connected components' label
   * rounds, k-means' Lloyd iterations, TF-IDF's term-count staging,
-  * the merge sink's read/overwrite fence).
+  * the merge sink's read/overwrite fence; and relations read more than
+  * once, computed once: the banded MinHash signature rows of
+  * `Dedup.minHashPairs` and the SimHash signatures of
+  * `Dedup.simHashPairs`, each ahead of its band self-join).
   *
   * Default is `localCheckpoint` — blocks cached on this JVM's
   * executors, the right cost on a single box. Setting

@@ -94,7 +94,18 @@ object Dedup {
       // span profile when this barrier went in. One token-array
       // shuffle, keyed by id so the per-id aggregates downstream
       // reuse the partitioning.
-      .repartition(col("id"))
+      //
+      // The partition count is explicit (the shuffle-partitions count
+      // AQE would start from): AQE coalesces a keys-only repartition by
+      // BYTES, and a few MB of token arrays collapse into one
+      // partition, so the shingle/hash stage after it — whose cost is
+      // per shingle, not per byte — ran as a single task. A
+      // repartition with a count is never coalesced, so that stage
+      // runs one task per partition, on every core. It does so for
+      // every caller whatever the input size: a session with a large
+      // shuffle-partitions count runs that many (mostly empty) tasks
+      // even for a small streaming batch.
+      .repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("id"))
 
   /** (id, shingle) rows — the relational form of the shingle set.
     * Signature computation over this shape runs as codegen'd hash
@@ -187,6 +198,11 @@ object Dedup {
         "build it with minHashIndex (and probe with the index's own parameters)")
     require(!newDocs.columns.contains("__drop"),
       "dedupIncremental reserves the __drop column name; rename it in newDocs")
+    // The batch's signatures feed three consumers (the corpus probe
+    // and both within-batch join sides). Over the uncached batches the
+    // callers pass (a streaming micro-batch, a filtered query), AQE
+    // reuses one exchange for all three, so they are computed once
+    // without the truncation minHashPairs needs (DedupWorkOnceSpec).
     val newIdx = minHashIndex(newDocs, text, id, numHashes, bands, shingleWidth, fastHash)
     val probe = newIdx.select(col("band"), col("bucket"),
       col("id").as("__nid"), col("sig").as("__nsig"))
@@ -218,18 +234,24 @@ object Dedup {
     * native codegen'd xxhash64 (~5× cheaper per shingle than the md5
     * string path). Pass `fastHash = false` only when an external SQL
     * engine must replay the signatures bit-for-bit (md5-hex is the
-    * portable encoding; the oracle queries pin it). */
+    * portable encoding; the oracle queries pin it).
+    *
+    * The banded signature rows are computed when this is called (one
+    * truncation job); the returned pair relation is lazy. */
   def minHashPairs(
       df: DataFrame, text: Column, id: Column,
       numHashes: Int = 16, bands: Int = 4,
       shingleWidth: Int = 3, threshold: Double = 0.5,
       fastHash: Boolean = true): DataFrame = {
-    val banded = minHashIndex(df, text, id, numHashes, bands, shingleWidth, fastHash)
+    // Both join sides read the signatures. Spark plans no
+    // ReusedExchange across this self-join when its input is cached
+    // (measured on 4.1.2: the tokenizer and the signature aggregate
+    // each ran once per side), so the banded rows are materialized
+    // first and both sides read them.
+    val banded = Checkpoints.truncate(
+      minHashIndex(df, text, id, numHashes, bands, shingleWidth, fastHash))
     val l = banded.select(col("band"), col("bucket"), col("id").as("id_a"), col("sig").as("sig_a"))
     val r = banded.select(col("band"), col("bucket"), col("id").as("id_b"), col("sig").as("sig_b"))
-    // shuffle_hash (not broadcast): both sides then shuffle on the same
-    // keys from canonically-identical children, so ReusedExchange
-    // computes the signature pipeline ONCE instead of once per side.
     l.hint("shuffle_hash").join(r, Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
@@ -280,21 +302,20 @@ object Dedup {
   def simHashPairs(
       df: DataFrame, text: Column, id: Column,
       bits: Int = 64, bands: Int = 4, maxHamming: Int = 3): DataFrame = {
-    require(bits % bands == 0,
-      s"bands ($bands) must divide bits ($bits): a remainder would leave the top " +
-        "bits outside every band and silently void the pigeonhole recall guarantee")
-    val chunk = bits / bands
-    val mask = (1L << chunk) - 1
+    // Checked before the signatures are materialized below.
+    requireBanding(bits, bands)
     // Relational signature: per-bit vote sums as codegen'd aggregates
     // over exploded shingle rows (identical values to simHashOf).
     val h = shingleRows(df, text, id).select(col("id"), xxhash64(col("w")).as("h"))
     val bitAggs = (0 until bits).map(b =>
       sum(when(col("h").bitwiseAND(lit(1L << b)) =!= 0L, 1).otherwise(-1)).as(s"__b$b"))
-    val sigs = h.groupBy(col("id"))
+    // Materialized once for both sides of hammingPairs' self-join
+    // (see minHashPairs).
+    val sigs = Checkpoints.truncate(h.groupBy(col("id"))
       .agg(bitAggs.head, bitAggs.tail: _*)
       .select(col("id"),
         (0 until bits).map(b => when(col(s"__b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_.bitwiseOR(_)).as("sig"))
+          .reduce(_.bitwiseOR(_)).as("sig")))
     hammingPairs(sigs, col("id"), col("sig"), bits, bands, maxHamming)
   }
 
@@ -314,15 +335,7 @@ object Dedup {
   def hammingPairs(sigs: DataFrame, id: Column, sig: Column,
                    bits: Int = 64, bands: Int = 4,
                    maxHamming: Int = 3): DataFrame = {
-    require(bits >= 2 && bits <= 64, s"bits must be in [2,64], got $bits")
-    // A non-positive band count that happens to divide bits would
-    // build ZERO bands and return a silently EMPTY pair set — total
-    // recall loss, the worst possible failure mode for a dedup API.
-    require(bands >= 1 && bands <= bits,
-      s"bands must be in [1,$bits], got $bands")
-    require(bits % bands == 0,
-      s"bands ($bands) must divide bits ($bits): a remainder would leave the top " +
-        "bits outside every band and silently void the pigeonhole recall guarantee")
+    requireBanding(bits, bands)
     val chunk = bits / bands
     val mask = if (chunk == 64) -1L else (1L << chunk) - 1
     val s = sigs.select(id.as("id"), sig.as("sig"))
@@ -333,14 +346,27 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
     val l = banded.select(col("band"), col("chunk"), col("id").as("id_a"), col("sig").as("sig_a"))
     val r = banded.select(col("band"), col("chunk"), col("id").as("id_b"), col("sig").as("sig_b"))
-    // See minHashPairs: shuffle_hash + identical children → one
-    // ReusedExchange, signatures computed once.
+    // Each side reads `sigs` again: no ReusedExchange is planned
+    // across this self-join over a cached input (see minHashPairs), so
+    // a caller whose signatures are costly materializes them first.
     l.hint("shuffle_hash").join(r, Seq("band", "chunk"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
+  }
+
+  private def requireBanding(bits: Int, bands: Int): Unit = {
+    require(bits >= 2 && bits <= 64, s"bits must be in [2,64], got $bits")
+    // A non-positive band count that happens to divide bits would
+    // build ZERO bands and return a silently EMPTY pair set — total
+    // recall loss, the worst possible failure mode for a dedup API.
+    require(bands >= 1 && bands <= bits,
+      s"bands must be in [1,$bits], got $bands")
+    require(bits % bands == 0,
+      s"bands ($bands) must divide bits ($bits): a remainder would leave the top " +
+        "bits outside every band and silently void the pigeonhole recall guarantee")
   }
 
   /** Apply a near-dup pair set to the corpus: keep-first policy — any
@@ -364,9 +390,10 @@ object Dedup {
     * component — the transitive closure of the near-dup relation.
     *
     * Scale design (100 TB): min-label propagation with pointer jumping
-    * — each round sets label(u) ← min(label(u), min over neighbours'
-    * labels), then label(u) ← label(label(u)). The jump halves label
-    * chains, giving O(log n) rounds like the alternating
+    * — labels start at the least of each node's id and its neighbours'
+    * ids, then each round sets label(u) ← min(label(u), min over
+    * neighbours' labels), then label(u) ← label(label(u)). The jump
+    * halves label chains, giving O(log n) rounds like the alternating
     * large-star/small-star algorithm; each round is two shuffles keyed
     * by node id over |V|+|E| rows, never an all-pairs product. Lineage
     * is truncated every round (Checkpoints.truncate — local by
@@ -389,9 +416,14 @@ object Dedup {
       .unionByName(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
       .distinct()
       .persist()
+    // Seeded labels: the aggregation that builds the node list also
+    // takes each node's least neighbour, so round 1 starts from the
+    // one-hop minimum instead of spending a round finding it (a clique
+    // or a star around its least id then converges in one round).
     var labels = Checkpoints.truncate(
-      sym.select(col("a").as("id")).distinct()
-        .select(col("id"), col("id").as("component")))
+      sym.groupBy(col("a").as("id"))
+        .agg(min(col("b")).as("__nmin"))
+        .select(col("id"), least(col("id"), col("__nmin")).as("component")))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {

@@ -232,7 +232,7 @@ private[graft] object EvolutionQueries {
                           what: String): Unit = {
         val oneSided = x.withColumn("__side", lit(1))
           .unionByName(y.withColumn("__side", lit(2)))
-          .groupBy(x.columns.map(col): _*)
+          .groupBy(x.columns.toSeq.map(col): _*)
           .agg(countDistinct(col("__side")).as("__sides"))
           .filter(col("__sides") < 2)
           .limit(1).collect()
